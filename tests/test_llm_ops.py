@@ -1144,7 +1144,8 @@ def test_kmv_ignores_nulls(spark):
 def test_unit_and_lsh_bucket_null_handling(spark):
     """unit() yields NULL elements on a zero norm instead of an ANSI
     divide-by-zero abort; lsh_bucket sends NULL/ragged vectors to a
-    NULL bucket instead of bucket 0."""
+    NULL bucket instead of bucket 0, and with no hyperplanes puts every
+    row in bucket 0."""
     from vtk_reserves_spark.functions.vectors import (
         deterministic_hyperplanes,
         lsh_bucket,
@@ -1167,6 +1168,7 @@ def test_unit_and_lsh_bucket_null_handling(spark):
             "id",
             unit(F.col("v"), F.col("n")).alias("u"),
             lsh_bucket(F.col("v"), planes).alias("b"),
+            lsh_bucket(F.col("v"), []).alias("b0"),
         )
         .toPandas()
         .set_index("id")
@@ -1176,6 +1178,7 @@ def test_unit_and_lsh_bucket_null_handling(spark):
     assert pd.isna(out.loc[3, "b"])  # NULL vector -> NULL bucket
     assert pd.isna(out.loc[4, "b"])  # ragged vector -> NULL bucket
     assert not pd.isna(out.loc[2, "b"])  # zero vector is a VALID bucket
+    assert (out["b0"] == 0).all()  # no hyperplanes: one bucket, 0
 
 
 def test_fuzzy_join_pairs_hand_checked(spark):

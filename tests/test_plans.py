@@ -45,6 +45,35 @@ def test_flag_regions_single_udf(spark):
     assert plan.count("ArrowEvalPython") == 2
 
 
+def test_mesh_grid_depletion_runs_region_udf_once(spark):
+    """Mesh-path grid_depletion: the region flag runs once over the grid
+    and its filter is not copied into the surfaces' node, so the surface
+    ray scans see only the kept rows (2 ArrowEvalPython nodes, the
+    region UDF in one of them)."""
+    import numpy as np
+
+    from vtk_reserves_spark.operators.reserves import grid_depletion
+    from vtk_reserves_spark.sources.grid import GridSchema, grid_df
+    from vtk_reserves_spark.sources.mesh import TriMesh
+
+    grid = grid_df(spark, GridSchema((0.0, 0.0, 0.0), (10.0, 10.0, 10.0), (8, 8, 4)))
+    xs, ys = np.meshgrid([-5.0, 85.0], [-5.0, 85.0], indexing="ij")
+    topo = TriMesh(
+        np.column_stack([xs.ravel(), ys.ravel(), 20.0 + xs.ravel() / 10]),
+        np.array([[0, 2, 3], [0, 3, 1]]),
+    )
+    regions = [
+        TriMesh.box(((0, 0, 0), (40, 40, 40)), name="a"),
+        TriMesh.box(((20, 20, 0), (80, 80, 20)), name="b"),
+    ]
+    df = grid_depletion(grid, regions=regions, mine_include=[topo], mine_exclude=[topo])
+    assert df.columns[-2:] == ["mine", "region"]
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    nodes = [line for line in plan.splitlines() if "ArrowEvalPython [" in line]
+    assert len(nodes) == 2, plan
+    assert sum("region_udf" in line for line in nodes) == 1, plan
+
+
 def test_filter_pushdown_reaches_scan(spark):
     li = spark.read.parquet(f"{TESTDATA}/lineitem.parquet")
     df = li.filter(F.col("l_quantity") > 40).select("l_orderkey", "l_quantity")

@@ -7,12 +7,17 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from vtk_reserves_spark.operators.breakdown import breakdown
 from vtk_reserves_spark.operators.reserves import grid_depletion, reserves_report
 from vtk_reserves_spark.operators.spatial import (
+    _EPS,
+    _TILE_THRESHOLD,
     PlaneSurface,
+    _ray_scan,
     flag_regions,
     flag_regions_2d,
     flag_regions_bbox,
@@ -278,6 +283,120 @@ def test_ray_scan_scales_to_10k_faces(spark):
     # tolerance covers the deliberate simulation-of-simplicity ray nudge
     # (~1e-9 * extent * slope ~= 1e-7 here)
     np.testing.assert_allclose(z_sum, px / 10 + py / 20, atol=1e-5)
+
+
+def _dense_ray_scan(px, py, pz, mesh):
+    """Reference for ``_ray_scan``: every point against every face, no
+    tile index, with the kernel's ray nudge, crossing test and
+    crossing elevation."""
+    n = px.size
+    n_above, n_hits, z_sum = np.zeros(n, np.int64), np.zeros(n, np.int64), np.zeros(n)
+    if len(mesh.faces) == 0:
+        return n_above, n_hits, z_sum
+    lo, hi = mesh.bounds
+    scale = float(max(hi[0] - lo[0], hi[1] - lo[1], 1.0))
+    A, B, C = (mesh.vertices[mesh.faces[:, i]] for i in range(3))
+    nx, ny, nz = np.cross(B - A, C - A).T
+    (ax, ay, az), (bx, by, _), (cx, cy, _) = A.T, B.T, C.T
+    for i in range(n):
+        if not (lo[0] - _EPS <= px[i] <= hi[0] + _EPS and lo[1] - _EPS <= py[i] <= hi[1] + _EPS):
+            continue
+        x = px[i] + 1.2345678e-9 * scale
+        y = py[i] + 2.7182818e-9 * scale
+        d1 = (bx - ax) * (y - ay) - (by - ay) * (x - ax)
+        d2 = (cx - bx) * (y - by) - (cy - by) * (x - bx)
+        d3 = (ax - cx) * (y - cy) - (ay - cy) * (x - cx)
+        hit = ((d1 > _EPS) & (d2 > _EPS) & (d3 > _EPS)) | ((d1 < -_EPS) & (d2 < -_EPS) & (d3 < -_EPS))
+        hit &= np.abs(nz) >= _EPS
+        zh = az[hit] - (nx[hit] * (x - ax[hit]) + ny[hit] * (y - ay[hit])) / nz[hit]
+        n_hits[i] = hit.sum()
+        n_above[i] = (zh > pz[i]).sum()
+        z_sum[i] = zh.sum()
+    return n_above, n_hits, z_sum
+
+
+def _lattice_mesh(rng, mx, my):
+    """Jittered heightfield over an (mx x my) cell lattice, each cell
+    split along a random diagonal."""
+    gx, gy = np.meshgrid(np.arange(mx + 1.0), np.arange(my + 1.0), indexing="ij")
+    gx = gx + rng.uniform(-0.3, 0.3, gx.shape)
+    gy = gy + rng.uniform(-0.3, 0.3, gy.shape)
+    verts = np.column_stack([gx.ravel() * 7, gy.ravel() * 5, rng.normal(50, 10, gx.size)])
+    faces = []
+    for m in range(mx):
+        for k in range(my):
+            v00, v01 = m * (my + 1) + k, m * (my + 1) + k + 1
+            v10, v11 = v00 + my + 1, v01 + my + 1
+            if rng.random() < 0.5:
+                faces += [[v00, v10, v11], [v00, v11, v01]]
+            else:
+                faces += [[v00, v10, v01], [v10, v11, v01]]
+    return TriMesh(verts, np.array(faces))
+
+
+def _extruded_mesh(rng, k):
+    """Star-shaped k-gon extruded between two z levels: fan-triangulated
+    caps and vertical walls (2 faces per side), 4k faces in all."""
+    ang = np.sort(rng.uniform(0, 2 * np.pi, k))
+    rad = rng.uniform(20, 60, k)
+    ring = np.column_stack([100 + rad * np.cos(ang), 80 + rad * np.sin(ang)])
+    z0, z1 = rng.uniform(0, 10), rng.uniform(20, 40)
+    verts = np.vstack([
+        np.column_stack([ring, np.full(k, z0)]),
+        np.column_stack([ring, np.full(k, z1)]),
+        [[100, 80, z0], [100, 80, z1]],
+    ])
+    i = np.arange(k)
+    j = (i + 1) % k
+    faces = np.vstack([
+        np.column_stack([np.full(k, 2 * k), j, i]),  # bottom cap
+        np.column_stack([np.full(k, 2 * k + 1), k + i, k + j]),  # top cap
+        np.column_stack([i, j, k + j]),  # walls
+        np.column_stack([i, k + j, k + i]),
+    ])
+    return TriMesh(verts, faces)
+
+
+@settings(max_examples=30, deadline=None)
+@given(
+    kind=st.sampled_from(["lattice", "extruded", "empty"]),
+    seed=st.integers(0, 2**32 - 1),
+    size=st.integers(8, 160),
+    n_points=st.sampled_from([0, 1, 37, 2_000, 12_000]),
+)
+def test_ray_scan_matches_dense_reference(kind, seed, size, n_points):
+    """The tiled kernel equals a dense every-point-every-face scan:
+    lattice heightfields (tiled once over ``_TILE_THRESHOLD`` faces),
+    extruded solids with vertical walls, the empty mesh, points outside
+    the bounds and on vertices; one call and 10k-row slices."""
+    rng = np.random.default_rng(seed)
+    if kind == "lattice":
+        side = _TILE_THRESHOLD // 50 + size // 8  # 2*side^2 > _TILE_THRESHOLD
+        mesh = _lattice_mesh(rng, side, side + size % 5)
+    elif kind == "extruded":
+        mesh = _extruded_mesh(rng, size)
+    else:
+        mesh = TriMesh(np.zeros((0, 3)), np.zeros((0, 3), np.int64))
+    lo, hi = (mesh.bounds if len(mesh.vertices) else np.array([[0.0] * 3, [100.0] * 3]))
+    span = hi - lo
+    pts = rng.uniform(lo - 0.1 * span, hi + 0.1 * span, (n_points, 3))
+    if len(mesh.vertices) and n_points:
+        on_vertex = rng.random(n_points) < 0.05  # degenerate rays
+        pts[on_vertex, :2] = mesh.vertices[rng.integers(0, len(mesh.vertices), on_vertex.sum()), :2]
+    px, py, pz = (np.ascontiguousarray(pts[:, i]) for i in range(3))
+    want = _dense_ray_scan(px, py, pz, mesh)
+    sliced = [
+        _ray_scan(px[s : s + 10_000], py[s : s + 10_000], pz[s : s + 10_000], mesh)
+        for s in range(0, n_points, 10_000)
+    ]
+    sliced = tuple(
+        np.concatenate([r[i] for r in sliced]) if sliced else np.zeros(0) for i in range(3)
+    )
+    for got in (_ray_scan(px, py, pz, mesh), sliced):
+        n_above, n_hits, z_sum = got
+        assert np.array_equal(n_above, want[0])
+        assert np.array_equal(n_hits, want[1])
+        np.testing.assert_allclose(z_sum, want[2], rtol=1e-12, atol=0)
 
 
 def test_reserves_sample_golden_table(spark):

@@ -116,6 +116,21 @@ def test_public_suffix_len(spark):
     assert got == [w for _, w in cases]
 
 
+def test_ps_len_memo_misses_for_a_new_spark_context(spark, monkeypatch):
+    """The built PSL probe is reused within one SparkContext, and a new
+    context misses the memo even at the old context's object address
+    (simulated by giving the live context a new application id)."""
+    from pyspark import SparkContext
+
+    host = F.col("memo_probe_host")
+    first = U._ps_len_unguarded(host)
+    assert U._ps_len_unguarded(host) is first
+    monkeypatch.setattr(
+        SparkContext, "applicationId", property(lambda self: "app-restarted")
+    )
+    assert U._ps_len_unguarded(host) is not first
+
+
 def test_registered_domain_hypothesis_vs_reference(spark):
     """Property test: the Catalyst substring_index/InSet formulation
     must equal an independent straightforward PSL longest-match

@@ -77,6 +77,10 @@ def lsh_bucket(vec: Column, hyperplanes: list[list[float]]) -> Column:
     NULL-propagation contract bit-for-bit."""
     from vtk_reserves_spark.functions.plan_literals import lit_double_matrix
 
+    if not hyperplanes:
+        # zero bits: every vector is in the one bucket 0 (sequence(0, -1)
+        # would count down to [0, -1] and yield a NULL bucket)
+        return F.lit(0).cast("int")
     mat = lit_double_matrix(hyperplanes)
     idx = F.sequence(F.lit(0), F.lit(len(hyperplanes) - 1))
     bits = F.zip_with(

@@ -37,17 +37,17 @@ def grid_depletion(
     """Load + flag stage (``pd_grid_depletion``, ``vtk_reserves.py:44-90``):
     ensure a ``volume`` array, compute the mined fraction, flag regions
     (later meshes overwrite earlier), and drop rows outside every region
-    (``df.query("region != ''")``, ``vtk_reserves.py:86-88``).
+    (``df.query("region != ''")``, ``vtk_reserves.py:86-88``).  Output
+    columns: the grid's, ``volume``, ``mine_col``, then ``region_col``.
 
     ``regions`` entries may be :class:`TriMesh` solids (ray-cast path) or
-    ``(name, bounds)`` tuples (axis-aligned expression path)."""
+    ``(name, bounds)`` tuples (axis-aligned expression path).  Regions
+    are flagged and filtered before the mined fraction is computed, so
+    on the mesh path the surface ray scans see only the kept rows."""
     if "volume" not in grid.columns:
         grid = grid.withColumn(
             "volume", F.col("dx") * F.col("dy") * F.col("dz")
         )  # cells_volume, pd_vtk.py:798-809
-    grid = mine_fraction(
-        grid, include=mine_include, exclude=mine_exclude, mine_col=mine_col
-    )
     if regions:
         boxes = [r for r in regions if isinstance(r, tuple)]
         meshes = [r for r in regions if isinstance(r, TriMesh)]
@@ -69,6 +69,11 @@ def grid_depletion(
         else:
             grid = flag_regions(grid, meshes, flag_var=region_col)
         grid = grid.filter(F.col(region_col) != "")
+    grid = mine_fraction(
+        grid, include=mine_include, exclude=mine_exclude, mine_col=mine_col
+    )
+    if regions:
+        grid = grid.select(*[c for c in grid.columns if c != region_col], region_col)
     return grid
 
 

@@ -21,6 +21,16 @@ mean z of all crossings (``get_elevation``, ``pd_vtk.py:771-796``);
 ``2-D footprint flag`` = any crossing (``vtk_flag_region_2d``,
 ``vtk_flag_regions.py:28-52``).
 
+Each mesh carries a grid-bucketed xy index, built on first use where
+the UDF runs (never on the driver): a CSR tile grid (``tile_start`` offsets into a face-id array sorted by
+tile) listing the non-vertical faces whose xy bounding box overlaps
+each tile.  A point batch is binned into tiles once; a tile holding
+many points is scanned as one dense (points x faces) broadcast, and the
+points of all sparsely populated tiles are expanded into (point,
+candidate face) pairs and scanned together in cache-sized chunks, so
+the Python work per batch is a fixed number of numpy passes rather
+than one per touched tile.  Crossings are summed with ``np.bincount``.
+
 Degenerate-ray caveat: points whose xy projection falls exactly on a
 projected triangle edge may miscount crossings (measure-zero; the
 reference's VTK ray_trace has the same class of edge cases).
@@ -64,20 +74,41 @@ class PlaneSurface:
         )
 
 
-#: face count above which _ray_scan builds an xy tile index
+#: face count above which _tri_arrays splits the mesh's xy extent into
+#: tiles; smaller meshes are one tile holding every face
 _TILE_THRESHOLD = 512
+#: (point, face) tests per numpy pass, so a pass's temporaries stay in
+#: cache (the crossing test ran ~2x faster per pair at 8k-16k pairs than
+#: at 64k+ on a 4-vCPU x86 VM)
+_CHUNK = 1 << 13
+#: a tile whose points x faces reach this is scanned as one dense
+#: (points, faces) broadcast; below it the fixed cost of a block
+#: outweighs its savings, so the tile's points join the pair scan
+_DENSE_MIN = 4096
 
 
 def _tri_arrays(mesh: TriMesh):
-    """Per-mesh packed triangle arrays for the vectorized ray scan,
-    cached on the mesh object (meshes ride in UDF closures, so the cache
-    is built once per executor per mesh): vertex A/B/C and the
-    (unnormalized) face normal, all shape (F, 3), plus — for meshes over
-    ``_TILE_THRESHOLD`` faces — an xy tile index mapping each tile to
-    the faces whose xy bounding box overlaps it, so a point only tests
-    the triangles of its own tile (O(points · faces/tile) instead of
-    O(points · faces); a 100k-face topography averages a handful of
-    faces per tile)."""
+    """Per-mesh ray-scan arrays, cached on the mesh object (meshes ride
+    in UDF closures, so the cache is built once per executor per mesh).
+
+    Returns ``(A, nrm, index)``: vertex A and the (unnormalized) face
+    normal, both shape (F, 3), which the crossing elevation reads, and
+    ``index = (nt, tsx, tsy, lo, tile_start, tile_faces, tile_tri)``, an
+    ``nt x nt`` xy tile grid (tiles ``tsx x tsy`` from corner ``lo``) in
+    CSR form:
+
+    - tile ``t`` owns entries ``tile_start[t]:tile_start[t + 1]``: the
+      faces whose xy bounding box overlaps it, in ascending face order;
+    - ``tile_faces`` (E,) is each entry's face id;
+    - ``tile_tri`` (12, E) is each entry's crossing-test data: the xy of
+      vertices A, B, C and of the edges B-A, C-B, A-C, laid out in entry
+      order so a tile's faces are one contiguous slice.
+
+    Meshes over ``_TILE_THRESHOLD`` faces get ``nt = sqrt(F / 8)`` (about
+    8 faces per tile before bounding-box overlap); smaller meshes get one
+    tile.  Vertical faces (``|nz| < _EPS``) are left out: they never
+    cross a +z ray.  Entries come from ``np.repeat`` over each face's
+    tile span and one stable sort by tile."""
     cached = getattr(mesh, "_tri_cache", None)
     if cached is None:
         V = mesh.vertices
@@ -85,56 +116,74 @@ def _tri_arrays(mesh: TriMesh):
         B = V[mesh.faces[:, 1]]
         C = V[mesh.faces[:, 2]]
         nrm = np.cross(B - A, C - A)  # (nx, ny, nz) per face
-        tile = None
         nf = len(A)
-        if nf > _TILE_THRESHOLD:
-            lo, hi = mesh.bounds
-            nt = max(2, int(np.sqrt(nf / 8.0)))  # ~8 faces/tile target
-            tsx = max((hi[0] - lo[0]) / nt, _EPS)
-            tsy = max((hi[1] - lo[1]) / nt, _EPS)
-            fx = np.stack([A[:, 0], B[:, 0], C[:, 0]])
-            fy = np.stack([A[:, 1], B[:, 1], C[:, 1]])
-            x0 = np.clip(((fx.min(0) - lo[0]) / tsx).astype(np.int64), 0, nt - 1)
-            x1 = np.clip(((fx.max(0) - lo[0]) / tsx).astype(np.int64), 0, nt - 1)
-            y0 = np.clip(((fy.min(0) - lo[1]) / tsy).astype(np.int64), 0, nt - 1)
-            y1 = np.clip(((fy.max(0) - lo[1]) / tsy).astype(np.int64), 0, nt - 1)
-            buckets: dict[int, list[int]] = {}
-            for f in range(nf):
-                for tx in range(x0[f], x1[f] + 1):
-                    for ty in range(y0[f], y1[f] + 1):
-                        buckets.setdefault(tx * nt + ty, []).append(f)
-            tile = (
-                nt,
-                tsx,
-                tsy,
-                lo,
-                {t: np.asarray(fs, np.int64) for t, fs in buckets.items()},
-            )
-        cached = (A, B, C, nrm, tile)
+        lo, hi = mesh.bounds
+        nt = max(2, int(np.sqrt(nf / 8.0))) if nf > _TILE_THRESHOLD else 1
+        tsx = max((hi[0] - lo[0]) / nt, _EPS)
+        tsy = max((hi[1] - lo[1]) / nt, _EPS)
+        keep = np.flatnonzero(np.abs(nrm[:, 2]) >= _EPS)
+        fx = np.stack([A[keep, 0], B[keep, 0], C[keep, 0]])
+        fy = np.stack([A[keep, 1], B[keep, 1], C[keep, 1]])
+        x0 = np.clip(((fx.min(0) - lo[0]) / tsx).astype(np.int64), 0, nt - 1)
+        x1 = np.clip(((fx.max(0) - lo[0]) / tsx).astype(np.int64), 0, nt - 1)
+        y0 = np.clip(((fy.min(0) - lo[1]) / tsy).astype(np.int64), 0, nt - 1)
+        y1 = np.clip(((fy.max(0) - lo[1]) / tsy).astype(np.int64), 0, nt - 1)
+        wy = y1 - y0 + 1
+        cnt = (x1 - x0 + 1) * wy  # tiles per face
+        k = np.arange(cnt.sum()) - np.repeat(np.cumsum(cnt) - cnt, cnt)
+        wy = np.repeat(wy, cnt)
+        tile = (np.repeat(x0, cnt) + k // wy) * nt + np.repeat(y0, cnt) + k % wy
+        tile_faces = np.repeat(keep, cnt)[np.argsort(tile, kind="stable")]
+        tile_start = np.zeros(nt * nt + 1, np.int64)
+        np.cumsum(np.bincount(tile, minlength=nt * nt), out=tile_start[1:])
+        (ax, ay), (bx, by), (cx, cy) = (P[tile_faces, :2].T for P in (A, B, C))
+        tile_tri = np.stack(
+            [ax, ay, bx, by, cx, cy, bx - ax, by - ay, cx - bx, cy - by, ax - cx, ay - cy]
+        )
+        cached = (A, nrm, (nt, tsx, tsy, lo, tile_start, tile_faces, tile_tri))
         mesh._tri_cache = cached
     return cached
 
 
-def _ray_scan(px, py, pz, mesh: TriMesh, chunk_elems: int = 4_000_000):
+def _crossed(X, Y, t):
+    """Whether the +z ray at (X, Y) passes strictly inside the xy
+    projection of the faces ``t`` (rows as in ``tile_tri``).  Broadcasts:
+    a point column against face rows for a dense block, or equal-length
+    arrays for (point, face) pairs."""
+    ax, ay, bx, by, cx, cy, ex1, ey1, ex2, ey2, ex3, ey3 = t
+    d1 = ex1 * (Y - ay) - ey1 * (X - ax)
+    d2 = ex2 * (Y - by) - ey2 * (X - bx)
+    d3 = ex3 * (Y - cy) - ey3 * (X - cx)
+    return ((d1 > _EPS) & (d2 > _EPS) & (d3 > _EPS)) | (
+        (d1 < -_EPS) & (d2 < -_EPS) & (d3 < -_EPS)
+    )
+
+
+def _ray_scan(px, py, pz, mesh: TriMesh):
     """Vertical-ray crossing scan of a point batch against a mesh.
 
     Returns (n_above, n_hits, z_sum) int64/int64/float64 arrays: crossings
     strictly above each point, total crossings, and the sum of crossing
-    elevations.  Fully vectorized: triangles are batched in numpy
-    (no per-triangle Python loop), with points processed in chunks of
-    ``chunk_elems // n_faces`` so the (points x faces) broadcast stays
-    within a bounded working set — a 100k-face topography costs numpy
-    throughput, not interpreter time."""
+    elevations.
+
+    Each point tests only the faces of its tile in the CSR index of
+    :func:`_tri_arrays`, in one of two ways:
+
+    - a tile holding many points (points x faces >= ``_DENSE_MIN``) is
+      one dense (points x faces) broadcast block;
+    - the points of all other tiles become (point, candidate face) pairs
+      by ``np.repeat`` over the index, tested together ``_CHUNK`` pairs
+      per numpy pass, so the Python work per batch does not grow with
+      the number of sparsely populated tiles it touches.
+
+    Crossings are gathered and summed with one ``np.bincount`` per
+    output.  Each point's crossings keep ascending face order, so
+    ``z_sum`` adds in the same order whichever way the point ran."""
     n = px.size
-    n_above = np.zeros(n, np.int64)
-    n_hits = np.zeros(n, np.int64)
-    z_sum = np.zeros(n, np.float64)
     if len(mesh.faces) == 0:
-        return n_above, n_hits, z_sum
+        return np.zeros(n, np.int64), np.zeros(n, np.int64), np.zeros(n, np.float64)
     lo, hi = mesh.bounds
     m = (px >= lo[0] - _EPS) & (px <= hi[0] + _EPS) & (py >= lo[1] - _EPS) & (py <= hi[1] + _EPS)
-    if not m.any():
-        return n_above, n_hits, z_sum
     # Simulation-of-simplicity: nudge the ray xy by a deterministic,
     # scale-relative epsilon so rays almost surely miss projected triangle
     # edges (otherwise a ray through an edge shared by two triangles
@@ -146,54 +195,55 @@ def _ray_scan(px, py, pz, mesh: TriMesh, chunk_elems: int = 4_000_000):
     qy = py[m] + 2.7182818e-9 * scale
     qz = pz[m]
     idx = np.nonzero(m)[0]
-    A, B, C, nrm, tile = _tri_arrays(mesh)
+    A, nrm, (nt, tsx, tsy, tlo, tile_start, tile_faces, tile_tri) = _tri_arrays(mesh)
 
-    def scan_block(psel: np.ndarray, fsel: np.ndarray | None) -> None:
-        """Dense (selected points x selected faces) scan, accumulating
-        into the global output arrays."""
-        ax, ay, az = (A[fsel, i] if fsel is not None else A[:, i] for i in range(3))
-        bx, by = (B[fsel, i] if fsel is not None else B[:, i] for i in range(2))
-        cx, cy = (C[fsel, i] if fsel is not None else C[:, i] for i in range(2))
-        nx, ny, nz = (nrm[fsel, i] if fsel is not None else nrm[:, i] for i in range(3))
-        flat = np.abs(nz) >= _EPS  # vertical tris never cross a +z ray
-        nz_safe = np.where(flat, nz, 1.0)
-        step = max(1, chunk_elems // max(len(ax), 1))
-        for s in range(0, psel.size, step):
-            p = psel[s : s + step]
-            X = qx[p, None]  # (points, 1) vs (faces,) -> (points, faces)
-            Y = qy[p, None]
-            d1 = (bx - ax) * (Y - ay) - (by - ay) * (X - ax)
-            d2 = (cx - bx) * (Y - by) - (cy - by) * (X - bx)
-            d3 = (ax - cx) * (Y - cy) - (ay - cy) * (X - cx)
-            hit = ((d1 > _EPS) & (d2 > _EPS) & (d3 > _EPS)) | (
-                (d1 < -_EPS) & (d2 < -_EPS) & (d3 < -_EPS)
-            )
-            hit &= flat
-            pr, fc = np.nonzero(hit)  # hits are sparse: gather, not dense
-            if pr.size == 0:
-                continue
-            zh = az[fc] - (
-                nx[fc] * (qx[p][pr] - ax[fc]) + ny[fc] * (qy[p][pr] - ay[fc])
-            ) / nz_safe[fc]
-            tgt = idx[p][pr]
-            np.add.at(n_hits, tgt, 1)
-            np.add.at(z_sum, tgt, zh)
-            np.add.at(n_above, tgt, (zh > qz[p][pr]).astype(np.int64))
+    tx = np.clip(((qx - tlo[0]) / tsx).astype(np.int64), 0, nt - 1)
+    ty = np.clip(((qy - tlo[1]) / tsy).astype(np.int64), 0, nt - 1)
+    tid = tx * nt + ty
+    order = np.argsort(tid, kind="stable")
+    per_tile = np.bincount(tid, minlength=nt * nt)
+    faces_of = np.diff(tile_start)
+    dense = per_tile * faces_of >= _DENSE_MIN
+    hit_p = [np.zeros(0, np.int64)]  # (point, entry) of every crossing
+    hit_e = [np.zeros(0, np.int64)]
 
-    if tile is None:
-        scan_block(np.arange(qx.size), None)
-    else:
-        nt, tsx, tsy, tlo, buckets = tile
-        tx = np.clip(((qx - tlo[0]) / tsx).astype(np.int64), 0, nt - 1)
-        ty = np.clip(((qy - tlo[1]) / tsy).astype(np.int64), 0, nt - 1)
-        tid = tx * nt + ty
-        order = np.argsort(tid, kind="stable")
-        bounds = np.searchsorted(tid[order], np.arange(nt * nt + 1))
-        for t in np.unique(tid):
-            fsel = buckets.get(int(t))
-            if fsel is None:
-                continue
-            scan_block(order[bounds[t] : bounds[t + 1]], fsel)
+    pstart = np.concatenate([[0], np.cumsum(per_tile)])
+    for t in np.flatnonzero(dense):
+        e0, e1 = tile_start[t], tile_start[t + 1]
+        step = max(1, _CHUNK // (e1 - e0))
+        for s in range(pstart[t], pstart[t + 1], step):
+            p = order[s : min(s + step, pstart[t + 1])]
+            pr, ec = np.nonzero(_crossed(qx[p, None], qy[p, None], tile_tri[:, e0:e1]))
+            hit_p.append(p[pr])
+            hit_e.append(e0 + ec)
+
+    sp = order[~dense[tid[order]]]
+    cnt = faces_of[tid[sp]]
+    sp, cnt = sp[cnt > 0], cnt[cnt > 0]
+    end = np.cumsum(cnt)  # pairs of sp[i]: end[i] - cnt[i] .. end[i]
+    shift = tile_start[tid[sp]] - (end - cnt)  # pair j of sp[i] is entry j + shift[i]
+    sx, sy = qx[sp], qy[sp]
+    s = 0
+    while s < sp.size:
+        base = end[s] - cnt[s]
+        e = max(s + 1, int(np.searchsorted(end, base + _CHUNK, side="right")))
+        c = cnt[s:e]
+        ent = np.arange(base, end[e - 1]) + np.repeat(shift[s:e], c)
+        X, Y = np.repeat(sx[s:e], c), np.repeat(sy[s:e], c)
+        k = np.flatnonzero(_crossed(X, Y, np.take(tile_tri, ent, axis=1)))
+        hit_p.append(sp[s + np.searchsorted(end[s:e], base + k, side="right")])
+        hit_e.append(ent[k])
+        s = e
+
+    hp = np.concatenate(hit_p)
+    hf = tile_faces[np.concatenate(hit_e)]
+    zh = A[hf, 2] - (
+        nrm[hf, 0] * (qx[hp] - A[hf, 0]) + nrm[hf, 1] * (qy[hp] - A[hf, 1])
+    ) / nrm[hf, 2]
+    tgt = idx[hp]
+    n_above = np.bincount(tgt[zh > qz[hp]], minlength=n)
+    n_hits = np.bincount(tgt, minlength=n)
+    z_sum = np.bincount(tgt, weights=zh, minlength=n)
     return n_above, n_hits, z_sum
 
 
@@ -233,6 +283,10 @@ def flag_regions(
             out[point_in_solid(px, py, pz, mesh)] = value
         return pd.Series(out)
 
+    # the UDF is pure; marking it non-deterministic stops Catalyst from
+    # copying the ray scan into a downstream filter on ``flag_var``
+    # (PushDownPredicate alias substitution), which would run it twice
+    region_udf = region_udf.asNondeterministic()
     return df.withColumn(flag_var, region_udf(*[F.col(c) for c in xyz]))
 
 
