@@ -21,15 +21,16 @@ mean z of all crossings (``get_elevation``, ``pd_vtk.py:771-796``);
 ``2-D footprint flag`` = any crossing (``vtk_flag_region_2d``,
 ``vtk_flag_regions.py:28-52``).
 
-Each mesh carries a grid-bucketed xy index, built on first use where
-the UDF runs (never on the driver): a CSR tile grid (``tile_start`` offsets into a face-id array sorted by
-tile) listing the non-vertical faces whose xy bounding box overlaps
-each tile.  A point batch is binned into tiles once; a tile holding
-many points is scanned as one dense (points x faces) broadcast, and the
-points of all sparsely populated tiles are expanded into (point,
-candidate face) pairs and scanned together in cache-sized chunks, so
-the Python work per batch is a fixed number of numpy passes rather
-than one per touched tile.  Crossings are summed with ``np.bincount``.
+Each mesh carries a grid-bucketed xy index, built on first use inside
+the UDF's Python worker: a CSR tile grid (``tile_start`` offsets into a
+face-id array sorted by tile) listing the non-vertical faces whose xy
+bounding box overlaps each tile.  A point batch is binned into tiles
+once; a tile holding many points is scanned as one dense (points x
+faces) broadcast, and the points of all sparsely populated tiles are
+expanded into (point, candidate face) pairs and scanned together in
+cache-sized chunks, so the Python work per batch is a fixed number of
+numpy passes rather than one per touched tile.  Crossings are summed
+with ``np.bincount``.
 
 Degenerate-ray caveat: points whose xy projection falls exactly on a
 projected triangle edge may miscount crossings (measure-zero; the
