@@ -4,6 +4,8 @@ pipeline semantics (overwrite order, blank-include fill, region drop)."""
 
 from __future__ import annotations
 
+import math
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -366,12 +368,13 @@ def _extruded_mesh(rng, k):
 )
 def test_ray_scan_matches_dense_reference(kind, seed, size, n_points):
     """The tiled kernel equals a dense every-point-every-face scan:
-    lattice heightfields (tiled once over ``_TILE_THRESHOLD`` faces),
-    extruded solids with vertical walls, the empty mesh, points outside
-    the bounds and on vertices; one call and 10k-row slices."""
+    lattice heightfields (all over ``_TILE_THRESHOLD`` faces, so tiled),
+    extruded solids with vertical walls (32-640 faces, one tile or
+    tiled), the empty mesh, points outside the bounds and on vertices;
+    one call and 10k-row slices."""
     rng = np.random.default_rng(seed)
     if kind == "lattice":
-        side = _TILE_THRESHOLD // 50 + size // 8  # 2*side^2 > _TILE_THRESHOLD
+        side = math.isqrt(_TILE_THRESHOLD // 2) + 1 + size // 8  # 2*side^2 > _TILE_THRESHOLD
         mesh = _lattice_mesh(rng, side, side + size % 5)
     elif kind == "extruded":
         mesh = _extruded_mesh(rng, size)

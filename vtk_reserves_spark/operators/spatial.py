@@ -25,12 +25,10 @@ Each mesh carries a grid-bucketed xy index, built on first use inside
 the UDF's Python worker: a CSR tile grid (``tile_start`` offsets into a
 face-id array sorted by tile) listing the non-vertical faces whose xy
 bounding box overlaps each tile.  A point batch is binned into tiles
-once; a tile holding many points is scanned as one dense (points x
-faces) broadcast, and the points of all sparsely populated tiles are
-expanded into (point, candidate face) pairs and scanned together in
-cache-sized chunks, so the Python work per batch is a fixed number of
-numpy passes rather than one per touched tile.  Crossings are summed
-with ``np.bincount``.
+once, every point is expanded into (point, candidate face) pairs over
+its tile's faces, and all pairs are scanned together in cache-sized
+chunks, so the Python work per batch does not grow with the number of
+tiles it touches.  Crossings are summed with ``np.bincount``.
 
 Degenerate-ray caveat: points whose xy projection falls exactly on a
 projected triangle edge may miscount crossings (measure-zero; the
@@ -82,10 +80,6 @@ _TILE_THRESHOLD = 512
 #: cache (the crossing test ran ~2x faster per pair at 8k-16k pairs than
 #: at 64k+ on a 4-vCPU x86 VM)
 _CHUNK = 1 << 13
-#: a tile whose points x faces reach this is scanned as one dense
-#: (points, faces) broadcast; below it the fixed cost of a block
-#: outweighs its savings, so the tile's points join the pair scan
-_DENSE_MIN = 4096
 
 
 def _tri_arrays(mesh: TriMesh):
@@ -103,7 +97,8 @@ def _tri_arrays(mesh: TriMesh):
     - ``tile_faces`` (E,) is each entry's face id;
     - ``tile_tri`` (12, E) is each entry's crossing-test data: the xy of
       vertices A, B, C and of the edges B-A, C-B, A-C, laid out in entry
-      order so a tile's faces are one contiguous slice.
+      order so a tile's faces are one contiguous slice and the pair
+      scan gathers from nearby memory.
 
     Meshes over ``_TILE_THRESHOLD`` faces get ``nt = sqrt(F / 8)`` (about
     8 faces per tile before bounding-box overlap); smaller meshes get one
@@ -148,9 +143,8 @@ def _tri_arrays(mesh: TriMesh):
 
 def _crossed(X, Y, t):
     """Whether the +z ray at (X, Y) passes strictly inside the xy
-    projection of the faces ``t`` (rows as in ``tile_tri``).  Broadcasts:
-    a point column against face rows for a dense block, or equal-length
-    arrays for (point, face) pairs."""
+    projection of the faces ``t`` (rows as in ``tile_tri``), one
+    (point, face) pair per element."""
     ax, ay, bx, by, cx, cy, ex1, ey1, ex2, ey2, ex3, ey3 = t
     d1 = ex1 * (Y - ay) - ey1 * (X - ax)
     d2 = ex2 * (Y - by) - ey2 * (X - bx)
@@ -168,18 +162,13 @@ def _ray_scan(px, py, pz, mesh: TriMesh):
     elevations.
 
     Each point tests only the faces of its tile in the CSR index of
-    :func:`_tri_arrays`, in one of two ways:
-
-    - a tile holding many points (points x faces >= ``_DENSE_MIN``) is
-      one dense (points x faces) broadcast block;
-    - the points of all other tiles become (point, candidate face) pairs
-      by ``np.repeat`` over the index, tested together ``_CHUNK`` pairs
-      per numpy pass, so the Python work per batch does not grow with
-      the number of sparsely populated tiles it touches.
-
-    Crossings are gathered and summed with one ``np.bincount`` per
-    output.  Each point's crossings keep ascending face order, so
-    ``z_sum`` adds in the same order whichever way the point ran."""
+    :func:`_tri_arrays`.  Points are grouped by tile and become
+    (point, candidate face) pairs by ``np.repeat`` over the index; the
+    pairs are tested ``_CHUNK`` at a time, so the Python work per batch
+    does not grow with the number of tiles it touches.  Crossings are
+    gathered and summed with one ``np.bincount`` per output.  A point's
+    pairs are contiguous and in ascending face order, so ``z_sum`` adds
+    a point's crossing elevations in face order."""
     n = px.size
     if len(mesh.faces) == 0:
         return np.zeros(n, np.int64), np.zeros(n, np.int64), np.zeros(n, np.float64)
@@ -201,29 +190,14 @@ def _ray_scan(px, py, pz, mesh: TriMesh):
     tx = np.clip(((qx - tlo[0]) / tsx).astype(np.int64), 0, nt - 1)
     ty = np.clip(((qy - tlo[1]) / tsy).astype(np.int64), 0, nt - 1)
     tid = tx * nt + ty
-    order = np.argsort(tid, kind="stable")
-    per_tile = np.bincount(tid, minlength=nt * nt)
-    faces_of = np.diff(tile_start)
-    dense = per_tile * faces_of >= _DENSE_MIN
-    hit_p = [np.zeros(0, np.int64)]  # (point, entry) of every crossing
-    hit_e = [np.zeros(0, np.int64)]
-
-    pstart = np.concatenate([[0], np.cumsum(per_tile)])
-    for t in np.flatnonzero(dense):
-        e0, e1 = tile_start[t], tile_start[t + 1]
-        step = max(1, _CHUNK // (e1 - e0))
-        for s in range(pstart[t], pstart[t + 1], step):
-            p = order[s : min(s + step, pstart[t + 1])]
-            pr, ec = np.nonzero(_crossed(qx[p, None], qy[p, None], tile_tri[:, e0:e1]))
-            hit_p.append(p[pr])
-            hit_e.append(e0 + ec)
-
-    sp = order[~dense[tid[order]]]
-    cnt = faces_of[tid[sp]]
+    sp = np.argsort(tid, kind="stable")  # points grouped by tile
+    cnt = np.diff(tile_start)[tid[sp]]  # candidate faces per point
     sp, cnt = sp[cnt > 0], cnt[cnt > 0]
     end = np.cumsum(cnt)  # pairs of sp[i]: end[i] - cnt[i] .. end[i]
     shift = tile_start[tid[sp]] - (end - cnt)  # pair j of sp[i] is entry j + shift[i]
     sx, sy = qx[sp], qy[sp]
+    hit_p = [np.zeros(0, np.int64)]  # (point, entry) of every crossing
+    hit_e = [np.zeros(0, np.int64)]
     s = 0
     while s < sp.size:
         base = end[s] - cnt[s]
@@ -265,7 +239,11 @@ def flag_regions(
     (``vtk_flag_regions.py:54-79``): later regions OVERWRITE earlier ones;
     rows in no region get ``''``; the flag value is the mesh name
     (= file basename in the reference pipeline, ``vtk_reserves.py:74``)
-    or an ordinal when unnamed."""
+    or an ordinal when unnamed.
+
+    The ray scan runs on every row that reaches it: Spark pushes no
+    filter applied after this call below it, even one on an unrelated
+    column, so filter rows before flagging them."""
     vals = []
     for i, mesh in enumerate(regions):
         if values is not None and i < len(values):
