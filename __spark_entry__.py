@@ -16,7 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from vtk_reserves_spark.operators.breakdown import breakdown
-from vtk_reserves_spark.operators.reserves import reserves_report
+from vtk_reserves_spark.operators.reserves import grid_depletion, reserves_report
 from vtk_reserves_spark.operators.spatial import (
     PlaneSurface,
     flag_regions,
@@ -322,48 +322,99 @@ def q_reserves_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SAMPLE_ZIP = "/root/reference/sample_data/std_voxel_vtk.zip"
+#: std_voxel sample region solids: (name, ((x0, y0), (x1, y1))), boxes
+#: over the sample's full z range; the reserves_sample oracle freezes
+#: the same xy bounds
+_SAMPLE_REGIONS = [
+    ("vox_region1", ((164.18783422459887, 463.0013368983957),
+                     (538.2854278074867, 804.211229946524))),
+    ("vox_region2", ((1070.6796413516654, 158.2230838238043),
+                     (1444.7772349345532, 499.43297687193257))),
+    ("vox_region3", ((601.4205821190213, 90.71135928608749),
+                     (988.2928226624266, 881.2763725704372))),
+]
+#: bump when _write_sample's output changes: it names the cache dir
+_SAMPLE_VERSION = 1
+
+
+def _write_sample(d: str) -> None:
+    """Write the std_voxel sample as binary legacy VTK into ``d``:
+
+    - ``std_voxel_schema0.vtk``: a 30x20x20 structured grid of 50 m
+      cells from the origin, with ``grade = 75 - 10*(i%3) - 20*(j%3)``,
+      ``density = 50 + 50*(j%2) + k//2`` (int) and a ``lito`` string
+      array banded on grade (``high`` >= 65, ``low`` <= 25, else
+      ``medium``);
+    - ``vox_region1..3.vtk``: the box solids of ``_SAMPLE_REGIONS``,
+      z 0..1000;
+    - ``vox_mine_up.vtk`` / ``vox_mine_down.vtk``: one quad each over
+      the grid's xy extent, the ramps ``z = 2x/3`` and
+      ``z = 1000 - 2x/3``."""
+    import numpy as np
+
+    from vtk_reserves_spark.sources.vtk_binary import VtkDataset, write_vtk
+
+    axes = [np.arange(n + 1) * 50.0 for n in (30, 20, 20)]
+    lattice = np.meshgrid(*axes, indexing="ij")
+    points = np.stack([a.ravel(order="F") for a in lattice], 1)  # i fastest
+    cell = np.arange(30 * 20 * 20)
+    i, j, k = cell % 30, cell // 30 % 20, cell // 600
+    grade = 75.0 - 10 * (i % 3) - 20 * (j % 3)
+    lito = np.where(grade >= 65, "high", np.where(grade <= 25, "low", "medium"))
+    cells = {
+        "grade": grade,
+        "density": (50 + 50 * (j % 2) + k // 2).astype(np.int32),
+        "lito": lito.astype(object),
+    }
+    write_vtk(
+        f"{d}/std_voxel_schema0.vtk",
+        VtkDataset("STRUCTURED_GRID", points, dimensions=(31, 21, 21), cell_data=cells),
+    )
+    for name, ((x0, y0), (x1, y1)) in _SAMPLE_REGIONS:
+        box = TriMesh.box(((x0, y0, 0.0), (x1, y1, 1000.0)))
+        write_vtk(f"{d}/{name}.vtk", VtkDataset("POLYDATA", box.vertices, faces=box.faces))
+    xy = np.array([(0.0, 0.0), (1500.0, 0.0), (1500.0, 1000.0), (0.0, 1000.0)])
+    up = xy[:, 0] * (1000.0 / 1500.0)
+    for name, z in (("vox_mine_up", up), ("vox_mine_down", 1000.0 - up)):
+        quad = np.column_stack([xy, z])
+        write_vtk(f"{d}/{name}.vtk", VtkDataset("POLYDATA", quad, faces=[[0, 1, 2, 3]]))
 
 
 def _sample_dir() -> str:
-    """Extract the reference's shipped sample archive (binary legacy VTK)
-    to a writable cache once per machine.  The cache dir is keyed on the
-    zip's (mtime, size) so a refreshed archive re-extracts, and the
-    extract goes to a unique temp dir atomically renamed into place so
-    concurrent runs never observe partial files."""
+    """Generate the std_voxel sample once per machine into the temp dir.
+    The sample goes to a unique temp dir atomically renamed into place,
+    so concurrent runs never observe partial files."""
+    import shutil
     import tempfile
-    import zipfile
 
-    st = os.stat(_SAMPLE_ZIP)
-    d = f"/tmp/vtk_reserves_sample_{int(st.st_mtime)}_{st.st_size}"
+    d = os.path.join(tempfile.gettempdir(), f"vtk_reserves_sample_v{_SAMPLE_VERSION}")
     if not os.path.isdir(d):
-        tmp = tempfile.mkdtemp(prefix=d + ".part-")
-        zipfile.ZipFile(_SAMPLE_ZIP).extractall(tmp)
+        tmp = tempfile.mkdtemp(prefix=os.path.basename(d) + ".part-", dir=os.path.dirname(d))
+        _write_sample(tmp)
         try:
             os.rename(tmp, d)
         except OSError:  # lost the race: another run renamed first
-            import shutil
-
             shutil.rmtree(tmp, ignore_errors=True)
     return d
 
 
 def q_reserves_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The reserves pipeline over the reference's REAL sample data
-    (``sample_data/std_voxel_vtk.zip``): binary legacy-VTK ingest
+    """The reserves pipeline over the reference's std_voxel sample
+    (``sample_data/std_voxel_vtk.zip``), generated by
+    :func:`_write_sample`: binary legacy-VTK ingest
     (sources.vtk_binary), ray-cast region flagging and mesh-surface
-    depletion with the actual triangulated geometry, then the mine-
-    weighted region x lito breakdown — the README scenario
-    (``README.md:60-72``) end-to-end.
+    depletion through ``grid_depletion``, then the mine-weighted region
+    x lito breakdown — the README scenario (``README.md:60-72``)
+    end-to-end.
 
-    The oracle re-derives every input analytically: the sample grid's
-    arrays are exact functions of (i, j, k) (verified cell-for-cell:
-    ``grade = 75 - 10*(i%3) - 20*(j%3)``, ``density = 50 + 50*(j%2) +
-    k//2``, ``lito`` banded on grade), the region solids are boxes
-    (bounds frozen as literals below), and both surfaces are planar
-    ramps ``z = 2x/3`` / ``z = 1000 - 2x/3`` — so a hash match proves
-    the whole chain: binary parser, mesh ray-cast, elevation join,
-    depletion math, weighted breakdown.
+    The shipped sample's arrays are exact functions of (i, j, k)
+    (verified cell-for-cell: ``grade = 75 - 10*(i%3) - 20*(j%3)``,
+    ``density = 50 + 50*(j%2) + k//2``, ``lito`` banded on grade), its
+    region solids are boxes and both surfaces are planar ramps
+    ``z = 2x/3`` / ``z = 1000 - 2x/3``, so the generator writes those
+    and the oracle re-derives every input analytically — a hash match
+    proves the whole chain: binary parser, mesh ray-cast, elevation
+    join, depletion math, weighted breakdown.
 
     Depletion semantics are this engine's documented reconstruction
     (mine = clip((z_inc - z + dz/2)/dz) * (1 - clip(...exclude...)));
@@ -395,17 +446,12 @@ def q_reserves_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         ds = read_vtk(f"{d}/{name}.vtk")
         return TriMesh(ds.points, ds.faces, name=name)
 
-    from vtk_reserves_spark.operators.spatial import annotate_spatial
-
-    regions = [trimesh(f"vox_region{i}") for i in (1, 2, 3)]
-    # fused: region parity + both surface depletions in ONE Arrow pass
-    # (was 3 ArrowEvalPython stages: 2 elevations + region flags)
-    df = annotate_spatial(
+    df = grid_depletion(
         df,
-        regions=regions,
-        include=[trimesh("vox_mine_up")],
-        exclude=[trimesh("vox_mine_down")],
-    ).filter(F.col("region") != "")
+        regions=[trimesh(f"vox_region{i}") for i in (1, 2, 3)],
+        mine_include=[trimesh("vox_mine_up")],
+        mine_exclude=[trimesh("vox_mine_down")],
+    )
     rep = breakdown(
         df,
         "region;lito;grade=grade_mean,mean,mine;density=density_mean,mean,mine;"

@@ -3,6 +3,7 @@
 at $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
 local[$SPARK_GRAFT_CPUS] and prints ONE JSON line:
 {"metric": ..., "value": total_sec, "unit": "sec", "queries": {...}, "sf": ...}
+A query that raises is listed under "errors" and left out of the total.
 """
 
 from __future__ import annotations
@@ -11,6 +12,7 @@ import json
 import os
 import sys
 import time
+import traceback
 
 
 def _find_prev_round_file() -> str | None:
@@ -144,6 +146,9 @@ def main() -> None:
     ordered.update({n: f for n, f in qs.items() if n.startswith("stream_")})
     timings: dict[str, float] = {}
     cold: dict[str, float] = {}
+    # a query that raises is reported under "errors" and left out of the
+    # timings, the history and the re-measure passes; the run goes on
+    errors: dict[str, str] = {}
     for name, fn in ordered.items():
         # steady-state measurement: the first execution pays one-time
         # whole-stage-codegen (janino) compilation of the query's
@@ -158,17 +163,23 @@ def main() -> None:
         # full stream through a fresh sink, so a second run measures the
         # same work.)
         runs = 1 if name.startswith("stream_") else 2
-        for r in range(runs):
-            t0 = time.perf_counter()
-            df = fn(spark, sf_dir)
-            # force full execution without driver-side collection
-            df.write.format("noop").mode("overwrite").save()
-            elapsed = round(time.perf_counter() - t0, 4)
-            if r == 0:
-                cold[name] = elapsed
-                timings[name] = elapsed
-            else:
-                timings[name] = min(timings[name], elapsed)
+        try:
+            for r in range(runs):
+                t0 = time.perf_counter()
+                df = fn(spark, sf_dir)
+                # force full execution without driver-side collection
+                df.write.format("noop").mode("overwrite").save()
+                elapsed = round(time.perf_counter() - t0, 4)
+                if r == 0:
+                    cold[name] = elapsed
+                    timings[name] = elapsed
+                else:
+                    timings[name] = min(timings[name], elapsed)
+        except Exception as exc:  # noqa: BLE001 - isolate any query failure
+            traceback.print_exc()  # stderr: stdout carries only the JSON line
+            errors[name] = f"{type(exc).__name__}: {str(exc)[:200]}"
+            cold.pop(name, None)
+            timings.pop(name, None)
 
     total = round(sum(timings.values()), 4)
 
@@ -297,6 +308,8 @@ def main() -> None:
                 # compare THIS across rounds; "value" below is the raw
                 # run and inherits the box's ±25% spread
                 "value_median_of_history": round(med_total, 4) if med_total else None,
+                # queries that raised: {name: "ExcType: message[:200]"}
+                "errors": errors,
                 "metric": "headline_queries_total",
                 "unit": "sec",
                 "sf": float(sf) if sf.replace(".", "").isdigit() else sf,

@@ -347,20 +347,27 @@ def test_column_synonyms_regex_metachars():
     assert column_synonyms(["abc"], ["a+b"], None) is None
 
 
-def _write_binary_sg(path, points, dims, grade):
-    """Minimal binary legacy-VTK STRUCTURED_GRID writer for tests."""
-    import numpy as np
+def test_vtk_binary_write_read_roundtrip(tmp_path):
+    """write_vtk output parses back: grid points, SCALARS (double, int)
+    and FIELD string cell arrays; POLYDATA quads fan-split into
+    triangles."""
+    from vtk_reserves_spark.sources.vtk_binary import VtkDataset, read_vtk, write_vtk
 
-    n = len(points)
-    nc = len(grade)
-    with open(path, "wb") as fh:
-        fh.write(b"# vtk DataFile Version 5.1\nt\nBINARY\nDATASET STRUCTURED_GRID\n")
-        fh.write(b"DIMENSIONS %d %d %d\n" % dims)
-        fh.write(b"POINTS %d float\n" % n)
-        fh.write(np.asarray(points, ">f4").tobytes() + b"\n")
-        fh.write(b"CELL_DATA %d\n" % nc)
-        fh.write(b"SCALARS grade float\nLOOKUP_TABLE default\n")
-        fh.write(np.asarray(grade, ">f4").tobytes() + b"\n")
+    pts = np.arange(24, dtype=float).reshape(8, 3)
+    cells = {"g": np.array([1.5]), "n": np.array([7], np.int32),
+             "s": np.array(["ab"], object)}
+    p = str(tmp_path / "g.vtk")
+    write_vtk(p, VtkDataset("STRUCTURED_GRID", pts, dimensions=(2, 2, 2), cell_data=cells))
+    ds = read_vtk(p)
+    assert ds.kind == "STRUCTURED_GRID" and ds.dimensions == (2, 2, 2)
+    assert np.array_equal(ds.points, pts)
+    assert ds.cell_data["g"].tolist() == [1.5] and ds.cell_data["n"].tolist() == [7]
+    assert ds.cell_data["s"].tolist() == ["ab"]
+
+    p = str(tmp_path / "q.vtk")
+    write_vtk(p, VtkDataset("POLYDATA", pts[:5], faces=[[0, 1, 2, 3], [1, 2, 3, 4]]))
+    ds = read_vtk(p)
+    assert ds.faces.tolist() == [[0, 1, 2], [0, 2, 3], [1, 2, 3], [1, 3, 4]]
 
 
 def test_grid_cell_table_rotated_regular(tmp_path):
@@ -369,7 +376,12 @@ def test_grid_cell_table_rotated_regular(tmp_path):
     import numpy as np
 
     from vtk_reserves_spark.sources.grid import GridSchema
-    from vtk_reserves_spark.sources.vtk_binary import grid_cell_table, read_vtk
+    from vtk_reserves_spark.sources.vtk_binary import (
+        VtkDataset,
+        grid_cell_table,
+        read_vtk,
+        write_vtk,
+    )
 
     gs = GridSchema(origin=(100.0, 200.0, 0.0), spacing=(10.0, 5.0, 2.0),
                     dims=(3, 2, 2), bearing=30.0)
@@ -384,7 +396,8 @@ def test_grid_cell_table_rotated_regular(tmp_path):
                 pts.append((100.0 + lx * c - ly * s, 200.0 + lx * s + ly * c, lz))
     grade = np.arange(3 * 2 * 2, dtype=float)
     p = str(tmp_path / "rot.vtk")
-    _write_binary_sg(p, pts, (4, 3, 3), grade)
+    write_vtk(p, VtkDataset("STRUCTURED_GRID", np.array(pts), dimensions=(4, 3, 3),
+                            cell_data={"grade": grade}))
     pdf = grid_cell_table(read_vtk(p))
     assert len(pdf) == 12
     assert pdf.volume.iloc[0] == pytest.approx(10.0 * 5.0 * 2.0, rel=1e-5)
@@ -402,12 +415,18 @@ def test_grid_cell_table_irregular_raises(tmp_path):
     misattributing cell arrays."""
     import numpy as np
 
-    from vtk_reserves_spark.sources.vtk_binary import grid_cell_table, read_vtk
+    from vtk_reserves_spark.sources.vtk_binary import (
+        VtkDataset,
+        grid_cell_table,
+        read_vtk,
+        write_vtk,
+    )
 
     rng = np.random.RandomState(0)
     pts = rng.rand(8, 3) * 10  # 2x2x2 dims but scrambled points
     p = str(tmp_path / "bad.vtk")
-    _write_binary_sg(p, pts, (2, 2, 2), np.array([1.0]))
+    write_vtk(p, VtkDataset("STRUCTURED_GRID", pts, dimensions=(2, 2, 2),
+                            cell_data={"grade": np.array([1.0])}))
     with pytest.raises(ValueError, match="neither"):
         grid_cell_table(read_vtk(p))
 

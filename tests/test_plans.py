@@ -6,6 +6,7 @@ they are stable across machines."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 import __spark_entry__ as entry
@@ -45,33 +46,41 @@ def test_flag_regions_single_udf(spark):
     assert plan.count("ArrowEvalPython") == 2
 
 
-def test_mesh_grid_depletion_runs_region_udf_once(spark):
-    """Mesh-path grid_depletion: the region flag runs once over the grid
-    and its filter is not copied into the surfaces' node, so the surface
-    ray scans see only the kept rows (2 ArrowEvalPython nodes, the
-    region UDF in one of them)."""
+@pytest.mark.parametrize("path", ["mesh", "bbox_plane"])
+def test_grid_depletion_udf_nodes(spark, path):
+    """grid_depletion's Python UDFs.  Mesh path: the region flag runs
+    once over the grid and its filter is not copied into the surfaces'
+    node, so the surface ray scans see only the kept rows (2
+    ArrowEvalPython nodes, the region UDF in one of them).  Bbox regions
+    and plane surfaces: column expressions only, no Python UDF at all."""
     import numpy as np
 
     from vtk_reserves_spark.operators.reserves import grid_depletion
+    from vtk_reserves_spark.operators.spatial import PlaneSurface
     from vtk_reserves_spark.sources.grid import GridSchema, grid_df
     from vtk_reserves_spark.sources.mesh import TriMesh
 
     grid = grid_df(spark, GridSchema((0.0, 0.0, 0.0), (10.0, 10.0, 10.0), (8, 8, 4)))
-    xs, ys = np.meshgrid([-5.0, 85.0], [-5.0, 85.0], indexing="ij")
-    topo = TriMesh(
-        np.column_stack([xs.ravel(), ys.ravel(), 20.0 + xs.ravel() / 10]),
-        np.array([[0, 2, 3], [0, 3, 1]]),
-    )
-    regions = [
-        TriMesh.box(((0, 0, 0), (40, 40, 40)), name="a"),
-        TriMesh.box(((20, 20, 0), (80, 80, 20)), name="b"),
-    ]
+    boxes = [("a", ((0, 0, 0), (40, 40, 40))), ("b", ((20, 20, 0), (80, 80, 20)))]
+    if path == "mesh":
+        xs, ys = np.meshgrid([-5.0, 85.0], [-5.0, 85.0], indexing="ij")
+        topo = TriMesh(
+            np.column_stack([xs.ravel(), ys.ravel(), 20.0 + xs.ravel() / 10]),
+            np.array([[0, 2, 3], [0, 3, 1]]),
+        )
+        regions = [TriMesh.box(b, name=n) for n, b in boxes]
+    else:
+        topo = PlaneSurface(0.1, 0.0, 20.0)
+        regions = boxes
     df = grid_depletion(grid, regions=regions, mine_include=[topo], mine_exclude=[topo])
     assert df.columns[-2:] == ["mine", "region"]
     plan = df._jdf.queryExecution().executedPlan().toString()
-    nodes = [line for line in plan.splitlines() if "ArrowEvalPython [" in line]
-    assert len(nodes) == 2, plan
-    assert sum("region_udf" in line for line in nodes) == 1, plan
+    if path == "mesh":
+        nodes = [line for line in plan.splitlines() if "ArrowEvalPython [" in line]
+        assert len(nodes) == 2, plan
+        assert sum("region_udf" in line for line in nodes) == 1, plan
+    else:
+        assert "EvalPython" not in plan, plan
 
 
 def test_filter_pushdown_reaches_scan(spark):
@@ -129,13 +138,6 @@ def test_tfidf_broadcasts_idf_map(spark):
     # the token stream itself is never broadcast
     assert plan.count("BroadcastHashJoin") >= 1
     assert "BroadcastNestedLoopJoin" in plan or plan.count("BroadcastExchange") >= 2
-
-
-def test_annotate_spatial_single_udf(spark):
-    """The fused region+depletion operator crosses the Python boundary
-    exactly once (struct-returning UDF is not duplicated per field)."""
-    plan = _plan(entry.q_reserves_sample(spark, TESTDATA))
-    assert plan.count("ArrowEvalPython") == 2  # tree + detail = ONE node
 
 
 def test_breakdown_approx_uses_sketch(spark):

@@ -225,31 +225,37 @@ def test_obj_roundtrip(tmp_path, spark):
     assert mesh.name == "tri"
 
 
-def test_annotate_spatial_matches_composition(spark, grid):
-    """The fused single-UDF operator must reproduce flag_regions +
-    mine_fraction composed, for TriMesh regions and mesh surfaces."""
-    from vtk_reserves_spark.operators.spatial import annotate_spatial
-
-    regions = [
-        TriMesh.box(((20.0, 10.0, 0.0), (70.0, 60.0, 80.0)), name="ra"),
-        TriMesh.box(((50.0, 40.0, 20.0), (90.0, 80.0, 90.0)), name="rb"),
+def test_grid_depletion_mesh_path_matches_expression_path(spark, grid):
+    """grid_depletion gives the same (cell, region, mine) whether regions
+    and surfaces are TriMesh boxes and plane quads (ray-scan UDFs) or the
+    equal bbox tuples and PlaneSurfaces (column expressions).  The
+    exclude surface covers only x < 60, so kept cells beyond it take the
+    no-elevation rule (fraction 0) on both paths."""
+    boxes = [
+        ("ra", ((20.0, 10.0, 0.0), (70.0, 60.0, 80.0))),
+        ("rb", ((50.0, 40.0, 20.0), (90.0, 80.0, 90.0))),
     ]
-    inc = TriMesh.plane_quad(0.1, 0.05, 30.0, ((0.0, 0.0), (100.0, 100.0)), name="up")
-    exc = TriMesh.plane_quad(0.0, 0.0, 15.0, ((0.0, 0.0), (60.0, 100.0)), name="dn")
-    g = grid.withColumn("dz", F.lit(10.0))
+    inc = (0.1, 0.05, 30.0, ((0.0, 0.0), (300.0, 200.0)))
+    exc = (0.0, 0.0, 15.0, ((0.0, 0.0), (60.0, 100.0)))
 
-    composed = flag_regions(
-        mine_fraction(g, include=[inc], exclude=[exc]), regions
-    ).select("cell", "region", "mine")
-    fused = annotate_spatial(g, regions=regions, include=[inc], exclude=[exc]).select(
-        "cell", "region", "mine"
-    )
-    want = {r["cell"]: (r["region"], r["mine"]) for r in composed.collect()}
-    got = {r["cell"]: (r["region"], r["mine"]) for r in fused.collect()}
-    assert got.keys() == want.keys()
-    for c in want:
-        assert got[c][0] == want[c][0], c
-        assert got[c][1] == pytest.approx(want[c][1], nan_ok=True), c
+    def run(regions, surface):
+        df = grid_depletion(
+            grid, regions=regions, mine_include=[surface(*inc)], mine_exclude=[surface(*exc)]
+        )
+        return {r["cell"]: (r["region"], r["mine"], r["x"]) for r in df.collect()}
+
+    meshes = run([TriMesh.box(b, name=n) for n, b in boxes], TriMesh.plane_quad)
+    exprs = run(boxes, PlaneSurface)
+    assert meshes.keys() == exprs.keys()
+    for c, (region, mine, _) in exprs.items():
+        assert meshes[c][0] == region, c
+        # abs covers the ray scan's deliberate xy nudge (~1e-9 * extent * slope)
+        assert meshes[c][1] == pytest.approx(mine, abs=1e-6), c
+    assert {r for r, _, _ in exprs.values()} == {"ra", "rb"}
+    assert any(0.0 < m < 1.0 for _, m, _ in exprs.values())
+    assert any(m == 0.0 and x < 60 for _, m, x in exprs.values())  # fully excluded
+    # beyond the exclude's xy extent the mined fraction is the include's
+    assert any(0.0 < m < 1.0 and x > 60 for _, m, x in exprs.values())
 
 
 def test_ray_scan_scales_to_10k_faces(spark):

@@ -14,6 +14,13 @@ predicate is either:
   embarrassingly parallel across partitions and never shuffles the
   block model.
 
+Region flagging and mine depletion compose as columns: one flag column
+(:func:`flag_regions`, :func:`flag_regions_bbox`), then one elevation
+column per open surface feeding one clip expression
+(:func:`mine_fraction`).  A mesh costs one UDF; boxes and planes cost
+none.  ``reserves.grid_depletion`` flags and filters regions before
+depletion, so each surface UDF scans only the cells some region keeps.
+
 Kernel: vertical (+z) ray crossing counts per point.  ``inside solid`` =
 odd number of crossings above the point (parity test — the semantics of
 ``select_enclosed_points``, ``vtk_flag_regions.py:68``); ``elevation`` =
@@ -228,6 +235,17 @@ def point_in_solid(px, py, pz, mesh: TriMesh):
     return (n_above % 2) == 1
 
 
+def _region_payload(regions: list[TriMesh], values: list[str] | None):
+    """``(flag value, mesh)`` per region: ``values[i]`` when given, else
+    the mesh name (= file basename in the reference pipeline,
+    ``vtk_reserves.py:74``), else the 1-based ordinal."""
+    values = values or []
+    return [
+        (str(values[i]) if i < len(values) else mesh.name or str(i + 1), mesh)
+        for i, mesh in enumerate(regions)
+    ]
+
+
 def flag_regions(
     df: DataFrame,
     regions: list[TriMesh],
@@ -237,20 +255,13 @@ def flag_regions(
 ) -> DataFrame:
     """Flag each row with the enclosing region solid — ``vtk_flag_region``
     (``vtk_flag_regions.py:54-79``): later regions OVERWRITE earlier ones;
-    rows in no region get ``''``; the flag value is the mesh name
-    (= file basename in the reference pipeline, ``vtk_reserves.py:74``)
-    or an ordinal when unnamed.
+    rows in no region get ``''``; the flag value is ``values[i]``, else
+    the mesh name, else an ordinal (:func:`_region_payload`).
 
     The ray scan runs on every row that reaches it: Spark pushes no
     filter applied after this call below it, even one on an unrelated
     column, so filter rows before flagging them."""
-    vals = []
-    for i, mesh in enumerate(regions):
-        if values is not None and i < len(values):
-            vals.append(str(values[i]))
-        else:
-            vals.append(mesh.name or str(i + 1))
-    payload = [(v, m) for v, m in zip(vals, regions)]
+    payload = _region_payload(regions, values)
 
     @F.pandas_udf("string")
     def region_udf(x: pd.Series, y: pd.Series, z: pd.Series) -> pd.Series:
@@ -302,13 +313,7 @@ def flag_regions_2d(
     (``vtk_flag_regions.py:28-52``): any vertical-ray hit marks the point
     as inside the mesh footprint; unmatched points get NULL (the
     reference leaves ``None`` in an object array)."""
-    vals = []
-    for i, mesh in enumerate(regions):
-        if values is not None and i < len(values):
-            vals.append(str(values[i]))
-        else:
-            vals.append(mesh.name or str(i + 1))
-    payload = [(v, m) for v, m in zip(vals, regions)]
+    payload = _region_payload(regions, values)
 
     @F.pandas_udf("string")
     def region2d_udf(x: pd.Series, y: pd.Series) -> pd.Series:
@@ -446,21 +451,6 @@ def proportional_volume(
     return df.withColumn(out_col, frac_udf(*cols))
 
 
-def _surface_fraction(
-    surface, x: Column, y: Column, z: Column, dz: Column
-) -> Column:
-    """Per-cell fraction below a surface: ``clip((z_surf - z + dz/2)/dz,
-    0, 1)`` — the reconstructed ``vtk_block_mine`` kernel (call sites
-    ``vtk_mine.py:80-87``; SURVEY.md §2.5 'mine depletion').  NULL where
-    the surface has no elevation at (x,y)."""
-    if isinstance(surface, PlaneSurface):
-        zs = surface.elevation(x, y)
-    else:
-        raise TypeError("use mine_fraction(); TriMesh surfaces need an elevation join")
-    frac = (zs - z + dz / 2) / dz
-    return F.least(F.greatest(frac, F.lit(0.0)), F.lit(1.0))
-
-
 def mine_fraction(
     df: DataFrame,
     include: list | None = None,
@@ -482,9 +472,15 @@ def mine_fraction(
     - closed-solid members contribute a binary in/out fraction
       (``vtk_mine`` docstring: blocks inside solids are mined).
 
-    Surfaces may be :class:`PlaneSurface` (pure expressions) or
-    :class:`TriMesh` (elevation join via pandas-UDF, or parity test for
-    closed solids — pass ``("solid", mesh)`` to force solid semantics)."""
+    An open surface, :class:`PlaneSurface` or :class:`TriMesh`, is
+    sampled by :func:`surface_elevation` (a column expression for a
+    plane, a ray-scan UDF for a mesh) and its fraction is one clip
+    expression, ``clip((z_surf - z + dz/2) / dz, 0, 1)``: the
+    reconstructed ``vtk_block_mine`` kernel (call sites
+    ``vtk_mine.py:80-87``; SURVEY.md §2.5 'mine depletion').  Where the
+    surface has no elevation the fraction is 0 (``greatest`` skips
+    NULL).  Pass ``("solid", mesh)`` for closed-solid semantics (parity
+    test)."""
     include = include or []
     exclude = exclude or []
     x, y, z = (F.col(c) for c in xyz)
@@ -506,9 +502,6 @@ def mine_fraction(
 
             col = f"__m_{tag}"
             return df.withColumn(col, solid_udf(x, y, z)), F.col(col)
-        if isinstance(surf, PlaneSurface):
-            return df, _surface_fraction(surf, x, y, z, dz)
-        # TriMesh open surface: elevation join then clip expression
         col = f"__zs_{tag}"
         df = surface_elevation(df, surf, col, xy=xyz[:2])
         frac = (F.col(col) - z + dz / 2) / dz
@@ -535,99 +528,3 @@ def mine_fraction(
         mine = mine * F.coalesce(F.lit(1.0) - c, F.lit(1.0))
     df = df.withColumn(mine_col, mine)
     return df.drop(*[c for c in df.columns if c.startswith("__zs_") or c.startswith("__m_")])
-
-
-def annotate_spatial(
-    df: DataFrame,
-    regions: list[TriMesh] | None = None,
-    include: list | None = None,
-    exclude: list | None = None,
-    region_col: str = "region",
-    mine_col: str = "mine",
-    xyz=("x", "y", "z"),
-    dz_col: str = "dz",
-    region_values: list[str] | None = None,
-) -> DataFrame:
-    """FUSED spatial annotation: region flagging + mine depletion in ONE
-    Arrow pandas-UDF pass.
-
-    Composing :func:`flag_regions` + :func:`mine_fraction` costs one
-    ArrowEvalPython stage per TriMesh surface plus one for the region
-    flags — each a full Arrow serialize/deserialize round-trip over the
-    block model.  At 100 TB those round-trips dominate; this operator
-    evaluates every mesh (regions, includes, excludes) against each
-    record batch in a single UDF invocation and returns a struct, so the
-    cells cross the Python boundary exactly once.  Semantics are
-    identical to the composition (same ray-scan kernel, same
-    greatest/coalesce combination rules, later regions overwrite).
-    ``tests/test_plans.py`` asserts the single-ArrowEvalPython plan."""
-    regions = regions or []
-    include = include or []
-    exclude = exclude or []
-    vals = []
-    for i, mesh in enumerate(regions):
-        if region_values is not None and i < len(region_values):
-            vals.append(str(region_values[i]))
-        else:
-            vals.append(mesh.name or str(i + 1))
-    payload = list(zip(vals, regions))
-
-    def surf_frac(surf, px, py, pz, dz) -> np.ndarray:
-        """Depletion fraction for one include/exclude entry.  Where the
-        surface has no elevation at (x, y) the fraction is 0.0 — exactly
-        what the composed path computes, because Spark's
-        ``least(greatest(NULL, 0.0), 1.0)`` skips NULLs and yields 0.0."""
-        if isinstance(surf, tuple) and surf[0] == "solid":
-            return point_in_solid(px, py, pz, surf[1]).astype(np.float64)
-        if isinstance(surf, PlaneSurface):
-            zs = np.full(px.size, np.nan)
-            m = np.ones(px.size, bool)
-            if surf.xy_bounds is not None:
-                (x0, y0), (x1, y1) = surf.xy_bounds
-                m = (px >= x0) & (px <= x1) & (py >= y0) & (py <= y1)
-            zs[m] = surf.a * px[m] + surf.b * py[m] + surf.c
-        else:
-            _, n_hits, z_sum = _ray_scan(px, py, np.zeros(px.size), surf)
-            zs = np.where(n_hits > 0, z_sum / np.maximum(n_hits, 1), np.nan)
-        with np.errstate(invalid="ignore"):
-            frac = np.clip((zs - pz + dz / 2.0) / dz, 0.0, 1.0)
-        return np.where(np.isnan(frac), 0.0, frac)
-
-    out_schema = "region: string, mine: double"
-
-    @F.pandas_udf(out_schema)
-    def fused(xs: pd.Series, ys: pd.Series, zcol: pd.Series, dzs: pd.Series) -> pd.DataFrame:
-        px = xs.to_numpy(np.float64)
-        py = ys.to_numpy(np.float64)
-        pz = zcol.to_numpy(np.float64)
-        dz = dzs.to_numpy(np.float64)
-        reg = np.full(px.size, "", dtype=object)
-        for value, mesh in payload:
-            reg[point_in_solid(px, py, pz, mesh)] = value
-        incs = [surf_frac(s, px, py, pz, dz) for s in include]
-        excs = [surf_frac(s, px, py, pz, dz) for s in exclude]
-        # fractions are always finite (missing elevation -> 0.0 above)
-        m_inc = np.maximum.reduce(incs) if incs else np.ones(px.size)
-        mine = m_inc
-        for e in excs:  # per-surface product, matching mine_fraction
-            mine = mine * (1.0 - e)
-        return pd.DataFrame({"region": reg, "mine": mine})
-
-    x, y, z = (F.col(c) for c in xyz)
-    dz = F.col(dz_col) if dz_col in df.columns else F.lit(1.0)
-    tmp = "__annot"
-    # asNondeterministic stops Catalyst from splitting the struct into
-    # one UDF evaluation per consumer (a downstream filter on `region`
-    # plus the `mine` projection would otherwise each re-run the whole
-    # ray scan — measured as two ArrowEvalPython nodes over the same
-    # rows).  The UDF is pure; the flag only restricts the optimizer.
-    df = df.withColumn(tmp, fused.asNondeterministic()(x, y, z, dz))
-    return (
-        df.withColumn(region_col, F.col(f"{tmp}.region"))
-        # NaN -> NULL so downstream agg/filters see SQL nulls, matching
-        # the unfused mine_fraction output
-        .withColumn(
-            mine_col, F.nanvl(F.col(f"{tmp}.mine"), F.lit(None).cast("double"))
-        )
-        .drop(tmp)
-    )

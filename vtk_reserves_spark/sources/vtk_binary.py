@@ -11,7 +11,8 @@ The reference loads grids and meshes through ``pv.read``
   POINTS + POLYGONS in the 5.1 OFFSETS/CONNECTIVITY layout.
 
 This module parses exactly that public file format (VTK legacy format
-spec): ASCII section headers, big-endian binary payloads.  Driver-side
+spec): ASCII section headers, big-endian binary payloads; ``write_vtk``
+writes the same layout, for generated samples and test files.  Driver-side
 ingest only — geometry files are small next to the block model; the
 parsed tables enter Spark via ``createDataFrame`` (same seam as the
 OBJ/DXF/SHP codecs in this package).
@@ -276,6 +277,61 @@ def read_vtk(path: str) -> VtkDataset:
         point_data=point_data,
         field_data=field_data,
     )
+
+
+#: numpy dtype (``dtype.str`` without the byte order) -> legacy-VTK type
+_VTK_TYPES = {"f8": b"double", "i4": b"int"}
+
+
+def write_vtk(path: str, ds: VtkDataset) -> None:
+    """Write ``ds`` as binary legacy VTK 5.1 in the layout :func:`read_vtk`
+    parses: big-endian double ``POINTS``; ``DIMENSIONS`` for a structured
+    grid; ``POLYGONS`` in the OFFSETS/CONNECTIVITY layout, where
+    ``ds.faces`` may be polygons of any one size (``read_vtk`` fan-splits
+    them into triangles); and ``CELL_DATA`` with one ``SCALARS`` per
+    numeric cell array and one ``FIELD`` holding the string arrays
+    (values under 64 bytes: one ``0xC0 | len`` prefix byte each).
+    Point and dataset-level field data are not written."""
+    parts = [b"# vtk DataFile Version 5.1\nvtk output\nBINARY\n"]
+    parts.append(b"DATASET %s\n" % ds.kind.encode())
+    if ds.dimensions is not None:
+        parts.append(b"DIMENSIONS %d %d %d\n" % tuple(ds.dimensions))
+    pts = np.asarray(ds.points, ">f8")
+    parts += [b"POINTS %d double\n" % len(pts), pts.tobytes(), b"\n"]
+    if ds.faces is not None:
+        faces = np.asarray(ds.faces, ">i8")
+        m, k = faces.shape
+        offsets = (np.arange(m + 1) * k).astype(">i8")
+        parts += [
+            b"POLYGONS %d %d\n" % (m + 1, m * k),
+            b"OFFSETS vtktypeint64\n", offsets.tobytes(), b"\n",
+            b"CONNECTIVITY vtktypeint64\n", faces.tobytes(), b"\n",
+        ]
+    if ds.cell_data:
+        parts.append(b"CELL_DATA %d\n" % ds.n_cells)
+        strings = {}
+        for name, arr in ds.cell_data.items():
+            a = np.asarray(arr)
+            if a.dtype == object:
+                strings[name] = a
+                continue
+            typ = _VTK_TYPES[a.dtype.str[1:]]
+            parts += [
+                b"SCALARS %s %s\nLOOKUP_TABLE default\n" % (name.encode(), typ),
+                a.astype(">" + a.dtype.str[1:]).tobytes(), b"\n",
+            ]
+        if strings:
+            parts.append(b"FIELD FieldData %d\n" % len(strings))
+            for name, a in strings.items():
+                parts.append(b"%s 1 %d string\n" % (name.encode(), len(a)))
+                for v in a:
+                    b = str(v).encode("latin-1")
+                    if len(b) >= 64:
+                        raise ValueError(f"string cell value over 63 bytes: {v!r}")
+                    parts += [bytes([0xC0 | len(b)]), b]
+                parts.append(b"\n")
+    with open(path, "wb") as fh:
+        fh.write(b"".join(parts))
 
 
 def grid_cell_table(ds: VtkDataset):
