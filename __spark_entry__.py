@@ -352,7 +352,7 @@ def _write_sample(d: str) -> None:
       ``z = 1000 - 2x/3``."""
     import numpy as np
 
-    from vtk_reserves_spark.sources.vtk_binary import VtkDataset, write_vtk
+    from vtk_reserves_spark.sources.vtk import VtkDataset, write_vtk
 
     axes = [np.arange(n + 1) * 50.0 for n in (30, 20, 20)]
     lattice = np.meshgrid(*axes, indexing="ij")
@@ -371,8 +371,7 @@ def _write_sample(d: str) -> None:
         VtkDataset("STRUCTURED_GRID", points, dimensions=(31, 21, 21), cell_data=cells),
     )
     for name, ((x0, y0), (x1, y1)) in _SAMPLE_REGIONS:
-        box = TriMesh.box(((x0, y0, 0.0), (x1, y1, 1000.0)))
-        write_vtk(f"{d}/{name}.vtk", VtkDataset("POLYDATA", box.vertices, faces=box.faces))
+        TriMesh.box(((x0, y0, 0.0), (x1, y1, 1000.0))).to_vtk(f"{d}/{name}.vtk")
     xy = np.array([(0.0, 0.0), (1500.0, 0.0), (1500.0, 1000.0), (0.0, 1000.0)])
     up = xy[:, 0] * (1000.0 / 1500.0)
     for name, z in (("vox_mine_up", up), ("vox_mine_down", 1000.0 - up)):
@@ -401,8 +400,8 @@ def _sample_dir() -> str:
 def q_reserves_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reserves pipeline over the reference's std_voxel sample
     (``sample_data/std_voxel_vtk.zip``), generated by
-    :func:`_write_sample`: binary legacy-VTK ingest
-    (sources.vtk_binary), ray-cast region flagging and mesh-surface
+    :func:`_write_sample`: legacy-VTK ingest through ``load_dataframe``
+    (sources.vtk), ray-cast region flagging and mesh-surface
     depletion through ``grid_depletion``, then the mine-weighted region
     x lito breakdown — the README scenario (``README.md:60-72``)
     end-to-end.
@@ -426,31 +425,14 @@ def q_reserves_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     code.  Report columns are rounded (means 4 dp, sums to units) so
     the t2 value-hash compares well inside double precision at ~1e9
     magnitudes."""
-    from vtk_reserves_spark.sources.vtk_binary import grid_cell_table, read_vtk
+    from vtk_reserves_spark.sources.loaders import load_dataframe
 
     d = _sample_dir()
-    pdf = grid_cell_table(read_vtk(f"{d}/std_voxel_schema0.vtk"))
-    # Arrow batch transfer for the pandas->Spark handoff (~2x faster
-    # than the pickle fallback) — scoped to THIS conversion and restored
-    # after, so running this query doesn't flip session-global
-    # conversion behavior for every later query in the same process
-    arrow_key = "spark.sql.execution.arrow.pyspark.enabled"
-    before = spark.conf.get(arrow_key)
-    spark.conf.set(arrow_key, "true")
-    try:
-        df = spark.createDataFrame(pdf).withColumn("dz", F.lit(50.0))
-    finally:
-        spark.conf.set(arrow_key, before)
-
-    def trimesh(name: str) -> TriMesh:
-        ds = read_vtk(f"{d}/{name}.vtk")
-        return TriMesh(ds.points, ds.faces, name=name)
-
     df = grid_depletion(
-        df,
-        regions=[trimesh(f"vox_region{i}") for i in (1, 2, 3)],
-        mine_include=[trimesh("vox_mine_up")],
-        mine_exclude=[trimesh("vox_mine_down")],
+        load_dataframe(spark, f"{d}/std_voxel_schema0.vtk", keep_null=True),
+        regions=[TriMesh.from_vtk(f"{d}/vox_region{i}.vtk") for i in (1, 2, 3)],
+        mine_include=[TriMesh.from_vtk(f"{d}/vox_mine_up.vtk")],
+        mine_exclude=[TriMesh.from_vtk(f"{d}/vox_mine_down.vtk")],
     )
     rep = breakdown(
         df,

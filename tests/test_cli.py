@@ -92,6 +92,46 @@ def test_reserves_pipeline_with_mesh_region(tmp_path, grid_csv, spark):
     assert set(got["region"]) == {"r1"}
 
 
+def test_reserves_on_the_vtk_sample_matches_the_golden_table(tmp_path, spark):
+    """The README scenario from the command line: the sample's .vtk block
+    model and .vtk solids and surfaces reproduce the golden rows of
+    test_reserves_sample_golden_table once rounded as q_reserves_sample
+    rounds."""
+    from pyspark.sql import functions as F
+
+    import __spark_entry__ as entry
+
+    d = entry._sample_dir()
+    out = str(tmp_path / "reserves.csv")
+    cli.main(
+        ["reserves", f"{d}/std_voxel_schema0.vtk",
+         "region;lito;grade=grade_mean,mean,mine;density=density_mean,mean,mine;"
+         "volume=volume_sum,sum,mine;volume=mass_sum,sum,density,mine", out]
+        + [a for i in (1, 2, 3) for a in ("--region", f"{d}/vox_region{i}.vtk")]
+        + ["--mine-include", f"{d}/vox_mine_up.vtk", "--mine-exclude", f"{d}/vox_mine_down.vtk"]
+    )
+    rep = spark.read.csv(out, header=True, inferSchema=True)
+    rows = rep.select(
+        "region",
+        "lito",
+        F.round("grade_mean", 4),
+        F.round("density_mean", 4),
+        F.round("volume_sum", 0),
+        F.round(F.col("mass_sum") / 1000.0, 0),
+    ).orderBy("region", "lito").collect()
+    assert [tuple(r) for r in rows] == [
+        ("vox_region1", "high", None, None, 0.0, 0.0),
+        ("vox_region1", "low", None, None, 0.0, 0.0),
+        ("vox_region1", "medium", None, None, 0.0, 0.0),
+        ("vox_region2", "high", 69.75, 87.8333, 30000000.0, 2635000.0),
+        ("vox_region2", "low", 21.1165, 79.5, 17166667.0, 1364750.0),
+        ("vox_region2", "medium", 45.722, 81.3051, 46166667.0, 3753583.0),
+        ("vox_region3", "high", 69.0, 84.5, 8333333.0, 704167.0),
+        ("vox_region3", "low", 22.0588, 79.5, 8500000.0, 675750.0),
+        ("vox_region3", "medium", 44.596, 76.9747, 16500000.0, 1270083.0),
+    ]
+
+
 def _csv_part(path: str) -> str:
     """save_table writes a Spark csv directory; find the part file."""
     if os.path.isfile(path):

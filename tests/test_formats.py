@@ -301,7 +301,7 @@ def test_vtk_binary_eof_without_newline(tmp_path):
     line) instead of raising ValueError."""
     import numpy as np
 
-    from vtk_reserves_spark.sources.vtk_binary import read_vtk
+    from vtk_reserves_spark.sources.vtk import read_vtk
 
     pts = np.array([[0, 0, 0], [1, 0, 0], [0, 1, 0]], ">f4")
     body = (
@@ -324,7 +324,7 @@ def test_vtk_binary_unsupported_section_raises(tmp_path):
     import numpy as np
     import pytest
 
-    from vtk_reserves_spark.sources.vtk_binary import read_vtk
+    from vtk_reserves_spark.sources.vtk import read_vtk
 
     pts = np.zeros((3, 3), ">f4")
     body = (
@@ -351,7 +351,7 @@ def test_vtk_binary_write_read_roundtrip(tmp_path):
     """write_vtk output parses back: grid points, SCALARS (double, int)
     and FIELD string cell arrays; POLYDATA quads fan-split into
     triangles."""
-    from vtk_reserves_spark.sources.vtk_binary import VtkDataset, read_vtk, write_vtk
+    from vtk_reserves_spark.sources.vtk import VtkDataset, read_vtk, write_vtk
 
     pts = np.arange(24, dtype=float).reshape(8, 3)
     cells = {"g": np.array([1.5]), "n": np.array([7], np.int32),
@@ -370,13 +370,176 @@ def test_vtk_binary_write_read_roundtrip(tmp_path):
     assert ds.faces.tolist() == [[0, 1, 2], [0, 2, 3], [1, 2, 3], [1, 3, 4]]
 
 
+def _legacy_vtk(encoding: bytes, dataset: bytes, sections) -> bytes:
+    """A legacy-VTK file body: ``sections`` are ``(header, dtype, values)``
+    triples, the values written as big-endian bytes (``BINARY``) or as
+    whitespace-separated text (``ASCII``); ``dtype`` None = header only."""
+    out = [b"# vtk DataFile Version 5.1\ntest\n%s\nDATASET %s\n" % (encoding, dataset)]
+    for header, dtype, values in sections:
+        out.append(header + b"\n")
+        if dtype is not None:
+            a = np.asarray(values, dtype)
+            if encoding == b"BINARY":
+                out.append(a.tobytes() + b"\n")
+            else:
+                out.append(" ".join(map(repr, a.tolist())).encode() + b"\n")
+    return b"".join(out)
+
+
+def test_vtk_ascii_binary_parity(tmp_path):
+    """The same POLYDATA (a triangle, a quad and a strip, in the 5.1
+    OFFSETS/CONNECTIVITY and the count-prefixed cell layouts) and the
+    same 2x2x2 STRUCTURED_GRID (double and int SCALARS) parse to equal
+    arrays from ASCII text, from BINARY bytes and from write_vtk.  Quads
+    fan from their first vertex; strips alternate their winding."""
+    import pandas as pd
+
+    from vtk_reserves_spark.sources.vtk import (
+        VtkDataset, grid_cell_table, read_vtk, write_vtk,
+    )
+
+    def parse(name: str, body: bytes):
+        p = tmp_path / name
+        p.write_bytes(body)
+        return read_vtk(str(p))
+
+    pts = np.array([[0, 0, 0], [1, 0, 0], [0, 1, 0], [1, 1, 0.5], [0, 2, 0.25]]) + [
+        512345.678, 7654321.1234, 0.1,
+    ]
+    point_section = (b"POINTS 5 double", ">f8", pts.ravel())
+    layouts = {
+        "offsets": [
+            point_section,
+            (b"POLYGONS 3 7", None, None),
+            (b"OFFSETS vtktypeint64", ">i8", [0, 3, 7]),
+            (b"CONNECTIVITY vtktypeint64", ">i8", [0, 1, 2, 1, 2, 3, 4]),
+            (b"TRIANGLE_STRIPS 2 5", None, None),
+            (b"OFFSETS vtktypeint64", ">i8", [0, 5]),
+            (b"CONNECTIVITY vtktypeint64", ">i8", [0, 1, 2, 3, 4]),
+        ],
+        "count_prefixed": [
+            point_section,
+            (b"POLYGONS 2 9", ">i4", [3, 0, 1, 2, 4, 1, 2, 3, 4]),
+            (b"TRIANGLE_STRIPS 1 6", ">i4", [5, 0, 1, 2, 3, 4]),
+        ],
+    }
+    want = [[0, 1, 2], [1, 2, 3], [1, 3, 4], [0, 1, 2], [1, 3, 2], [2, 3, 4]]
+    write_vtk(str(tmp_path / "w.vtk"), VtkDataset("POLYDATA", pts, faces=want))
+    written = read_vtk(str(tmp_path / "w.vtk"))
+    for layout, sections in layouts.items():
+        for enc in (b"ASCII", b"BINARY"):
+            ds = parse(f"{layout}_{enc.decode()}.vtk", _legacy_vtk(enc, b"POLYDATA", sections))
+            assert ds.kind == "POLYDATA", (layout, enc)
+            assert np.array_equal(ds.points, written.points), (layout, enc)
+            assert np.array_equal(ds.faces, written.faces), (layout, enc)
+    assert written.faces.tolist() == want
+
+    axes = np.meshgrid(*[np.array([0.0, 12.5, 25.0])] * 3, indexing="ij")
+    grid_pts = np.stack([a.ravel(order="F") for a in axes], 1) + [512345.678, 7654321.1234, 0.0]
+    grade = np.array([0.1, 1.5, 2.25, 3e-7, 4.0, 5.5, 6.125, 7.0])
+    density = np.array([2, 3, -99, 5, 6, 7, 8, 9], np.int32)
+    sections = [
+        (b"DIMENSIONS 3 3 3", None, None),
+        (b"POINTS 27 double", ">f8", grid_pts.ravel()),
+        (b"CELL_DATA 8", None, None),
+        (b"SCALARS grade double", None, None),
+        (b"LOOKUP_TABLE default", ">f8", grade),
+        (b"SCALARS density int 1", None, None),
+        (b"LOOKUP_TABLE default", ">i4", density),
+    ]
+    write_vtk(str(tmp_path / "wg.vtk"), VtkDataset(
+        "STRUCTURED_GRID", grid_pts, dimensions=(3, 3, 3),
+        cell_data={"grade": grade, "density": density},
+    ))
+    grids = [read_vtk(str(tmp_path / "wg.vtk"))] + [
+        parse(f"g_{enc.decode()}.vtk", _legacy_vtk(enc, b"STRUCTURED_GRID", sections))
+        for enc in (b"ASCII", b"BINARY")
+    ]
+    for ds in grids:
+        assert ds.kind == "STRUCTURED_GRID" and ds.dimensions == (3, 3, 3)
+        assert np.array_equal(ds.points, grid_pts)
+        assert np.array_equal(ds.cell_data["grade"], grade)
+        assert np.array_equal(ds.cell_data["density"], density)
+        pd.testing.assert_frame_equal(grid_cell_table(ds), grid_cell_table(grids[0]))
+
+
+@pytest.mark.parametrize("strips", [False, True])
+def test_triangulate_matches_the_cell_loop(strips):
+    """The vectorized cell split equals a per-cell loop on cells of 0-7
+    vertices: polygons fan from their first vertex, strips slide a
+    window and swap the last two vertices of every odd triangle."""
+    from vtk_reserves_spark.sources.vtk import triangulate
+
+    rng = np.random.default_rng(7)
+    offs = np.concatenate([[0], np.cumsum(rng.integers(0, 8, 200))])
+    conn = rng.integers(0, 1000, offs[-1])
+    want = []
+    for a, b in zip(offs[:-1], offs[1:]):
+        idx = conn[a:b].tolist()
+        for t in range(len(idx) - 2):
+            if not strips:
+                want.append([idx[0], idx[t + 1], idx[t + 2]])
+            else:
+                want.append([idx[t], idx[t + 2], idx[t + 1]] if t % 2 else idx[t:t + 3])
+    assert triangulate(offs, conn, strips=strips).tolist() == want
+
+
+def test_vtk_ascii_string_array_raises(tmp_path):
+    from vtk_reserves_spark.sources.vtk import read_vtk
+
+    p = tmp_path / "s.vtk"
+    p.write_bytes(_legacy_vtk(b"ASCII", b"STRUCTURED_GRID", [
+        (b"DIMENSIONS 2 2 2", None, None),
+        (b"POINTS 8 double", ">f8", np.zeros(24)),
+        (b"CELL_DATA 1", None, None),
+        (b"FIELD FieldData 1", None, None),
+        (b"lito 1 1 string", None, None),
+        (b"high", None, None),
+    ]))
+    with pytest.raises(ValueError, match="string arrays in ASCII"):
+        read_vtk(str(p))
+
+
+def test_non_polydata_vtk_is_not_a_mesh(tmp_path):
+    """A grid file handed to the mesh readers raises and names its kind,
+    instead of becoming a zero-face mesh that flags no region cell."""
+    from vtk_reserves_spark.sources.mesh import TriMesh, read_mesh
+    from vtk_reserves_spark.sources.vtk import VtkDataset, write_vtk
+
+    p = str(tmp_path / "grid.vtk")
+    write_vtk(p, VtkDataset("STRUCTURED_GRID", np.zeros((8, 3)), dimensions=(2, 2, 2)))
+    for read in (TriMesh.from_vtk, read_mesh):
+        with pytest.raises(ValueError, match="STRUCTURED_GRID"):
+            read(p)
+
+
+def test_load_dataframe_reads_a_vtk_block_model(spark):
+    """load_dataframe on the sample's STRUCTURED_GRID gives one row per
+    cell with grid_df's columns plus the cell arrays, and leaves the
+    session's Arrow setting alone."""
+    import __spark_entry__ as entry
+
+    from vtk_reserves_spark.sources.grid import GridSchema, grid_df
+
+    arrow_key = "spark.sql.execution.arrow.pyspark.enabled"
+    before = spark.conf.get(arrow_key)
+    df = load_dataframe(spark, f"{entry._sample_dir()}/std_voxel_schema0.vtk")
+    assert spark.conf.get(arrow_key) == before
+    gs = GridSchema(origin=(0.0, 0.0, 0.0), spacing=(50.0, 50.0, 50.0), dims=(30, 20, 20))
+    assert df.columns == grid_df(spark, gs).columns + ["grade", "density", "lito"]
+    assert df.count() == 12_000
+    r = df.filter("cell = 631").first()  # i=1, j=1, k=1
+    assert (r.x, r.y, r.z, r.dz, r.volume) == (75.0, 75.0, 75.0, 50.0, 125_000.0)
+    assert (r.grade, r.density, r.lito) == (45.0, 100, "medium")
+
+
 def test_grid_cell_table_rotated_regular(tmp_path):
     """A z-rotated (bearing) regular grid parses via the affine fallback:
     centroids match the GridSchema bearing affine, volume = |det|."""
     import numpy as np
 
     from vtk_reserves_spark.sources.grid import GridSchema
-    from vtk_reserves_spark.sources.vtk_binary import (
+    from vtk_reserves_spark.sources.vtk import (
         VtkDataset,
         grid_cell_table,
         read_vtk,
@@ -415,7 +578,7 @@ def test_grid_cell_table_irregular_raises(tmp_path):
     misattributing cell arrays."""
     import numpy as np
 
-    from vtk_reserves_spark.sources.vtk_binary import (
+    from vtk_reserves_spark.sources.vtk import (
         VtkDataset,
         grid_cell_table,
         read_vtk,

@@ -30,12 +30,18 @@ def test_obj_roundtrip(tmp_path, box):
     assert (back.faces == box.faces).all()
 
 
-def test_vtk_roundtrip(tmp_path, box):
+def test_vtk_roundtrip(tmp_path):
+    """A mesh at UTM scale comes back bit for bit (a 9-digit text writer
+    would round a northing of 7,654,321.1234 m to 7654321.12)."""
+    box = TriMesh.box(
+        ((512345.678, 7654321.1234, 10.5), (512355.678, 7654341.1234, 40.25)), name="b"
+    )
     p = str(tmp_path / "m.vtk")
     box.to_vtk(p)
     back = TriMesh.from_vtk(p)
-    assert np.allclose(back.vertices, box.vertices)
-    assert (back.faces == box.faces).all()
+    assert np.array_equal(back.vertices, box.vertices)
+    assert np.array_equal(back.faces, box.faces)
+    assert back.name == "m"
 
 
 def test_nodes_faces_reshape_roundtrip(spark, box):

@@ -281,11 +281,18 @@ def test_media_metadata_ops_no_shuffle(spark):
 
 def test_pure_catalyst_meta_queries_no_python(spark):
     """svg_stats / html_meta / readability stay entirely inside
-    whole-stage codegen — no Python eval nodes at all."""
+    whole-stage codegen — no Python eval nodes at all — and shuffle
+    nothing, except html_meta's one hash spread of its single-split
+    scan on doc_id (kept because isolated best-of-5 timings at local[4]
+    and local[8] measured it faster than the plain scan)."""
+    import re
+
     for q in (entry.q_svg_stats, entry.q_html_meta, entry.q_readability):
         plan = _plan(q(spark, TESTDATA))
         assert "EvalPython" not in plan, q.__name__
-        assert "Exchange" not in plan, q.__name__
+        exchanges = re.findall(r"^\(\d+\) Exchange\n.*\nArguments: (\w+\(\w+)", plan, re.M)
+        want = ["hashpartitioning(doc_id"] if q is entry.q_html_meta else []
+        assert exchanges == want, q.__name__
 
 
 def test_image_neardup_band_join_no_cartesian(spark):

@@ -8,8 +8,8 @@ execution.  The reference's tkinter GUI / usage-DSL form builder
 
     python -m vtk_reserves_spark.cli breakdown in.parquet \\
         "region;grade=g,mean,mass" out.xlsx --condition "grade > 0"
-    python -m vtk_reserves_spark.cli reserves grid.parquet \\
-        "lito;grade,mean" out.csv --region r1.obj --mine-include top.obj
+    python -m vtk_reserves_spark.cli reserves grid.vtk \\
+        "lito;grade,mean" out.csv --region r1.vtk --mine-include top.obj
     python -m vtk_reserves_spark.cli convert in.csv out.parquet
 """
 
@@ -28,21 +28,6 @@ def _spark():
         .config("spark.sql.session.timeZone", "UTC")
         .getOrCreate()
     )
-
-
-def _load_mesh(path: str):
-    from vtk_reserves_spark.sources.mesh import TriMesh
-
-    ext = os.path.splitext(path.lower())[1]
-    if ext == ".obj":
-        return TriMesh.from_obj(path)
-    if ext == ".vtk":
-        return TriMesh.from_vtk(path)
-    if ext == ".msh":
-        from vtk_reserves_spark.sources.leapfrog import read_msh
-
-        return read_msh(path)
-    raise SystemExit(f"unsupported mesh format: {path}")
 
 
 def cmd_breakdown(args) -> None:
@@ -80,13 +65,14 @@ def cmd_reserves(args) -> None:
     breakdown with an auto region key."""
     from vtk_reserves_spark.operators.reserves import reserves_report
     from vtk_reserves_spark.sources.loaders import load_dataframe
+    from vtk_reserves_spark.sources.mesh import read_mesh
     from vtk_reserves_spark.sources.writers import save_report
 
     spark = _spark()
     grid = load_dataframe(spark, args.grid, keep_null=args.keep_null)
-    regions = [_load_mesh(p) for p in args.region]
-    include = [_load_mesh(p) for p in args.mine_include]
-    exclude = [_load_mesh(p) for p in args.mine_exclude]
+    regions = [read_mesh(p) for p in args.region]
+    include = [read_mesh(p) for p in args.mine_include]
+    exclude = [read_mesh(p) for p in args.mine_exclude]
     out = reserves_report(
         grid,
         args.template,
@@ -101,11 +87,12 @@ def cmd_flag_regions(args) -> None:
     """``vtk_flag_regions`` equivalent (``vtk_flag_regions.py:82-130``)."""
     from vtk_reserves_spark.operators.spatial import flag_regions, flag_regions_2d
     from vtk_reserves_spark.sources.loaders import load_dataframe
+    from vtk_reserves_spark.sources.mesh import read_mesh
     from vtk_reserves_spark.sources.writers import save_table
 
     spark = _spark()
     grid = load_dataframe(spark, args.grid, keep_null=args.keep_null)
-    meshes = [_load_mesh(p) for p in args.mesh]
+    meshes = [read_mesh(p) for p in args.mesh]
     flagged = (
         flag_regions_2d(grid, meshes, flag_var=args.flag_var)
         if args.two_d
@@ -119,12 +106,13 @@ def cmd_mine(args) -> None:
     depletion onto the grid table."""
     from vtk_reserves_spark.operators.spatial import mine_fraction
     from vtk_reserves_spark.sources.loaders import load_dataframe
+    from vtk_reserves_spark.sources.mesh import read_mesh
     from vtk_reserves_spark.sources.writers import save_table
 
     spark = _spark()
     grid = load_dataframe(spark, args.grid, keep_null=args.keep_null)
-    include = [_load_mesh(p) for p in args.include]
-    exclude = [_load_mesh(p) for p in args.exclude]
+    include = [read_mesh(p) for p in args.include]
+    exclude = [read_mesh(p) for p in args.exclude]
     save_table(mine_fraction(grid, include=include, exclude=exclude), args.output)
 
 
@@ -133,17 +121,10 @@ def cmd_convert(args) -> None:
     conversion with optional condition/column pushdown.  Mesh-to-mesh
     conversions (obj<->vtk) stay driver-side; tabular conversions go
     through Spark."""
-    in_ext = os.path.splitext(args.input.lower())[1]
-    out_ext = os.path.splitext(args.output.lower())[1]
-    mesh_exts = (".obj", ".vtk", ".msh")
-    if in_ext in mesh_exts and out_ext in mesh_exts:
-        mesh = _load_mesh(args.input)
-        if out_ext == ".msh":
-            from vtk_reserves_spark.sources.leapfrog import write_msh
+    from vtk_reserves_spark.sources.mesh import MESH_EXTS, read_mesh, write_mesh
 
-            write_msh(mesh, args.output)
-        else:
-            (mesh.to_obj if out_ext == ".obj" else mesh.to_vtk)(args.output)
+    if all(os.path.splitext(p.lower())[1] in MESH_EXTS for p in (args.input, args.output)):
+        write_mesh(read_mesh(args.input), args.output)
         return
     from vtk_reserves_spark.sources.loaders import load_dataframe
     from vtk_reserves_spark.sources.writers import save_table
@@ -162,13 +143,15 @@ def cmd_decimate(args) -> None:
     ``target_reduction`` face-proportion semantics; ``cluster`` runs the
     distributed vertex-clustering variant (``--cell-size``) through
     Spark for terrain-scale meshes."""
+    from vtk_reserves_spark.sources.mesh import read_mesh, write_mesh
+
     if args.method == "qem":
         from vtk_reserves_spark.sources.mesh import decimate_quadric
 
-        mesh = _load_mesh(args.input)
+        mesh = read_mesh(args.input)
         out = decimate_quadric(mesh, args.target_reduction)
         print(f"n_faces input {len(mesh.faces)} output {len(out.faces)}")
-        _save_mesh(out, args.output)
+        write_mesh(out, args.output)
     else:
         from vtk_reserves_spark.sources.mesh import (
             decimate_vertex_cluster,
@@ -176,27 +159,13 @@ def cmd_decimate(args) -> None:
         )
 
         spark = _spark()
-        ex = _load_mesh(args.input).to_exploded_df(spark)
+        ex = read_mesh(args.input).to_exploded_df(spark)
         dec = decimate_vertex_cluster(ex, args.cell_size)
         out = mesh_from_exploded_df(
             dec.select("x", "y", "z", "n", "node", "face").toPandas()
         )
         print(f"n_faces output {len(out.faces)}")
-        _save_mesh(out, args.output)
-
-
-def _save_mesh(mesh, path: str) -> None:
-    ext = os.path.splitext(path.lower())[1]
-    if ext == ".msh":
-        from vtk_reserves_spark.sources.leapfrog import write_msh
-
-        write_msh(mesh, path)
-    elif ext == ".obj":
-        mesh.to_obj(path)
-    elif ext == ".vtk":
-        mesh.to_vtk(path)
-    else:
-        raise ValueError(f"unsupported mesh output format {ext!r} (obj/vtk/msh)")
+        write_mesh(out, args.output)
 
 
 def cmd_dedup(args) -> None:

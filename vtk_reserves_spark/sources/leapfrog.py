@@ -33,7 +33,6 @@ import re
 import struct
 
 import numpy as np
-from pyspark.sql import DataFrame, SparkSession
 
 from vtk_reserves_spark.sources.mesh import TriMesh
 
@@ -119,15 +118,3 @@ def write_msh(mesh: TriMesh, path: str) -> None:
         fh.write(_BIN_HEADER)
         fh.write(faces.tobytes())
         fh.write(verts.tobytes())
-
-
-def read_msh_df(spark: SparkSession, path: str) -> DataFrame:
-    """MSH -> exploded mesh table (loader-dispatch target for ``.msh``)."""
-    return read_msh(path).to_exploded_df(spark)
-
-
-def write_msh_df(pdf, path: str) -> None:
-    """Exploded mesh table (pandas) -> ``.msh`` (writer-dispatch target)."""
-    from vtk_reserves_spark.sources.mesh import mesh_from_exploded_df
-
-    write_msh(mesh_from_exploded_df(pdf), path)

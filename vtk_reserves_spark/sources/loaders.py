@@ -261,18 +261,12 @@ def load_dataframe(
         df = spark.read.json(df_path)
     elif ext in (".xlsx", ".xls"):
         df = _load_excel(spark, df_path, table_name)
-    elif ext == ".obj":
-        from vtk_reserves_spark.sources.mesh import read_obj_df
-
-        df = read_obj_df(spark, df_path)
     elif ext == ".vtk":
-        from vtk_reserves_spark.sources.mesh import TriMesh
+        df = _load_vtk(spark, df_path)
+    elif ext in (".obj", ".msh"):
+        from vtk_reserves_spark.sources.mesh import read_mesh
 
-        df = TriMesh.from_vtk(df_path).to_exploded_df(spark)
-    elif ext == ".msh":
-        from vtk_reserves_spark.sources.leapfrog import read_msh_df
-
-        df = read_msh_df(spark, df_path)
+        df = read_mesh(df_path).to_exploded_df(spark)
     elif ext in (".glb", ".gltf"):
         from vtk_reserves_spark.sources.gltf import read_glb_df
 
@@ -355,6 +349,24 @@ def apply_load_options(
         if keep:
             df = df.select(*keep)
     return df
+
+
+def _load_vtk(spark: SparkSession, path: str) -> DataFrame:
+    """Legacy VTK by dataset kind: a STRUCTURED_GRID block model becomes
+    its cell table, any other kind must be a POLYDATA mesh and becomes
+    the exploded mesh table.  A ``pyarrow.Table`` converts through Arrow
+    whatever the session's Arrow setting."""
+    import pyarrow as pa
+
+    from vtk_reserves_spark.sources.mesh import TriMesh
+    from vtk_reserves_spark.sources.vtk import grid_cell_table, read_vtk
+
+    ds = read_vtk(path)
+    if ds.kind == "STRUCTURED_GRID":
+        table = pa.Table.from_pandas(grid_cell_table(ds), preserve_index=False)
+        return spark.createDataFrame(table)
+    name = os.path.splitext(os.path.basename(path))[0]
+    return TriMesh.from_dataset(ds, name=name).to_exploded_df(spark)
 
 
 def _load_excel(spark: SparkSession, path: str, sheet: str | None) -> DataFrame:

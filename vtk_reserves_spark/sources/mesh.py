@@ -8,10 +8,12 @@ shipped to executors inside pandas-UDF closures (task-broadcast) — meshes
 are KB-to-MB scale while the block model is the 100 TB side, so the mesh
 is always the broadcast side of every spatial join.
 
-Supported ingest: Wavefront OBJ (``_gui.py:1281-1315``), exploded mesh
-tables (``n``/``node`` run-length encoding, ``_gui.py:774-793``),
-Leapfrog msh (`sources/leapfrog.py`), and synthetic boxes for region
-solids (the reference sample's ``vox_region*.vtk`` are 8-vertex boxes).
+Supported ingest: Wavefront OBJ (``_gui.py:1281-1315``), legacy VTK
+POLYDATA in ASCII or BINARY (`sources/vtk.py`), exploded mesh tables
+(``n``/``node`` run-length encoding, ``_gui.py:774-793``), Leapfrog msh
+(`sources/leapfrog.py`), and synthetic boxes for region solids (the
+reference sample's ``vox_region*.vtk`` are 8-vertex boxes).
+:func:`read_mesh` / :func:`write_mesh` dispatch on the file extension.
 Vulcan 00t stays out of scope (proprietary API, SURVEY.md §2.1).
 """
 
@@ -22,6 +24,8 @@ from dataclasses import dataclass, field
 
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
+
+from vtk_reserves_spark.sources.vtk import VtkDataset, read_vtk, triangulate, write_vtk
 
 
 @dataclass
@@ -96,87 +100,29 @@ class TriMesh:
                 fh.write(f"f {a + 1} {b + 1} {c + 1}\n")
 
     def to_vtk(self, path: str) -> None:
-        """Legacy VTK ASCII POLYDATA writer (public format spec; the
-        reference round-trips meshes through ``pv_save``,
-        ``pd_vtk.py:95-136``).  POINTS + POLYGONS sections only."""
-        with open(path, "w") as fh:
-            fh.write("# vtk DataFile Version 3.0\n")
-            fh.write(f"{self.name or 'mesh'}\n")
-            fh.write("ASCII\nDATASET POLYDATA\n")
-            fh.write(f"POINTS {len(self.vertices)} float\n")
-            for x, y, z in self.vertices:
-                fh.write(f"{x:.9g} {y:.9g} {z:.9g}\n")
-            m = len(self.faces)
-            fh.write(f"POLYGONS {m} {4 * m}\n")
-            for a, b, c in self.faces:
-                fh.write(f"3 {a} {b} {c}\n")
+        """Legacy VTK POLYDATA writer: binary 5.1 through
+        :func:`~vtk_reserves_spark.sources.vtk.write_vtk` (the reference
+        round-trips meshes through ``pv_save``, ``pd_vtk.py:95-136``,
+        whose default is binary).  Vertices keep full double precision."""
+        write_vtk(path, VtkDataset("POLYDATA", self.vertices, faces=self.faces))
 
     @classmethod
     def from_vtk(cls, path: str) -> "TriMesh":
-        """Legacy VTK POLYDATA parser (POINTS + POLYGONS /
-        TRIANGLE_STRIPS; polygons with >3 vertices fan-triangulate like
-        the OBJ path, strips triangulate with the sliding window +
-        alternating winding the format defines).  BINARY legacy files
-        (the reference's shipped sample format) are detected from the
-        format line and routed through `sources/vtk_binary.read_vtk` —
-        previously they crashed here with a UnicodeDecodeError."""
-        # 4 KB probe: the legacy header allows a 256-char title line,
-        # so a 256-byte probe could cut BEFORE the format line and
-        # misroute a binary file into the ASCII parser
-        with open(path, "rb") as fh:
-            head = fh.read(4096)
-        fmt_line = head.split(b"\n")[2:3]
-        if fmt_line and fmt_line[0].strip().upper().startswith(b"BINARY"):
-            from vtk_reserves_spark.sources.vtk_binary import read_vtk
-
-            ds = read_vtk(path)
-            return cls(
-                np.asarray(ds.points, np.float64),
-                np.asarray(ds.faces, int)
-                if getattr(ds, "faces", None) is not None and len(ds.faces)
-                else np.empty((0, 3), int),
-                name=os.path.splitext(os.path.basename(path))[0],
-            )
-        with open(path, "r") as fh:
-            toks = fh.read().split("\n")
-        verts: list[float] = []
-        faces: list[list[int]] = []
-        i = 0
-        while i < len(toks):
-            parts = toks[i].split()
-            if parts[:1] == ["POINTS"]:
-                n = int(parts[1])
-                flat: list[float] = []
-                while len(flat) < 3 * n:
-                    i += 1
-                    flat.extend(float(v) for v in toks[i].split())
-                verts = flat
-            elif parts[:1] in (["POLYGONS"], ["TRIANGLE_STRIPS"]):
-                strips = parts[0] == "TRIANGLE_STRIPS"
-                m = int(parts[1])
-                got = 0
-                while got < m:
-                    i += 1
-                    rec = [int(v) for v in toks[i].split()]
-                    k, idx = rec[0], rec[1:]
-                    if strips:
-                        # sliding window with alternating winding — a
-                        # fan would span the wrong diagonal from the
-                        # second triangle on
-                        for t in range(k - 2):
-                            a, b, c = idx[t], idx[t + 1], idx[t + 2]
-                            faces.append([a, c, b] if t % 2 else [a, b, c])
-                    else:
-                        for t in range(1, k - 1):
-                            faces.append([idx[0], idx[t], idx[t + 1]])
-                    got += 1
-            i += 1
+        """Legacy VTK POLYDATA file (ASCII or BINARY) -> mesh named after
+        the file; polygons fan-triangulate and strips split as
+        :func:`~vtk_reserves_spark.sources.vtk.read_vtk` defines."""
         name = os.path.splitext(os.path.basename(path))[0]
-        return cls(
-            np.array(verts, np.float64).reshape(-1, 3),
-            np.array(faces) if faces else np.empty((0, 3), int),
-            name=name,
-        )
+        return cls.from_dataset(read_vtk(path), name=name)
+
+    @classmethod
+    def from_dataset(cls, ds: VtkDataset, name: str = "") -> "TriMesh":
+        """Parsed POLYDATA -> mesh.  Any other dataset kind raises: a
+        grid read as a mesh would have no faces, so a region solid would
+        flag nothing and a surface would deplete nothing."""
+        if ds.kind != "POLYDATA":
+            raise ValueError(f"{name or 'mesh'}: a {ds.kind} dataset is not a POLYDATA mesh")
+        faces = ds.faces if ds.faces is not None else np.empty((0, 3), np.int64)
+        return cls(ds.points, faces, name=name)
 
     @classmethod
     def from_obj(cls, path: str) -> "TriMesh":
@@ -206,12 +152,11 @@ class TriMesh:
         ``_gui.py:1211-1225``)."""
         import pandas as pd
 
-        rows = []
-        for fi, tri in enumerate(self.faces):
-            for n, node in enumerate(tri):
-                x, y, z = self.vertices[node]
-                rows.append((float(x), float(y), float(z), n, int(node), fi))
-        pdf = pd.DataFrame(rows, columns=["x", "y", "z", "n", "node", "face"])
+        node = self.faces.ravel()
+        x, y, z = self.vertices[node].T
+        m = len(self.faces)
+        n, face = np.tile(np.arange(3), m), np.repeat(np.arange(m), 3)
+        pdf = pd.DataFrame({"x": x, "y": y, "z": z, "n": n, "node": node, "face": face})
         return spark.createDataFrame(pdf)
 
 
@@ -234,24 +179,38 @@ def mesh_from_exploded_df(pdf) -> TriMesh:
     else:
         verts = pdf[["x", "y", "z"]].to_numpy()
         node_ids = np.arange(len(pdf))
-    faces = []
-    cur: list[int] = []
     n_col = pdf["n"].to_numpy() if "n" in pdf.columns else np.zeros(len(pdf), int)
-    for rid, n in zip(node_ids, n_col):
-        if n == 0 and cur:
-            for t in range(1, len(cur) - 1):
-                faces.append([cur[0], cur[t], cur[t + 1]])
-            cur = []
-        cur.append(int(rid))
-    if cur:
-        for t in range(1, len(cur) - 1):
-            faces.append([cur[0], cur[t], cur[t + 1]])
-    return TriMesh(verts, np.array(faces) if faces else np.empty((0, 3), int))
+    offsets = np.unique(np.concatenate([[0], np.flatnonzero(n_col == 0), [len(pdf)]]))
+    return TriMesh(verts, triangulate(offsets, np.asarray(node_ids, np.int64)))
 
 
-def read_obj_df(spark: SparkSession, path: str) -> DataFrame:
-    """OBJ -> exploded mesh table (loader-dispatch target for ``.obj``)."""
-    return TriMesh.from_obj(path).to_exploded_df(spark)
+#: the mesh file extensions :func:`read_mesh` and :func:`write_mesh` know
+MESH_EXTS = (".obj", ".vtk", ".msh")
+
+
+def _mesh_ext(path: str) -> str:
+    ext = os.path.splitext(path.lower())[1]
+    if ext not in MESH_EXTS:
+        raise ValueError(f"unsupported mesh format {ext!r} (obj/vtk/msh): {path}")
+    return ext
+
+
+def read_mesh(path: str) -> TriMesh:
+    """Mesh file -> :class:`TriMesh` named after the file, by extension:
+    Wavefront ``.obj``, legacy ``.vtk`` POLYDATA or Leapfrog ``.msh``."""
+    from vtk_reserves_spark.sources.leapfrog import read_msh
+
+    readers = {".obj": TriMesh.from_obj, ".vtk": TriMesh.from_vtk, ".msh": read_msh}
+    return readers[_mesh_ext(path)](path)
+
+
+def write_mesh(mesh: TriMesh, path: str) -> None:
+    """Write ``mesh`` in the format the extension of ``path`` names (the
+    inverse of :func:`read_mesh`)."""
+    from vtk_reserves_spark.sources.leapfrog import write_msh
+
+    writers = {".obj": TriMesh.to_obj, ".vtk": TriMesh.to_vtk, ".msh": write_msh}
+    writers[_mesh_ext(path)](mesh, path)
 
 
 def nodes_faces_tables(df: DataFrame, order_col: str = "face") -> tuple[DataFrame, DataFrame]:

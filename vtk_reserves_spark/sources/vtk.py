@@ -1,4 +1,4 @@
-"""Binary legacy VTK reader — pure struct/numpy, no VTK/pyvista.
+"""Legacy VTK reader and writer — pure numpy, no VTK/pyvista.
 
 The reference loads grids and meshes through ``pv.read``
 (``pd_vtk.py:50-87``, ``pd_vtk.py:533-547``); its shipped sample data
@@ -10,12 +10,15 @@ The reference loads grids and meshes through ``pv.read``
 - ``vox_region*.vtk`` / ``vox_mine_*.vtk``: DATASET POLYDATA with
   POINTS + POLYGONS in the 5.1 OFFSETS/CONNECTIVITY layout.
 
-This module parses exactly that public file format (VTK legacy format
-spec): ASCII section headers, big-endian binary payloads; ``write_vtk``
-writes the same layout, for generated samples and test files.  Driver-side
-ingest only — geometry files are small next to the block model; the
-parsed tables enter Spark via ``createDataFrame`` (same seam as the
-OBJ/DXF/SHP codecs in this package).
+``read_vtk`` parses that public file format (VTK legacy format spec) in
+both encodings: ASCII section headers, then either big-endian binary
+payloads (``BINARY``) or whitespace-separated values (``ASCII``) — one
+section walker; only the cursor's payload readers know the encoding.
+``write_vtk`` writes binary 5.1, the default of pyvista's ``save``, for
+generated samples, meshes and test files.  Driver-side ingest only —
+geometry files are small next to the block model; the parsed tables
+enter Spark via ``createDataFrame`` (same seam as the OBJ/DXF/SHP
+codecs in this package).
 """
 
 from __future__ import annotations
@@ -42,7 +45,7 @@ class VtkDataset:
     kind: str                       # STRUCTURED_GRID | POLYDATA | UNSTRUCTURED_GRID
     points: np.ndarray              # (n, 3) float64
     dimensions: tuple | None = None  # point dims (nx+1, ny+1, nz+1) for grids
-    faces: np.ndarray | None = None  # (m, 3) int triangles (fans split)
+    faces: np.ndarray | None = None  # (m, 3) int triangles (fans and strips split)
     cell_data: dict = field(default_factory=dict)
     point_data: dict = field(default_factory=dict)
     field_data: dict = field(default_factory=dict)
@@ -55,23 +58,27 @@ class VtkDataset:
         return 0 if self.faces is None else len(self.faces)
 
 
-#: attribute sections carrying binary payloads this parser doesn't
-#: decode — encountered mid-stream they must abort, not line-skip
-_BINARY_ATTR_SECTIONS = frozenset(
+#: attribute sections whose payload this parser doesn't decode —
+#: encountered mid-stream they must abort, not line-skip
+_UNDECODED_SECTIONS = frozenset(
     (b"VECTORS", b"NORMALS", b"TEXTURE_COORDINATES", b"TENSORS",
      b"COLOR_SCALARS", b"LOOKUP_TABLE",
      # SCALARS is normally consumed inside _read_attributes; one that
      # surfaces in the MAIN loop (e.g. after a METADATA block made
-     # _read_attributes return early) still fronts a binary payload —
+     # _read_attributes return early) still fronts a payload —
      # line-skipping it would misread payload bytes as section headers
      b"SCALARS")
 )
+
+#: POLYDATA cell sections; POLYGONS and TRIANGLE_STRIPS become faces
+_CELL_SECTIONS = frozenset((b"VERTICES", b"LINES", b"POLYGONS", b"TRIANGLE_STRIPS"))
 
 
 class _Cursor:
     def __init__(self, data: bytes):
         self.data = data
         self.pos = 0
+        self.text = False  # ASCII encoding: payloads are whitespace tokens
 
     def line(self) -> bytes:
         nl = self.data.find(b"\n", self.pos)
@@ -85,10 +92,7 @@ class _Cursor:
 
     def peek_line(self) -> bytes:
         save = self.pos
-        try:
-            out = self.line()
-        except ValueError:
-            return b""
+        out = self.line()
         self.pos = save
         return out
 
@@ -96,6 +100,22 @@ class _Cursor:
         return self.pos >= len(self.data)
 
     def array(self, dtype: str, count: int) -> np.ndarray:
+        """``count`` values of big-endian ``dtype``: raw bytes in a BINARY
+        file, whitespace tokens in an ASCII one.  Text parses at native
+        byte order, and floats at double precision whatever the declared
+        width — the digits in the file are the data."""
+        if self.text:
+            toks: list[bytes] = []
+            while len(toks) < count and not self.eof():
+                toks += self.line().split()
+            if len(toks) != count:
+                raise ValueError(
+                    f"expected {count} values, found {len(toks)} before byte {self.pos}"
+                )
+            dt = np.dtype(dtype)
+            return np.array(toks, bytes).astype(
+                np.float64 if dt.kind == "f" else dt.newbyteorder("=")
+            )
         out = np.frombuffer(self.data, dtype=dtype, count=count, offset=self.pos)
         self.pos += out.nbytes
         # payloads are newline-terminated before the next section header
@@ -107,6 +127,8 @@ class _Cursor:
         """Binary vtkStringArray payload: each value is a length byte
         ``0xC0 | len`` followed by the bytes (observed encoding for
         strings < 64 chars — the sample data's ``lito`` array)."""
+        if self.text:
+            raise ValueError("string arrays in ASCII legacy VTK are not supported")
         out = []
         for _ in range(count):
             b = self.data[self.pos]
@@ -140,7 +162,9 @@ def _read_attributes(cur: _Cursor, n: int) -> dict:
     out = {}
     while not cur.eof():
         head = cur.peek_line()
-        if head.startswith(b"SCALARS"):
+        if not head:
+            cur.line()
+        elif head.startswith(b"SCALARS"):
             cur.line()
             toks = head.split()
             _, name, typ = toks[:3]
@@ -165,8 +189,8 @@ def _read_attributes(cur: _Cursor, n: int) -> dict:
             cur.line()
             while not cur.eof() and cur.peek_line():
                 cur.line()
-        elif head.split()[:1] and head.split()[0] in _BINARY_ATTR_SECTIONS:
-            # these carry a binary payload this parser doesn't decode;
+        elif head.split()[0] in _UNDECODED_SECTIONS:
+            # these carry a payload this parser doesn't decode;
             # skipping them line-wise would misread payload bytes as
             # section headers, so fail loudly instead
             raise ValueError(
@@ -177,19 +201,45 @@ def _read_attributes(cur: _Cursor, n: int) -> dict:
     return out
 
 
-def _triangulate(offsets: np.ndarray, conn: np.ndarray) -> np.ndarray:
-    """Polygon fans -> triangles (same normalization the reference gets
-    from ``vtk_flat_quads_to_triangles``, ``pd_vtk.py:148-156``)."""
-    tris = []
-    for a, b in zip(offsets[:-1], offsets[1:]):
-        poly = conn[a:b]
-        for t in range(1, len(poly) - 1):
-            tris.append((poly[0], poly[t], poly[t + 1]))
-    return np.asarray(tris, dtype=np.int64)
+def _read_cells(cur: _Cursor, n: int, size: int) -> tuple[np.ndarray, np.ndarray]:
+    """One cell section's ``(offsets, connectivity)``: the 5.1
+    ``OFFSETS``/``CONNECTIVITY`` layout (``n`` offsets), or the older
+    count-prefixed layout (``n`` cells in ``size`` ints)."""
+    sub = cur.peek_line()
+    if sub.startswith(b"OFFSETS"):
+        cur.line()
+        offs = cur.array(_DTYPES[sub.split()[1]], n).astype(np.int64)
+        conn_head = cur.line()  # CONNECTIVITY <type>
+        return offs, cur.array(_DTYPES[conn_head.split()[1]], size).astype(np.int64)
+    flat = cur.array(">i4", size).astype(np.int64)
+    heads = [0]
+    while heads[-1] < len(flat):
+        heads.append(heads[-1] + 1 + int(flat[heads[-1]]))
+    heads = np.asarray(heads[:-1], np.int64)
+    return np.concatenate([[0], np.cumsum(flat[heads])]), np.delete(flat, heads)
+
+
+def triangulate(offs: np.ndarray, conn: np.ndarray, strips: bool = False) -> np.ndarray:
+    """Cells (vertex ids ``conn[offs[c]:offs[c + 1]]``) -> ``(m, 3)``
+    triangles.  Polygons fan from their first vertex (the normalization
+    the reference gets from ``vtk_flat_quads_to_triangles``,
+    ``pd_vtk.py:148-156``); strips take the sliding window with
+    alternating winding the format defines — a fan would span the wrong
+    diagonal from the second triangle on."""
+    per_cell = np.maximum(np.diff(offs) - 2, 0)
+    start = np.repeat(offs[:-1], per_cell)
+    t = np.arange(len(start)) - np.repeat(np.cumsum(per_cell) - per_cell, per_cell)
+    a = conn[start + t] if strips else conn[start]
+    b, c = conn[start + t + 1], conn[start + t + 2]
+    if strips:
+        odd = t % 2 == 1
+        b, c = np.where(odd, c, b), np.where(odd, b, c)
+    return np.stack([a, b, c], 1)
 
 
 def read_vtk(path: str) -> VtkDataset:
-    """Parse a binary legacy-VTK file (STRUCTURED_GRID or POLYDATA)."""
+    """Parse a legacy-VTK file, ASCII or BINARY (STRUCTURED_GRID or
+    POLYDATA)."""
     with open(path, "rb") as f:
         data = f.read()
     cur = _Cursor(data)
@@ -197,15 +247,15 @@ def read_vtk(path: str) -> VtkDataset:
     if not magic.startswith(b"# vtk DataFile"):
         raise ValueError(f"not a legacy VTK file: {path}")
     cur.line()  # title
-    fmt = cur.line()
-    if fmt != b"BINARY":
-        raise ValueError(f"only BINARY legacy VTK supported here ({fmt!r}); "
-                         "ASCII POLYDATA is handled by sources.mesh")
+    fmt = cur.line().upper()
+    if fmt not in (b"ASCII", b"BINARY"):
+        raise ValueError(f"unknown legacy-VTK encoding {fmt!r} in {path}")
+    cur.text = fmt == b"ASCII"
     dataset = cur.line().split()[1].decode()
 
     dims = None
     points = None
-    faces = None
+    faces = []
     cell_data: dict = {}
     point_data: dict = {}
     field_data: dict = {}
@@ -226,27 +276,11 @@ def read_vtk(path: str) -> VtkDataset:
             points = (
                 cur.array(_DTYPES[typ], n * 3).astype(np.float64).reshape(n, 3)
             )
-        elif key in (b"POLYGONS", b"LINES"):
+        elif key in _CELL_SECTIONS:
             cur.line()
-            n_off, n_conn = int(head.split()[1]), int(head.split()[2])
-            sub = cur.peek_line()
-            if sub.startswith(b"OFFSETS"):
-                cur.line()
-                offs = cur.array(_DTYPES[sub.split()[1]], n_off).astype(np.int64)
-                sub2 = cur.line()  # CONNECTIVITY <type>
-                conn = cur.array(_DTYPES[sub2.split()[1]], n_conn).astype(np.int64)
-            else:
-                # pre-5.1 layout: count-prefixed flat cells
-                flat = cur.array(">i4", n_conn).astype(np.int64)
-                offs, conn, i = [0], [], 0
-                while i < len(flat):
-                    c = flat[i]
-                    conn.extend(flat[i + 1:i + 1 + c])
-                    offs.append(offs[-1] + c)
-                    i += 1 + c
-                offs, conn = np.asarray(offs), np.asarray(conn)
-            if key == b"POLYGONS":
-                faces = _triangulate(offs, conn)
+            offs, conn = _read_cells(cur, int(head.split()[1]), int(head.split()[2]))
+            if key in (b"POLYGONS", b"TRIANGLE_STRIPS"):
+                faces.append(triangulate(offs, conn, strips=key == b"TRIANGLE_STRIPS"))
         elif key == b"CELL_DATA":
             cur.line()
             cell_data = _read_attributes(cur, int(head.split()[1]))
@@ -260,8 +294,8 @@ def read_vtk(path: str) -> VtkDataset:
             cur.line()
             while not cur.eof() and cur.peek_line():
                 cur.line()  # skip metadata block until blank line
-        elif key in _BINARY_ATTR_SECTIONS or key in (b"VERTICES", b"TRIANGLE_STRIPS"):
-            # binary payload we don't decode — line-skipping would
+        elif key in _UNDECODED_SECTIONS:
+            # a payload we don't decode — line-skipping would
             # misinterpret payload bytes as headers; fail loudly
             raise ValueError(f"unsupported legacy-VTK section {key.decode()!r} in {path}")
         else:
@@ -272,7 +306,7 @@ def read_vtk(path: str) -> VtkDataset:
         kind=dataset,
         points=points,
         dimensions=dims,
-        faces=faces,
+        faces=np.concatenate(faces) if faces else None,
         cell_data=cell_data,
         point_data=point_data,
         field_data=field_data,
@@ -336,9 +370,10 @@ def write_vtk(path: str, ds: VtkDataset) -> None:
 
 def grid_cell_table(ds: VtkDataset):
     """STRUCTURED_GRID -> pandas cell table: one row per cell with
-    ``cell, i, j, k``, centroid ``x, y, z``, ``volume`` and every
-    cell-level array (CELL_DATA plus per-cell FIELD arrays) — the
-    ``vtk_mesh_to_df`` contract (``pd_vtk.py:375-433``).
+    ``grid_df``'s columns (``cell, i, j, k``, centroid ``x, y, z``, cell
+    edges ``dx, dy, dz``, ``volume``) and every cell-level array
+    (CELL_DATA plus per-cell FIELD arrays) — the ``vtk_mesh_to_df``
+    contract (``pd_vtk.py:375-433``).
 
     Two supported point layouts, both verified against the actual point
     stream before cell arrays are attached positionally (a mismatched
@@ -349,7 +384,8 @@ def grid_cell_table(ds: VtkDataset):
     - **rotated regular** (``vtk_VoxelSG`` parity, ``pd_vtk.py:897-904``):
       ``P(i,j,k) = P0 + i·ex + j·ey + k·ez`` with the step vectors taken
       from the first point differences — covers z-rotated (bearing)
-      models; volume is ``|det[ex ey ez]|``.
+      models; the edges are ``|ex|, |ey|, |ez|`` and the volume is
+      ``|det[ex ey ez]|``.
     """
     import pandas as pd
 
@@ -376,9 +412,9 @@ def grid_cell_table(ds: VtkDataset):
         )
     if lattice_ok:
         cx, cy, cz = ((v[:-1] + v[1:]) / 2.0 for v in (px, py, pz))
-        dx, dy, dz = (np.diff(v) for v in (px, py, pz))
         x, y, z = cx[i], cy[j], cz[k]
-        volume = dx[i] * dy[j] * dz[k]
+        dx, dy, dz = (np.diff(v)[ix] for v, ix in ((px, i), (py, j), (pz, k)))
+        volume = dx * dy * dz
     else:
         # rotated-regular fallback: fit the affine from the step vectors
         p0 = P[0]
@@ -408,6 +444,7 @@ def grid_cell_table(ds: VtkDataset):
             + (k[:, None] + 0.5) * ez
         )
         x, y, z = centroids[:, 0], centroids[:, 1], centroids[:, 2]
+        dx, dy, dz = (np.full(len(cell), float(np.linalg.norm(e))) for e in (ex, ey, ez))
         volume = np.full(len(cell), abs(float(np.linalg.det(np.stack([ex, ey, ez])))))
     out = pd.DataFrame(
         {
@@ -418,6 +455,9 @@ def grid_cell_table(ds: VtkDataset):
             "x": x,
             "y": y,
             "z": z,
+            "dx": dx,
+            "dy": dy,
+            "dz": dz,
             "volume": volume,
         }
     )
