@@ -328,74 +328,102 @@ def test_string_to_index_factorize_parity(spark):
 
 if _HYP:
 
+    _NAN = float("nan")
+
     @st.composite
     def _bd_frames(draw):
-        """Random frames with NULL keys, NULL/NaN values, and zero-prone
-        weights — differential-testing the whole numeric mode table."""
-        n = draw(st.integers(4, 40))
-        keys = draw(
-            st.lists(st.sampled_from(["a", "b", "c", None]), min_size=n, max_size=n)
+        """One example: 1-10 rows of (g, d, k, v, w, m, s) — string,
+        double and int group keys with NULL (and NaN) keys and -99
+        sentinels, NULL/NaN/-99 values, NULL/NaN/zero weights, an int
+        column for a second major and a string list column.  Few key classes, so both
+        single-row and many-row groups occur, and zero-total-weight
+        groups are common."""
+        n = draw(st.integers(1, 10))
+        row = st.tuples(
+            st.sampled_from(["a", None]),
+            st.sampled_from([1.5, None, _NAN, -99.0]),
+            st.sampled_from([1, None, -99]),
+            st.one_of(st.sampled_from([None, _NAN, -99.0]), st.integers(-5, 20).map(float)),
+            st.sampled_from([0.0, 1.0, 2.0, None, _NAN, -99.0]),
+            st.sampled_from([None, -99, 0, 1, 2]),
+            st.sampled_from(["x", "y", None]),
         )
-        vals = draw(
-            st.lists(
-                st.one_of(st.none(), st.integers(-5, 20)), min_size=n, max_size=n
-            )
-        )
-        wts = draw(st.lists(st.integers(0, 3), min_size=n, max_size=n))
-        return keys, vals, wts
+        return draw(st.lists(row, min_size=n, max_size=n))
 
-    @settings(max_examples=10, deadline=None)
-    @given(_bd_frames())
-    def test_breakdown_numeric_modes_property(spark, data):
-        """Property: every plain numeric mode plus weighted sum/mean
-        matches a pandas reimplementation of the reference semantics
-        (bm_breakdown.py:179-245) on arbitrary null-riddled groups."""
-        keys, vals, wts = data
-        pdf = pd.DataFrame(
-            {
-                "g": keys,
-                "v": [float(v) if v is not None else np.nan for v in vals],
-                "w": [float(w) for w in wts],
-            }
+    def _major(vals: pd.Series):
+        """Most frequent value, ties to the smallest; None when no value
+        is truthy (reference ``df[name].any()`` guard)."""
+        vals = vals.dropna()
+        if not (vals != 0).any():
+            return None
+        counts = vals.value_counts()
+        return min(counts[counts == counts.max()].index)
+
+    @settings(max_examples=4, deadline=None)
+    @given(st.lists(_bd_frames(), min_size=60, max_size=60))
+    def test_breakdown_numeric_modes_property(spark, frames):
+        """Property: every plain numeric mode, weighted sum/mean, major
+        and list match a pandas reimplementation of the reference
+        semantics (bm_breakdown.py:105-108, 179-245) after the -99
+        sentinel is masked (``mask_null_sentinel``) — on arbitrary
+        null-riddled groups.  NULL/NaN/-99 keys of every type land in one
+        -99 group.  The 60 drawn frames run as ONE breakdown, each under
+        its own ``ex`` key prefix."""
+        from vtk_reserves_spark.sources.loaders import mask_null_sentinel
+
+        rows = [(ex, *r) for ex, frame in enumerate(frames) for r in frame]
+        schema = (
+            "ex long, g string, d double, k long, v double, w double, m long, s string"
         )
         tpl = (
-            "g;v=c,count;v=s,sum;v=m,mean;v=mn,min;v=mx,max;v=vr,var;"
+            "ex;g;d;k;v=c,count;v=s,sum;v=m,mean;v=mn,min;v=mx,max;v=vr,var;"
             "v=sd,std;v=se,sem;v=q1c,q1;v=q2c,q2;v=q3c,q3;"
-            "v=ws,sum,w;v=wm,mean,w"
+            "v=ws,sum,w;v=wm,mean,w;v=vmj,major;m=mj,major;s=ls,list"
         )
-        out = (
-            breakdown(spark.createDataFrame(pdf), tpl)
-            .toPandas()
-            .set_index("g")
-        )
-        pdf["gk"] = pdf.g.fillna("-99")  # string key NULL -> "-99"
-        assert set(out.index) == set(pdf.gk.unique())
-        for gk, gdf in pdf.groupby("gk"):
+        df = mask_null_sentinel(spark.createDataFrame(rows, schema))
+        out = breakdown(df, tpl).toPandas()
+        out = out.set_index(["ex", "g", "d", "k"])
+
+        pdf = pd.DataFrame(rows, columns=schema.replace(",", "").split()[::2])
+        for c in ("d", "k", "v", "w", "m"):  # mask_null_sentinel
+            pdf[c] = pdf[c].astype(float).mask(pdf[c] == -99)
+        pdf["g"] = pdf.g.fillna("-99")
+        pdf[["d", "k"]] = pdf[["d", "k"]].fillna(-99.0)
+        groups = pdf.groupby(["ex", "g", "d", "k"])
+        assert sorted(out.index) == sorted(groups.groups)
+
+        def close(got, want):
+            if want is None or (isinstance(want, float) and np.isnan(want)):
+                return got is None or (isinstance(got, float) and np.isnan(got))
+            return got == pytest.approx(want, rel=1e-9, abs=1e-12)
+
+        for key, gdf in groups:
+            row = out.loc[key]
             v = gdf.v.dropna()
-            row = out.loc[gk]
-
-            def close(got, want):
-                if want is None or (isinstance(want, float) and np.isnan(want)):
-                    return got is None or (isinstance(got, float) and np.isnan(got))
-                return got == pytest.approx(want, rel=1e-9, abs=1e-12)
-
-            assert row["c"] == len(v)
-            assert close(row["s"], v.sum() if len(v) else 0.0)
-            assert close(row["m"], v.mean() if len(v) else None)
-            assert close(row["mn"], v.min() if len(v) else None)
-            assert close(row["mx"], v.max() if len(v) else None)
-            assert close(row["vr"], v.var(ddof=1) if len(v) >= 2 else None)
-            assert close(row["sd"], v.std(ddof=1) if len(v) >= 2 else None)
-            assert close(row["se"], v.std(ddof=1) / np.sqrt(len(v)) if len(v) >= 2 else None)
+            assert row["c"] == len(v), key
+            assert close(row["s"], v.sum() if len(v) else 0.0), key
+            assert close(row["m"], v.mean() if len(v) else None), key
+            assert close(row["mn"], v.min() if len(v) else None), key
+            assert close(row["mx"], v.max() if len(v) else None), key
+            assert close(row["vr"], v.var(ddof=1) if len(v) >= 2 else None), key
+            assert close(row["sd"], v.std(ddof=1) if len(v) >= 2 else None), key
+            assert close(
+                row["se"], v.std(ddof=1) / np.sqrt(len(v)) if len(v) >= 2 else None
+            ), key
             for q, col in ((25, "q1c"), (50, "q2c"), (75, "q3c")):
-                assert close(row[col], float(np.percentile(v, q)) if len(v) else None)
-            # weighted sum: nansum(v*w); rows with null v drop out
+                assert close(row[col], float(np.percentile(v, q)) if len(v) else None), key
+            # weighted sum: nansum(v*w); rows with NULL v or w drop out
+            assert close(row["ws"], float((gdf.v * gdf.w).sum())), key
+            # weighted mean: average(v, weights=w), NULL/NaN w counting as
+            # 0, NULL when the weight total is 0
             m = gdf.v.notna()
-            assert close(row["ws"], float((gdf.v[m] * gdf.w[m]).sum()))
-            # weighted mean: average(v, weights=w) guarded by w total
-            wsum = gdf.w[m].sum()
-            want_wm = float(np.average(gdf.v[m], weights=gdf.w[m])) if wsum else None
-            assert close(row["wm"], want_wm)
+            wts = gdf.w[m].fillna(0.0)
+            want_wm = float(np.average(gdf.v[m], weights=wts)) if wts.sum() else None
+            assert close(row["wm"], want_wm), key
+            for col, var in (("vmj", gdf.v), ("mj", gdf.m)):
+                got = None if pd.isna(row[col]) else row[col]
+                assert got == _major(var), (key, col)
+            assert row["ls"] == ",".join(sorted(gdf.s.dropna().unique())), key
 
 
 def test_weighted_quantile_binned_accuracy(spark):

@@ -533,6 +533,32 @@ def test_load_dataframe_reads_a_vtk_block_model(spark):
     assert (r.grade, r.density, r.lito) == (45.0, 100, "medium")
 
 
+def test_load_dataframe_reads_a_flat_vtk_block_model(tmp_path, spark):
+    """A STRUCTURED_GRID with one point layer on an axis (a flat bench,
+    ``DIMENSIONS 3 3 1``) has one cell layer there, as VTK counts it: it
+    loads as its 4 cells with their arrays, centred on the layer with a
+    zero-length edge, not as an empty table."""
+    from vtk_reserves_spark.sources.vtk import VtkDataset, write_vtk
+
+    pts = np.array(
+        [(10.0 * a, 20.0 * b, 5.0) for b in range(3) for a in range(3)]
+    )
+    ds = VtkDataset(
+        "STRUCTURED_GRID", pts, dimensions=(3, 3, 1),
+        cell_data={"grade": np.array([1.0, 2.0, 3.0, 4.0])},
+    )
+    assert ds.n_cells == 4
+    p = str(tmp_path / "bench.vtk")
+    write_vtk(p, ds)
+    rows = load_dataframe(spark, p).orderBy("cell").collect()
+    assert [r.grade for r in rows] == [1.0, 2.0, 3.0, 4.0]
+    assert [(r.i, r.j, r.k) for r in rows] == [(0, 0, 0), (1, 0, 0), (0, 1, 0), (1, 1, 0)]
+    assert [(r.x, r.y, r.z) for r in rows] == [
+        (5.0, 10.0, 5.0), (15.0, 10.0, 5.0), (5.0, 30.0, 5.0), (15.0, 30.0, 5.0),
+    ]
+    assert {(r.dx, r.dy, r.dz, r.volume) for r in rows} == {(10.0, 20.0, 0.0, 0.0)}
+
+
 def test_grid_cell_table_rotated_regular(tmp_path):
     """A z-rotated (bearing) regular grid parses via the affine fallback:
     centroids match the GridSchema bearing affine, volume = |det|."""

@@ -1351,35 +1351,48 @@ def test_nscore_distributed_rank_matches_global_window(spark):
     single-reducer rank() window: heavy ties (only 7 distinct values
     over 5000 rows, so tie runs straddle Arrow batches and bucket
     boundaries would break a naive ranker), NaNs (rank as one tie
-    group, sorted last), NULLs (pass through), multi-partition input."""
+    group, sorted last), NULLs (pass through), multi-partition input.
+    The second input is 45% NaN with 10% each of -inf and +inf, so the
+    quantile sketch's bucket bounds themselves are NaN and +-inf."""
     from pyspark.sql import Window
 
     from vtk_reserves_spark.functions.stats import probit
     from vtk_reserves_spark.operators.geostats import nscore
 
-    df = (
-        spark.range(5000)
-        .repartition(16)
-        .select(
-            "id",
-            F.when(F.col("id") % 50 == 0, F.lit(None))
-            .when(F.col("id") % 97 == 0, F.lit(float("nan")))
-            .otherwise((F.col("id") % 7).cast("double"))
-            .alias("val"),
-        )
-    )
-    got = {r["id"]: r["nscore"] for r in nscore(df, "val").collect()}
-    v = F.col("val")
-    n = df.where(v.isNotNull()).count()
-    w = Window.orderBy(v)
-    ref = {
-        r["id"]: r["ns"]
-        for r in df.where(v.isNotNull())
-        .withColumn("ns", probit((F.rank().over(w).cast("double") - 0.5) / float(n)))
-        .collect()
+    ids = F.col("id")
+    finite = (ids % 7).cast("double")
+    inputs = {
+        "ties": F.when(ids % 97 == 0, F.lit(float("nan"))).otherwise(finite),
+        "non-finite bounds": F.when(ids % 20 < 9, F.lit(float("nan")))
+        .when(ids % 20 < 11, F.lit(float("-inf")))
+        .when(ids % 20 < 13, F.lit(float("inf")))
+        .otherwise(finite),
     }
-    assert len(got) == 5000
-    for i, expect in ref.items():
-        assert got[i] == expect, (i, got[i], expect)
-    for i in range(0, 5000, 50):
-        assert got[i] is None
+    v = F.col("val")
+    for label, val in inputs.items():
+        df = (
+            spark.range(5000)
+            .repartition(16)
+            .select("id", F.when(ids % 50 == 0, F.lit(None)).otherwise(val).alias("val"))
+        )
+        if label == "non-finite bounds":
+            nb = max(2, 4 * spark.sparkContext.defaultParallelism)
+            sketch = df.agg(
+                F.percentile_approx(v, [i / nb for i in range(1, nb)], 10000)
+            ).first()[0]
+            assert {float("-inf"), float("inf")} <= set(sketch), sketch
+            assert any(q != q for q in sketch), sketch
+        got = {r["id"]: r["nscore"] for r in nscore(df, "val").collect()}
+        n = df.where(v.isNotNull()).count()
+        w = Window.orderBy(v)
+        ref = {
+            r["id"]: r["ns"]
+            for r in df.where(v.isNotNull())
+            .withColumn("ns", probit((F.rank().over(w).cast("double") - 0.5) / float(n)))
+            .collect()
+        }
+        assert len(got) == 5000, label
+        for i, expect in ref.items():
+            assert got[i] == expect, (label, i, got[i], expect)
+        for i in range(0, 5000, 50):
+            assert got[i] is None, label

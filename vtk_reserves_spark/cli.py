@@ -16,6 +16,7 @@ execution.  The reference's tkinter GUI / usage-DSL form builder
 from __future__ import annotations
 
 import argparse
+import functools
 import os
 import sys
 
@@ -490,16 +491,18 @@ def cmd_warc(args) -> None:
     recs.write.mode("overwrite").parquet(args.output)
 
 
-def cmd_pdf(args) -> None:
-    """Mine PDF files to a text parquet: binaryFile source at file
-    grain (one task per document — PDFs are small relative to
-    executors, so file grain IS record grain here) -> the pure-python
-    ISO 32000 reader -> (path, text, npages, title, error).  Corrupt
-    or encrypted files quarantine into the ``error`` column instead of
-    failing the job (the crawl posture)."""
+def cmd_doc_text(args, extract: str) -> None:
+    """Mine documents to a text parquet: binaryFile source at file
+    grain (one task per document — documents are small relative to
+    executors, so file grain IS record grain here) ->
+    ``operators.multimodal.<extract>`` -> (path, <its columns>, error).
+    ``pdf_text`` runs the pure-python ISO 32000 reader; ``office_text``
+    the stdlib zip+XML DOCX/PPTX/ODT/EPUB readers, kind sniffed from the
+    zip member list so extension-less payloads work.  Corrupt files
+    quarantine into the ``error`` column instead of failing the job."""
     from pyspark.sql import functions as F
 
-    from vtk_reserves_spark.operators.multimodal import pdf_text
+    from vtk_reserves_spark.operators import multimodal
 
     spark = _spark()
     files = (
@@ -513,33 +516,8 @@ def cmd_pdf(args) -> None:
             F.xxhash64("path").alias("doc_id"),
         )
     )
-    out = pdf_text(files.select("doc_id", "payload"), on_error="null")
-    out = out.join(files.select("doc_id", "path"), "doc_id").drop("doc_id")
-    out.write.mode("overwrite").parquet(args.output)
-
-
-def cmd_office(args) -> None:
-    """Mine office documents (DOCX/PPTX/ODT/EPUB) to a text parquet:
-    binaryFile source at file grain -> the stdlib zip+XML readers ->
-    (path, text, nparts, title, kind, error).  Kind is sniffed from
-    the zip member list so extension-less crawl payloads work; corrupt
-    or unsupported containers quarantine into the ``error`` column
-    instead of failing the job (the crawl posture)."""
-    from pyspark.sql import functions as F
-
-    from vtk_reserves_spark.operators.multimodal import office_text
-
-    spark = _spark()
-    files = (
-        spark.read.format("binaryFile")
-        .load(args.input)
-        .select(
-            F.col("path"),
-            F.col("content").alias("payload"),
-            F.xxhash64("path").alias("doc_id"),
-        )
-    )
-    out = office_text(files.select("doc_id", "payload"), on_error="null")
+    mine = getattr(multimodal, extract)
+    out = mine(files.select("doc_id", "payload"), on_error="null")
     out = out.join(files.select("doc_id", "path"), "doc_id").drop("doc_id")
     out.write.mode("overwrite").parquet(args.output)
 
@@ -696,7 +674,7 @@ def build_parser() -> argparse.ArgumentParser:
     )
     pf.add_argument("input", help="PDF path/glob")
     pf.add_argument("output", help="output parquet directory")
-    pf.set_defaults(fn=cmd_pdf)
+    pf.set_defaults(fn=functools.partial(cmd_doc_text, extract="pdf_text"))
 
     of = sub.add_parser(
         "office",
@@ -704,7 +682,7 @@ def build_parser() -> argparse.ArgumentParser:
     )
     of.add_argument("input", help="document path/glob")
     of.add_argument("output", help="output parquet directory")
-    of.set_defaults(fn=cmd_office)
+    of.set_defaults(fn=functools.partial(cmd_doc_text, extract="office_text"))
 
     v = sub.add_parser("vocab", help="learn a BPE merge table from a corpus")
     v.add_argument("input")

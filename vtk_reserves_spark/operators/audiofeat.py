@@ -32,6 +32,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
+from vtk_reserves_spark.quarantine import check_on_error
+
 __all__ = [
     "mel_filterbank", "mel_spectrogram", "mfcc",
     "attach_pure_tone_payload",
@@ -185,11 +187,7 @@ def mel_spectrogram(
     ``(doc_id, frame, mel, energy)``.  ``hop`` defaults to ``n_fft``
     (non-overlapping).  ``on_error='null'`` drops undecodable
     payloads (crawl posture)."""
-    if on_error not in ("raise", "null"):
-        raise ValueError(
-            f"on_error must be 'raise' or 'null', got {on_error!r}"
-        )
-    safe = on_error == "null"
+    safe = check_on_error(on_error)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for b in batches:
@@ -234,11 +232,7 @@ def mfcc(
     value)``: ``log10(mel + log_eps)`` then orthonormal DCT-II
     (``sqrt(1/n)`` for coefficient 0, ``sqrt(2/n)`` above), keeping
     the first ``n_mfcc`` coefficients."""
-    if on_error not in ("raise", "null"):
-        raise ValueError(
-            f"on_error must be 'raise' or 'null', got {on_error!r}"
-        )
-    safe = on_error == "null"
+    safe = check_on_error(on_error)
     # orthonormal DCT-II matrix (n_mfcc, n_mels)
     j = np.arange(n_mels, dtype=np.float64)
     i = np.arange(n_mfcc, dtype=np.float64)[:, None]

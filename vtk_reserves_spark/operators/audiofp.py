@@ -23,13 +23,13 @@ Reference parity note: the reference repo has no audio surface.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from vtk_reserves_spark.quarantine import quarantine_map
 
 __all__ = ["frame_fingerprint_bytes", "audio_fingerprint"]
 
@@ -74,50 +74,27 @@ def audio_fingerprint(df: DataFrame, on_error: str = "raise") -> DataFrame:
     the repo codecs (magic-byte dispatch), reduce to the per-frame
     dominant-band byte string, surface it hex-encoded plus frame
     count.  Exact-match grouping on ``fp`` (or banded substrings of
-    it) is the audio near-dup primitive.  ``on_error='null'``
-    quarantines undecodable payloads — the crawl posture."""
-    if on_error not in ("raise", "null"):
-        raise ValueError(f"on_error must be 'raise' or 'null', got {on_error!r}")
-    safe = on_error == "null"
+    it) is the audio near-dup primitive.  ``on_error`` and the
+    ``error`` column: see :mod:`vtk_reserves_spark.quarantine`."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from vtk_reserves_spark.sources.flac import decode_flac
-        from vtk_reserves_spark.sources.wav import decode_wav
+    def parse(p: bytes) -> list[tuple]:
+        if p[:4] == b"RIFF":
+            from vtk_reserves_spark.sources.wav import decode_wav
 
-        for b in batches:
-            rows = []
-            for did, p in zip(b["doc_id"].astype("int64"), b["payload"]):
-                p = bytes(p)
-                try:
-                    if p[:4] == b"RIFF":
-                        samples, sr = decode_wav(p)
-                    elif p[:4] == b"fLaC":
-                        samples, sr = decode_flac(p)[:2]
-                    else:
-                        raise ValueError("audio_fingerprint: not WAV/FLAC")
-                    samples = np.asarray(samples)
-                    if samples.ndim > 1:  # mixdown: fingerprints are mono
-                        samples = samples.mean(axis=1)
-                    fp = frame_fingerprint_bytes(samples)
-                    rows.append([
-                        int(did), int(sr), len(fp), fp.hex(), None,
-                    ])
-                except Exception as exc:
-                    if not safe:
-                        raise
-                    rows.append([
-                        int(did), None, None, None,
-                        f"{type(exc).__name__}: {exc}",
-                    ])
-            out = pd.DataFrame(
-                rows,
-                columns=["doc_id", "sample_rate", "n_frames", "fp", "error"],
-            )
-            for c in ("sample_rate", "n_frames"):
-                out[c] = pd.array(out[c], dtype="Int32")
-            yield out
+            samples, sr = decode_wav(p)
+        elif p[:4] == b"fLaC":
+            from vtk_reserves_spark.sources.flac import decode_flac
 
-    return df.mapInPandas(run, FP_SCHEMA)
+            samples, sr = decode_flac(p)[:2]
+        else:
+            raise ValueError("audio_fingerprint: not WAV/FLAC")
+        samples = np.asarray(samples)
+        if samples.ndim > 1:  # mixdown: fingerprints are mono
+            samples = samples.mean(axis=1)
+        fp = frame_fingerprint_bytes(samples)
+        return [(int(sr), len(fp), fp.hex())]
+
+    return quarantine_map(df, parse, FP_SCHEMA, on_error)
 
 
 def attach_tone_wav_payload(

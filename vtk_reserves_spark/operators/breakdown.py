@@ -71,13 +71,17 @@ def _major_subplan(
     """Most-frequent value per group for each ``major`` spec.
 
     Deterministic tie-break: highest count, then smallest value (the
-    reference's tie order is an accident of ``value_counts``)."""
+    reference's tie order is an accident of ``value_counts``).  NULL and
+    NaN are not values, as ``value_counts`` drops them."""
     dtypes = dict(base.dtypes)
     out = None
     for spec, outname in specs:
         c = F.col(spec.var)
+        present = c.isNotNull()
+        if dtypes[spec.var] in ("double", "float"):
+            present = present & ~F.isnan(c)
         cnt = (
-            base.where(c.isNotNull())
+            base.where(present)
             .groupBy(*key_cols, c.alias("__val"))
             .agg(
                 F.count(F.lit(1)).alias("__cnt"),

@@ -820,35 +820,30 @@ def nscore(
         # nested F.when calls: 127 bounds = ~700 py4j round-trips,
         # measured ~1.0 s of driver time PER CALL, vs ~5 ms to build
         # and parse the identical CASE tree ('D' suffix = double
-        # literals, so the comparisons are the same double >= double).
-        # Non-finite bounds (NaN/inf have no SQL literal) fall back to
-        # the original Column construction — same tree either way.
+        # literals, so the comparisons are the same double >= double;
+        # NaN and +-inf bounds, which have no numeric literal, are cast
+        # from their string names).
         import math
 
         vs = f"CAST(`{value_col.replace('`', '``')}` AS DOUBLE)"
+
+        def sql_double(b: float) -> str:
+            if math.isfinite(b):
+                return f"{b!r}D"
+            name = "NaN" if math.isnan(b) else "Infinity" if b > 0 else "-Infinity"
+            return f"CAST('{name}' AS DOUBLE)"
 
         def sql_bisect(i: int, j: int) -> str:
             if i == j:
                 return str(i)
             m = (i + j) // 2
             return (
-                f"CASE WHEN {vs} >= {bounds[m]!r}D "
+                f"CASE WHEN {vs} >= {sql_double(bounds[m])} "
                 f"THEN {sql_bisect(m + 1, j)} "
                 f"ELSE {sql_bisect(i, m)} END"
             )
 
-        def col_bisect(i: int, j: int):
-            if i == j:
-                return F.lit(i)
-            m = (i + j) // 2
-            return F.when(
-                v >= F.lit(bounds[m]), col_bisect(m + 1, j)
-            ).otherwise(col_bisect(i, m))
-
-        if all(math.isfinite(b) for b in bounds):
-            bucket = F.expr(sql_bisect(0, len(bounds)))
-        else:
-            bucket = col_bisect(0, len(bounds))
+        bucket = F.expr(sql_bisect(0, len(bounds)))
     else:
         bucket = F.lit(0)
     withb = nn.withColumn("_nsb", bucket.cast("int"))

@@ -31,13 +31,13 @@ never all pairs.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from vtk_reserves_spark.quarantine import quarantine_map
 
 __all__ = [
     "area_resize", "dhash_bits", "ahash_bits", "image_hashes",
@@ -147,64 +147,43 @@ def image_hashes(df: DataFrame, on_error: str = "raise") -> DataFrame:
     """Decode (doc_id, payload) images via the repo's pure-python
     codecs (magic-byte dispatch — PNG/JPEG/GIF/BMP/WebP/...) and
     emit 64-bit dHash + aHash as 16-hex-char strings plus pixel
-    dims.  One Arrow-batched mapInPandas stage; ``on_error='null'``
-    quarantines undecodable payloads — the crawl posture."""
-    if on_error not in ("raise", "null"):
-        raise ValueError(f"on_error must be 'raise' or 'null', got {on_error!r}")
-    safe = on_error == "null"
+    dims.  One Arrow-batched mapInPandas stage.  ``on_error`` and the
+    ``error`` column: see :mod:`vtk_reserves_spark.quarantine`."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from vtk_reserves_spark.operators.multimodal import sniff_mime
-        from vtk_reserves_spark.sources.bmp import decode_bmp
-        from vtk_reserves_spark.sources.gif import decode_gif
+    def parse(p: bytes) -> list[tuple]:
+        img = np.asarray(_decode_image(p))
+        h, w = img.shape[:2]
+        return [(w, h, f"{dhash_bits(img):016x}", f"{ahash_bits(img):016x}")]
+
+    return quarantine_map(df, parse, HASH_SCHEMA, on_error)
+
+
+def _decode_image(p: bytes) -> np.ndarray:
+    """Pixels of one image payload, codec picked by magic bytes."""
+    from vtk_reserves_spark.operators.multimodal import sniff_mime
+
+    mime = sniff_mime(p)
+    if mime == "image/png":
         from vtk_reserves_spark.sources.image import decode_png
+
+        return decode_png(p)
+    if mime == "image/jpeg":
         from vtk_reserves_spark.sources.jpeg import decode_jpeg
 
-        def decode(p: bytes) -> np.ndarray:
-            mime = sniff_mime(p)
-            if mime == "image/png":
-                return decode_png(p)
-            if mime == "image/jpeg":
-                return decode_jpeg(p)
-            if mime == "image/gif":
-                return decode_gif(p)[0][0]  # first composited frame
-            if mime == "image/bmp":
-                return decode_bmp(p)
-            if mime == "image/webp":
-                from vtk_reserves_spark.sources.webp import decode_webp
+        return decode_jpeg(p)
+    if mime == "image/gif":
+        from vtk_reserves_spark.sources.gif import decode_gif
 
-                return decode_webp(p)
-            raise ValueError(f"image_hashes: undecodable mime {mime!r}")
+        return decode_gif(p)[0][0]  # first composited frame
+    if mime == "image/bmp":
+        from vtk_reserves_spark.sources.bmp import decode_bmp
 
-        for b in batches:
-            rows = []
-            for did, p in zip(b["doc_id"].astype("int64"), b["payload"]):
-                try:
-                    img = np.asarray(decode(bytes(p)))
-                    h, w = img.shape[:2]
-                    rows.append([
-                        int(did), int(w), int(h),
-                        f"{dhash_bits(img):016x}",
-                        f"{ahash_bits(img):016x}",
-                        None,
-                    ])
-                except Exception as exc:
-                    if not safe:
-                        raise
-                    rows.append([
-                        int(did), None, None, None, None,
-                        f"{type(exc).__name__}: {exc}",
-                    ])
-            out = pd.DataFrame(
-                rows,
-                columns=["doc_id", "width", "height", "dhash", "ahash",
-                         "error"],
-            )
-            for c in ("width", "height"):
-                out[c] = pd.array(out[c], dtype="Int32")
-            yield out
+        return decode_bmp(p)
+    if mime == "image/webp":
+        from vtk_reserves_spark.sources.webp import decode_webp
 
-    return df.mapInPandas(run, HASH_SCHEMA)
+        return decode_webp(p)
+    raise ValueError(f"image_hashes: undecodable mime {mime!r}")
 
 
 def near_dup_image_pairs(

@@ -34,6 +34,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from vtk_reserves_spark.quarantine import check_on_error, quarantine_map
+
 #: metadata struct carried alongside every payload
 MEDIA_META = T.StructType(
     [
@@ -880,9 +882,7 @@ def extract_features(
     documented fidelity caveat (today: lossy VP8, whose three large
     RFC 6386 probability tables await golden-vector validation — see
     ``sources/vp8.py``).  Off by default to keep the stable schema."""
-    if on_error not in ("raise", "null"):
-        raise ValueError(f"on_error must be 'raise' or 'null', got {on_error!r}")
-    safe = on_error == "null"
+    safe = check_on_error(on_error)
     schema = FEATURE_SAFE_SCHEMA if safe else FEATURE_SCHEMA
     if include_warnings:
         schema = T.StructType(
@@ -1054,44 +1054,17 @@ def pdf_text(df: DataFrame, on_error: str = "raise") -> DataFrame:
     Scale shape mirrors the image codecs: Arrow-batched mapInPandas,
     one payload cell decoded at a time executor-side, bytes never on
     the driver; downstream text ops (quality, dedup, language-id)
-    compose on the ``text`` column.  ``on_error='null'`` is the crawl
-    posture — corrupt/encrypted PDFs yield NULL text plus an
-    ``error`` column for quarantine accounting instead of task
-    death."""
-    if on_error not in ("raise", "null"):
-        raise ValueError(f"on_error must be 'raise' or 'null', got {on_error!r}")
-    safe = on_error == "null"
+    compose on the ``text`` column.  ``on_error`` and the ``error``
+    column: see :mod:`vtk_reserves_spark.quarantine`."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def parse(p: bytes) -> list[tuple]:
         from vtk_reserves_spark.sources.pdf import parse_pdf
 
-        for pdf in batches:
-            texts, npages, titles, errors = [], [], [], []
-            for p in pdf["payload"]:
-                try:
-                    parsed = parse_pdf(bytes(p))
-                    texts.append("\n\n".join(parsed["pages"]))
-                    npages.append(parsed["npages"])
-                    titles.append(parsed["title"])
-                    errors.append(None)
-                except Exception as exc:
-                    if not safe:
-                        raise
-                    texts.append(None)
-                    npages.append(None)
-                    titles.append(None)
-                    errors.append(f"{type(exc).__name__}: {exc}")
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].astype("int64"),
-                    "text": texts,
-                    "npages": pd.array(npages, dtype="Int32"),
-                    "title": titles,
-                    "error": errors,
-                }
-            )
+        parsed = parse_pdf(p)
+        pages = "\n\n".join(parsed["pages"])
+        return [(pages, parsed["npages"], parsed["title"])]
 
-    return df.mapInPandas(run, PDF_TEXT_SCHEMA)
+    return quarantine_map(df, parse, PDF_TEXT_SCHEMA, on_error)
 
 
 def attach_office_payload(
@@ -1154,46 +1127,18 @@ def office_text(df: DataFrame, on_error: str = "raise") -> DataFrame:
 
     Scale shape mirrors ``pdf_text``: Arrow-batched mapInPandas, one
     payload cell decoded at a time executor-side, bytes never on the
-    driver.  ``on_error='null'`` is the crawl posture — corrupt or
-    unsupported containers yield NULL text plus an ``error`` column
-    for quarantine accounting instead of task death."""
-    if on_error not in ("raise", "null"):
-        raise ValueError(f"on_error must be 'raise' or 'null', got {on_error!r}")
-    safe = on_error == "null"
+    driver.  ``on_error`` and the ``error`` column: see
+    :mod:`vtk_reserves_spark.quarantine`."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def parse(p: bytes) -> list[tuple]:
         from vtk_reserves_spark.sources.office import parse_office
 
-        for b in batches:
-            texts, nparts, titles, kinds, errors = [], [], [], [], []
-            for p in b["payload"]:
-                try:
-                    parsed = parse_office(bytes(p))
-                    texts.append("\n\n".join(parsed["parts"]))
-                    nparts.append(len(parsed["parts"]))
-                    titles.append(parsed["title"])
-                    kinds.append(parsed["kind"])
-                    errors.append(None)
-                except Exception as exc:
-                    if not safe:
-                        raise
-                    texts.append(None)
-                    nparts.append(None)
-                    titles.append(None)
-                    kinds.append(None)
-                    errors.append(f"{type(exc).__name__}: {exc}")
-            yield pd.DataFrame(
-                {
-                    "doc_id": b["doc_id"].astype("int64"),
-                    "text": texts,
-                    "nparts": pd.array(nparts, dtype="Int32"),
-                    "title": titles,
-                    "kind": kinds,
-                    "error": errors,
-                }
-            )
+        parsed = parse_office(p)
+        parts = parsed["parts"]
+        text = "\n\n".join(parts)
+        return [(text, len(parts), parsed["title"], parsed["kind"])]
 
-    return df.mapInPandas(run, OFFICE_TEXT_SCHEMA)
+    return quarantine_map(df, parse, OFFICE_TEXT_SCHEMA, on_error)
 
 
 def attach_exif_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -1311,51 +1256,32 @@ def exif_metadata(df: DataFrame, on_error: str = "raise") -> DataFrame:
     Scale shape mirrors the codec operators: Arrow-batched
     mapInPandas, payload bytes never on the driver; metadata is a
     bounded prefix walk (no pixel decode), so throughput is
-    scan-bound.  ``on_error='null'`` quarantines corrupt structures
-    into the ``error`` column — the crawl posture."""
-    if on_error not in ("raise", "null"):
-        raise ValueError(f"on_error must be 'raise' or 'null', got {on_error!r}")
-    safe = on_error == "null"
+    scan-bound.  ``on_error`` and the ``error`` column: see
+    :mod:`vtk_reserves_spark.quarantine`; ``container`` is sniffed from
+    the magic bytes before the walk, so error rows keep it."""
+    head = F.hex(F.substring("payload", 1, 12))
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def at(offset: int, magic: bytes):
+        return head.substr(2 * offset + 1, 2 * len(magic)) == magic.hex().upper()
+
+    container = (
+        F.when(at(0, b"\xff\xd8"), "jpeg")
+        .when(at(0, b"II*\x00") | at(0, b"MM\x00*"), "tiff")
+        .when(at(0, b"\x89PNG\r\n\x1a\n"), "png")
+        .when(at(0, b"RIFF") & at(8, b"WEBP"), "webp")
+    )
+    names = EXIF_SCHEMA.names[2:-1]
+
+    def parse(p: bytes) -> list[list]:
         from vtk_reserves_spark.sources.exif import extract_exif
 
-        names = [
-            "make", "model", "orientation", "datetime_original",
-            "exposure_time", "fnumber", "iso", "focal_length",
-            "width", "height", "gps_lat", "gps_lon", "gps_alt",
-        ]
-        for b in batches:
-            rows = []
-            for did, p in zip(b["doc_id"].astype("int64"), b["payload"]):
-                p = bytes(p)
-                container = (
-                    "jpeg" if p[:2] == b"\xff\xd8"
-                    else "tiff" if p[:4] in (b"II*\x00", b"MM\x00*")
-                    else "png" if p[:8] == b"\x89PNG\r\n\x1a\n"
-                    else "webp" if p[:4] == b"RIFF" and p[8:12] == b"WEBP"
-                    else None
-                )
-                try:
-                    meta = extract_exif(p) or {}
-                    err = None
-                except Exception as exc:
-                    if not safe:
-                        raise
-                    meta, err = {}, f"{type(exc).__name__}: {exc}"
-                rows.append(
-                    [int(did), container]
-                    + [meta.get(n) for n in names]
-                    + [err]
-                )
-            out = pd.DataFrame(
-                rows, columns=["doc_id", "container"] + names + ["error"]
-            )
-            for c in ("orientation", "iso", "width", "height"):
-                out[c] = pd.array(out[c], dtype="Int32")
-            yield out
+        meta = extract_exif(p) or {}
+        return [[meta.get(n) for n in names]]
 
-    return df.mapInPandas(run, EXIF_SCHEMA)
+    return quarantine_map(
+        df.withColumn("container", container), parse, EXIF_SCHEMA, on_error,
+        carry=("doc_id", "container"),
+    )
 
 
 def attach_mp4_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -1443,65 +1369,32 @@ def mp4_metadata(df: DataFrame, on_error: str = "raise") -> DataFrame:
 
     Scale shape mirrors `exif_metadata`: Arrow-batched mapInPandas,
     a bounded prefix walk that never touches ``mdat`` payload bytes,
-    so throughput is scan-bound.  ``on_error='null'`` quarantines
-    corrupt structures into ``error`` — the crawl posture."""
-    if on_error not in ("raise", "null"):
-        raise ValueError(f"on_error must be 'raise' or 'null', got {on_error!r}")
-    safe = on_error == "null"
+    so throughput is scan-bound.  ``on_error`` and the ``error``
+    column: see :mod:`vtk_reserves_spark.quarantine`."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def parse(p: bytes) -> list[tuple]:
         from vtk_reserves_spark.sources.mp4 import parse_mp4
 
-        cols = [
-            "doc_id", "brand", "duration_s", "n_tracks", "video_codec",
-            "width", "height", "nframes", "fps", "audio_codec",
-            "channels", "sample_rate", "audio_lang", "error",
-        ]
-        for b in batches:
-            rows = []
-            for did, p in zip(b["doc_id"].astype("int64"), b["payload"]):
-                try:
-                    meta = parse_mp4(bytes(p))
-                    err = None
-                except Exception as exc:
-                    if not safe:
-                        raise
-                    meta, err = {"tracks": []}, f"{type(exc).__name__}: {exc}"
-                vid = next(
-                    (t for t in meta["tracks"] if t.get("handler") == "vide"),
-                    None,
-                )
-                aud = next(
-                    (t for t in meta["tracks"] if t.get("handler") == "soun"),
-                    None,
-                )
-                fps = None
-                if vid and vid.get("n_samples") and vid.get("duration"):
-                    fps = vid["n_samples"] * vid["timescale"] / vid["duration"]
-                rows.append([
-                    int(did),
-                    meta.get("brand"),
-                    meta.get("duration_s"),
-                    len(meta["tracks"]) if err is None else None,
-                    vid.get("codec") if vid else None,
-                    vid.get("width") if vid else None,
-                    vid.get("height") if vid else None,
-                    vid.get("n_samples") if vid else None,
-                    fps,
-                    aud.get("codec") if aud else None,
-                    aud.get("channels") if aud else None,
-                    aud.get("sample_rate") if aud else None,
-                    aud.get("lang") if aud else None,
-                    err,
-                ])
-            out = pd.DataFrame(rows, columns=cols)
-            out["n_tracks"] = pd.array(out["n_tracks"], dtype="Int32")
-            out["nframes"] = pd.array(out["nframes"], dtype="Int64")
-            out["channels"] = pd.array(out["channels"], dtype="Int32")
-            out["sample_rate"] = pd.array(out["sample_rate"], dtype="Int32")
-            yield out
+        meta = parse_mp4(p)
+        vid = _first(meta["tracks"], "handler", "vide")
+        aud = _first(meta["tracks"], "handler", "soun")
+        fps = None
+        if vid.get("n_samples") and vid.get("duration"):
+            fps = vid["n_samples"] * vid["timescale"] / vid["duration"]
+        return [(
+            meta.get("brand"), meta.get("duration_s"), len(meta["tracks"]),
+            vid.get("codec"), vid.get("width"), vid.get("height"),
+            vid.get("n_samples"), fps,
+            aud.get("codec"), aud.get("channels"), aud.get("sample_rate"),
+            aud.get("lang"),
+        )]
 
-    return df.mapInPandas(run, MP4_SCHEMA)
+    return quarantine_map(df, parse, MP4_SCHEMA, on_error)
+
+
+def _first(entries: list[dict], key: str, value) -> dict:
+    """The first entry whose ``key`` is ``value``, else ``{}``."""
+    return next((e for e in entries if e.get(key) == value), {})
 
 
 def attach_video_codec_payload(
@@ -1603,60 +1496,34 @@ def video_codec_info(df: DataFrame, on_error: str = "raise") -> DataFrame:
     Scale shape mirrors `mp4_metadata`: Arrow-batched mapInPandas, a
     bounded prefix walk (an SPS is <100 bytes; the MP4 walk never
     touches ``mdat``), so throughput is scan-bound and there is no
-    shuffle.  ``on_error='null'`` quarantines corrupt structures
-    into ``error`` — the crawl posture."""
-    if on_error not in ("raise", "null"):
-        raise ValueError(f"on_error must be 'raise' or 'null', got {on_error!r}")
-    safe = on_error == "null"
+    shuffle.  ``on_error`` and the ``error`` column: see
+    :mod:`vtk_reserves_spark.quarantine`."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def parse(data: bytes) -> list[tuple]:
         from vtk_reserves_spark.sources.h264 import stream_info
         from vtk_reserves_spark.sources.mp4 import parse_mp4
 
-        cols = [f.name for f in VIDEO_CODEC_SCHEMA.fields]
-        for b in batches:
-            rows = []
-            for did, p in zip(b["doc_id"].astype("int64"), b["payload"]):
-                data = bytes(p)
-                try:
-                    if data[4:8] == b"ftyp":
-                        container = "mp4"
-                        meta = parse_mp4(data)
-                        cfg = next(
-                            (t["codec_config"] for t in meta["tracks"]
-                             if t.get("codec_config")),
-                            None,
-                        )
-                        if cfg is None:
-                            raise ValueError(
-                                "mp4: no avcC/hvcC codec configuration"
-                            )
-                        info = stream_info(cfg)
-                    else:
-                        container = "raw"
-                        info = stream_info(data)
-                    rows.append([
-                        int(did), container, info["framing"], info["codec"],
-                        info["profile_idc"], info["profile"],
-                        info.get("tier", 0), info["level_idc"],
-                        info["width"], info["height"],
-                        info["chroma_format_idc"], info["bit_depth_luma"],
-                        None,
-                    ])
-                except Exception as exc:
-                    if not safe:
-                        raise
-                    rows.append(
-                        [int(did)] + [None] * (len(cols) - 2)
-                        + [f"{type(exc).__name__}: {exc}"]
-                    )
-            out = pd.DataFrame(rows, columns=cols)
-            for c in ("profile_idc", "tier", "level_idc", "width",
-                      "height", "chroma_format_idc", "bit_depth"):
-                out[c] = pd.array(out[c], dtype="Int32")
-            yield out
+        if data[4:8] == b"ftyp":
+            container = "mp4"
+            cfg = next(
+                (t["codec_config"] for t in parse_mp4(data)["tracks"]
+                 if t.get("codec_config")),
+                None,
+            )
+            if cfg is None:
+                raise ValueError("mp4: no avcC/hvcC codec configuration")
+            info = stream_info(cfg)
+        else:
+            container = "raw"
+            info = stream_info(data)
+        return [(
+            container, info["framing"], info["codec"],
+            info["profile_idc"], info["profile"], info.get("tier", 0),
+            info["level_idc"], info["width"], info["height"],
+            info["chroma_format_idc"], info["bit_depth_luma"],
+        )]
 
-    return df.mapInPandas(run, VIDEO_CODEC_SCHEMA)
+    return quarantine_map(df, parse, VIDEO_CODEC_SCHEMA, on_error)
 
 
 def attach_mp3_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -1751,41 +1618,17 @@ def mp3_metadata(df: DataFrame, on_error: str = "raise") -> DataFrame:
 
     Scale shape mirrors `mp4_metadata`: Arrow-batched mapInPandas;
     the frame walk is header-hopping (4 bytes read per ~400-byte
-    frame), so throughput is scan-bound.  ``on_error='null'``
-    quarantines corrupt structures into ``error`` — the crawl
-    posture."""
-    if on_error not in ("raise", "null"):
-        raise ValueError(f"on_error must be 'raise' or 'null', got {on_error!r}")
-    safe = on_error == "null"
+    frame), so throughput is scan-bound.  ``on_error`` and the
+    ``error`` column: see :mod:`vtk_reserves_spark.quarantine`."""
+    names = MP3_SCHEMA.names[1:-1]
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def parse(p: bytes) -> list[list]:
         from vtk_reserves_spark.sources.mp3 import parse_mp3
 
-        names = [
-            "title", "artist", "album", "year", "genre", "track",
-            "channels", "sample_rate", "bitrate_kbps", "n_frames",
-            "duration_s",
-        ]
-        for b in batches:
-            rows = []
-            for did, p in zip(b["doc_id"].astype("int64"), b["payload"]):
-                try:
-                    meta = parse_mp3(bytes(p))
-                    err = None
-                except Exception as exc:
-                    if not safe:
-                        raise
-                    meta, err = {}, f"{type(exc).__name__}: {exc}"
-                rows.append(
-                    [int(did)] + [meta.get(n) for n in names] + [err]
-                )
-            out = pd.DataFrame(rows, columns=["doc_id"] + names + ["error"])
-            for c in ("channels", "sample_rate", "bitrate_kbps"):
-                out[c] = pd.array(out[c], dtype="Int32")
-            out["n_frames"] = pd.array(out["n_frames"], dtype="Int64")
-            yield out
+        meta = parse_mp3(p)
+        return [[meta.get(n) for n in names]]
 
-    return df.mapInPandas(run, MP3_SCHEMA)
+    return quarantine_map(df, parse, MP3_SCHEMA, on_error)
 
 
 def attach_ogg_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -1853,38 +1696,17 @@ def ogg_metadata(df: DataFrame, on_error: str = "raise") -> DataFrame:
 
     Scale shape: Arrow-batched mapInPandas over payload bytes that
     never touch the driver; the page walk is header-hopping, so
-    throughput is scan-bound.  ``on_error='null'`` quarantines
-    corrupt streams into ``error`` — the crawl posture."""
-    if on_error not in ("raise", "null"):
-        raise ValueError(f"on_error must be 'raise' or 'null', got {on_error!r}")
-    safe = on_error == "null"
+    throughput is scan-bound.  ``on_error`` and the ``error`` column:
+    see :mod:`vtk_reserves_spark.quarantine`."""
+    names = OGG_SCHEMA.names[1:-1]
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def parse(p: bytes) -> list[list]:
         from vtk_reserves_spark.sources.ogg import parse_ogg
 
-        names = [
-            "codec", "channels", "sample_rate", "duration_s",
-            "title", "artist", "album", "vendor",
-        ]
-        for b in batches:
-            rows = []
-            for did, p in zip(b["doc_id"].astype("int64"), b["payload"]):
-                try:
-                    meta = parse_ogg(bytes(p))
-                    err = None
-                except Exception as exc:
-                    if not safe:
-                        raise
-                    meta, err = {}, f"{type(exc).__name__}: {exc}"
-                rows.append(
-                    [int(did)] + [meta.get(n) for n in names] + [err]
-                )
-            out = pd.DataFrame(rows, columns=["doc_id"] + names + ["error"])
-            for c in ("channels", "sample_rate"):
-                out[c] = pd.array(out[c], dtype="Int32")
-            yield out
+        meta = parse_ogg(p)
+        return [[meta.get(n) for n in names]]
 
-    return df.mapInPandas(run, OGG_SCHEMA)
+    return quarantine_map(df, parse, OGG_SCHEMA, on_error)
 
 
 def attach_mkv_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -1966,61 +1788,23 @@ def mkv_metadata(df: DataFrame, on_error: str = "raise") -> DataFrame:
     video container.
 
     Scale shape: Arrow-batched mapInPandas; the walk stops at the
-    first Cluster so frame payloads are never touched.
-    ``on_error='null'`` quarantines corrupt structures into
-    ``error`` — the crawl posture."""
-    if on_error not in ("raise", "null"):
-        raise ValueError(f"on_error must be 'raise' or 'null', got {on_error!r}")
-    safe = on_error == "null"
+    first Cluster so frame payloads are never touched.  ``on_error``
+    and the ``error`` column: see :mod:`vtk_reserves_spark.quarantine`."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def parse(p: bytes) -> list[tuple]:
         from vtk_reserves_spark.sources.mkv import parse_mkv
 
-        cols = [
-            "doc_id", "doc_type", "duration_s", "n_tracks",
-            "video_codec", "width", "height", "audio_codec",
-            "channels", "sample_rate", "audio_lang", "muxing_app",
-            "error",
-        ]
-        for b in batches:
-            rows = []
-            for did, p in zip(b["doc_id"].astype("int64"), b["payload"]):
-                try:
-                    meta = parse_mkv(bytes(p))
-                    err = None
-                except Exception as exc:
-                    if not safe:
-                        raise
-                    meta, err = {"tracks": []}, f"{type(exc).__name__}: {exc}"
-                vid = next(
-                    (t for t in meta["tracks"] if t.get("type") == "video"),
-                    None,
-                )
-                aud = next(
-                    (t for t in meta["tracks"] if t.get("type") == "audio"),
-                    None,
-                )
-                rows.append([
-                    int(did),
-                    meta.get("doc_type"),
-                    meta.get("duration_s"),
-                    len(meta["tracks"]) if err is None else None,
-                    vid.get("codec") if vid else None,
-                    vid.get("width") if vid else None,
-                    vid.get("height") if vid else None,
-                    aud.get("codec") if aud else None,
-                    aud.get("channels") if aud else None,
-                    aud.get("sample_rate") if aud else None,
-                    aud.get("lang") if aud else None,
-                    meta.get("muxing_app"),
-                    err,
-                ])
-            out = pd.DataFrame(rows, columns=cols)
-            for c in ("n_tracks", "width", "height", "channels"):
-                out[c] = pd.array(out[c], dtype="Int32")
-            yield out
+        meta = parse_mkv(p)
+        vid = _first(meta["tracks"], "type", "video")
+        aud = _first(meta["tracks"], "type", "audio")
+        return [(
+            meta.get("doc_type"), meta.get("duration_s"), len(meta["tracks"]),
+            vid.get("codec"), vid.get("width"), vid.get("height"),
+            aud.get("codec"), aud.get("channels"), aud.get("sample_rate"),
+            aud.get("lang"), meta.get("muxing_app"),
+        )]
 
-    return df.mapInPandas(run, MKV_SCHEMA)
+    return quarantine_map(df, parse, MKV_SCHEMA, on_error)
 
 
 def attach_font_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -2077,38 +1861,17 @@ def font_metadata(df: DataFrame, on_error: str = "raise") -> DataFrame:
     unitsPerEm, glyph count and name-table family strings — the
     family-dedup / sanity-filter signals for font curation.  Same
     Arrow-batched mapInPandas scan-bound shape as the other
-    header miners; ``on_error='null'`` quarantines corrupt
-    payloads."""
-    if on_error not in ("raise", "null"):
-        raise ValueError(f"on_error must be 'raise' or 'null', got {on_error!r}")
-    safe = on_error == "null"
+    header miners.  ``on_error`` and the ``error`` column: see
+    :mod:`vtk_reserves_spark.quarantine`."""
+    names = FONT_SCHEMA.names[1:-1]
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def parse(p: bytes) -> list[list]:
         from vtk_reserves_spark.sources.font import parse_font
 
-        names = [
-            "container", "flavor", "n_tables", "units_per_em",
-            "num_glyphs", "family", "subfamily", "full_name",
-        ]
-        for b in batches:
-            rows = []
-            for did, p in zip(b["doc_id"].astype("int64"), b["payload"]):
-                try:
-                    meta = parse_font(bytes(p))
-                    err = None
-                except Exception as exc:
-                    if not safe:
-                        raise
-                    meta, err = {}, f"{type(exc).__name__}: {exc}"
-                rows.append(
-                    [int(did)] + [meta.get(n) for n in names] + [err]
-                )
-            out = pd.DataFrame(rows, columns=["doc_id"] + names + ["error"])
-            for c in ("n_tables", "units_per_em", "num_glyphs"):
-                out[c] = pd.array(out[c], dtype="Int32")
-            yield out
+        meta = parse_font(p)
+        return [[meta.get(n) for n in names]]
 
-    return df.mapInPandas(run, FONT_SCHEMA)
+    return quarantine_map(df, parse, FONT_SCHEMA, on_error)
 
 
 def sniff_compression(payload: bytes) -> str | None:
@@ -2238,36 +2001,19 @@ def decompress_media(df: DataFrame, on_error: str = "raise") -> DataFrame:
     """Normalize (doc_id, payload) through transfer compression:
     sniff gzip/bzip2/xz/zstd/zlib magics, decompress, surface the
     codec and both sizes (the compressed-ratio zip-bomb signal).
-    Arrow-batched mapInPandas; ``on_error='null'`` quarantines
-    corrupt streams."""
-    if on_error not in ("raise", "null"):
-        raise ValueError(f"on_error must be 'raise' or 'null', got {on_error!r}")
-    safe = on_error == "null"
+    Arrow-batched mapInPandas.  ``on_error`` and the ``error`` column:
+    see :mod:`vtk_reserves_spark.quarantine`; ``n_compressed`` is
+    measured before the parse, so error rows keep it."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [
-            "doc_id", "codec", "n_compressed", "n_bytes", "payload",
-            "error",
-        ]
-        for b in batches:
-            rows = []
-            for did, p in zip(b["doc_id"].astype("int64"), b["payload"]):
-                p = bytes(p)
-                try:
-                    codec, out = decompress_payload(p)
-                    rows.append([
-                        int(did), codec, len(p), len(out), out, None,
-                    ])
-                except Exception as exc:
-                    if not safe:
-                        raise
-                    rows.append([
-                        int(did), None, len(p), None, None,
-                        f"{type(exc).__name__}: {exc}",
-                    ])
-            yield pd.DataFrame(rows, columns=cols)
+    def parse(p: bytes) -> list[tuple]:
+        codec, out = decompress_payload(p)
+        return [(codec, len(out), out)]
 
-    return df.mapInPandas(run, DECOMPRESS_SCHEMA)
+    return quarantine_map(
+        df.withColumn("n_compressed", F.octet_length("payload")),
+        parse, DECOMPRESS_SCHEMA, on_error,
+        carry=("doc_id", "n_compressed"),
+    )
 
 
 def attach_ivf_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -2328,54 +2074,33 @@ def ivf_video_frames(df: DataFrame, on_error: str = "raise") -> DataFrame:
     RFC 6386 codec (`sources/vp8.py`) to per-frame RGB means — one
     row per frame.  Completes the video story next to the
     metadata-level MP4/MKV walkers; same Arrow-batched payload-grain
-    shape as `video_frames` (MJPG-AVI)."""
-    if on_error not in ("raise", "null"):
-        raise ValueError(f"on_error must be 'raise' or 'null', got {on_error!r}")
-    safe = on_error == "null"
+    shape as `video_frames` (MJPG-AVI).  ``on_error`` and the ``error``
+    column: see :mod:`vtk_reserves_spark.quarantine` — a payload with one
+    undecodable frame is one error row, none of its frames."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def parse(p: bytes) -> list[tuple]:
         import numpy as np
 
         from vtk_reserves_spark.sources.ivf import parse_ivf
         from vtk_reserves_spark.sources.vp8 import decode_vp8_rgba
 
-        cols = [
-            "doc_id", "fourcc", "frame_idx", "pts", "width", "height",
-            "mean_byte", "error",
-        ]
-        for b in batches:
-            rows = []
-            for did, p in zip(b["doc_id"].astype("int64"), b["payload"]):
-                did = int(did)
-                try:
-                    m = parse_ivf(bytes(p))
-                    if m["fourcc"] != "VP80":
-                        raise ValueError(
-                            f"ivf_video_frames: codec {m['fourcc']!r} "
-                            "not decodable (VP8 key frames only)"
-                        )
-                    for idx, (pts, body) in enumerate(m["frames"]):
-                        rgba = np.asarray(decode_vp8_rgba(body))
-                        rows.append([
-                            did, m["fourcc"], idx, int(pts),
-                            int(rgba.shape[1]), int(rgba.shape[0]),
-                            float(rgba[:, :, :3].mean()), None,
-                        ])
-                except Exception as exc:
-                    if not safe:
-                        raise
-                    rows.append([
-                        did, None, None, None, None, None, None,
-                        f"{type(exc).__name__}: {exc}",
-                    ])
-            out = pd.DataFrame(rows, columns=cols)
-            out["frame_idx"] = pd.array(out["frame_idx"], dtype="Int32")
-            for c in ("width", "height"):
-                out[c] = pd.array(out[c], dtype="Int32")
-            out["pts"] = pd.array(out["pts"], dtype="Int64")
-            yield out
+        m = parse_ivf(p)
+        if m["fourcc"] != "VP80":
+            raise ValueError(
+                f"ivf_video_frames: codec {m['fourcc']!r} "
+                "not decodable (VP8 key frames only)"
+            )
+        rows = []
+        for idx, (pts, body) in enumerate(m["frames"]):
+            rgba = np.asarray(decode_vp8_rgba(body))
+            rows.append((
+                m["fourcc"], idx, int(pts),
+                int(rgba.shape[1]), int(rgba.shape[0]),
+                float(rgba[:, :, :3].mean()),
+            ))
+        return rows
 
-    return df.mapInPandas(run, IVF_SCHEMA)
+    return quarantine_map(df, parse, IVF_SCHEMA, on_error)
 
 
 def frame_sample(df: DataFrame, every_n_bytes: int = 40) -> DataFrame:
@@ -2456,53 +2181,20 @@ def heif_metadata(df: DataFrame, on_error: str = "raise") -> DataFrame:
     size — the pre-decode triage signals for the still-image half of
     the multimodal crawl (the video half is `mp4_metadata`).  Same
     scale shape: Arrow-batched mapInPandas, metadata boxes only,
-    ``mdat`` payload bytes never read."""
-    if on_error not in ("raise", "null"):
-        raise ValueError(f"on_error must be 'raise' or 'null', got {on_error!r}")
-    safe = on_error == "null"
+    ``mdat`` payload bytes never read.  ``on_error`` and the ``error``
+    column: see :mod:`vtk_reserves_spark.quarantine`."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def parse(p: bytes) -> list[tuple]:
         from vtk_reserves_spark.sources.heif import parse_heif
 
-        cols = ["doc_id", "brand", "primary_id", "n_items", "item_type",
-                "width", "height", "primary_size", "exif_size", "error"]
-        for b in batches:
-            rows = []
-            for did, p in zip(b["doc_id"].astype("int64"), b["payload"]):
-                try:
-                    meta = parse_heif(bytes(p))
-                    err = None
-                except Exception as exc:
-                    if not safe:
-                        raise
-                    meta = {"items": [], "brand": None,
-                            "primary_item": None}
-                    err = f"{type(exc).__name__}: {exc}"
-                prim = next(
-                    (i for i in meta["items"]
-                     if i["item_id"] == meta.get("primary_item")),
-                    None,
-                )
-                exif = next(
-                    (i for i in meta["items"]
-                     if i["item_type"] == "Exif"),
-                    None,
-                )
-                rows.append([
-                    int(did), meta.get("brand"), meta.get("primary_item"),
-                    len(meta["items"]) if err is None else None,
-                    prim.get("item_type") if prim else None,
-                    prim.get("width") if prim else None,
-                    prim.get("height") if prim else None,
-                    prim.get("size") if prim else None,
-                    exif.get("size") if exif else None,
-                    err,
-                ])
-            out = pd.DataFrame(rows, columns=cols)
-            for c in ("primary_id", "n_items", "width", "height"):
-                out[c] = pd.array(out[c], dtype="Int32")
-            for c in ("primary_size", "exif_size"):
-                out[c] = pd.array(out[c], dtype="Int64")
-            yield out
+        meta = parse_heif(p)
+        items = meta["items"]
+        prim = _first(items, "item_id", meta.get("primary_item"))
+        exif = _first(items, "item_type", "Exif")
+        return [(
+            meta.get("brand"), meta.get("primary_item"), len(items),
+            prim.get("item_type"), prim.get("width"), prim.get("height"),
+            prim.get("size"), exif.get("size"),
+        )]
 
-    return df.mapInPandas(run, HEIF_SCHEMA)
+    return quarantine_map(df, parse, HEIF_SCHEMA, on_error)

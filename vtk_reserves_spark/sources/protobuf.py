@@ -136,12 +136,12 @@ def build_message(fields: list[tuple[int, int, object]]) -> bytes:
 
 
 # ---------------------------------------------------------------- spark
-from collections.abc import Iterator  # noqa: E402
-
 import pandas as pd  # noqa: E402
 from pyspark.sql import DataFrame  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 from pyspark.sql import types as T  # noqa: E402
+
+from vtk_reserves_spark.quarantine import quarantine_map  # noqa: E402
 
 CENSUS_SCHEMA = T.StructType(
     [
@@ -189,38 +189,14 @@ def protobuf_census(df: DataFrame, on_error: str = "raise") -> DataFrame:
     """Schema-less field census over (doc_id, payload): one row per
     wire-format field with its number, type, size, unsigned value
     (varint/fixed) and UTF-8 text (LEN fields that decode cleanly).
-    Payload-grain mapInPandas; ``on_error='null'`` emits one error
-    row per malformed payload."""
-    if on_error not in ("raise", "null"):
-        raise ValueError(f"on_error must be 'raise' or 'null', got {on_error!r}")
-    safe = on_error == "null"
+    Payload-grain mapInPandas.  ``on_error`` and the ``error`` column:
+    see :mod:`vtk_reserves_spark.quarantine` — a malformed payload is
+    one error row, none of its fields."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [
-            "doc_id", "field_no", "wire_type", "n_bytes", "uint",
-            "text", "error",
+    def parse(p: bytes) -> list[tuple]:
+        return [
+            (f["field_no"], f["wire_type"], f["n_bytes"], f["uint"], f["text"])
+            for f in parse_fields(p)
         ]
-        for b in batches:
-            rows = []
-            for did, p in zip(b["doc_id"].astype("int64"), b["payload"]):
-                did = int(did)
-                try:
-                    for f in parse_fields(bytes(p)):
-                        rows.append([
-                            did, f["field_no"], f["wire_type"],
-                            f["n_bytes"], f["uint"], f["text"], None,
-                        ])
-                except Exception as exc:
-                    if not safe:
-                        raise
-                    rows.append([
-                        did, None, None, None, None, None,
-                        f"{type(exc).__name__}: {exc}",
-                    ])
-            out = pd.DataFrame(rows, columns=cols)
-            out["wire_type"] = pd.array(out["wire_type"], dtype="Int32")
-            for c in ("field_no", "n_bytes", "uint"):
-                out[c] = pd.array(out[c], dtype="Int64")
-            yield out
 
-    return df.mapInPandas(run, CENSUS_SCHEMA)
+    return quarantine_map(df, parse, CENSUS_SCHEMA, on_error)

@@ -386,6 +386,10 @@ def grid_cell_table(ds: VtkDataset):
       from the first point differences — covers z-rotated (bearing)
       models; the edges are ``|ex|, |ey|, |ez|`` and the volume is
       ``|det[ex ey ez]|``.
+
+    An axis with one point layer holds one cell layer, as VTK counts it
+    (``VtkDataset.n_cells``): its centroid is the layer's coordinate and
+    its edge length 0.
     """
     import pandas as pd
 
@@ -395,7 +399,7 @@ def grid_cell_table(ds: VtkDataset):
     P = ds.points
     if len(P) != npx * npy * npz:
         raise ValueError("POINTS count does not match DIMENSIONS")
-    nx, ny, nz = npx - 1, npy - 1, npz - 1
+    nx, ny, nz = max(npx - 1, 1), max(npy - 1, 1), max(npz - 1, 1)
     cell = np.arange(nx * ny * nz)
     i = cell % nx
     j = (cell // nx) % ny
@@ -411,6 +415,8 @@ def grid_cell_table(ds: VtkDataset):
             lattice, P, atol=1e-9
         )
     if lattice_ok:
+        # a one-layer axis pads to a zero-length edge at its coordinate
+        px, py, pz = (np.append(v, v) if len(v) == 1 else v for v in (px, py, pz))
         cx, cy, cz = ((v[:-1] + v[1:]) / 2.0 for v in (px, py, pz))
         x, y, z = cx[i], cy[j], cz[k]
         dx, dy, dz = (np.diff(v)[ix] for v, ix in ((px, i), (py, j), (pz, k)))

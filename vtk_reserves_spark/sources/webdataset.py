@@ -18,11 +18,11 @@ here is the default CommonCrawl/LAION shape.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from vtk_reserves_spark.quarantine import check_on_error, quarantine_map
 
 __all__ = ["read_webdataset", "WDS_SCHEMA"]
 
@@ -46,41 +46,27 @@ def read_webdataset(
     path up to the first dot of the basename and ``ext`` the rest —
     the WebDataset sample grouping (``groupBy("shard", "key")`` or a
     task-local pivot reassembles samples; they never span shards).
-    ``on_error='null'`` emits one error row per corrupt shard
-    instead of failing the task — the crawl posture."""
-    if on_error not in ("raise", "null"):
-        raise ValueError(f"on_error must be 'raise' or 'null', got {on_error!r}")
-    safe = on_error == "null"
-    raw = (
-        spark.read.format("binaryFile")
-        .load(path_glob)
-        .select("path", "content")
+    ``on_error`` and the ``error`` column: see
+    :mod:`vtk_reserves_spark.quarantine` — a corrupt shard is one error
+    row keyed by ``shard``, none of its members."""
+    check_on_error(on_error)  # before the load, which raises on a bad path
+    raw = spark.read.format("binaryFile").load(path_glob).select(
+        F.substring_index("path", "/", -1).alias("shard"), "content"
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def parse(content: bytes) -> list[tuple]:
         from vtk_reserves_spark.sources.tar import iter_tar
 
-        cols = ["shard", "key", "ext", "payload", "n_bytes", "error"]
-        for b in batches:
-            for path, content in zip(b["path"], b["content"]):
-                shard = str(path).rsplit("/", 1)[-1]
-                rows = []
-                try:
-                    for name, payload in iter_tar(bytes(content)):
-                        slash = name.rfind("/")
-                        dot = name.find(".", slash + 1)
-                        key, ext = (
-                            (name, "") if dot < 0
-                            else (name[:dot], name[dot + 1 :])
-                        )
-                        rows.append(
-                            [shard, key, ext, payload, len(payload), None]
-                        )
-                except Exception as exc:
-                    if not safe:
-                        raise
-                    rows = [[shard, None, None, None, None,
-                             f"{type(exc).__name__}: {exc}"]]
-                yield pd.DataFrame(rows, columns=cols)
+        rows = []
+        for name, payload in iter_tar(content):
+            slash = name.rfind("/")
+            dot = name.find(".", slash + 1)
+            key, ext = (
+                (name, "") if dot < 0 else (name[:dot], name[dot + 1 :])
+            )
+            rows.append((key, ext, payload, len(payload)))
+        return rows
 
-    return raw.mapInPandas(run, WDS_SCHEMA)
+    return quarantine_map(
+        raw, parse, WDS_SCHEMA, on_error, carry=("shard",), payload="content"
+    )

@@ -28,11 +28,12 @@ from __future__ import annotations
 
 import struct
 import zlib
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from vtk_reserves_spark.quarantine import check_on_error, quarantine_map
 
 __all__ = ["iter_zip", "read_zip_archive", "ZIP_SCHEMA"]
 
@@ -146,39 +147,20 @@ def read_zip_archive(
 ) -> DataFrame:
     """Read ZIP archives into one row per member (archive, member,
     payload, sizes, method) — archive-grain binaryFile tasks, the
-    same shape as `read_webdataset`.  ``on_error='null'`` emits one
-    error row per corrupt archive instead of failing the task."""
-    if on_error not in ("raise", "null"):
-        raise ValueError(f"on_error must be 'raise' or 'null', got {on_error!r}")
-    safe = on_error == "null"
-    raw = (
-        spark.read.format("binaryFile")
-        .load(path_glob)
-        .select("path", "content")
+    same shape as `read_webdataset`.  ``on_error`` and the ``error``
+    column: see :mod:`vtk_reserves_spark.quarantine` — a corrupt archive
+    is one error row keyed by ``archive``, none of its members."""
+    check_on_error(on_error)  # before the load, which raises on a bad path
+    raw = spark.read.format("binaryFile").load(path_glob).select(
+        F.substring_index("path", "/", -1).alias("archive"), "content"
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [
-            "archive", "member", "payload", "n_bytes",
-            "compressed_bytes", "method", "error",
+    def parse(content: bytes) -> list[tuple]:
+        return [
+            (name, payload, len(payload), csize, method)
+            for name, payload, method, csize in iter_zip(content)
         ]
-        for b in batches:
-            for path, content in zip(b["path"], b["content"]):
-                archive = str(path).rsplit("/", 1)[-1]
-                rows = []
-                try:
-                    for name, payload, method, csize in iter_zip(
-                        bytes(content)
-                    ):
-                        rows.append([
-                            archive, name, payload, len(payload),
-                            csize, method, None,
-                        ])
-                except Exception as exc:
-                    if not safe:
-                        raise
-                    rows = [[archive, None, None, None, None, None,
-                             f"{type(exc).__name__}: {exc}"]]
-                yield pd.DataFrame(rows, columns=cols)
 
-    return raw.mapInPandas(run, ZIP_SCHEMA)
+    return quarantine_map(
+        raw, parse, ZIP_SCHEMA, on_error, carry=("archive",), payload="content"
+    )

@@ -14,11 +14,11 @@ unit.  Same posture as `sources/warc.read_warc_stream`.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from vtk_reserves_spark.quarantine import quarantine_map
 
 __all__ = ["read_media_stream", "MEDIA_STREAM_SCHEMA"]
 
@@ -69,8 +69,8 @@ def read_media_stream(spark: SparkSession, path: str) -> DataFrame:
     """Streaming metadata rows over a continuous-drop media
     directory: (file, mime, duration_s, detail).  Corrupt or
     unroutable payloads land in ``error`` rather than poisoning the
-    stream — a dead-letter filter (``WHERE error IS NOT NULL``)
-    quarantines them downstream, the crawl posture."""
+    stream: the ``on_error='null'`` contract of
+    :mod:`vtk_reserves_spark.quarantine`, always on."""
     files = (
         spark.readStream.format("binaryFile")
         .schema(
@@ -78,23 +78,9 @@ def read_media_stream(spark: SparkSession, path: str) -> DataFrame:
             "length long, content binary"
         )
         .load(path)
-        .select("path", "content")
+        .select(F.substring_index("path", "/", -1).alias("file"), "content")
     )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["file", "mime", "duration_s", "detail", "error"]
-        for b in batches:
-            rows = []
-            for path_, content in zip(b["path"], b["content"]):
-                fname = str(path_).rsplit("/", 1)[-1]
-                try:
-                    mime, dur, detail = _parse_one(bytes(content))
-                    rows.append([fname, mime, dur, detail, None])
-                except Exception as exc:
-                    rows.append([
-                        fname, None, None, None,
-                        f"{type(exc).__name__}: {exc}",
-                    ])
-            yield pd.DataFrame(rows, columns=cols)
-
-    return files.mapInPandas(run, MEDIA_STREAM_SCHEMA)
+    return quarantine_map(
+        files, lambda content: [_parse_one(content)], MEDIA_STREAM_SCHEMA,
+        "null", carry=("file",), payload="content",
+    )
