@@ -589,6 +589,39 @@ def test_office_cli(tmp_path, spark):
     assert "OfficeError" in rows["e.docx"]["error"]
 
 
+def test_pdf_cli_scans_input_once(tmp_path, spark, monkeypatch):
+    """pdf subcommand: the input glob is scanned by ONE binaryFile
+    FileScan (the path rides through the operator; no join back on a
+    hash of it), and each file gets exactly one row keyed by its own
+    path."""
+    from pyspark.sql import DataFrameWriter
+
+    from vtk_reserves_spark.cli import main
+    from vtk_reserves_spark.sources.pdf import write_pdf
+
+    for name in ("a", "b"):
+        (tmp_path / f"{name}.pdf").write_bytes(
+            write_pdf([f"{name} page"], title=name.upper())
+        )
+    plans = []
+    parquet = DataFrameWriter.parquet
+
+    def record(self, path, *args, **kwargs):
+        plans.append(self._df._jdf.queryExecution().executedPlan()
+                     .toString())
+        return parquet(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", record)
+    out = str(tmp_path / "out")
+    main(["pdf", str(tmp_path / "*.pdf"), out])
+    assert len(plans) == 1
+    assert plans[0].count("FileScan binaryFile") == 1
+    rows = spark.read.parquet(out).collect()
+    assert sorted(
+        (r["path"].rsplit("/", 1)[-1], r["text"], r["title"]) for r in rows
+    ) == [("a.pdf", "a page", "A"), ("b.pdf", "b page", "B")]
+
+
 def test_extract_and_search_cli(tmp_path, spark):
     import pandas as pd
 

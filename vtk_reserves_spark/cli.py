@@ -505,21 +505,11 @@ def cmd_doc_text(args, extract: str) -> None:
     from vtk_reserves_spark.operators import multimodal
 
     spark = _spark()
-    files = (
-        spark.read.format("binaryFile")
-        .load(args.input)
-        .select(
-            F.col("path"),
-            F.col("content").alias("payload"),
-            # deterministic id (re-evaluation-safe, unlike
-            # monotonically_increasing_id in a self-join)
-            F.xxhash64("path").alias("doc_id"),
-        )
+    files = spark.read.format("binaryFile").load(args.input).select(
+        "path", F.col("content").alias("payload")
     )
     mine = getattr(multimodal, extract)
-    out = mine(files.select("doc_id", "payload"), on_error="null")
-    out = out.join(files.select("doc_id", "path"), "doc_id").drop("doc_id")
-    out.write.mode("overwrite").parquet(args.output)
+    mine(files, on_error="null").write.mode("overwrite").parquet(args.output)
 
 
 def build_parser() -> argparse.ArgumentParser:

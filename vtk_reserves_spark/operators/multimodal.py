@@ -1000,6 +1000,18 @@ def resize_media(
     return df.mapInPandas(run, RESIZE_SCHEMA)
 
 
+def _carry_inputs(df: DataFrame, schema: T.StructType):
+    """``(carry, schema)`` for a payload operator that passes every
+    input column except ``payload`` (and the fields it parses)
+    through: ``schema``'s ``doc_id`` key leads only when the input
+    has one, so ``(doc_id, payload)`` input keeps ``schema`` as is."""
+    parsed = [f for f in schema.fields if f.name != "doc_id"]
+    taken = {f.name for f in parsed} | {"payload"}
+    carry = [c for c in df.columns if c not in taken]
+    keys = [schema[c] if c == "doc_id" else df.schema[c] for c in carry]
+    return carry, T.StructType(keys + parsed)
+
+
 def attach_pdf_payload(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
@@ -1044,7 +1056,8 @@ PDF_TEXT_SCHEMA = T.StructType(
 
 
 def pdf_text(df: DataFrame, on_error: str = "raise") -> DataFrame:
-    """PDF text mining over (doc_id, payload): each payload is parsed
+    """PDF text mining over (doc_id, payload) — any other input column
+    rides through to the output too: each payload is parsed
     by the pure-python ISO 32000 reader (sources/pdf.py — both xref
     layouts, object streams, Flate/LZW/ASCII filters, ToUnicode
     CMaps) and reduced to ``(text, npages, title)``.  PDF is the
@@ -1064,7 +1077,8 @@ def pdf_text(df: DataFrame, on_error: str = "raise") -> DataFrame:
         pages = "\n\n".join(parsed["pages"])
         return [(pages, parsed["npages"], parsed["title"])]
 
-    return quarantine_map(df, parse, PDF_TEXT_SCHEMA, on_error)
+    carry, schema = _carry_inputs(df, PDF_TEXT_SCHEMA)
+    return quarantine_map(df, parse, schema, on_error, carry=carry)
 
 
 def attach_office_payload(
@@ -1115,8 +1129,9 @@ OFFICE_TEXT_SCHEMA = T.StructType(
 
 
 def office_text(df: DataFrame, on_error: str = "raise") -> DataFrame:
-    """Office-document text mining over (doc_id, payload): each
-    payload is parsed by the pure-stdlib DOCX/PPTX/ODT/EPUB reader
+    """Office-document text mining over (doc_id, payload) — any other
+    input column rides through to the output too: each payload is
+    parsed by the pure-stdlib DOCX/PPTX/ODT/EPUB reader
     (sources/office.py — kind sniffed from the zip member list, so
     extension-less crawl payloads work) and reduced to
     ``(text, nparts, title, kind)`` with parts (paragraphs / slides /
@@ -1138,7 +1153,8 @@ def office_text(df: DataFrame, on_error: str = "raise") -> DataFrame:
         text = "\n\n".join(parts)
         return [(text, len(parts), parsed["title"], parsed["kind"])]
 
-    return quarantine_map(df, parse, OFFICE_TEXT_SCHEMA, on_error)
+    carry, schema = _carry_inputs(df, OFFICE_TEXT_SCHEMA)
+    return quarantine_map(df, parse, schema, on_error, carry=carry)
 
 
 def attach_exif_payload(df: DataFrame, id_col: str = "doc_id") -> DataFrame:

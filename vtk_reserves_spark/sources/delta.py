@@ -44,6 +44,8 @@ import struct
 
 from pyspark.sql import DataFrame, SparkSession
 
+from vtk_reserves_spark.sources import cow
+
 __all__ = [
     "alter_delta_table", "delete_delta", "update_delta",
     "decoded_file_path", "delta_snapshot", "drain_delta_cdf",
@@ -825,97 +827,60 @@ def drain_delta_cdf(
     return (changes, (last + 1, head)) if return_range else changes
 
 
-def _stage_and_promote_cdc(df: DataFrame, table: str) -> list[dict]:
-    """Distributed write of CDF rows (table columns +
-    ``_change_type``) into ``_change_data/``; returns the ``cdc``
-    action descriptors.  Same stage-rename split as
-    :func:`_stage_and_promote`."""
-    import shutil
+def _stage_and_promote_cdc(
+    df: DataFrame, table: str, meta: dict
+) -> list[dict]:
+    """Distributed write of LOGICAL-named CDF rows (table columns +
+    ``_change_type``) into ``_change_data/`` under the table's
+    physical names; returns the ``cdc`` action descriptors."""
     import uuid as _uuid
     from urllib.parse import quote
 
-    stage = os.path.join(table, f".stage-{_uuid.uuid4().hex}")
-    df.write.mode("overwrite").parquet(stage)
     out: list[dict] = []
-    cdir = os.path.join(table, "_change_data")
-    os.makedirs(cdir, exist_ok=True)
-    uid = _uuid.uuid4().hex
-    try:
-        i = 0
-        for root, _dirs, files in os.walk(stage):
-            for name in sorted(files):
-                if not name.endswith(".parquet"):
-                    continue
-                rel = f"_change_data/cdc-{uid}-{i}.parquet"
-                dst = os.path.join(table, *rel.split("/"))
-                os.rename(os.path.join(root, name), dst)
-                out.append({
-                    "path": quote(rel, safe="/"),
-                    "partitionValues": {},
-                    "size": os.path.getsize(dst),
-                })
-                i += 1
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)
+    with cow.staged(_cdc_to_physical(df, meta), table) as files:
+        os.makedirs(os.path.join(table, "_change_data"), exist_ok=True)
+        uid = _uuid.uuid4().hex
+        for i, (_part, path) in enumerate(files):
+            rel = f"_change_data/cdc-{uid}-{i}.parquet"
+            dst = os.path.join(table, *rel.split("/"))
+            os.rename(path, dst)
+            out.append({
+                "path": quote(rel, safe="/"),
+                "partitionValues": {},
+                "size": os.path.getsize(dst),
+            })
     return out
 
 
-def _hive_partition_values(rel_dir: str) -> dict:
-    """``k1=v1/k2=v2`` directory components -> partitionValues dict
-    (hive escaping undone; ``__HIVE_DEFAULT_PARTITION__`` -> null,
-    which is how delta-spark records a null partition value)."""
-    from urllib.parse import unquote
+def _promote(table: str, files: list[tuple[str, str]]) -> list[dict]:
+    """Move staged part files (:func:`cow.staged`) to their final
+    partition directories; returns the ``add`` descriptors — tasks
+    write data files, the driver commits the log, exactly
+    delta-spark's split."""
+    from urllib.parse import quote
 
-    out: dict = {}
-    for comp in rel_dir.split(os.sep):
-        if not comp or "=" not in comp:
-            continue
-        k, _, v = comp.partition("=")
-        v = unquote(v)
-        out[unquote(k)] = None if v == "__HIVE_DEFAULT_PARTITION__" else v
-    return out
+    adds: list[dict] = []
+    for part, path in files:
+        name = os.path.basename(path)
+        rel = f"{part}/{name}" if part else name
+        dst = os.path.join(table, *rel.split("/"))
+        os.makedirs(os.path.dirname(dst), exist_ok=True)
+        os.rename(path, dst)
+        adds.append({
+            "path": quote(rel, safe="/"),
+            "partitionValues": cow.partition_values(part),
+            "size": os.path.getsize(dst),
+        })
+    return adds
 
 
 def _stage_and_promote(
     df: DataFrame, table: str, partition_by: list[str] | None
 ) -> list[dict]:
-    """Distributed data write: executors write parquet into a hidden
-    staging dir INSIDE the table (same filesystem, so promotion is a
-    metadata rename, never a copy), then the driver moves each part
-    file to its final partition directory and returns the ``add``
-    descriptors.  This is the exact split delta-spark uses — tasks
-    write data files, the driver commits the log."""
-    import shutil
-    import uuid as _uuid
-    from urllib.parse import quote
-
-    os.makedirs(table, exist_ok=True)
-    stage = os.path.join(table, f".stage-{_uuid.uuid4().hex}")
-    writer = df.write.mode("overwrite")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(stage)
-    adds: list[dict] = []
-    try:
-        for root, _dirs, files in os.walk(stage):
-            rel_dir = os.path.relpath(root, stage)
-            for name in sorted(files):
-                if not name.endswith(".parquet"):
-                    continue  # _SUCCESS, .crc
-                rel = name if rel_dir == "." else os.path.join(
-                    rel_dir, name
-                )
-                dst = os.path.join(table, rel)
-                os.makedirs(os.path.dirname(dst), exist_ok=True)
-                os.rename(os.path.join(root, name), dst)
-                adds.append({
-                    "path": quote(rel.replace(os.sep, "/"), safe="/"),
-                    "partitionValues": _hive_partition_values(rel_dir),
-                    "size": os.path.getsize(dst),
-                })
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)
-    return adds
+    """Distributed data write staged inside the table and promoted by
+    rename; returns the ``add`` descriptors."""
+    with cow.staged(df, table, partition_by) as files:
+        return _promote(table, files)
 
 
 def write_delta(
@@ -929,12 +894,10 @@ def write_delta(
 ) -> int:
     """DataFrame -> Delta table commit; returns the new version.
 
-    The DATA path is fully distributed (ordinary ``df.write.parquet``
-    — Catalyst/Tungsten write the part files in parallel, hive
-    partition dirs included); only the LOG append is driver-side
-    metadata, which is exactly how delta-spark itself commits.  At
-    100 TB the driver handles one small JSON line per part file and
-    never touches data bytes.
+    The DATA path is `sources/cow.py`'s distributed staged write
+    (hive partition dirs included); only the LOG append is
+    driver-side metadata — one small JSON line per part file, exactly
+    how delta-spark itself commits.
 
     ``mode="append"`` adds the files to the current snapshot (the
     schema and partition columns must match the table's);
@@ -1260,13 +1223,10 @@ def update_delta(
     spark: SparkSession, table: str, condition: str,
     assignments: dict[str, str],
 ) -> int:
-    """UPDATE ... SET as copy-on-write — delta-spark's UPDATE: one
-    distributed pass finds the files holding a matched row (file
-    list only on the driver), ONLY those files rewrite with the
-    assignment expressions applied to matched rows (every RHS sees
-    the ORIGINAL row values, per SQL UPDATE semantics) and
-    survivors carried verbatim; one commit swaps the touched files.
-    Returns the new version.
+    """UPDATE ... SET as copy-on-write — delta-spark's UPDATE, the
+    plan `sources/cow.py` describes: only the files holding a
+    matched row rewrite, one commit swaps them.  Returns the new
+    version (unchanged when nothing matches).
 
     Deletion vectors fold in (deleted rows neither match nor
     resurrect; the rewritten files drop their DVs since the
@@ -1276,70 +1236,49 @@ def update_delta(
     from pyspark.sql import functions as F
 
     snap = delta_snapshot(table)
+    meta = snap["metadata"]
     table_cols = [
-        f["name"]
-        for f in json.loads(snap["metadata"]["schemaString"])["fields"]
+        f["name"] for f in json.loads(meta["schemaString"])["fields"]
     ]
-    bad = [c for c in assignments if c not in table_cols]
-    if bad:
-        raise ValueError(f"delta: SET columns {bad} not in table")
+    cow.check_set_columns("delta", assignments, table_cols)
     data = read_delta(spark, table, with_file_path=True, _snap=snap)
-    cond = F.expr(condition)
-    touched_abs = [
-        r["_delta_file"]
-        for r in data.filter(cond).select("_delta_file")
-        .distinct().collect()
-    ]
-    if not touched_abs:
+    u = cow.update(data, "_delta_file", table_cols, condition,
+                   assignments)
+    if u is None:
         return snap["version"]
+    cdc_actions: list[dict] = []
+    if _cdf_enabled(meta):
+        pre = u.matched.select(*table_cols).withColumn(
+            "_change_type", F.lit("update_preimage")
+        )
+        post = u.matched.select(*u.assign).withColumn(
+            "_change_type", F.lit("update_postimage")
+        )
+        cdc_actions = _stage_and_promote_cdc(
+            _cast_declared_types(pre.unionByName(post), meta), table, meta
+        )
+    adds = _stage_and_promote(
+        _to_physical(_cast_declared_types(u.rows, meta), meta),
+        table, _physical_part_cols(meta) or None,
+    )
+    version = snap["version"] + 1
+    write_delta_commit(
+        table, version, adds=adds, removes=_removes(table, snap, u.touched),
+        operation="UPDATE", cdc=cdc_actions or None,
+    )
+    return version
+
+
+def _removes(table: str, snap: dict, touched: list[str]) -> list[str]:
+    """Decoded absolute ``_delta_file`` paths -> the log's relative
+    ``remove`` paths."""
     from urllib.parse import unquote
 
     base = os.path.abspath(table)
     rel_by_abs = {
-        os.path.join(base, unquote(p)): p
-        for p, _, _, _ in snap["files"]
+        os.path.join(base, unquote(p)): p for p, _, _, _ in snap["files"]
     }
-    removes = [rel_by_abs[a] for a in touched_abs]
-    rows = data.filter(F.col("_delta_file").isin(touched_abs))
-    sel = [
-        F.when(cond, F.expr(assignments[c]))
-        .otherwise(F.col(c)).alias(c)
-        if c in assignments else F.col(c)
-        for c in table_cols
-    ]
-    new_df = rows.select(*sel)
-    cdc_actions: list[dict] = []
-    if _cdf_enabled(snap["metadata"]):
-        matched = rows.filter(cond)
-        pre = matched.select(*table_cols).withColumn(
-            "_change_type", F.lit("update_preimage")
-        )
-        post = matched.select(*sel).withColumn(
-            "_change_type", F.lit("update_postimage")
-        )
-        cdc_actions = _stage_and_promote_cdc(
-            _cdc_to_physical(
-                _cast_declared_types(
-                    pre.unionByName(post), snap["metadata"]
-                ),
-                snap["metadata"],
-            ),
-            table,
-        )
-    adds = _stage_and_promote(
-        _to_physical(
-            _cast_declared_types(new_df, snap["metadata"]),
-            snap["metadata"],
-        ),
-        table,
-        _physical_part_cols(snap["metadata"]) or None,
-    )
-    version = snap["version"] + 1
-    write_delta_commit(
-        table, version, adds=adds, removes=removes,
-        operation="UPDATE", cdc=cdc_actions or None,
-    )
-    return version
+    return [rel_by_abs[a] for a in touched]
 
 
 def delete_delta(
@@ -1430,12 +1369,9 @@ def delete_delta(
             json.loads(snap["metadata"]["schemaString"])["fields"]
         ]
         cdc_actions = _stage_and_promote_cdc(
-            _cdc_to_physical(
-                matched.select(*logical_cols)
-                .withColumn("_change_type", F.lit("delete")),
-                snap["metadata"],
-            ),
-            table,
+            matched.select(*logical_cols)
+            .withColumn("_change_type", F.lit("delete")),
+            table, snap["metadata"],
         )
     by_abs = {
         os.path.join(base, unquote(p)): (p, pv, size, dv)
@@ -1517,52 +1453,21 @@ def merge_delta(
 ) -> int:
     """Copy-on-write MERGE (delta-spark's ``MERGE INTO`` subset):
     upsert ``source`` into the table keyed on the ``on`` columns;
-    returns the committed version.
+    returns the committed version.  The plan, the modes
+    (``when_matched`` "update" | "delete", ``when_not_matched``
+    "insert" | "ignore"), duplicate source keys and the
+    ``broadcast_source`` ceiling are `sources/cow.py`'s.
 
-    ``when_matched``: "update" (matched target rows are replaced by
-    the source rows) or "delete"; ``when_not_matched``: "insert" or
-    "ignore".
-
-    Scale shape — the same copy-on-write plan delta-spark executes:
-
-    1. ONE distributed pass finds the files that contain at least
-       one matched key (broadcast LEFT-SEMI join of the scan against
-       the source keys, grouped to ``_delta_file``) — the driver
-       receives only a file list, never rows;
-    2. only those files rewrite: surviving rows (anti-join on the
-       keys) union the source rows land in fresh part files via the
-       ordinary distributed write; untouched files — the vast
-       majority under a selective merge — are not read again and not
-       rewritten, their ``add`` entries survive the commit untouched;
-    3. one JSON commit removes the touched files and adds the new
-       ones, atomically.
-
-    Duplicate keys in ``source`` are written as-is (delta-spark
-    raises instead; de-duplicate upstream if that matters).
     Column-mapped (schema-evolved) tables merge fine — the rewrite
     (and, under CDF, the ``_change_data`` files) lands under
-    physical names, exactly like delta-spark.
+    physical names, exactly like delta-spark.  ``txn=(app_id,
+    app_version)`` skips a replayed batch via the log's txn actions,
+    like :func:`write_delta`."""
+    from functools import reduce
 
-    ``broadcast_source`` (default True) hints the source KEY SET
-    into a broadcast for every merge join — right for the
-    upsert-batch shape (keys comfortably under the executor-memory
-    ceiling, roughly ``spark.sql.autoBroadcastJoinThreshold``-scale,
-    ~10s of MB / low millions of keys).  Pass False for very large
-    merge sources: the joins run un-hinted and AQE picks shuffled
-    hash / sort-merge strategies instead — same result, no driver
-    OOM risk.  (Applies equally to ``merge_iceberg`` and
-    ``merge_hudi``, which take the same parameter.)"""
     from pyspark.sql import functions as F
 
-    # broadcast_source=False switches the source-key joins to
-    # plain (AQE-planned) joins - the fallback for merge sources
-    # too large to broadcast (see module docstring ceiling note)
-    _b = F.broadcast if broadcast_source else (lambda d: d)
-
-    if when_matched not in ("update", "delete"):
-        raise ValueError(f"delta: when_matched {when_matched!r}")
-    if when_not_matched not in ("insert", "ignore"):
-        raise ValueError(f"delta: when_not_matched {when_not_matched!r}")
+    cow.check_modes("delta", when_matched, when_not_matched)
     snap = delta_snapshot(table)
     if txn is not None:
         # exactly-once for at-least-once producers: the PROTOCOL.md
@@ -1571,134 +1476,57 @@ def merge_delta(
         seen = snap.get("txns", {}).get(txn[0])
         if seen is not None and int(seen) >= int(txn[1]):
             return int(snap["version"])
+    meta = snap["metadata"]
     table_cols = [
-        f["name"]
-        for f in json.loads(snap["metadata"]["schemaString"])["fields"]
+        f["name"] for f in json.loads(meta["schemaString"])["fields"]
     ]
-    missing = [k for k in on if k not in table_cols]
-    if missing:
-        raise ValueError(f"delta: merge keys {missing} not in table")
-    if when_matched == "update" or when_not_matched == "insert":
-        if sorted(source.columns) != sorted(table_cols):
-            raise ValueError(
-                f"delta: merge source columns {sorted(source.columns)} "
-                f"!= table columns {sorted(table_cols)}"
-            )
+    cow.check_merge_columns("delta", source, table_cols, on,
+                            when_matched, when_not_matched)
     data = read_delta(spark, table, with_file_path=True, _snap=snap)
-    keys = source.select(*on).distinct()
-    # pass 1: which files hold a matched key (file list only)
-    touched_abs = [
-        r["_delta_file"]
-        for r in data.join(_b(keys), on, "left_semi")
-        .select("_delta_file").distinct().collect()
-    ]
-    from urllib.parse import unquote
-
-    base = os.path.abspath(table)
-    rel_by_abs = {
-        os.path.join(base, unquote(p)): p
-        for p, _, _, _ in snap["files"]
-    }
-    removes = [rel_by_abs[a] for a in touched_abs]
-    # pass 2: rewrite only the touched files
-    touched_rows = data.filter(
-        F.col("_delta_file").isin(touched_abs)
-    ) if touched_abs else None
-    pieces = []
-    if touched_rows is not None:
-        pieces.append(
-            touched_rows.join(_b(keys), on, "left_anti")
-            .drop("_delta_file").select(*table_cols)
-        )
-    if when_matched == "update" and when_not_matched == "insert":
-        pieces.append(source.select(*table_cols))  # upsert: all rows
-    elif when_not_matched == "insert":  # delete + insert
-        matched_keys = (
-            touched_rows.select(*on).distinct()
-            if touched_rows is not None
-            else None
-        )
-        ins = source
-        if matched_keys is not None:
-            ins = ins.join(_b(matched_keys), on, "left_anti")
-        pieces.append(ins.select(*table_cols))
-    elif when_matched == "update":  # update + ignore
-        if touched_rows is not None:
-            matched_keys = touched_rows.select(*on).distinct()
-            pieces.append(
-                source.join(_b(matched_keys), on, "left_semi")
-                .select(*table_cols)
-            )
-    if not pieces and not removes:
+    m = cow.merge(source, data, "_delta_file", table_cols, on,
+                  when_matched, when_not_matched, broadcast_source)
+    if m is None:
         return snap["version"]  # no-op merge
+    with m.staged(
+        _to_physical(_cast_declared_types(m.rows, meta), meta), table,
+        _physical_part_cols(meta) or None,
+    ) as files:
+        if files is None:
+            return snap["version"]  # empty source: nothing to commit
+        adds = _promote(table, files)
     # Change Data Feed: when delta.enableChangeDataFeed is set, MERGE
     # writes explicit _change_data/ parquets describing its row-level
     # changes (update_preimage/update_postimage/delete/insert) — the
     # rewrite sets are already at hand, so CDF costs one extra
     # distributed write of the CHANGED rows only
     cdc_actions: list[dict] = []
-    if _cdf_enabled(snap["metadata"]):
-        from functools import reduce
-
+    if _cdf_enabled(meta):
+        tgt, post, ins = m.changes()
         cdf_parts: list[DataFrame] = []
-        if touched_rows is not None:
-            matched_tgt = (
-                touched_rows.join(_b(keys), on, "left_semi")
-                .select(*table_cols)
-            )
-            tgt_type = (
-                "update_preimage" if when_matched == "update"
-                else "delete"
-            )
-            cdf_parts.append(
-                matched_tgt.withColumn("_change_type", F.lit(tgt_type))
-            )
-            tgt_keys = matched_tgt.select(*on).distinct()
+        if tgt is not None:
+            cdf_parts.append(tgt.withColumn(
+                "_change_type",
+                F.lit("update_preimage" if when_matched == "update"
+                      else "delete"),
+            ))
             if when_matched == "update":
-                cdf_parts.append(
-                    source.join(_b(tgt_keys), on, "left_semi")
-                    .select(*table_cols)
-                    .withColumn(
-                        "_change_type", F.lit("update_postimage")
-                    )
-                )
-            if when_not_matched == "insert":
-                cdf_parts.append(
-                    source.join(_b(tgt_keys), on, "left_anti")
-                    .select(*table_cols)
-                    .withColumn("_change_type", F.lit("insert"))
-                )
-        elif when_not_matched == "insert":
+                cdf_parts.append(post.withColumn(
+                    "_change_type", F.lit("update_postimage")
+                ))
+        if when_not_matched == "insert":
             cdf_parts.append(
-                source.select(*table_cols)
-                .withColumn("_change_type", F.lit("insert"))
+                ins.withColumn("_change_type", F.lit("insert"))
             )
         if cdf_parts:
             cdc_actions = _stage_and_promote_cdc(
-                _cdc_to_physical(
-                    _cast_declared_types(
-                        reduce(DataFrame.unionByName, cdf_parts),
-                        snap["metadata"],
-                    ),
-                    snap["metadata"],
+                _cast_declared_types(
+                    reduce(DataFrame.unionByName, cdf_parts), meta
                 ),
-                table,
+                table, meta,
             )
     version = snap["version"] + 1
-    adds: list[dict] = []
-    if pieces:
-        new_df = pieces[0]
-        for p in pieces[1:]:
-            new_df = new_df.unionByName(p)
-        adds = _stage_and_promote(
-            _to_physical(
-                _cast_declared_types(new_df, snap["metadata"]),
-                snap["metadata"],
-            ),
-            table,
-            _physical_part_cols(snap["metadata"]) or None,
-        )
-    write_delta_commit(table, version, adds=adds, removes=removes,
+    write_delta_commit(table, version, adds=adds,
+                       removes=_removes(table, snap, m.touched),
                        operation="MERGE", cdc=cdc_actions or None,
                        txn=txn)
     return version

@@ -50,6 +50,9 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from vtk_reserves_spark.sources import cow
+from vtk_reserves_spark.sources.delta import decoded_file_path
+
 __all__ = [
     "alter_hudi_table", "clean_hudi", "cluster_hudi",
     "compact_hudi_mor",
@@ -424,8 +427,6 @@ def _read_hudi_mor(
     compaction preserve."""
     from pyspark.sql import functions as F
 
-    from vtk_reserves_spark.sources.delta import decoded_file_path
-
     key_fields = _record_key_fields(table)
     if not key_fields:
         raise ValueError(
@@ -637,8 +638,8 @@ def write_hudi(
 ) -> str:
     """DataFrame -> one Hudi CoW commit; returns the instant.
 
-    Data is one distributed staged parquet write promoted by rename
-    (each part file = a fresh file group
+    Data is `sources/cow.py`'s staged write (each part file = a
+    fresh file group
     ``<fileId>_<writeToken>_<instant>.parquet`` under its hive
     partition dir); the driver writes hoodie.properties (first
     commit) + the commit JSON.  ``mode="overwrite"`` emits a
@@ -659,11 +660,6 @@ def write_hudi(
     surface real Hudi's streaming writers stamp their checkpoints
     into), and a write whose version the timeline already records
     at equal-or-newer is SKIPPED — no data staged, no commit."""
-    import shutil
-    import uuid as _uuid
-
-    import pyarrow.parquet as pq
-
     if mode not in ("append", "overwrite"):
         raise ValueError(f"hudi: write mode {mode!r} (append/overwrite)")
     if table_type not in ("COPY_ON_WRITE", "MERGE_ON_READ"):
@@ -738,6 +734,42 @@ def write_hudi(
     return instant
 
 
+def _promote_base_file(
+    table: str, part: str, fid: str, instant: str, path: str,
+) -> dict:
+    """Rename a staged parquet to the base file
+    ``<part>/<fid>_0-0-0_<instant>.parquet``; returns its write
+    stat."""
+    import pyarrow.parquet as pq
+
+    fname = f"{fid}_0-0-0_{instant}.parquet"
+    rel = f"{part}/{fname}" if part else fname
+    dst = os.path.join(table, *rel.split("/"))
+    os.makedirs(os.path.dirname(dst), exist_ok=True)
+    os.rename(path, dst)
+    return {
+        "fileId": fid,
+        "path": rel,
+        "numWrites": pq.ParquetFile(dst).metadata.num_rows,
+        "fileSizeInBytes": os.path.getsize(dst),
+    }
+
+
+def _promote_new_groups(
+    table: str, instant: str, files: list[tuple[str, str]],
+) -> dict[str, list[dict]]:
+    """Each staged part file (:func:`cow.staged`) becomes a fresh
+    file group; returns the write stats per partition."""
+    import uuid as _uuid
+
+    stats: dict[str, list[dict]] = {}
+    for part, path in files:
+        stats.setdefault(part, []).append(_promote_base_file(
+            table, part, str(_uuid.uuid4()), instant, path
+        ))
+    return stats
+
+
 def _stage_and_commit_hudi(
     df: DataFrame, table: str, instant: str, part_cols: list[str],
     replaced: dict[str, list[str]] | None, operation: str,
@@ -752,10 +784,6 @@ def _stage_and_commit_hudi(
     ``deltacommit``).  ``extra_stats`` merges additional write-stat
     entries (log files an MOR upsert wrote task-side) into the same
     commit."""
-    import shutil
-    import uuid as _uuid
-
-    import pyarrow.parquet as pq
     from pyspark.sql import functions as F
 
     if "_hoodie_commit_time" not in df.columns:
@@ -763,35 +791,8 @@ def _stage_and_commit_hudi(
         # makes the incremental query exact (rewritten survivors
         # keep their ORIGINAL stamp, see merge_hudi)
         df = df.withColumn("_hoodie_commit_time", F.lit(instant))
-    hdir = os.path.join(table, _HOODIE)
-    stage = os.path.join(table, f".stage-{_uuid.uuid4().hex}")
-    writer = df.write.mode("overwrite")
-    if part_cols:
-        writer = writer.partitionBy(*part_cols)
-    writer.parquet(stage)
-    stats: dict[str, list[dict]] = {}
-    try:
-        for root, _dirs, names in os.walk(stage):
-            rel_dir = os.path.relpath(root, stage)
-            part = "" if rel_dir == "." else rel_dir.replace(os.sep, "/")
-            for name in sorted(names):
-                if not name.endswith(".parquet"):
-                    continue
-                fid = str(_uuid.uuid4())
-                fname = f"{fid}_0-0-0_{instant}.parquet"
-                rel = fname if not part else f"{part}/{fname}"
-                dst = os.path.join(table, *rel.split("/"))
-                os.makedirs(os.path.dirname(dst), exist_ok=True)
-                os.rename(os.path.join(root, name), dst)
-                stats.setdefault(part, []).append({
-                    "fileId": fid,
-                    "path": rel,
-                    "numWrites":
-                        pq.ParquetFile(dst).metadata.num_rows,
-                    "fileSizeInBytes": os.path.getsize(dst),
-                })
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)
+    with cow.staged(df, table, part_cols) as files:
+        stats = _promote_new_groups(table, instant, files)
     for part, entries in (extra_stats or {}).items():
         stats.setdefault(part, []).extend(entries)
     _write_hudi_commit_json(
@@ -862,16 +863,16 @@ def merge_hudi(
     broadcast_source: bool = True,
     txn: tuple[str, int] | None = None,
 ) -> str:
-    """Record-key UPSERT/DELETE — Hudi's defining verb, expressed as
-    the same copy-on-write plan as ``merge_delta``/``merge_iceberg``:
-    one broadcast LEFT-SEMI pass finds the FILE GROUPS holding a
-    matched key (via ``_metadata.file_path``; the driver sees a file
-    list, never rows), only those groups' survivors rewrite together
-    with the source rows, and ONE ``.replacecommit`` supersedes the
-    touched groups (``partitionToReplaceFileIds``) while adding the
-    fresh ones — untouched groups carry forward unread, and the
-    pre-merge snapshot stays time-travelable.  Returns the commit
-    instant.
+    """Record-key UPSERT/DELETE — Hudi's defining verb, as the
+    copy-on-write plan `sources/cow.py` describes (modes, duplicate
+    source keys and the ``broadcast_source`` ceiling included): the
+    touched-file pass finds the FILE GROUPS holding a matched key
+    (via ``_metadata.file_path``), only those groups' survivors
+    rewrite together with the source rows, and ONE
+    ``.replacecommit`` supersedes the touched groups
+    (``partitionToReplaceFileIds``) while adding the fresh ones —
+    the pre-merge snapshot stays time-travelable.  Returns the
+    commit instant.
 
     ``txn=(app_id, version)``: exactly-once replayed-batch skip via
     the commit extraMetadata ledger, like :func:`write_hudi`."""
@@ -881,18 +882,7 @@ def merge_hudi(
         seen = _hudi_txn_seen(table, txn[0])
         if seen is not None and seen >= int(txn[1]):
             return hudi_snapshot(table)["instant"]  # replayed batch
-
-    # broadcast_source=False switches the source-key joins to
-    # plain (AQE-planned) joins - the fallback for merge sources
-    # too large to broadcast (see module docstring ceiling note)
-    _b = F.broadcast if broadcast_source else (lambda d: d)
-
-    from vtk_reserves_spark.sources.delta import decoded_file_path
-
-    if when_matched not in ("update", "delete"):
-        raise ValueError(f"hudi: when_matched {when_matched!r}")
-    if when_not_matched not in ("insert", "ignore"):
-        raise ValueError(f"hudi: when_not_matched {when_not_matched!r}")
+    cow.check_modes("hudi", when_matched, when_not_matched)
     snap = hudi_snapshot(table)
     if snap["type"] == "MERGE_ON_READ":
         # this copy-on-write plan reads BASE FILES only; on an MOR
@@ -907,17 +897,12 @@ def merge_hudi(
         )
     if partition_by is None:
         # the table records its partition fields (hoodie convention)
-        props = os.path.join(table, _HOODIE, "hoodie.properties")
-        fields = ""
-        with open(props) as fh:
-            for line in fh:
-                if line.startswith("hoodie.table.partition.fields="):
-                    fields = line.partition("=")[2].strip()
-        partition_by = [f for f in fields.split(",") if f]
-    part_cols = list(partition_by)
-    base = os.path.abspath(table)
+        partition_by = [
+            f for f in _table_props(table)
+            .get("hoodie.table.partition.fields", "").split(",") if f
+        ]
     declared = _declared_schema(snap)
-    reader = spark.read.option("basePath", base)
+    reader = spark.read.option("basePath", os.path.abspath(table))
     if declared is not None:
         # explicit schema-on-read (see read_hudi): files predating
         # an alter_hudi_table ADD null-fill the new column per file
@@ -931,22 +916,8 @@ def merge_hudi(
         c for c in data.columns
         if c != "_hudi_file" and not c.startswith("_hoodie_")
     ]
-    missing = [k for k in on if k not in table_cols]
-    if missing:
-        raise ValueError(f"hudi: merge keys {missing} not in table")
-    if when_matched == "update" or when_not_matched == "insert":
-        if sorted(source.columns) != sorted(table_cols):
-            raise ValueError(
-                f"hudi: merge source columns "
-                f"{sorted(source.columns)} != table columns "
-                f"{sorted(table_cols)}"
-            )
-    keys = source.select(*on).distinct()
-    touched = [
-        r["_hudi_file"]
-        for r in data.join(_b(keys), on, "left_semi")
-        .select("_hudi_file").distinct().collect()
-    ]
+    cow.check_merge_columns("hudi", source, table_cols, on,
+                            when_matched, when_not_matched)
     instant = _next_instant(table)
     # per-row commit stamps: rewritten SURVIVORS keep their original
     # _hoodie_commit_time (files predating the stamp fall back to the
@@ -956,54 +927,27 @@ def merge_hudi(
         surv_ct = F.col("_hoodie_commit_time")
     else:
         surv_ct = F.lit(instant)
-    surv_cols = list(table_cols) + [
-        surv_ct.alias("_hoodie_commit_time")
-    ]
-    src_cols = list(table_cols) + [
-        F.lit(instant).alias("_hoodie_commit_time")
-    ]
-    pieces: list[DataFrame] = []
-    touched_rows = (
-        data.filter(F.col("_hudi_file").isin(touched))
-        if touched else None
+    m = cow.merge(
+        source, data, "_hudi_file", table_cols, on, when_matched,
+        when_not_matched, broadcast_source,
+        survivor_cols=table_cols + [surv_ct.alias("_hoodie_commit_time")],
+        source_cols=table_cols + [
+            F.lit(instant).alias("_hoodie_commit_time")
+        ],
     )
-    if touched_rows is not None:
-        pieces.append(
-            touched_rows.join(_b(keys), on, "left_anti")
-            .select(*surv_cols)
-        )
-    if when_matched == "update" and when_not_matched == "insert":
-        pieces.append(source.select(*src_cols))
-    elif when_not_matched == "insert":
-        ins = source
-        if touched_rows is not None:
-            matched_keys = touched_rows.select(*on).distinct()
-            ins = ins.join(_b(matched_keys), on, "left_anti")
-        pieces.append(ins.select(*src_cols))
-    elif when_matched == "update":
-        if touched_rows is not None:
-            matched_keys = touched_rows.select(*on).distinct()
-            pieces.append(
-                source.join(_b(matched_keys), on, "left_semi")
-                .select(*src_cols)
-            )
-    if not pieces and not touched:
+    if m is None:
         return snap["instant"]  # no-op merge
+    with m.staged(m.rows, table, list(partition_by)) as files:
+        if files is None:
+            return snap["instant"]  # empty source: nothing to commit
+        stats = _promote_new_groups(table, instant, files)
     replaced: dict[str, list[str]] = {}
-    for p in touched:
+    for p in m.touched:
         part, fid = snap["groups"][p]
         replaced.setdefault(part, []).append(fid)
-    new_df = pieces[0] if pieces else None
-    for p in pieces[1:]:
-        new_df = new_df.unionByName(p)
-    if new_df is None:
-        _write_hudi_commit_json(
-            table, instant, {}, replaced, "DELETE", txn=txn,
-        )
-        return instant
-    _stage_and_commit_hudi(
-        new_df, table, instant, part_cols, replaced=replaced,
-        operation="UPSERT", txn=txn,
+    _write_hudi_commit_json(
+        table, instant, stats, replaced, "UPSERT",
+        schema_json=m.rows.schema.json(), txn=txn,
     )
     return instant
 
@@ -1040,8 +984,6 @@ def _route_hudi_keys(
     from functools import reduce
 
     from pyspark.sql import functions as F
-
-    from vtk_reserves_spark.sources.delta import decoded_file_path
 
     base = os.path.abspath(table)
     reader = spark.read.option("basePath", base)
@@ -1286,11 +1228,10 @@ def update_hudi(
     """UPDATE ... SET over either Hudi table type — the Hudi twin
     of ``delta.update_delta`` / ``iceberg.update_iceberg``: one
     live-view scan evaluates the predicate, matched rows compute
-    their assignment expressions (every RHS sees the ORIGINAL row
-    values, per SQL UPDATE semantics), and the updated rows apply
-    as a record-key write.  COPY_ON_WRITE routes through
-    :func:`merge_hudi` (only touched file groups rewrite, one
-    replacecommit); MERGE_ON_READ routes through
+    their assignment expressions from the ORIGINAL row values, and
+    the updated rows apply as a record-key write.  COPY_ON_WRITE
+    routes through :func:`merge_hudi` (update/ignore); MERGE_ON_READ
+    routes through
     :func:`upsert_hudi_mor` (one Avro log block per touched group,
     ZERO base-file rewrites).  Returns the commit instant.
 
@@ -1310,9 +1251,7 @@ def update_hudi(
         )
     live = read_hudi(spark, table)
     data_cols = list(live.columns)
-    unknown = [c for c in assignments if c not in data_cols]
-    if unknown:
-        raise ValueError(f"hudi: SET columns {unknown} not in table")
+    cow.check_set_columns("hudi", assignments, data_cols)
     sel = [
         F.expr(assignments[c]).alias(c) if c in assignments
         else F.col(c)
@@ -1505,12 +1444,6 @@ def compact_hudi_mor(spark: SparkSession, table: str) -> str:
     re-write in ONE distributed staged job (one output file per
     group — Hudi's own compaction granularity); the driver promotes
     renames and writes the commit JSON."""
-    import shutil
-    import uuid as _uuid
-
-    import pyarrow.parquet as pq
-    from pyspark.sql import functions as F  # noqa: F401
-
     snap = hudi_snapshot(table)
     if snap["type"] != "MERGE_ON_READ":
         raise ValueError("hudi: compact_hudi_mor needs an MOR table")
@@ -1525,49 +1458,28 @@ def compact_hudi_mor(spark: SparkSession, table: str) -> str:
     # re-times them (what keeps the incremental query exact)
     merged = _read_hudi_mor(spark, table, sub, with_fid=True,
                             keep_commit_time=True)
-    cols = [c for c in merged.columns if c != "_hudi_fid"]
     instant = _next_instant(table)
-    base_abs = os.path.abspath(table)
     part_by_fid = {fid: part for (part, fid) in dirty}
-    stage = os.path.join(table, f".stage-{_uuid.uuid4().hex}")
-    (
-        merged.repartition("_hudi_fid")
-        .write.mode("overwrite").partitionBy("_hudi_fid")
-        .parquet(stage)
-    )
     stats: dict[str, list[dict]] = {}
-    try:
-        for entry in sorted(os.listdir(stage)):
-            if not entry.startswith("_hudi_fid="):
-                continue
-            fid = entry.split("=", 1)[1]
-            part = part_by_fid[fid]
-            names = sorted(
-                n for n in os.listdir(os.path.join(stage, entry))
-                if n.endswith(".parquet")
-            )
+    with cow.staged(
+        merged.repartition("_hudi_fid"), table, ["_hudi_fid"]
+    ) as files:
+        by_fid: dict[str, list[str]] = {}
+        for part, path in files:
+            by_fid.setdefault(part.partition("=")[2], []).append(path)
+        for fid, paths in by_fid.items():
             # repartition("_hudi_fid") hash-routes each group to one
             # task -> one file per group dir; two files for one fid
             # would make the timeline fold drop rows
-            if len(names) != 1:
+            if len(paths) != 1:
                 raise RuntimeError(
-                    f"hudi: compaction wrote {len(names)} files for "
+                    f"hudi: compaction wrote {len(paths)} files for "
                     f"file group {fid}"
                 )
-            for i, name in enumerate(names):
-                fname = f"{fid}_{i}-0-0_{instant}.parquet"
-                rel = f"{part}/{fname}" if part else fname
-                dst = os.path.join(base_abs, *rel.split("/"))
-                os.makedirs(os.path.dirname(dst), exist_ok=True)
-                os.rename(os.path.join(stage, entry, name), dst)
-                stats.setdefault(part, []).append({
-                    "fileId": fid, "path": rel,
-                    "numWrites":
-                        pq.ParquetFile(dst).metadata.num_rows,
-                    "fileSizeInBytes": os.path.getsize(dst),
-                })
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)
+            part = part_by_fid[fid]
+            stats.setdefault(part, []).append(
+                _promote_base_file(table, part, fid, instant, paths[0])
+            )
     _write_hudi_commit_json(
         table, instant, stats, None, "COMPACT", action="commit"
     )
@@ -1600,8 +1512,6 @@ def cluster_hudi(
     writer's required ordering is already satisfied (no second
     sort), staged write promoted by rename; the driver writes one
     replacecommit JSON."""
-    from pyspark.sql import functions as F  # noqa: F401
-
     from vtk_reserves_spark.sources.writers import zorder_key
 
     snap = hudi_snapshot(table)
@@ -1690,7 +1600,6 @@ def read_hudi_incremental(
         df = _read_hudi_mor(spark, table, sub,
                             keep_commit_time=True)
         return df.filter(F.col("_hoodie_commit_time") > begin)
-    from vtk_reserves_spark.sources.delta import decoded_file_path
 
     cand = [
         (sl["base"][1], sl["base"][0])

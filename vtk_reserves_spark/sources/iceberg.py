@@ -47,6 +47,9 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from vtk_reserves_spark.sources import cow
+from vtk_reserves_spark.sources.delta import decoded_file_path
+
 __all__ = [
     "compact_iceberg_deletes", "create_iceberg_branch",
     "create_iceberg_tag", "drop_iceberg_ref",
@@ -479,11 +482,7 @@ def _scan_snapshot(spark: SparkSession, table: str, snap: dict,
     them for ``partitionBy`` write-back; readers never see them).
     ``with_path=True`` appends ``_ice_file`` (each row's decoded
     data-file path — the MERGE routing handle)."""
-    from functools import reduce
-
     from pyspark.sql import functions as F
-
-    from vtk_reserves_spark.sources.delta import decoded_file_path
 
     base = os.path.abspath(table)
     reader = spark.read.option("basePath", base)
@@ -675,7 +674,7 @@ _ICE_TYPES = {
 # iceberg spec type name -> Spark simpleString (inverse of the
 # writable subset above, for empty-relation schemas)
 _ICE_TO_SPARK = {
-    "long": "long", "int": "int", "integer": "int",
+    "long": "long", "int": "int",
     "double": "double", "float": "float", "string": "string",
     "boolean": "boolean", "date": "date", "binary": "binary",
     "timestamptz": "timestamp", "timestamp": "timestamp_ntz",
@@ -995,16 +994,12 @@ def write_iceberg(
 ) -> int:
     """DataFrame -> Iceberg snapshot; returns the new snapshot id.
 
-    Same split as ``delta.write_delta`` (and as iceberg-spark
-    itself): the DATA write is one distributed Catalyst parquet job
-    into a staging dir inside the table, promoted into ``data/`` by
-    filesystem rename; the driver then writes the manifest Avro,
-    manifest list, and next ``vN.metadata.json`` — pure metadata.
-    Per-file ``record_count`` comes from the parquet FOOTERS
-    (metadata pages only, never data; at scale these stats would ride
-    back from the write tasks like iceberg-spark's commit messages,
-    but a footer read per part file is the same O(files) driver
-    cost).  ``mode="append"`` requires the existing schema;
+    The DATA write is `sources/cow.py`'s staged write, promoted into
+    ``data/``; the driver then writes the manifest Avro, manifest
+    list, and next ``vN.metadata.json`` — pure metadata, with each
+    file's ``record_count`` read from its parquet footer (an O(files)
+    driver cost, like iceberg-spark's commit messages).
+    ``mode="append"`` requires the existing schema;
     ``mode="overwrite"`` tombstones every current data file and may
     change the schema (the metadata's schema is replaced).
 
@@ -1030,12 +1025,6 @@ def write_iceberg(
     provenance (where iceberg-spark's streaming sink records its
     query/epoch ids).  A replayed batch whose version is <= the
     ledger's is skipped — no data staged, no snapshot committed."""
-    import shutil
-    import uuid as _uuid
-
-    import pyarrow.parquet as pq
-    from pyspark.sql import functions as F
-
     if mode not in ("append", "overwrite"):
         raise ValueError(
             f"iceberg: write mode {mode!r} (append/overwrite)"
@@ -1082,12 +1071,9 @@ def write_iceberg(
             # the new metadata so manifests and spec stay consistent
             # (otherwise a later append would see spec [])
             new_spec = spec
-    if txn is not None:
-        seen = (meta.get("properties") or {}).get(f"txn.{txn[0]}")
-        if seen is not None and int(seen) >= int(txn[1]):
-            # replayed batch: exactly-once skip
-            snaps = meta.get("snapshots") or []
-            return int(snaps[-1]["snapshot-id"]) if snaps else 0
+    head = _txn_replayed(meta, txn)
+    if head is not None:
+        return head  # replayed batch: exactly-once skip
     deleted = None
     if mode == "overwrite" and meta.get("snapshots"):
         # a branch overwrite tombstones the BRANCH head's files
@@ -1099,69 +1085,15 @@ def write_iceberg(
         [int(s["snapshot-id"]) for s in meta.get("snapshots") or []],
         default=0,
     )
-    from urllib.parse import quote
-
-    from vtk_reserves_spark.sources.delta import _hive_partition_values
-
     if new_schema is not None and new_spec is None:
         new_spec = spec  # field ids may shift with the schema
-    stage = os.path.join(table, f".stage-{_uuid.uuid4().hex}")
-    dtypes = dict(df.dtypes)
-    out_df = df
-    part_fields = []
-    for tr, p, src, fname in terms:
-        part_fields.append(fname)
-        if tr != "identity":
-            out_df = out_df.withColumn(
-                fname, _transform_column(F, tr, p, src, dtypes[src])
-            )
-    writer = out_df.write.mode("overwrite")
-    if part_fields:
-        writer = writer.partitionBy(*part_fields)
-    writer.parquet(stage)
-    data_files = []
-    try:
-        os.makedirs(os.path.join(table, "data"), exist_ok=True)
-        for root, _dirs, names in os.walk(stage):
-            rel_dir = os.path.relpath(root, stage)
-            for name in sorted(names):
-                if not name.endswith(".parquet"):
-                    continue
-                rel = "data/" + (
-                    name if rel_dir == "."
-                    else f"{rel_dir.replace(os.sep, '/')}/{name}"
-                )
-                dst = os.path.join(table, *rel.split("/"))
-                os.makedirs(os.path.dirname(dst), exist_ok=True)
-                os.rename(os.path.join(root, name), dst)
-                entry = {
-                    "file_path": quote(rel, safe="/="),
-                    "record_count":
-                        pq.ParquetFile(dst).metadata.num_rows,
-                    "size": os.path.getsize(dst),
-                }
-                if part_fields:
-                    # null partition values record as "" (manifest
-                    # maps are string-valued in this subset);
-                    # read_iceberg's partition_filter normalizes
-                    # None -> "" to match
-                    entry["partition"] = {
-                        k: ("" if v is None else v)
-                        for k, v in _hive_partition_values(
-                            rel_dir
-                        ).items()
-                    }
-                data_files.append(entry)
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)
-    summary_extra = None
-    props_update = None
-    if txn is not None:
-        summary_extra = {
-            "streaming-app-id": str(txn[0]),
-            "streaming-batch-id": str(int(txn[1])),
-        }
-        props_update = {f"txn.{txn[0]}": str(int(txn[1]))}
+    data_files = _stage_data_files(
+        _with_transform_values(
+            df, {"schema": {"fields": fields}, "partition_spec": spec}
+        ),
+        table, [e["name"] for e in spec],
+    )
+    summary_extra, props_update = _txn_stamp(txn)
     append_iceberg_snapshot(
         table, snapshot_id, data_files, deleted_files=deleted,
         new_schema_fields=new_schema, new_partition_spec=new_spec,
@@ -1324,32 +1256,89 @@ def remove_iceberg_orphans(table: str, dry_run: bool = False) -> list[str]:
     return sorted(doomed)
 
 
-def _stage_rewrite(
-    spark: SparkSession, table: str, snap: dict, new_df: DataFrame,
-    part_cols: list[str],
+def _txn_replayed(meta: dict, txn: tuple[str, int] | None) -> int | None:
+    """The head snapshot id when the table-properties ledger already
+    records ``txn`` at an equal-or-newer version (a replayed batch);
+    None otherwise."""
+    if txn is None:
+        return None
+    seen = (meta.get("properties") or {}).get(f"txn.{txn[0]}")
+    if seen is None or int(seen) < int(txn[1]):
+        return None
+    snaps = meta.get("snapshots") or []
+    return int(snaps[-1]["snapshot-id"]) if snaps else 0
+
+
+def _txn_stamp(txn: tuple[str, int] | None) -> tuple[dict, dict | None]:
+    """``(summary, properties update)`` a commit under ``txn`` records:
+    the producing app/batch in the snapshot summary (provenance) and
+    the ledger entry in the table properties."""
+    if txn is None:
+        return {}, None
+    return (
+        {"streaming-app-id": str(txn[0]),
+         "streaming-batch-id": str(int(txn[1]))},
+        {f"txn.{txn[0]}": str(int(txn[1]))},
+    )
+
+
+def _promote_data_files(
+    table: str, files: list[tuple[str, str]], partitioned: bool,
 ) -> list[dict]:
-    """Shared write-back tail of the copy-on-write verbs
-    (:func:`merge_iceberg`, :func:`update_iceberg`): recompute
-    hidden-partitioning transform values (deterministic, so the
-    rewrite reproduces each row's transform directory exactly),
-    stage one distributed parquet write inside the table, promote by
-    rename, and return the manifest ``data_files`` entries."""
-    import shutil
-    import uuid as _uuid
+    """Move staged part files (:func:`cow.staged`) under ``data/``;
+    returns the manifest ``data_files`` entries.  ``record_count``
+    comes from the parquet FOOTERS (metadata pages only, never data);
+    null partition values record as "" (manifest maps are
+    string-valued in this subset; read_iceberg's partition_filter
+    normalizes None -> "" to match)."""
     from urllib.parse import quote
 
     import pyarrow.parquet as pq
+
+    os.makedirs(os.path.join(table, "data"), exist_ok=True)
+    data_files = []
+    for part, path in files:
+        rel = f"data/{part}/" if part else "data/"
+        rel += os.path.basename(path)
+        dst = os.path.join(table, *rel.split("/"))
+        os.makedirs(os.path.dirname(dst), exist_ok=True)
+        os.rename(path, dst)
+        entry = {
+            "file_path": quote(rel, safe="/="),
+            "record_count": pq.ParquetFile(dst).metadata.num_rows,
+            "size": os.path.getsize(dst),
+        }
+        if partitioned:
+            entry["partition"] = {
+                k: ("" if v is None else v)
+                for k, v in cow.partition_values(part).items()
+            }
+        data_files.append(entry)
+    return data_files
+
+
+def _stage_data_files(
+    df: DataFrame, table: str, part_cols: list[str],
+) -> list[dict]:
+    """One distributed parquet write staged inside the table and
+    promoted into ``data/`` by rename; returns the manifest
+    ``data_files`` entries."""
+    with cow.staged(df, table, part_cols) as files:
+        return _promote_data_files(table, files, bool(part_cols))
+
+
+def _with_transform_values(df: DataFrame, snap: dict) -> DataFrame:
+    """Recompute ``snap``'s hidden-partitioning transform values as
+    columns for a rewrite's ``partitionBy`` — deterministic, so each
+    row lands back in its own transform directory."""
     from pyspark.sql import functions as F
 
-    from vtk_reserves_spark.sources.delta import _hive_partition_values
-
-    spec = snap.get("partition_spec") or []
     name_by_id = {
         int(f["id"]): f["name"]
         for f in (snap["schema"] or {}).get("fields", [])
     }
-    dtypes = dict(new_df.dtypes)
-    for e in spec:
+    dtypes = dict(df.dtypes)
+    for e in snap.get("partition_spec") or []:
         tr_spec = e.get("transform") or "identity"
         if tr_spec == "identity":
             continue
@@ -1360,108 +1349,59 @@ def _stage_rewrite(
                 f"iceberg: transform source column for partition "
                 f"field {e['name']!r} not in table schema"
             )
-        new_df = new_df.withColumn(
+        df = df.withColumn(
             e["name"], _transform_column(F, tr, param, src, dtypes[src])
         )
-    stage = os.path.join(table, f".stage-{_uuid.uuid4().hex}")
-    writer = new_df.write.mode("overwrite")
-    if part_cols:
-        writer = writer.partitionBy(*part_cols)
-    writer.parquet(stage)
-    data_files = []
-    try:
-        os.makedirs(os.path.join(table, "data"), exist_ok=True)
-        for root, _dirs, names in os.walk(stage):
-            rel_dir = os.path.relpath(root, stage)
-            for name in sorted(names):
-                if not name.endswith(".parquet"):
-                    continue
-                rel = "data/" + (
-                    name if rel_dir == "."
-                    else f"{rel_dir.replace(os.sep, '/')}/{name}"
-                )
-                dst = os.path.join(table, *rel.split("/"))
-                os.makedirs(os.path.dirname(dst), exist_ok=True)
-                os.rename(os.path.join(root, name), dst)
-                entry = {
-                    "file_path": quote(rel, safe="/="),
-                    "record_count":
-                        pq.ParquetFile(dst).metadata.num_rows,
-                    "size": os.path.getsize(dst),
-                }
-                if part_cols:
-                    entry["partition"] = {
-                        k: ("" if v is None else v)
-                        for k, v in _hive_partition_values(
-                            rel_dir
-                        ).items()
-                    }
-                data_files.append(entry)
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)
-    return data_files
+    return df
+
+
+def _path_scan(spark: SparkSession, table: str, snap: dict) -> DataFrame:
+    """The copy-on-write verbs' scan: delete-applied, with the
+    ``_ice_file`` routing column (per-epoch on evolved tables)."""
+    if _is_evolved(snap):
+        return _epoch_scan(
+            spark, table, snap, _load_table_metadata(table),
+            with_path=True, apply_deletes=True,
+        )
+    return _scan_snapshot(spark, table, snap, with_path=True)
 
 
 def update_iceberg(
     spark: SparkSession, table: str, condition: str,
     assignments: dict[str, str],
 ) -> int:
-    """UPDATE ... SET as copy-on-write — iceberg-spark's UPDATE:
-    ONE delete-applied scan finds the files holding a matched row
-    (the driver receives a file list, never rows); only those files
-    rewrite, with each matched row's assignment expressions applied
-    (all RHS expressions see the ORIGINAL row values, per SQL
-    UPDATE semantics) and survivors carried verbatim; one snapshot
-    commit swaps the touched files.  Returns the new snapshot id.
+    """UPDATE ... SET as copy-on-write — iceberg-spark's UPDATE, the
+    plan `sources/cow.py` describes: ONE delete-applied scan finds
+    the files holding a matched row, only those rewrite, one snapshot
+    commit swaps them.  Returns the new snapshot id (unchanged when
+    nothing matches).
 
     Works with live v2/v3 row-level deletes (deleted rows neither
     match nor resurrect — same delete-applied plan as MERGE) and on
     schema-evolved tables (per-epoch field-id scan); transform
     partition values recompute on write-back."""
-    from pyspark.sql import functions as F
-
     snap = iceberg_snapshot(table)
     table_cols = [
         f["name"] for f in (snap["schema"] or {}).get("fields", [])
     ]
-    bad = [c for c in assignments if c not in table_cols]
-    if bad:
-        raise ValueError(f"iceberg: SET columns {bad} not in table")
+    cow.check_set_columns("iceberg", assignments, table_cols)
     if not snap["files"]:
         return int(snap["snapshot_id"] or 0)
-    if _is_evolved(snap):
-        data = _epoch_scan(
-            spark, table, snap, _load_table_metadata(table),
-            with_path=True, apply_deletes=True,
-        )
-    else:
-        data = _scan_snapshot(spark, table, snap, with_path=True)
-    cond = F.expr(condition)
-    touched = [
-        r["_ice_file"]
-        for r in data.filter(cond).select("_ice_file")
-        .distinct().collect()
-    ]
-    if not touched:
+    u = cow.update(_path_scan(spark, table, snap), "_ice_file",
+                   table_cols, condition, assignments)
+    if u is None:
         return int(snap["snapshot_id"] or 0)
-    rows = data.filter(F.col("_ice_file").isin(touched))
-    sel = [
-        F.when(cond, F.expr(assignments[c]))
-        .otherwise(F.col(c)).alias(c)
-        if c in assignments else F.col(c)
-        for c in table_cols
-    ]
     part_cols = [
         e["name"] for e in snap.get("partition_spec") or []
     ]
-    data_files = _stage_rewrite(
-        spark, table, snap,
-        _cast_declared_types(rows.select(*sel), snap), part_cols
+    data_files = _stage_data_files(
+        _with_transform_values(_cast_declared_types(u.rows, snap), snap),
+        table, part_cols,
     )
     snapshot_id = _next_snapshot_id(table)
     append_iceberg_snapshot(
         table, snapshot_id, data_files,
-        deleted_files=[os.path.relpath(p, table) for p in touched],
+        deleted_files=[os.path.relpath(p, table) for p in u.touched],
         summary_extra={"operation-detail": "update"},
     )
     return snapshot_id
@@ -1478,21 +1418,16 @@ def merge_iceberg(
     broadcast_source: bool = True,
     branch: str | None = None,
 ) -> int:
-    """Copy-on-write MERGE INTO for Iceberg — the same plan shape as
-    `sources/delta.merge_delta` (and as iceberg-spark's own CoW
-    MERGE): ONE distributed pass finds the data files holding a
-    matched key (broadcast LEFT-SEMI join against the scan's hidden
-    ``_metadata.file_path``; the driver receives a FILE LIST, never
-    rows), only those files rewrite (surviving rows anti-joined on
-    the keys union the source rows), and one snapshot commit swaps
-    the touched files — untouched files carry forward unread.
-    Returns the new snapshot id.
+    """Copy-on-write MERGE INTO for Iceberg — iceberg-spark's own CoW
+    MERGE, the plan `sources/cow.py` describes (modes, duplicate
+    source keys and the ``broadcast_source`` ceiling included): the
+    touched-file pass keys on the scan's hidden
+    ``_metadata.file_path``, only those files rewrite, and one
+    snapshot commit swaps them.  Returns the new snapshot id.
 
-    ``when_matched``: "update" | "delete";
-    ``when_not_matched``: "insert" | "ignore".  Tables with live
-    v2/v3 row-level deletes merge fine — the scan and the
-    touched-file rewrite are both delete-applied, so deleted rows
-    can neither match nor resurrect; hidden-partitioning
+    Tables with live v2/v3 row-level deletes merge fine — the scan
+    and the touched-file rewrite are both delete-applied, so deleted
+    rows can neither match nor resurrect; hidden-partitioning
     transforms (``day``/``bucket[N]``/``truncate[W]``/...) are
     RECOMPUTED on the rewrite path with the same
     :func:`_transform_column` machinery the writer uses, so the
@@ -1508,113 +1443,44 @@ def merge_iceberg(
     crash between drain and apply.  (A merge that is itself a no-op
     does not advance the ledger; an empty batch re-applies as
     another no-op.)"""
-    from pyspark.sql import functions as F
-
-    # broadcast_source=False switches the source-key joins to
-    # plain (AQE-planned) joins - the fallback for merge sources
-    # too large to broadcast (see module docstring ceiling note)
-    _b = F.broadcast if broadcast_source else (lambda d: d)
-
-    from vtk_reserves_spark.sources.delta import decoded_file_path
-
-    if when_matched not in ("update", "delete"):
-        raise ValueError(f"iceberg: when_matched {when_matched!r}")
-    if when_not_matched not in ("insert", "ignore"):
-        raise ValueError(
-            f"iceberg: when_not_matched {when_not_matched!r}"
-        )
+    cow.check_modes("iceberg", when_matched, when_not_matched)
     if txn is not None:
-        meta = _load_table_metadata(table)
-        seen = (meta.get("properties") or {}).get(f"txn.{txn[0]}")
-        if seen is not None and int(seen) >= int(txn[1]):
-            snaps = meta.get("snapshots") or []
-            return int(snaps[-1]["snapshot-id"]) if snaps else 0
+        head = _txn_replayed(_load_table_metadata(table), txn)
+        if head is not None:
+            return head
     # branch-scoped merge: the scan base AND the commit target are
     # the branch head (WAP upserts stage like branch appends do)
     snap = iceberg_snapshot(table, ref=branch)
-    spec = snap.get("partition_spec") or []
-    part_cols = [e["name"] for e in spec]
+    current = int(snap["snapshot_id"] or 0)
+    part_cols = [e["name"] for e in snap.get("partition_spec") or []]
     table_cols = [
         f["name"] for f in (snap["schema"] or {}).get("fields", [])
     ]
-    missing = [k for k in on if k not in table_cols]
-    if missing:
-        raise ValueError(f"iceberg: merge keys {missing} not in table")
-    if when_matched == "update" or when_not_matched == "insert":
-        if sorted(source.columns) != sorted(table_cols):
-            raise ValueError(
-                f"iceberg: merge source columns "
-                f"{sorted(source.columns)} != table columns "
-                f"{sorted(table_cols)}"
-            )
-    base = os.path.abspath(table)
+    cow.check_merge_columns("iceberg", source, table_cols, on,
+                            when_matched, when_not_matched)
     # both scans are DELETE-APPLIED: matched-key discovery must not
     # see rows v2/v3 delete files removed, and the touched-file
     # rewrite folds those deletes in (the rewritten files take a new
     # data sequence number, putting them out of the old deletes'
     # reach); deletes keep carrying for untouched files
-    if _is_evolved(snap):
-        data = _epoch_scan(
-            spark, table, snap, _load_table_metadata(table),
-            with_path=True, apply_deletes=True,
-        )
-    else:
-        data = _scan_snapshot(
-            spark, table, snap, with_path=True
-        )
-    keys = source.select(*on).distinct()
-    touched = [
-        r["_ice_file"]
-        for r in data.join(_b(keys), on, "left_semi")
-        .select("_ice_file").distinct().collect()
-    ]
-    pieces: list[DataFrame] = []
-    touched_rows = (
-        data.filter(F.col("_ice_file").isin(touched))
-        if touched else None
-    )
-    if touched_rows is not None:
-        pieces.append(
-            touched_rows.join(_b(keys), on, "left_anti")
-            .select(*table_cols)
-        )
-    if when_matched == "update" and when_not_matched == "insert":
-        pieces.append(source.select(*table_cols))
-    elif when_not_matched == "insert":  # delete + insert
-        ins = source
-        if touched_rows is not None:
-            matched_keys = touched_rows.select(*on).distinct()
-            ins = ins.join(_b(matched_keys), on, "left_anti")
-        pieces.append(ins.select(*table_cols))
-    elif when_matched == "update":  # update + ignore
-        if touched_rows is not None:
-            matched_keys = touched_rows.select(*on).distinct()
-            pieces.append(
-                source.join(_b(matched_keys), on, "left_semi")
-                .select(*table_cols)
-            )
-    if not pieces and not touched:
-        return int(snap["snapshot_id"] or 0)  # no-op merge
-    new_df = pieces[0]
-    for p in pieces[1:]:
-        new_df = new_df.unionByName(p)
-    data_files = _stage_rewrite(
-        spark, table, snap, _cast_declared_types(new_df, snap),
-        part_cols,
-    )
+    m = cow.merge(source, _path_scan(spark, table, snap), "_ice_file",
+                  table_cols, on, when_matched, when_not_matched,
+                  broadcast_source)
+    if m is None:
+        return current  # no-op merge
+    with m.staged(
+        _with_transform_values(_cast_declared_types(m.rows, snap), snap),
+        table, part_cols,
+    ) as files:
+        if files is None:
+            return current  # empty source: nothing to commit
+        data_files = _promote_data_files(table, files, bool(part_cols))
     snapshot_id = _next_snapshot_id(table)
-    summary_extra = {"operation-detail": "merge"}
-    props_update = None
-    if txn is not None:
-        summary_extra.update({
-            "streaming-app-id": str(txn[0]),
-            "streaming-batch-id": str(int(txn[1])),
-        })
-        props_update = {f"txn.{txn[0]}": str(int(txn[1]))}
+    summary_extra, props_update = _txn_stamp(txn)
     append_iceberg_snapshot(
         table, snapshot_id, data_files,
-        deleted_files=[os.path.relpath(p, table) for p in touched],
-        summary_extra=summary_extra,
+        deleted_files=[os.path.relpath(p, table) for p in m.touched],
+        summary_extra={"operation-detail": "merge", **summary_extra},
         properties_update=props_update,
         branch=branch,
     )
@@ -1646,8 +1512,6 @@ def delete_from_iceberg(
     logical names via the per-epoch field-id scan, and the delete
     metadata still addresses physical (file, position) pairs."""
     from pyspark.sql import functions as F
-
-    from vtk_reserves_spark.sources.delta import decoded_file_path
 
     snap = iceberg_snapshot(table)
     if not snap["files"]:
@@ -1735,14 +1599,11 @@ def compact_iceberg_deletes(spark: SparkSession, table: str) -> int:
     files stop being carried in the new snapshot.  Returns the new
     snapshot id (unchanged when the table has no delete files).
 
-    This lifts :func:`merge_iceberg`'s row-level-delete gate:
-    compact first, then merge freely.  (:func:`optimize_iceberg`
-    needs no gate — it folds applicable deletes into its rewrites.)
     The affected-file selection is metadata-only (sequence numbers);
     the rewrite is ONE distributed delete-applied scan of only those
-    files (the same `_scan_snapshot` the reader uses) staged and
-    promoted like every other writer here (shared
-    :func:`_rewrite_files_batch`).  Transform-partitioned tables
+    files (the same `_scan_snapshot` the reader uses), staged like
+    every other writer here (shared :func:`_rewrite_files_batch`).
+    Transform-partitioned tables
     compose — the transform directory values recover from the hive
     dirs (rows never move partitions in a compaction) and
     schema-evolved tables recompute them from the epoch projection.
@@ -1822,8 +1683,6 @@ def optimize_iceberg(
     (remove victims, add outputs), pure metadata.  File sizes come
     from the manifests (carried across snapshots), so victim
     selection is metadata-only."""
-    from pyspark.sql import functions as F  # noqa: F401
-
     snap = iceberg_snapshot(table)
     evolved_meta = None
     if _is_evolved(snap):
@@ -1892,95 +1751,17 @@ def _rewrite_files_batch(
     entries for the new files.  With ``evolved_meta`` (schema-evolved
     tables) the victims project through :func:`_epoch_scan` and
     transform partition values recompute for write-back."""
-    import shutil
-    import uuid as _uuid
-    from urllib.parse import quote
-
-    import pyarrow.parquet as pq
-    from pyspark.sql import functions as F
-
-    from vtk_reserves_spark.sources.delta import _hive_partition_values
-
-    base = os.path.abspath(table)
+    sub = dict(snap)
+    sub["files"] = victims
     if evolved_meta is not None:
-        sub = dict(snap)
-        sub["files"] = victims
         rows = _epoch_scan(spark, table, sub, evolved_meta,
                            apply_deletes=has_deletes)
         # transform partition values recompute like merge's rewrite
-        name_by_id = {
-            int(f["id"]): f["name"]
-            for f in (snap["schema"] or {}).get("fields", [])
-        }
-        dtypes = dict(rows.dtypes)
-        for e in snap.get("partition_spec") or []:
-            tr_spec = e.get("transform") or "identity"
-            if tr_spec == "identity":
-                continue
-            tr, param = _parse_spec_transform(tr_spec)
-            src_col = name_by_id.get(int(e.get("source-id", 0)))
-            if src_col is None or src_col not in dtypes:
-                raise ValueError(
-                    f"iceberg: transform source column for partition "
-                    f"field {e['name']!r} not in table schema"
-                )
-            rows = rows.withColumn(
-                e["name"],
-                _transform_column(F, tr, param, src_col,
-                                  dtypes[src_col]),
-            )
-    elif has_deletes:
-        sub = dict(snap)
-        sub["files"] = victims
-        rows = _scan_snapshot(spark, table, sub, keep_hidden=True)
+        rows = _with_transform_values(rows, snap)
     else:
-        reader = spark.read.option("basePath", base)
-        if not part_fields and not snap.get("partition_spec"):
-            try:  # explicit schema: skip inference (see _scan_snapshot)
-                reader = reader.schema(
-                    _spark_schema_from_iceberg(snap["schema"])
-                )
-            except ValueError:
-                pass
-        rows = reader.parquet(*victims)
+        rows = _scan_snapshot(spark, table, sub, keep_hidden=True)
     rows = rows.coalesce(max(1, len(victims) // 8))
-    stage = os.path.join(table, f".stage-{_uuid.uuid4().hex}")
-    writer = rows.write.mode("overwrite")
-    if part_fields:
-        writer = writer.partitionBy(*part_fields)
-    writer.parquet(stage)
-    data_files = []
-    try:
-        os.makedirs(os.path.join(table, "data"), exist_ok=True)
-        for root, _dirs, names in os.walk(stage):
-            rel_dir = os.path.relpath(root, stage)
-            for name in sorted(names):
-                if not name.endswith(".parquet"):
-                    continue
-                rel = "data/" + (
-                    name if rel_dir == "."
-                    else f"{rel_dir.replace(os.sep, '/')}/{name}"
-                )
-                dst = os.path.join(table, *rel.split("/"))
-                os.makedirs(os.path.dirname(dst), exist_ok=True)
-                os.rename(os.path.join(root, name), dst)
-                entry = {
-                    "file_path": quote(rel, safe="/="),
-                    "record_count":
-                        pq.ParquetFile(dst).metadata.num_rows,
-                    "size": os.path.getsize(dst),
-                }
-                if part_fields:
-                    entry["partition"] = {
-                        k: ("" if v is None else v)
-                        for k, v in _hive_partition_values(
-                            rel_dir
-                        ).items()
-                    }
-                data_files.append(entry)
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)
-    return data_files
+    return _stage_data_files(rows, table, part_fields)
 
 
 def read_iceberg_incremental(
@@ -2545,14 +2326,6 @@ def iceberg_refs_df(spark: SparkSession, table: str) -> DataFrame:
     )
 
 
-_ICE_TO_SPARK = {
-    "long": "long", "int": "int", "double": "double",
-    "float": "float", "string": "string", "boolean": "boolean",
-    "date": "date", "binary": "binary",
-    "timestamptz": "timestamp", "timestamp": "timestamp_ntz",
-}
-
-
 def alter_iceberg_table(
     table: str,
     add: list[tuple[str, str]] | None = None,
@@ -2670,8 +2443,6 @@ def _epoch_scan(
     from functools import reduce
 
     from pyspark.sql import functions as F
-
-    from vtk_reserves_spark.sources.delta import decoded_file_path
 
     base = os.path.abspath(table)
     wants_deletes = bool(apply_deletes and _row_deletes_live(snap))
