@@ -21,12 +21,40 @@ import os
 import sys
 
 
+#: SQL settings of every session :func:`_spark` makes (the CLI's and
+#: the reserves benchmark's).  Measured on ``perfbench``'s
+#: ``ingest_export`` (128k CSV cells, 9 boxes, 2 planes) at local[3] on
+#: a 4-vCPU VM:
+#:
+#: - ``hugeMethodLimit``: the box-flag stage (Filter + Project of the
+#:   CASE chain and the two plane clips) compiles to one 9,485-byte
+#:   method.  HotSpot never JIT-compiles a method over 8,000 bytes, so
+#:   at Spark's default limit (65,535) every row ran interpreted: a noop
+#:   write of the flagged rows took 0.50-0.57 s (medians of 5).  At
+#:   8000 Spark runs such a stage as per-operator code: 0.13-0.23 s.
+#: - ``canChangeCachedPlanOutputPartitioning``: lets AQE coalesce the
+#:   shuffles of a persisted plan.  The cached 72-row ``breakdown``
+#:   report kept its 200 sort partitions: 6 jobs / 234 tasks to build
+#:   and 2 jobs / 150 tasks for its .csv and .xlsx writes, 1.28 s in
+#:   all.  Coalesced: 5 jobs / 16 tasks and 2 jobs / 8 tasks, 0.52 s.
+SESSION_CONF = {
+    "spark.sql.codegen.hugeMethodLimit": "8000",
+    "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "true",
+}
+
+
 def _spark():
+    """The session of the CLI and of ``perfbench``: UTC session time
+    plus :data:`SESSION_CONF` — generated methods too large for the JIT
+    are split per operator, and AQE may coalesce the partitions of
+    persisted plans (a cached report keeps a handful, not
+    ``spark.sql.shuffle.partitions``)."""
     from pyspark.sql import SparkSession
 
     return (
         SparkSession.builder.appName("vtk_reserves_spark")
         .config("spark.sql.session.timeZone", "UTC")
+        .config(map=SESSION_CONF)
         .getOrCreate()
     )
 

@@ -15,6 +15,10 @@ suffix parses it back to the identical IEEE double, so the resulting
 ``Literal(array<double>)`` is bit-for-bit the one ``F.lit`` builds —
 verified by plan comparison in tests.  Non-finite doubles (NaN/inf
 have no SQL literal) fall back to ``F.lit(list)``.
+
+:func:`sql_double`, :func:`sql_string` and :func:`sql_ident` render one
+value or column name as SQL text, for operators that build a whole
+expression (a ``CASE`` chain, a bisect tree) as one ``F.expr`` string.
 """
 
 from __future__ import annotations
@@ -62,3 +66,27 @@ def lit_long_array(values) -> Column:
     if not all(-(1 << 63) <= v < (1 << 63) for v in vals):
         raise ValueError("lit_long_array: value out of int64 range")
     return F.expr("array(" + ",".join(f"{v}L" for v in vals) + ")")
+
+
+def sql_double(v) -> str:
+    """SQL text of a double: ``repr`` + ``D`` (the identical IEEE double
+    when parsed back); NaN and +-inf, which have no numeric literal, are
+    cast from their string names."""
+    v = float(v)
+    if math.isfinite(v):
+        return f"{v!r}D"
+    name = "NaN" if math.isnan(v) else "Infinity" if v > 0 else "-Infinity"
+    return f"CAST('{name}' AS DOUBLE)"
+
+
+def sql_string(s: str) -> str:
+    """SQL text of a string literal that parses back to ``s`` exactly
+    (backslash escapes, the parser's default
+    ``spark.sql.parser.escapedStringLiterals=false``)."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def sql_ident(name: str) -> str:
+    """Backtick-quoted column name: any string, dots and backticks
+    included, names one top-level column."""
+    return "`" + name.replace("`", "``") + "`"

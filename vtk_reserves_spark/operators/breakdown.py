@@ -171,8 +171,15 @@ def breakdown(
     Output: one row per group (keys first, filled with -99 where null),
     aggregate columns in template order named ``"<var> <op>"`` or the
     alias.  ``sort=True`` orders rows by the group keys like pandas
-    ``groupby(sort=True)`` (the result is report-sized; the sort is
-    negligible).
+    ``groupby(sort=True)``: an ``orderBy`` (range exchange + sort).  On
+    the ``cli._spark`` session it costs next to nothing for a
+    report-sized result, because AQE coalesces the range exchange to a
+    few partitions, persisted reports included
+    (``canChangeCachedPlanOutputPartitioning``).  It also scales: a
+    4M-group breakdown (``cell`` of a 200x200x100 ``grid_df``, noop
+    write, local[3] on a 4-vCPU VM, 4 reps) took 1.5-2.9 s with
+    ``orderBy``, 3.7-4.4 s as ``coalesce(1).sortWithinPartitions`` and
+    3.1-3.5 s as ``repartition(1).sortWithinPartitions``.
 
     ``approx=True`` lowers plain quantiles (q1/q2/q3/p{N}) to
     ``approx_percentile`` — a fixed-size sketch with bounded memory per

@@ -823,15 +823,9 @@ def nscore(
         # literals, so the comparisons are the same double >= double;
         # NaN and +-inf bounds, which have no numeric literal, are cast
         # from their string names).
-        import math
+        from vtk_reserves_spark.functions.plan_literals import sql_double, sql_ident
 
-        vs = f"CAST(`{value_col.replace('`', '``')}` AS DOUBLE)"
-
-        def sql_double(b: float) -> str:
-            if math.isfinite(b):
-                return f"{b!r}D"
-            name = "NaN" if math.isnan(b) else "Infinity" if b > 0 else "-Infinity"
-            return f"CAST('{name}' AS DOUBLE)"
+        vs = f"CAST({sql_ident(value_col)} AS DOUBLE)"
 
         def sql_bisect(i: int, j: int) -> str:
             if i == j:

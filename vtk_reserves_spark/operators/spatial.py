@@ -51,6 +51,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from vtk_reserves_spark.functions.plan_literals import sql_double, sql_ident, sql_string
 from vtk_reserves_spark.sources.mesh import TriMesh
 
 _EPS = 1e-12
@@ -90,8 +91,10 @@ _CHUNK = 1 << 13
 
 
 def _tri_arrays(mesh: TriMesh):
-    """Per-mesh ray-scan arrays, cached on the mesh object (meshes ride
-    in UDF closures, so the cache is built once per executor per mesh).
+    """Per-mesh ray-scan arrays, cached on the mesh object.  Meshes ride
+    in UDF closures, which every task unpickles afresh, so the cache is
+    built once per task per mesh (and reused across that task's Arrow
+    batches).
 
     Returns ``(A, nrm, index)``: vertex A and the (unnormalized) face
     normal, both shape (F, 3), which the crossing elevation reads, and
@@ -287,19 +290,27 @@ def flag_regions_bbox(
     xyz=("x", "y", "z"),
 ) -> DataFrame:
     """Axis-aligned fast path: region solids given as named bounding boxes
-    become a chain of BETWEEN predicates — zero Python, full codegen,
-    exactly expressible in the SQL oracle.  Overwrite order preserved by
-    testing later regions first."""
-    x, y, z = (F.col(c) for c in xyz)
-    expr = F.lit("")
-    for name, ((x0, y0, z0), (x1, y1, z1)) in regions:  # earliest first
-        inside = (
-            x.between(float(x0), float(x1))
-            & y.between(float(y0), float(y1))
-            & z.between(float(z0), float(z1))
+    become one flat ``CASE WHEN <x, y, z inside box> THEN name ...
+    ELSE '' END`` — zero Python, full codegen, exactly expressible in
+    the SQL oracle.  Overwrite order is preserved by testing later
+    regions first; a NULL coordinate is inside no box, so gives ``''``.
+
+    The chain is ONE SQL string parsed by one ``F.expr`` call, not
+    three ``Column.between`` calls and a ``when`` per box: on 9 boxes
+    those py4j round trips took ``grid_depletion``'s plan build from
+    0.12 s to 0.28 s.  Names are rendered with ``str`` (an int name
+    gives its digits); column names are backtick-quoted."""
+    if not regions:
+        return df.withColumn(flag_var, F.lit(""))
+    x, y, z = (sql_ident(c) for c in xyz)
+    branches = []
+    for name, ((x0, y0, z0), (x1, y1, z1)) in reversed(regions):  # latest first
+        inside = " AND ".join(
+            f"{c} >= {sql_double(lo)} AND {c} <= {sql_double(hi)}"
+            for c, lo, hi in ((x, x0, x1), (y, y0, y1), (z, z0, z1))
         )
-        expr = F.when(inside, F.lit(name)).otherwise(expr)
-    return df.withColumn(flag_var, expr)
+        branches.append(f"WHEN {inside} THEN {sql_string(str(name))}")
+    return df.withColumn(flag_var, F.expr(f"CASE {' '.join(branches)} ELSE '' END"))
 
 
 def flag_regions_2d(

@@ -37,10 +37,14 @@ result, no driver OOM risk.
 reference implementations: executors write parquet into a hidden
 ``<table>/.stage-<uuid>`` dir on the table's own filesystem, so
 promotion is a rename, never a copy; the driver names, describes and
-commits the files — metadata only.  Each format keeps the rest: its
-snapshot and file-column scan, the ``txn`` ledger, casts to declared
-and physical types, file naming and descriptors, the commit, and its
-own row extras (Delta's change-data rows, Hudi's commit times).
+commits the files — metadata only.  :func:`cast_declared` is the one
+cast of a rewrite to the table's declared types (Delta and Iceberg;
+Hudi's ``_cast_declared`` differs: it null-fills missing columns and
+drops undeclared ones).  Each format keeps the rest: its snapshot and
+file-column scan, the ``txn`` ledger, where its declared schema comes
+from, casts to physical types, file naming and descriptors, the
+commit, and its own row extras (Delta's change-data rows, Hudi's
+commit times).
 """
 
 from __future__ import annotations
@@ -55,11 +59,12 @@ from functools import reduce
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 __all__ = [
-    "Merge", "Update", "check_merge_columns", "check_modes",
-    "check_set_columns", "merge", "partition_values", "staged",
-    "update",
+    "Merge", "Update", "cast_declared", "check_merge_columns",
+    "check_modes", "check_set_columns", "merge", "partition_values",
+    "staged", "update",
 ]
 
 
@@ -259,6 +264,27 @@ def staged(df: DataFrame, table: str,
         yield sorted(files)
     finally:
         shutil.rmtree(stage, ignore_errors=True)
+
+
+def cast_declared(df: DataFrame, declared: StructType) -> DataFrame:
+    """Cast ``df``'s columns that ``declared`` (the table schema) names
+    to their declared types — the implicit cast delta-spark and
+    iceberg-spark apply to MERGE/UPDATE sources, so a wider-typed
+    source (e.g. a ``long`` expression merged into an ``int`` column)
+    can never stage files whose parquet types contradict the table
+    metadata the format's schema-on-read trusts.  Other columns
+    (``_change_type``) pass through; a frame already in the declared
+    types is returned as is."""
+    types = {f.name: f.dataType for f in declared.fields}
+    if all(
+        types.get(c) is None or t == types[c].simpleString()
+        for c, t in df.dtypes
+    ):
+        return df
+    return df.select(*[
+        F.col(c).cast(types[c]).alias(c) if c in types else F.col(c)
+        for c in df.columns
+    ])
 
 
 def partition_values(part: str) -> dict:

@@ -1020,32 +1020,14 @@ def _physical_struct(meta: dict):
 
 
 def _cast_declared_types(df: DataFrame, meta: dict) -> DataFrame:
-    """Cast the table's schema columns to their DECLARED types
-    (``schemaString``) — the implicit cast delta-spark applies to
-    MERGE/UPDATE sources, so a wider-typed source (e.g. a ``long``
-    expression merged into an ``int`` column) can never stage files
-    whose parquet types contradict the table metadata (the explicit
-    schema-on-read in :func:`read_delta` trusts the metadata).
-    Non-schema columns (``_change_type``) pass through untouched."""
-    from pyspark.sql import functions as F
+    """:func:`cow.cast_declared` under the table's declared
+    ``schemaString`` (the explicit schema-on-read in :func:`read_delta`
+    trusts it)."""
     from pyspark.sql.types import StructType
 
-    declared = {
-        f.name: f.dataType
-        for f in StructType.fromJson(
-            json.loads(meta["schemaString"])
-        ).fields
-    }
-    if all(
-        declared.get(c) is None or str(t) == declared[c].simpleString()
-        for c, t in df.dtypes
-    ):
-        return df
-    return df.select(*[
-        F.col(c).cast(declared[c]).alias(c) if c in declared
-        else F.col(c)
-        for c in df.columns
-    ])
+    return cow.cast_declared(
+        df, StructType.fromJson(json.loads(meta["schemaString"]))
+    )
 
 
 def _to_physical(df: DataFrame, meta: dict) -> DataFrame:

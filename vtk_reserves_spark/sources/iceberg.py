@@ -706,32 +706,15 @@ def _spark_schema_from_iceberg(schema: dict | None):
 
 
 def _cast_declared_types(df: DataFrame, snap: dict) -> DataFrame:
-    """Cast the table's schema columns to their DECLARED metadata
-    types — the implicit cast iceberg-spark applies to MERGE/UPDATE
-    sources, so a wider-typed source expression can never stage
-    files whose parquet types contradict the table schema (the
-    explicit schema-on-read in :func:`_scan_snapshot` trusts the
-    metadata).  Columns outside the schema pass through; tables
-    with types outside the readable subset are left unchanged."""
-    from pyspark.sql import functions as F
-
+    """:func:`cow.cast_declared` under the snapshot's schema (the
+    explicit schema-on-read in :func:`_scan_snapshot` trusts it);
+    tables with types outside the readable subset are left
+    unchanged."""
     try:
-        declared = {
-            f.name: f.dataType
-            for f in _spark_schema_from_iceberg(snap["schema"]).fields
-        }
+        declared = _spark_schema_from_iceberg(snap["schema"])
     except ValueError:
         return df
-    if all(
-        declared.get(c) is None or str(t) == declared[c].simpleString()
-        for c, t in df.dtypes
-    ):
-        return df
-    return df.select(*[
-        F.col(c).cast(declared[c]).alias(c) if c in declared
-        else F.col(c)
-        for c in df.columns
-    ])
+    return cow.cast_declared(df, declared)
 
 
 # ------------------------------------------------- partition transforms
