@@ -3,7 +3,9 @@
 of MERGE, untouched files keeping their paths, and an empty source
 committing nothing."""
 import os
+from urllib.parse import unquote
 
+import pyarrow.parquet as pq
 import pytest
 
 from vtk_reserves_spark.sources import delta, hudi, iceberg
@@ -121,4 +123,25 @@ def test_merge_empty_source_commits_nothing(spark, tmp_path, fmt):
           txn=("app", 1))
     assert _rows(spark, fmt, t) == model_merge(
         rows, SOURCE, "update", "insert"
+    )
+
+
+@pytest.mark.parametrize("fmt", sorted(FORMATS))
+def test_delete_merge_emptying_a_file_drops_it(spark, tmp_path, fmt):
+    """A delete-merge that removes every row of a touched file leaves
+    no zero-row file in the new snapshot."""
+    _write, merge, _read, head = FORMATS[fmt]
+    t = _table(spark, fmt, tmp_path)
+    rows = _rows(spark, fmt, t)
+    keys = [(1,), (2,)]  # every row of the first file
+    merge(spark, spark.createDataFrame(keys, "id long"), t, on=["id"],
+          when_matched="delete", when_not_matched="ignore")
+    _after, files = head(t)
+    counts = sorted(
+        pq.read_metadata(os.path.join(t, unquote(p))).num_rows
+        for p in files
+    )
+    assert counts == [2, 2]
+    assert _rows(spark, fmt, t) == model_merge(
+        rows, [(1, None), (2, None)], "delete", "ignore"
     )

@@ -843,14 +843,16 @@ def test_alter_hudi_table_additive(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from vtk_reserves_spark.sources.hudi import (
-        alter_hudi_table, merge_hudi, read_hudi, update_hudi,
-        upsert_hudi_mor, write_hudi,
+        alter_hudi_table, hudi_snapshot, merge_hudi, read_hudi,
+        read_hudi_incremental, update_hudi, upsert_hudi_mor, write_hudi,
     )
 
     # COPY_ON_WRITE
     t = str(tmp_path / "acow")
     df = spark.range(6).select("id", (F.col("id") * 1.0).alias("v"))
     write_hudi(df, t, record_key=["id"])
+    i1 = hudi_snapshot(t)["instant"]
+    write_hudi(spark.createDataFrame([(20, 2.0)], "id long, v double"), t)
     alter_hudi_table(t, add=[("w", "long")])
     got = read_hudi(spark, t)
     assert set(got.columns) == {"id", "v", "w"}
@@ -862,6 +864,12 @@ def test_alter_hudi_table_additive(spark, tmp_path):
     merge_hudi(spark, src, t, on=["id"])
     rows = {r["id"]: r["w"] for r in read_hudi(spark, t).collect()}
     assert rows[0] == 7 and rows[100] == 9 and rows[3] is None
+    # an incremental range spanning the ADD reads the declared schema:
+    # the pre-alter append null-fills, the merged rows carry w
+    inc = read_hudi_incremental(spark, t, i1)
+    assert {r["id"]: r["w"] for r in inc.collect()} == {
+        20: None, 0: 7, 100: 9,
+    }
     # UPDATE over the added column
     update_hudi(spark, t, "id = 100", {"w": "w + 1"})
     assert {r["w"] for r in read_hudi(spark, t)

@@ -365,6 +365,8 @@ def test_write_iceberg_partitioned_and_pruned(spark, tmp_path):
     )
     back = read_iceberg(spark, t)
     assert back.count() == 90 and "bucket" in back.columns
+    # schema order, partition column included (as an empty read)
+    assert back.columns == ["id", "bucket", "v"]
     pruned = read_iceberg(spark, t, partition_filter={"bucket": 2})
     assert pruned.count() == 30
     kept = [
@@ -380,6 +382,7 @@ def test_write_iceberg_partitioned_and_pruned(spark, tmp_path):
     empty = read_iceberg(spark, t, partition_filter={"bucket": 9})
     assert empty.count() == 0
     assert set(empty.columns) == {"id", "bucket", "v"}
+    assert empty.columns == back.columns
 
 
 def test_expire_snapshots_and_remove_orphans(spark, tmp_path):
@@ -665,7 +668,8 @@ def test_incremental_append_scan(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from vtk_reserves_spark.sources.iceberg import (
-        optimize_iceberg, read_iceberg_incremental, write_iceberg,
+        alter_iceberg_table, optimize_iceberg, read_iceberg_incremental,
+        write_iceberg,
     )
 
     t = str(tmp_path / "inc")
@@ -682,6 +686,16 @@ def test_incremental_append_scan(spark, tmp_path):
     # empty range -> empty relation with the table schema
     empty = read_iceberg_incremental(spark, t, s3, s3)
     assert empty.count() == 0 and empty.columns == ["id", "v"]
+    # a rename inside the range: pre-rename files serve the renamed
+    # column by field id, as read_iceberg does
+    alter_iceberg_table(t, rename={"v": "amount"})
+    s4 = write_iceberg(
+        spark.createDataFrame([(30, 30.0)], "id long, amount double"), t
+    )
+    inc3 = read_iceberg_incremental(spark, t, s2, s4)
+    assert sorted((r["id"], r["amount"]) for r in inc3.collect()) == [
+        (i, i * 1.0) for i in range(20, 31)
+    ]
     # a rewrite snapshot in range gates
     optimize_iceberg(spark, t, min_file_size=1 << 20)
     with pytest.raises(ValueError, match="append snapshots"):
@@ -1353,8 +1367,8 @@ def test_iceberg_changelog(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from vtk_reserves_spark.sources.iceberg import (
-        iceberg_changelog, merge_iceberg, optimize_iceberg,
-        write_iceberg,
+        alter_iceberg_table, iceberg_changelog, merge_iceberg,
+        optimize_iceberg, write_iceberg,
     )
 
     t = str(tmp_path / "cl")
@@ -1400,6 +1414,18 @@ def test_iceberg_changelog(spark, tmp_path):
     cl4 = iceberg_changelog(spark, t, s4).toPandas()
     assert sorted(cl4[cl4["_change_type"] == "delete"]["id"]) == [3]
     assert list(cl4[cl4["_change_type"] == "insert"]["id"]) == []
+    # a rename before the merge: pre-rename files serve the renamed
+    # column by field id, so the merge still nets to one pair
+    alter_iceberg_table(t, rename={"v": "amount"})
+    merge_iceberg(
+        spark,
+        spark.createDataFrame([(0, 50.0)], "id long, amount double"),
+        t, on=["id"],
+    )
+    cl5 = iceberg_changelog(spark, t, s5).toPandas()
+    assert sorted(
+        zip(cl5["_change_type"], cl5["id"], cl5["amount"])
+    ) == [("delete", 0, 100.0), ("insert", 0, 50.0)]
 
 
 def test_snapshot_id_allocation_past_branch_heads(spark, tmp_path):

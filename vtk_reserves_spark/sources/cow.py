@@ -39,12 +39,14 @@ reference implementations: executors write parquet into a hidden
 promotion is a rename, never a copy; the driver names, describes and
 commits the files — metadata only.  :func:`cast_declared` is the one
 cast of a rewrite to the table's declared types (Delta and Iceberg;
-Hudi's ``_cast_declared`` differs: it null-fills missing columns and
-drops undeclared ones).  Each format keeps the rest: its snapshot and
-file-column scan, the ``txn`` ledger, where its declared schema comes
-from, casts to physical types, file naming and descriptors, the
-commit, and its own row extras (Delta's change-data rows, Hudi's
-commit times).
+Hudi writes the rows as its declared-schema scan returns them).  Each
+format keeps the rest: its snapshot and its one live-row scan with
+the file column — ``delta._scan``, ``iceberg._epoch_scan`` and
+``hudi._scan_base``, the same scans the readers, the deletes and the
+incremental reads go through — the ``txn`` ledger, where its
+declared schema comes from, casts to physical types, file naming
+and descriptors, the commit, and its own row extras (Delta's
+change-data rows, Hudi's commit times).
 """
 
 from __future__ import annotations
@@ -142,19 +144,20 @@ class Merge:
     def staged(self, df: DataFrame, table: str,
                partition_by: list[str] | None = None):
         """:func:`staged` for the rewrite ``df`` (``rows`` as the
-        format writes them); yields None when the merge commits
-        nothing — no file touched and no row staged.  An empty
-        rewrite stages one zero-row file, recognised from its parquet
-        footer (driver-side, no Spark job) and dropped with the stage
-        dir."""
+        format writes them), without zero-row files; yields None when
+        the merge commits nothing — no file touched and no row
+        staged.  An empty rewrite (a delete-merge that empties its
+        touched files, or an empty source) stages one zero-row file,
+        recognised from its parquet footer (driver-side, no Spark
+        job) and dropped with the stage dir."""
         import pyarrow.parquet as pq
 
         with staged(df, table, partition_by) as files:
-            if not self.touched and not any(
-                pq.read_metadata(p).num_rows for _, p in files
-            ):
-                files = None
-            yield files
+            files = [
+                (part, p) for part, p in files
+                if pq.read_metadata(p).num_rows
+            ]
+            yield files if files or self.touched else None
 
 
 def merge(

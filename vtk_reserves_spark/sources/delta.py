@@ -434,8 +434,26 @@ def read_delta(
                 "_delta_file", F.lit(None).cast("string")
             )
         return empty
+    return _scan(spark, table, snap, with_file_path=with_file_path)
+
+
+def _scan(
+    spark: SparkSession, table: str, snap: dict,
+    with_file_path: bool = False, with_pos: bool = False,
+) -> DataFrame:
+    """The one live-row scan of a Delta snapshot with files —
+    :func:`read_delta` (and through it MERGE, UPDATE and OPTIMIZE)
+    and :func:`delete_delta` read through it.  Columns come back
+    under their LOGICAL names; ``with_file_path`` appends
+    ``_delta_file`` (the decoded absolute data-file path) and
+    ``with_pos`` also ``_delta_pos`` (the row's position in that
+    file) — the (file, row position) handle a deletion vector
+    addresses."""
     from urllib.parse import unquote
 
+    from pyspark.sql import functions as F
+
+    meta = snap["metadata"]
     # add.path is table-relative and percent-encoded (PROTOCOL.md);
     # abspath both sides so a relative `table` still joins correctly
     # against the absolute URI in _metadata.file_path
@@ -443,79 +461,64 @@ def read_delta(
     paths = [
         os.path.join(base, unquote(p)) for p, _, _, _ in snap["files"]
     ]
-    reader = spark.read.option("basePath", base)
+    # explicit schema-on-read under the LOG's schema (delta-spark
+    # semantics: metaData.schemaString is authoritative), in physical
+    # names: files predating an ADD null-fill the new column, dropped
+    # columns prune — the evolution contract; plain inference would
+    # miss columns absent from the sampled footer.  Partition columns
+    # are in the struct under their physical names, which is what the
+    # hive directories carry — Spark fills them from the dirs.  It
+    # also skips the driver-side footer-sampling job every
+    # schema-inferring parquet read launches — the dominant fixed
+    # cost of metadata-heavy verbs (merge/CDF replication chains run
+    # dozens of scans per query).
+    df = spark.read.option("basePath", base).schema(
+        _physical_struct(meta)
+    ).parquet(*paths)
     dv_files = [
         (os.path.join(base, unquote(p)), json.dumps(dv))
         for p, _, _, dv in snap["files"]
         if dv
     ]
-    mapping = _column_mapping(snap["metadata"])
-    if mapping:
-        # explicit schema-on-read (physical names): files predating
-        # an ADD null-fill the new column, dropped columns prune —
-        # the evolution contract; plain inference would miss columns
-        # absent from the sampled footer.  Partition columns are in
-        # the struct under their physical names, which is what the
-        # hive directories carry — Spark fills them from the dirs.
-        reader = reader.schema(_physical_struct(snap["metadata"]))
-    else:
-        # unmapped tables scan under the LOG's schema too (delta-spark
-        # semantics: metaData.schemaString is authoritative).  Besides
-        # correctness this skips the driver-side footer-sampling job
-        # every schema-inferring parquet read otherwise launches —
-        # the dominant fixed cost of metadata-heavy verbs (merge/CDF
-        # replication chains run dozens of scans per query).
-        from pyspark.sql.types import StructType
+    if with_file_path or with_pos or dv_files:
+        df = df.withColumn("_delta_file", decoded_file_path(F))
+    if with_pos or dv_files:
+        df = df.withColumn("_delta_pos", F.col("_metadata.row_index"))
+    if dv_files:
+        # deletion vectors: each DV's Roaring bitmap expands to
+        # (file, position) rows that broadcast LEFT-ANTI join the scan
+        dv_df = spark.createDataFrame(dv_files, "path string, dv string")
 
-        reader = reader.schema(
-            StructType.fromJson(
-                json.loads(snap["metadata"]["schemaString"])
-            )
+        def expand(batches):
+            import pandas as pd
+
+            for pdf in batches:
+                for path, dv_json in zip(pdf["path"], pdf["dv"]):
+                    # `base` (absolute): Python workers have their
+                    # own cwd
+                    pos = _load_dv_positions(base, json.loads(dv_json))
+                    yield pd.DataFrame({
+                        "_delta_file": path,
+                        "_delta_pos": pos.astype("int64"),
+                    })
+
+        positions = dv_df.mapInPandas(
+            expand, "_delta_file string, _delta_pos long"
         )
-
-    def rename(df):
-        if not mapping:
-            return df
-        from pyspark.sql import functions as F
-
-        return df.select(
-            *[F.col(c).alias(mapping.get(c, c)) for c in df.columns]
+        df = df.join(
+            F.broadcast(positions), ["_delta_file", "_delta_pos"],
+            "left_anti",
         )
-
-    if not dv_files:
-        df = reader.parquet(*paths)
-        if with_file_path:
-            from pyspark.sql import functions as F
-
-            df = df.withColumn("_delta_file", decoded_file_path(F))
-        return rename(df)
-    from pyspark.sql import functions as F
-
-    data = reader.parquet(*paths).withColumns({
-        "_dv_path": decoded_file_path(F),
-        "_dv_pos": F.col("_metadata.row_index"),
-    })
-    dv_df = spark.createDataFrame(dv_files, "path string, dv string")
-
-    def expand(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            for path, dv_json in zip(pdf["path"], pdf["dv"]):
-                # `base` (absolute): Python workers have their own cwd
-                pos = _load_dv_positions(base, json.loads(dv_json))
-                yield pd.DataFrame({
-                    "_dv_path": path,
-                    "_dv_pos": pos.astype("int64"),
-                })
-
-    positions = dv_df.mapInPandas(expand, "_dv_path string, _dv_pos long")
-    out = data.join(
-        F.broadcast(positions), ["_dv_path", "_dv_pos"], "left_anti"
+        if not with_pos:
+            df = df.drop("_delta_pos")
+        if not with_file_path and not with_pos:
+            df = df.drop("_delta_file")
+    mapping = _column_mapping(meta)
+    if not mapping:
+        return df
+    return df.select(
+        *[F.col(c).alias(mapping.get(c, c)) for c in df.columns]
     )
-    if with_file_path:
-        out = out.withColumn("_delta_file", F.col("_dv_path"))
-    return rename(out.drop("_dv_path", "_dv_pos"))
 
 
 def _cdf_enabled(meta: dict) -> bool:
@@ -1003,19 +1006,22 @@ def write_delta(
 
 def _physical_struct(meta: dict):
     """schemaString -> Spark StructType under PHYSICAL column names
-    (identity when the table has no mapping).  Passing this to the
-    parquet reader makes schema-on-read explicit: files predating an
-    added column null-fill it, and dropped columns' physical data is
-    pruned — the Delta evolution contract without touching a file."""
+    (identity when the table has no mapping; the column-mapping keys
+    leave the field metadata).  Passing this to the parquet reader
+    makes schema-on-read explicit: files predating an added column
+    null-fill it, and dropped columns' physical data is pruned — the
+    Delta evolution contract without touching a file."""
     from pyspark.sql.types import StructType
 
     schema = json.loads(meta["schemaString"])
     fields = []
     for f in schema.get("fields", []):
-        phys = (f.get("metadata") or {}).get(
-            "delta.columnMapping.physicalName", f["name"]
-        )
-        fields.append({**f, "name": phys, "metadata": {}})
+        fmeta = f.get("metadata") or {}
+        phys = fmeta.get("delta.columnMapping.physicalName", f["name"])
+        fields.append({**f, "name": phys, "metadata": {
+            k: v for k, v in fmeta.items()
+            if not k.startswith("delta.columnMapping.")
+        }})
     return StructType.fromJson({"type": "struct", "fields": fields})
 
 
@@ -1273,74 +1279,34 @@ def delete_delta(
     re-commits with its new DV descriptor (unioned with any prior
     DV); unmatched files are untouched.  Returns the new version.
 
-    Scale shape: ONE distributed delete-applied scan evaluates the
-    predicate and reduces to per-file position lists; the driver
-    holds only the matched positions (churn-sized — a DELETE that
-    matches most of the table should be an overwrite instead, like
-    delta-spark's own DV-vs-rewrite heuristic).  With Change Data
-    Feed enabled the matched rows also land as ``_change_data``
-    delete rows — one extra distributed write of the CHANGED rows.
+    Scale shape: ONE distributed delete-applied scan — the reader's
+    own :func:`_scan`, keeping its (file, row position) handle —
+    evaluates the predicate and reduces to per-file position lists;
+    the driver holds only the matched positions (churn-sized — a
+    DELETE that matches most of the table should be an overwrite
+    instead, like delta-spark's own DV-vs-rewrite heuristic).  With
+    Change Data Feed enabled the matched rows also land as
+    ``_change_data`` delete rows — one extra distributed write of
+    the CHANGED rows.
 
     Column-mapped tables work (the predicate sees LOGICAL names),
-    partitioned + mapped included — the scan reads the physical
-    struct with partition columns filled from the hive dirs."""
+    partitioned + mapped included."""
     from pyspark.sql import functions as F
 
     snap = delta_snapshot(table)
-    mapping = _column_mapping(snap["metadata"])
     if not snap["files"]:
         return snap["version"]
     from urllib.parse import unquote
 
     base = os.path.abspath(table)
-    # explicit schema always (see read_delta): physical struct is the
-    # identity struct on unmapped tables, and skips schema inference
-    reader = spark.read.option("basePath", base).schema(
-        _physical_struct(snap["metadata"])
-    )
-    paths = [
-        os.path.join(base, unquote(p)) for p, _, _, _ in snap["files"]
-    ]
-    df = reader.parquet(*paths).withColumns({
-        "_dd_path": decoded_file_path(F),
-        "_dd_pos": F.col("_metadata.row_index"),
-    })
-    if mapping:
-        df = df.select(
-            *[F.col(ph).alias(lg) for ph, lg in mapping.items()],
-            "_dd_path", "_dd_pos",
-        )
-    # existing DVs anti-join so already-deleted rows never re-match
-    # the predicate (they are invisible, per DELETE semantics)
-    dv_files = [
-        (os.path.join(base, unquote(p)), json.dumps(dv))
-        for p, _, _, dv in snap["files"] if dv
-    ]
-    if dv_files:
-        dv_df = spark.createDataFrame(dv_files, "path string, dv string")
-
-        def expand(batches):
-            import pandas as pd
-
-            for pdf in batches:
-                for path, dv_json in zip(pdf["path"], pdf["dv"]):
-                    pos = _load_dv_positions(base, json.loads(dv_json))
-                    yield pd.DataFrame({
-                        "_dd_path": path,
-                        "_dd_pos": pos.astype("int64"),
-                    })
-
-        prior = dv_df.mapInPandas(
-            expand, "_dd_path string, _dd_pos long"
-        )
-        df = df.join(
-            F.broadcast(prior), ["_dd_path", "_dd_pos"], "left_anti"
-        )
+    # already-deleted rows are invisible to the scan, so they never
+    # re-match the predicate (DELETE semantics)
+    df = _scan(spark, table, snap, with_pos=True)
     matched = df.filter(F.expr(condition))
     per_file = {
-        r["_dd_path"]: [int(x) for x in r["pos"]]
-        for r in matched.groupBy("_dd_path")
-        .agg(F.collect_list("_dd_pos").alias("pos")).collect()
+        r["_delta_file"]: [int(x) for x in r["pos"]]
+        for r in matched.groupBy("_delta_file")
+        .agg(F.collect_list("_delta_pos").alias("pos")).collect()
     }
     if not per_file:
         return snap["version"]  # nothing matched

@@ -261,21 +261,11 @@ def read_hudi(
             raise ValueError("hudi: empty table without a recorded "
                              "schema")
         return spark.createDataFrame([], declared)
-    reader = spark.read.option("basePath", os.path.abspath(table))
-    if declared is not None:
-        # explicit schema-on-read: files predating an
-        # alter_hudi_table ADD null-fill the new column PER FILE
-        # (footer-sampled inference would instead take one file's
-        # shape for the whole scan); wild tables without a recorded
-        # schema keep inference
-        reader = reader.schema(declared)
-    df = reader.parquet(*snap["files"])
+    df = _scan_base(spark, table, snap, snap["files"]).drop("_hudi_file")
     if drop_meta:
         meta_cols = [c for c in df.columns if c.startswith("_hoodie_")]
         if meta_cols:
             df = df.drop(*meta_cols)
-    if declared is not None:
-        df = _cast_declared(df, declared)
     return df
 
 
@@ -291,29 +281,32 @@ def _declared_schema(snap: dict):
     return T.StructType.fromJson(_json.loads(snap["schema"]))
 
 
-def _cast_declared(df: DataFrame, declared, extra: list[str] = ()):
-    """Recovered hive-dir partition columns type-infer from the
-    directory STRINGS (``p=1`` comes back int even when the column
-    is string) — cast every declared column back to its recorded
-    type; declared columns MISSING from the scan null-fill (files
-    predating an ``alter_hudi_table`` ADD — avro's backward-
-    compatible resolution); columns outside the declared set
-    (``_hoodie_*`` from foreign writers) ride along unchanged."""
+def _scan_base(
+    spark: SparkSession, table: str, snap: dict, files: list[str],
+) -> DataFrame:
+    """The one base-file reader behind every Hudi verb —
+    :func:`read_hudi`, :func:`_read_hudi_mor`, :func:`merge_hudi`,
+    :func:`_route_hudi_keys` and :func:`read_hudi_incremental`: one
+    parquet scan of ``files`` with ``basePath`` (hive-style partition
+    columns recover) plus ``_hudi_file``, each row's decoded
+    base-file path.  Under a commit-recorded schema the scan is
+    explicit schema-on-read in the declared column order: files
+    predating an :func:`alter_hudi_table` ADD null-fill the new
+    column PER FILE (footer-sampled inference would take one file's
+    shape for the whole scan) and partition columns keep their
+    declared types (``p=1`` stays a string).  Wild tables without a
+    recorded schema keep inference."""
     from pyspark.sql import functions as F
 
-    have = set(df.columns)
-    exprs = []
-    for f in declared.fields:
-        if f.name in have:
-            exprs.append(F.col(f.name).cast(f.dataType).alias(f.name))
-        elif not f.name.startswith("_hoodie_"):
-            # null-fill added DATA columns only — meta columns are
-            # ride-along (a drop_meta caller already removed them)
-            exprs.append(F.lit(None).cast(f.dataType).alias(f.name))
-    exprs += [F.col(c) for c in df.columns
-              if c not in {f.name for f in declared.fields}
-              and (c in extra or c.startswith("_hoodie_"))]
-    return df.select(*exprs)
+    reader = spark.read.option("basePath", os.path.abspath(table))
+    declared = _declared_schema(snap)
+    if declared is not None:
+        reader = reader.schema(declared)
+    df = reader.parquet(*files)
+    if declared is not None:
+        # the scan puts partition columns last
+        df = df.select(*declared.fieldNames())
+    return df.withColumn("_hudi_file", decoded_file_path(F))
 
 
 def _ord_string(instant: str, ver: int, block: int, row: int) -> str:
@@ -434,7 +427,6 @@ def _read_hudi_mor(
             "hoodie.table.recordkey.fields (pass record_key= to "
             "write_hudi)"
         )
-    base = os.path.abspath(table)
     clean_files: list[str] = []
     dirty_bases: list[tuple[str, str, str]] = []  # path, instant, fid
     log_entries: list[tuple[str, str, int, str]] = []
@@ -447,7 +439,6 @@ def _read_hudi_mor(
             )
         elif sl["base"] is not None:
             clean_files.append(sl["base"][1])
-    reader = spark.read.option("basePath", base)
     # schema: the commit-recorded writer schema when present, else
     # the base files'; log-only tables fall back to ONE driver-side
     # log header parse (metadata-sized)
@@ -460,10 +451,11 @@ def _read_hudi_mor(
             if not f.name.startswith("_hoodie_")
         ])
     elif clean_files or dirty_bases:
-        schema_df = reader.parquet(
-            *(clean_files or [p for p, _, _ in dirty_bases])
+        schema_df = _scan_base(
+            spark, table, snap,
+            clean_files or [p for p, _, _ in dirty_bases],
         )
-        schema_df = schema_df.drop(*[
+        schema_df = schema_df.drop("_hudi_file", *[
             c for c in schema_df.columns if c.startswith("_hoodie_")
         ])
         schema = schema_df.schema
@@ -482,25 +474,7 @@ def _read_hudi_mor(
             for b in blocks if H_SCHEMA in b["headers"]
         )
         schema = to_spark_type(avro_schema)
-    if declared is not None:
-        # explicit schema-on-read for the base-file scans: files
-        # predating an alter_hudi_table ADD null-fill per file
-        # (inference would take one sampled footer's shape)
-        reader = reader.schema(declared)
     cols = [f.name for f in schema.fields]
-
-    def _cast_fill(df):
-        # cast to the declared types; declared columns MISSING from
-        # a piece null-fill (base files predating an
-        # alter_hudi_table ADD)
-        have = set(df.columns)
-        return [
-            F.col(f.name).cast(f.dataType).alias(f.name)
-            if f.name in have
-            else F.lit(None).cast(f.dataType).alias(f.name)
-            for f in schema.fields
-        ]
-
     missing = [k for k in key_fields if k not in cols]
     if missing:
         raise ValueError(f"hudi: record key {missing} not in table")
@@ -514,19 +488,18 @@ def _read_hudi_mor(
         return fallback
 
     if clean_files and not with_fid and not keep_commit_time:
-        cdf0 = reader.parquet(*clean_files)
-        pieces.append(cdf0.select(*_cast_fill(cdf0)))
+        pieces.append(
+            _scan_base(spark, table, snap, clean_files).select(*cols)
+        )
     elif clean_files:
         fid_map = spark.createDataFrame(
             [(p, snap["groups"][p][1],
               snap["slices"][snap["groups"][p]]["base"][0])
              for p in clean_files],
-            "_hudi_path string, _hudi_fid string, _sl_instant string",
+            "_hudi_file string, _hudi_fid string, _sl_instant string",
         )
-        cdf = (
-            reader.parquet(*clean_files)
-            .withColumn("_hudi_path", decoded_file_path(F))
-            .join(F.broadcast(fid_map), "_hudi_path")
+        cdf = _scan_base(spark, table, snap, clean_files).join(
+            F.broadcast(fid_map), "_hudi_file"
         )
         extra = []
         if with_fid:
@@ -536,23 +509,21 @@ def _read_hudi_mor(
                 _base_ct(cdf, F.col("_sl_instant"))
                 .alias("_hoodie_commit_time")
             )
-        pieces.append(cdf.select(*_cast_fill(cdf), *extra))
+        pieces.append(cdf.select(*cols, *extra))
     merged = None
     if log_entries:
         sub: list[DataFrame] = []
         if dirty_bases:
             bmap = spark.createDataFrame(
                 [(p, inst, fid) for p, inst, fid in dirty_bases],
-                "_hudi_path string, _b_instant string, _b_fid string",
+                "_hudi_file string, _b_instant string, _b_fid string",
             )
-            bdf = (
-                reader.parquet(*[p for p, _, _ in dirty_bases])
-                .withColumn("_hudi_path", decoded_file_path(F))
-                .join(F.broadcast(bmap), "_hudi_path")
-            )
+            bdf = _scan_base(
+                spark, table, snap, [p for p, _, _ in dirty_bases]
+            ).join(F.broadcast(bmap), "_hudi_file")
             sub.append(
                 bdf.select(
-                    *_cast_fill(bdf),
+                    *cols,
                     F.lit("U").alias("_op"),
                     # base rows sort below every log row of the same
                     # slice (logs commit at strictly later instants)
@@ -901,17 +872,7 @@ def merge_hudi(
             f for f in _table_props(table)
             .get("hoodie.table.partition.fields", "").split(",") if f
         ]
-    declared = _declared_schema(snap)
-    reader = spark.read.option("basePath", os.path.abspath(table))
-    if declared is not None:
-        # explicit schema-on-read (see read_hudi): files predating
-        # an alter_hudi_table ADD null-fill the new column per file
-        reader = reader.schema(declared)
-    data = reader.parquet(*snap["files"]).withColumn(
-        "_hudi_file", decoded_file_path(F)
-    )
-    if declared is not None:
-        data = _cast_declared(data, declared, extra=["_hudi_file"])
+    data = _scan_base(spark, table, snap, snap["files"])
     table_cols = [
         c for c in data.columns
         if c != "_hudi_file" and not c.startswith("_hoodie_")
@@ -985,8 +946,6 @@ def _route_hudi_keys(
 
     from pyspark.sql import functions as F
 
-    base = os.path.abspath(table)
-    reader = spark.read.option("basePath", base)
     declared = _declared_schema(snap)
     sub: list[DataFrame] = []
     base_files = [
@@ -1001,15 +960,11 @@ def _route_hudi_keys(
     if base_files:
         fid_map = spark.createDataFrame(
             [(p, snap["groups"][p][1]) for p in base_files],
-            "_hudi_path string, _hudi_fid string",
+            "_hudi_file string, _hudi_fid string",
         )
-        df = (
-            reader.parquet(*base_files)
-            .withColumn("_hudi_path", decoded_file_path(F))
-            .join(F.broadcast(fid_map), "_hudi_path")
+        df = _scan_base(spark, table, snap, base_files).join(
+            F.broadcast(fid_map), "_hudi_file"
         )
-        if declared is not None:
-            df = _cast_declared(df, declared, extra=["_hudi_fid"])
         sub.append(
             df.select(
                 _key_expr(F, key_fields).alias("_key"), "_hudi_fid"
@@ -1024,8 +979,7 @@ def _route_hudi_keys(
                 if not f.name.startswith("_hoodie_")
             ])
         elif base_files:
-            df = reader.parquet(*base_files)
-            schema = df.drop(*[
+            schema = df.drop("_hudi_file", "_hudi_fid", *[
                 c for c in df.columns if c.startswith("_hoodie_")
             ]).schema
         else:
@@ -1574,40 +1528,13 @@ def read_hudi_incremental(
 
     snap = hudi_snapshot(table, as_of=end_instant)
     begin = str(begin_instant)
-    if snap["type"] == "MERGE_ON_READ":
-        dirty = {
-            k: sl for k, sl in snap["slices"].items()
-            if (sl["base"] is not None and sl["base"][0] > begin)
-            or any(inst > begin for inst, _, _ in sl["logs"])
-        }
+    dirty = {
+        k: sl for k, sl in snap["slices"].items()
+        if (sl["base"] is not None and sl["base"][0] > begin)
+        or any(inst > begin for inst, _, _ in sl["logs"])
+    }
+    if not dirty:
         declared = _declared_schema(snap)
-        if not dirty:
-            if declared is None:
-                raise ValueError(
-                    "hudi: empty incremental range on a table "
-                    "without a recorded schema"
-                )
-            from pyspark.sql import types as T
-
-            fields = [f for f in declared.fields
-                      if not f.name.startswith("_hoodie_")]
-            fields.append(
-                T.StructField("_hoodie_commit_time", T.StringType())
-            )
-            return spark.createDataFrame([], T.StructType(fields))
-        sub = dict(snap)
-        sub["slices"] = dirty
-        df = _read_hudi_mor(spark, table, sub,
-                            keep_commit_time=True)
-        return df.filter(F.col("_hoodie_commit_time") > begin)
-
-    cand = [
-        (sl["base"][1], sl["base"][0])
-        for sl in snap["slices"].values()
-        if sl["base"] is not None and sl["base"][0] > begin
-    ]
-    declared = _declared_schema(snap)
-    if not cand:
         if declared is None:
             raise ValueError(
                 "hudi: empty incremental range on a table without "
@@ -1621,27 +1548,24 @@ def read_hudi_incremental(
             T.StructField("_hoodie_commit_time", T.StringType())
         )
         return spark.createDataFrame([], T.StructType(fields))
-    df = spark.read.option(
-        "basePath", os.path.abspath(table)
-    ).parquet(*[p for p, _ in cand])
+    if snap["type"] == "MERGE_ON_READ":
+        sub = dict(snap)
+        sub["slices"] = dirty
+        df = _read_hudi_mor(spark, table, sub, keep_commit_time=True)
+        return df.filter(F.col("_hoodie_commit_time") > begin)
+    cand = [(sl["base"][1], sl["base"][0]) for sl in dirty.values()]
+    df = _scan_base(spark, table, snap, [p for p, _ in cand])
     if "_hoodie_commit_time" not in df.columns:
+        # files written before the per-row stamp: their file instant
         imap = spark.createDataFrame(
-            list(cand), "_hudi_path string, _hoodie_commit_time string"
+            cand, "_hudi_file string, _hoodie_commit_time string"
         )
-        df = (
-            df.withColumn("_hudi_path", decoded_file_path(F))
-            .join(F.broadcast(imap), "_hudi_path")
-            .drop("_hudi_path")
-        )
-    out_cols = [c for c in df.columns
-                if not c.startswith("_hoodie_")
-                or c == "_hoodie_commit_time"]
-    df = df.select(*out_cols)
-    if declared is not None:
-        df = _cast_declared(df, declared, extra=())
-        df = df.select(*[
-            c for c in df.columns
-            if not c.startswith("_hoodie_")
-            or c == "_hoodie_commit_time"
-        ])
+        df = df.join(F.broadcast(imap), "_hudi_file")
+    df = df.select(
+        *[c for c in df.columns
+          if not c.startswith("_hoodie_") and c != "_hudi_file"],
+        "_hoodie_commit_time",
+    )
+    # a plain column filter: parquet pushdown skips row groups whose
+    # stamps all predate the range
     return df.filter(F.col("_hoodie_commit_time") > begin)

@@ -374,10 +374,6 @@ def _gate_external_evolution(meta: dict) -> None:
         )
 
 
-def _is_evolved(snap: dict) -> bool:
-    return len(snap.get("schema_log") or []) > 1
-
-
 def _row_deletes_live(snap: dict) -> bool:
     """Any v2/v3 row-level deletes (position files, equality files,
     or v3 deletion vectors) live in this snapshot?"""
@@ -450,93 +446,149 @@ def read_iceberg(
                 for k, v in want.items()
             )
         ]
+    seq = snap.get("sequence_number")
+    if seq is not None and snap["snapshot_id"] != snap["current_snapshot_id"]:
+        # time travel (an older snapshot, or a branch/tag head) reads
+        # under the schema epoch in force at that snapshot's sequence
+        # number — the spec's per-snapshot schema-id semantics; the
+        # current snapshot reads the current schema (evolution is
+        # visible immediately)
+        snap["schema"] = {"type": "struct",
+                          "fields": _schema_at(snap, seq)}
+    return _epoch_scan(spark, table, snap, apply_deletes=True)
+
+
+def _schema_at(snap: dict, seq: int) -> list[dict]:
+    """The schema fields in force at data sequence number ``seq``:
+    the last schema-log epoch starting at or before it, or the
+    snapshot's schema on a table that never evolved."""
+    fields = (snap["schema"] or {}).get("fields", [])
+    for e in sorted(
+        snap.get("schema_log") or [], key=lambda e: int(e["seq"])
+    ):
+        if int(e["seq"]) <= int(seq):
+            fields = e["fields"]
+    return fields
+
+
+def _epoch_scan(
+    spark: SparkSession, table: str, snap: dict,
+    with_path: bool = False, apply_deletes: bool = False,
+    keep_pos: bool = False,
+) -> DataFrame:
+    """The one live-row scan of ``snap["files"]`` — every reading
+    verb goes through it: :func:`read_iceberg`, MERGE, UPDATE and
+    merge-on-read DELETE, both compactions, the changelog and the
+    incremental scan.  Columns resolve by FIELD ID: the files group
+    by the schema EPOCH in force at each file's data sequence number
+    (a table whose schema never changed is one epoch), each group
+    scans once, historical names alias to ``snap["schema"]``'s names
+    and fields an epoch predates null-fill, then the groups union —
+    so the result is always the table columns in schema order, with
+    non-identity transform partition directories left out (exactly
+    like iceberg-spark).  Epoch count = number of schema changes — a
+    handful, so the plan stays a few parquet scans.
+
+    ``apply_deletes`` folds the snapshot's v2/v3 row-level deletes in
+    AFTER the epoch aliasing — equality deletes resolve by field id
+    against the current schema, so they apply correctly even to
+    pre-rename files.  ``with_path`` appends ``_ice_file`` (each
+    row's decoded data-file path — the copy-on-write routing
+    handle); ``keep_pos`` appends ``_ice_file`` and ``_ice_pos`` (the
+    row's position in that file — the merge-on-read DELETE
+    handle)."""
+    from functools import reduce
+
+    from pyspark.sql import functions as F
+
+    base = os.path.abspath(table)
+    wants_deletes = bool(apply_deletes and _row_deletes_live(snap))
+    keep = (["_ice_file"] if with_path or keep_pos else []) + (
+        ["_ice_pos"] if keep_pos else []
+    )
     if not snap["files"]:
         # empty snapshot OR a filter matching nothing: iceberg-spark
         # returns an empty relation, so derive the Spark schema from
         # the table metadata instead of erroring
         return spark.createDataFrame(
             [], _spark_schema_from_iceberg(snap["schema"])
-        )
-    if _is_evolved(snap):
-        # schema-evolved table: field-id resolution via per-epoch
-        # scan groups; live row-level deletes fold in after the
-        # epoch aliasing (equality columns resolve by field id
-        # against the CURRENT schema, so they hit pre-rename files
-        # correctly)
-        return _epoch_scan(
-            spark, table, snap, _load_table_metadata(table),
-            apply_deletes=True,
-        )
-    return _scan_snapshot(spark, table, snap)
-
-
-def _scan_snapshot(spark: SparkSession, table: str, snap: dict,
-                   keep_hidden: bool = False,
-                   with_path: bool = False) -> DataFrame:
-    """The delete-applied distributed scan of ``snap["files"]`` —
-    shared by :func:`read_iceberg` (whole snapshot),
-    :func:`merge_iceberg`, :func:`compact_iceberg_deletes` and
-    :func:`optimize_iceberg` (affected-file subsets).
-    ``keep_hidden=True`` keeps the non-identity transform partition
-    columns the hive-dir scan reconstructs (the rewrite paths need
-    them for ``partitionBy`` write-back; readers never see them).
-    ``with_path=True`` appends ``_ice_file`` (each row's decoded
-    data-file path — the MERGE routing handle)."""
-    from pyspark.sql import functions as F
-
-    base = os.path.abspath(table)
-    reader = spark.read.option("basePath", base)
-    if not snap.get("partition_spec"):
-        # unpartitioned tables scan under the METADATA schema —
-        # exact (the writer recorded it from the written DataFrame)
-        # and skips the driver-side footer-sampling job every
-        # schema-inferring read launches; partitioned tables keep
-        # inference (hive-dir transform columns are outside the
-        # logical schema).
-        try:
-            reader = reader.schema(
-                _spark_schema_from_iceberg(snap["schema"])
-            )
-        except ValueError:
-            pass  # types outside the subset: infer as before
-    # hidden partitioning: non-identity transform fields exist only
-    # as directory keys (the source columns live inside the data
-    # files), so drop what the hive-dir scan reconstructs — the
-    # logical schema never contains them, exactly like iceberg-spark
-    hidden = [] if keep_hidden else [
-        e["name"] for e in snap.get("partition_spec") or []
-        if e.get("transform") not in (None, "identity")
-    ]
-    if not _row_deletes_live(snap):
-        df = reader.parquet(*snap["files"])
-        if with_path:
-            df = df.withColumn("_ice_file", decoded_file_path(F))
-        return df.drop(*hidden) if hidden else df
-    data = reader.parquet(*snap["files"]).withColumns({
-        "_ice_path": decoded_file_path(F),
-        "_ice_pos": F.col("_metadata.row_index"),
-    })
-    # per-file sequence numbers ride in on a broadcast map join
-    seq_df = spark.createDataFrame(
-        [(p, int(s)) for p, s in snap["data_seqs"].items()],
-        "_ice_path string, _ice_seq long",
+        ).withColumns({
+            c: F.lit(None).cast("long" if c == "_ice_pos" else "string")
+            for c in keep
+        })
+    cur_fields = (snap["schema"] or {}).get("fields", [])
+    log = sorted(
+        snap.get("schema_log") or [], key=lambda e: int(e["seq"])
     )
-    data = data.join(F.broadcast(seq_df), "_ice_path", "left")
-    data = _apply_row_deletes(spark, base, data, snap)
-    if with_path:
-        data = data.withColumn("_ice_file", F.col("_ice_path"))
-    return data.drop("_ice_path", "_ice_pos", "_ice_seq", *hidden)
+    groups: dict[int, list[str]] = {}
+    for p in snap["files"]:
+        seq = int(snap["data_seqs"].get(p, 0))
+        ei = 0
+        for i, e in enumerate(log):
+            if int(e["seq"]) <= seq:
+                ei = i
+        groups.setdefault(ei, []).append(p)
+    pieces = []
+    for ei, files in sorted(groups.items()):
+        efields = log[ei]["fields"] if log else cur_fields
+        name_by_id = {int(f["id"]): f["name"] for f in efields}
+        reader = spark.read.option("basePath", base)
+        if not snap.get("partition_spec"):
+            # unpartitioned tables scan under the epoch's schema —
+            # exact for this file group, and it skips the driver-side
+            # footer-sampling job every schema-inferring read
+            # launches; partitioned tables keep inference (hive-dir
+            # transform columns are outside the logical schema)
+            try:
+                reader = reader.schema(
+                    _spark_schema_from_iceberg({"fields": efields})
+                )
+            except ValueError:
+                pass  # types outside the subset: infer
+        df = reader.parquet(*files)
+        sel = []
+        for f in cur_fields:
+            fid, name = int(f["id"]), f["name"]
+            spark_t = _spark_type(f["type"])
+            old = name_by_id.get(fid)
+            if old is None or old not in df.columns:
+                sel.append(
+                    F.lit(None).cast(spark_t or f["type"]).alias(name)
+                )
+            elif spark_t is None:  # outside the subset: as read
+                sel.append(F.col(old).alias(name))
+            else:
+                # also types identity partition columns the hive
+                # dirs inferred (``p=1`` reads back int)
+                sel.append(F.col(old).cast(spark_t).alias(name))
+        if keep or wants_deletes:
+            sel.append(decoded_file_path(F).alias("_ice_file"))
+        if keep_pos or wants_deletes:
+            sel.append(F.col("_metadata.row_index").alias("_ice_pos"))
+        pieces.append(df.select(*sel))
+    out = reduce(DataFrame.unionByName, pieces)
+    if wants_deletes:
+        # per-file sequence numbers ride in on a broadcast map join
+        seq_df = spark.createDataFrame(
+            [(p, int(s)) for p, s in snap["data_seqs"].items()],
+            "_ice_file string, _ice_seq long",
+        )
+        out = out.join(F.broadcast(seq_df), "_ice_file", "left")
+        out = _apply_row_deletes(spark, base, out, snap).drop(
+            "_ice_seq", *[c for c in ("_ice_file", "_ice_pos")
+                          if c not in keep]
+        )
+    return out
 
 
 def _apply_row_deletes(spark: SparkSession, base: str,
                        data: DataFrame, snap: dict) -> DataFrame:
-    """Anti-join the v2 row-level delete files onto ``data``, which
-    must carry ``_ice_path`` (decoded absolute file path),
+    """Anti-join the v2/v3 row-level deletes onto ``data``, which
+    must carry ``_ice_file`` (decoded absolute file path),
     ``_ice_pos`` (row index) and ``_ice_seq`` (data sequence
     number).  Equality-delete columns resolve by FIELD ID against
-    the snapshot's CURRENT schema — callers projecting historical
-    epochs must alias to current names first (``_epoch_scan`` does).
-    Shared by :func:`_scan_snapshot` and the evolved-table scan."""
+    ``snap["schema"]``, the names :func:`_epoch_scan` aliases every
+    epoch to."""
     from functools import reduce
 
     from pyspark.sql import functions as F
@@ -582,7 +634,7 @@ def _apply_row_deletes(spark: SparkSession, base: str,
             _expand, "_dv_ref string, _dv_pos long, _dv_seq long"
         )
         cond = (
-            (F.col("_ice_path") == F.col("_dv_ref"))
+            (F.col("_ice_file") == F.col("_dv_ref"))
             & (F.col("_ice_pos") == F.col("_dv_pos"))
             & (F.col("_dv_seq") >= F.col("_ice_seq"))
         )
@@ -601,7 +653,7 @@ def _apply_row_deletes(spark: SparkSession, base: str,
         ]
         dels = reduce(DataFrame.unionByName, parts)
         cond = (
-            (F.col("_ice_path") == F.col("_pd_path"))
+            (F.col("_ice_file") == F.col("_pd_path"))
             & (F.col("_ice_pos") == F.col("_pd_pos"))
             & (F.col("_pd_seq") >= F.col("_ice_seq"))
         )
@@ -611,21 +663,6 @@ def _apply_row_deletes(spark: SparkSession, base: str,
             int(f["id"]): f["name"]
             for f in (snap["schema"] or {}).get("fields", [])
         }
-        # a delete FILE's columns carry its WRITE-TIME names; on an
-        # evolved table resolve them through the schema-log epoch in
-        # force at the delete's sequence number, then alias to the
-        # CURRENT names by field id (exactly how data files resolve)
-        log = sorted(
-            snap.get("schema_log") or [], key=lambda e: int(e["seq"])
-        )
-
-        def _names_at(seq: int) -> dict[int, str]:
-            fields = (snap["schema"] or {}).get("fields", [])
-            for e in log:
-                if int(e["seq"]) <= int(seq):
-                    fields = e["fields"]
-            return {int(f["id"]): f["name"] for f in fields}
-
         # group delete files by their equality-column set
         groups: dict[tuple[int, ...], list[tuple[str, int]]] = {}
         for p, s, ids in eq_dels:
@@ -639,7 +676,13 @@ def _apply_row_deletes(spark: SparkSession, base: str,
             cols = [name_by_id[i] for i in ids]
             parts = []
             for p, s in plist:
-                old_names = _names_at(s) if log else name_by_id
+                # a delete FILE's columns carry its WRITE-TIME names:
+                # resolve them through the schema epoch in force at
+                # its sequence number, then alias to the CURRENT
+                # names by field id (exactly how data files resolve)
+                old_names = {
+                    int(f["id"]): f["name"] for f in _schema_at(snap, s)
+                }
                 bad = [i for i in ids if i not in old_names]
                 if bad:
                     raise ValueError(
@@ -691,23 +734,26 @@ def _spark_schema_from_iceberg(schema: dict | None):
         return StructType([])
     parts = []
     for f in fields:
-        t = f["type"]
-        if isinstance(t, str) and t.startswith("decimal"):
-            st = t
-        elif isinstance(t, str) and t in _ICE_TO_SPARK:
-            st = _ICE_TO_SPARK[t]
-        else:
+        st = _spark_type(f["type"])
+        if st is None:
             raise ValueError(
-                f"iceberg: column {f['name']!r} type {t!r} not in "
-                "the readable subset for empty-relation schemas"
+                f"iceberg: column {f['name']!r} type {f['type']!r} "
+                "not in the readable subset for empty-relation schemas"
             )
         parts.append(f"`{f['name']}` {st}")
     return _parse_datatype_string(", ".join(parts))
 
 
+def _spark_type(t) -> str | None:
+    """Iceberg type -> Spark type string; None outside the subset."""
+    if isinstance(t, str) and t.startswith("decimal"):
+        return t
+    return _ICE_TO_SPARK.get(t) if isinstance(t, str) else None
+
+
 def _cast_declared_types(df: DataFrame, snap: dict) -> DataFrame:
     """:func:`cow.cast_declared` under the snapshot's schema (the
-    explicit schema-on-read in :func:`_scan_snapshot` trusts it);
+    explicit schema-on-read in :func:`_epoch_scan` trusts it);
     tables with types outside the readable subset are left
     unchanged."""
     try:
@@ -1338,17 +1384,6 @@ def _with_transform_values(df: DataFrame, snap: dict) -> DataFrame:
     return df
 
 
-def _path_scan(spark: SparkSession, table: str, snap: dict) -> DataFrame:
-    """The copy-on-write verbs' scan: delete-applied, with the
-    ``_ice_file`` routing column (per-epoch on evolved tables)."""
-    if _is_evolved(snap):
-        return _epoch_scan(
-            spark, table, snap, _load_table_metadata(table),
-            with_path=True, apply_deletes=True,
-        )
-    return _scan_snapshot(spark, table, snap, with_path=True)
-
-
 def update_iceberg(
     spark: SparkSession, table: str, condition: str,
     assignments: dict[str, str],
@@ -1370,8 +1405,11 @@ def update_iceberg(
     cow.check_set_columns("iceberg", assignments, table_cols)
     if not snap["files"]:
         return int(snap["snapshot_id"] or 0)
-    u = cow.update(_path_scan(spark, table, snap), "_ice_file",
-                   table_cols, condition, assignments)
+    u = cow.update(
+        _epoch_scan(spark, table, snap, with_path=True,
+                    apply_deletes=True),
+        "_ice_file", table_cols, condition, assignments,
+    )
     if u is None:
         return int(snap["snapshot_id"] or 0)
     part_cols = [
@@ -1446,9 +1484,13 @@ def merge_iceberg(
     # rewrite folds those deletes in (the rewritten files take a new
     # data sequence number, putting them out of the old deletes'
     # reach); deletes keep carrying for untouched files
-    m = cow.merge(source, _path_scan(spark, table, snap), "_ice_file",
-                  table_cols, on, when_matched, when_not_matched,
-                  broadcast_source)
+    m = cow.merge(
+        source,
+        _epoch_scan(spark, table, snap, with_path=True,
+                    apply_deletes=True),
+        "_ice_file", table_cols, on, when_matched, when_not_matched,
+        broadcast_source,
+    )
     if m is None:
         return current  # no-op merge
     with m.staged(
@@ -1483,53 +1525,31 @@ def delete_from_iceberg(
     union — the spec's one-DV-per-file rule) and promotes the table
     to format-version 3.  Returns the new snapshot id.
 
-    Scale shape: ONE distributed delete-applied scan evaluates the
-    predicate (already-deleted rows are invisible and never
-    re-match) and reduces to (file, position) pairs; the driver
-    holds only the matched positions — churn-sized, same ceiling as
-    ``delta.delete_delta``.  A predicate matching most of the table
-    should be a rewrite instead.  :func:`compact_iceberg_deletes`
-    folds the accumulated deletes back into data files.
+    Scale shape: ONE distributed delete-applied scan — the reader's
+    own :func:`_epoch_scan`, keeping its (file, row position) handle
+    — evaluates the predicate (already-deleted rows are invisible
+    and never re-match) and reduces to (file, position) pairs; the
+    driver holds only the matched positions — churn-sized, same
+    ceiling as ``delta.delete_delta``.  A predicate matching most of
+    the table should be a rewrite instead.
+    :func:`compact_iceberg_deletes` folds the accumulated deletes
+    back into data files.
 
     Schema-evolved tables compose: the predicate sees CURRENT
-    logical names via the per-epoch field-id scan, and the delete
-    metadata still addresses physical (file, position) pairs."""
+    logical names (the scan resolves columns by field id), and the
+    delete metadata still addresses physical (file, position)
+    pairs."""
     from pyspark.sql import functions as F
 
     snap = iceberg_snapshot(table)
     if not snap["files"]:
         return int(snap["snapshot_id"] or 0)
-    base = os.path.abspath(table)
-    if _is_evolved(snap):
-        data = _epoch_scan(
-            spark, table, snap, _load_table_metadata(table),
-            apply_deletes=True, keep_pos=True,
-        )
-    else:
-        reader = spark.read.option("basePath", base)
-        if not snap.get("partition_spec"):
-            try:  # explicit schema: skip inference (see _scan_snapshot)
-                reader = reader.schema(
-                    _spark_schema_from_iceberg(snap["schema"])
-                )
-            except ValueError:
-                pass
-        data = reader.parquet(
-            *snap["files"]
-        ).withColumns({
-            "_ice_path": decoded_file_path(F),
-            "_ice_pos": F.col("_metadata.row_index"),
-        })
-        seq_df = spark.createDataFrame(
-            [(p, int(s)) for p, s in snap["data_seqs"].items()],
-            "_ice_path string, _ice_seq long",
-        )
-        data = data.join(F.broadcast(seq_df), "_ice_path", "left")
-        data = _apply_row_deletes(spark, base, data, snap)
+    data = _epoch_scan(spark, table, snap, apply_deletes=True,
+                       keep_pos=True)
     per_file = {
-        r["_ice_path"]: sorted(int(x) for x in r["pos"])
+        r["_ice_file"]: sorted(int(x) for x in r["pos"])
         for r in data.filter(F.expr(condition))
-        .groupBy("_ice_path")
+        .groupBy("_ice_file")
         .agg(F.collect_list("_ice_pos").alias("pos"))
         .collect()
     }
@@ -1584,25 +1604,17 @@ def compact_iceberg_deletes(spark: SparkSession, table: str) -> int:
 
     The affected-file selection is metadata-only (sequence numbers);
     the rewrite is ONE distributed delete-applied scan of only those
-    files (the same `_scan_snapshot` the reader uses), staged like
+    files (the same :func:`_epoch_scan` the reader uses), staged like
     every other writer here (shared :func:`_rewrite_files_batch`).
-    Transform-partitioned tables
-    compose — the transform directory values recover from the hive
-    dirs (rows never move partitions in a compaction) and
-    schema-evolved tables recompute them from the epoch projection.
-    The orphaned delete parquets are reclaimed by expire +
-    remove_iceberg_orphans."""
+    Transform-partitioned tables compose — the transform values
+    recompute from their source columns, so rows land back in their
+    own transform directories.  The orphaned delete parquets are
+    reclaimed by expire + remove_iceberg_orphans."""
     snap = iceberg_snapshot(table)
     pos, eq = snap["position_deletes"], snap["equality_deletes"]
     dvs = snap.get("dv_deletes") or []
     if not pos and not eq and not dvs:
         return int(snap["snapshot_id"] or 0)
-    # schema-evolved tables rewrite through the per-epoch field-id
-    # projection with the deletes folded in — the compaction doubles
-    # as schema materialization for the rewritten files
-    evolved_meta = (
-        _load_table_metadata(table) if _is_evolved(snap) else None
-    )
     spec = snap.get("partition_spec") or []
     part_fields = [e["name"] for e in spec]
     max_seq = max(
@@ -1617,7 +1629,6 @@ def compact_iceberg_deletes(spark: SparkSession, table: str) -> int:
     if victims:
         data_files = _rewrite_files_batch(
             spark, table, snap, victims, part_fields,
-            has_deletes=True, evolved_meta=evolved_meta,
         )
     snapshot_id = _next_snapshot_id(table)
     append_iceberg_snapshot(
@@ -1640,7 +1651,7 @@ def optimize_iceberg(
     nothing qualified).
 
     Tables carrying v2 row-level delete files rewrite their victims
-    through the delete-applied :func:`_scan_snapshot` (so rows
+    through the delete-applied :func:`_epoch_scan` (so rows
     deleted by position/equality delete files can NOT reappear in
     the compacted output — the rewritten files get a new data
     sequence number, putting them out of reach of the old deletes,
@@ -1659,21 +1670,14 @@ def optimize_iceberg(
     commit.
 
     Scale shape: per batch, ONE distributed job — the victims scan
-    with ``basePath`` (so identity partition columns and transform
-    directory values recover as columns), coalesced to bin-pack,
-    re-written with ``partitionBy`` so every row lands back in its
-    own partition directory; the driver then swaps manifest entries
-    (remove victims, add outputs), pure metadata.  File sizes come
+    (transform partition values recomputed from their source
+    columns), coalesced to bin-pack, re-written with ``partitionBy``
+    so every row lands back in its own partition directory; the
+    driver then swaps manifest entries (remove victims, add
+    outputs), pure metadata.  File sizes come
     from the manifests (carried across snapshots), so victim
     selection is metadata-only."""
     snap = iceberg_snapshot(table)
-    evolved_meta = None
-    if _is_evolved(snap):
-        # evolved tables rewrite through the per-epoch projection —
-        # compaction doubles as schema MATERIALIZATION (rewritten
-        # files land in the current schema's epoch); live row-level
-        # deletes fold into the same scan (apply_deletes)
-        evolved_meta = _load_table_metadata(table)
     victims = [
         p for p in snap["files"]
         if int(snap["file_sizes"].get(p, 0)) < min_file_size
@@ -1682,7 +1686,6 @@ def optimize_iceberg(
         return snap["snapshot_id"] or 0
     spec = snap.get("partition_spec") or []
     part_fields = [e["name"] for e in spec]
-    has_deletes = _row_deletes_live(snap)
     if max_commits is None or max_commits <= 1:
         batches = [victims]
     else:
@@ -1710,8 +1713,7 @@ def optimize_iceberg(
     snapshot_id = int(snap["snapshot_id"] or 0)
     for batch in batches:
         data_files = _rewrite_files_batch(
-            spark, table, snap, batch, part_fields, has_deletes,
-            evolved_meta=evolved_meta,
+            spark, table, snap, batch, part_fields
         )
         snapshot_id = _next_snapshot_id(table)
         append_iceberg_snapshot(
@@ -1726,23 +1728,19 @@ def optimize_iceberg(
 
 def _rewrite_files_batch(
     spark: SparkSession, table: str, snap: dict,
-    victims: list[str], part_fields: list[str], has_deletes: bool,
-    evolved_meta: dict | None = None,
+    victims: list[str], part_fields: list[str],
 ) -> list[dict]:
-    """One compaction batch: delete-applied scan of ``victims``,
-    bin-packed staged write, promote-by-rename; returns the manifest
-    entries for the new files.  With ``evolved_meta`` (schema-evolved
-    tables) the victims project through :func:`_epoch_scan` and
-    transform partition values recompute for write-back."""
+    """One compaction batch: the delete-applied :func:`_epoch_scan`
+    of ``victims`` (so a compaction doubles as schema
+    materialization on an evolved table), transform partition values
+    recomputed for write-back like merge's rewrite, bin-packed staged
+    write, promote-by-rename; returns the manifest entries for the
+    new files."""
     sub = dict(snap)
     sub["files"] = victims
-    if evolved_meta is not None:
-        rows = _epoch_scan(spark, table, sub, evolved_meta,
-                           apply_deletes=has_deletes)
-        # transform partition values recompute like merge's rewrite
-        rows = _with_transform_values(rows, snap)
-    else:
-        rows = _scan_snapshot(spark, table, sub, keep_hidden=True)
+    rows = _with_transform_values(
+        _epoch_scan(spark, table, sub, apply_deletes=True), snap
+    )
     rows = rows.coalesce(max(1, len(victims) // 8))
     return _stage_data_files(rows, table, part_fields)
 
@@ -1769,25 +1767,11 @@ def read_iceberg_incremental(
             f"rewritten files ({len(removed)}); only append "
             "snapshots are incrementally consumable"
         )
-    new = [p for p in cur["files"] if p not in set(old["files"])]
-    hidden = [
-        e["name"] for e in cur.get("partition_spec") or []
-        if e.get("transform") not in (None, "identity")
-    ]
-    if not new:
-        return spark.createDataFrame(
-            [], _spark_schema_from_iceberg(cur["schema"])
-        )
-    reader = spark.read.option("basePath", os.path.abspath(table))
-    if not cur.get("partition_spec"):
-        try:  # explicit schema: skip inference (see _scan_snapshot)
-            reader = reader.schema(
-                _spark_schema_from_iceberg(cur["schema"])
-            )
-        except ValueError:
-            pass
-    df = reader.parquet(*new)
-    return df.drop(*hidden) if hidden else df
+    # row-level deletes are not applied: the scan reports the rows
+    # the range's appends wrote
+    before = set(old["files"])
+    cur["files"] = [p for p in cur["files"] if p not in before]
+    return _epoch_scan(spark, table, cur)
 
 
 def iceberg_partitions_df(
@@ -2404,119 +2388,6 @@ def alter_iceberg_table(
     _write_next_metadata(table, meta)
 
 
-def _epoch_scan(
-    spark: SparkSession, table: str, snap: dict, meta: dict,
-    with_path: bool = False, apply_deletes: bool = False,
-    keep_pos: bool = False,
-) -> DataFrame:
-    """Field-id-resolved scan of an evolved table: group the
-    snapshot's files by the schema EPOCH in force at each file's
-    data sequence number, scan each group once, alias historical
-    names to current names by field id and null-fill fields the
-    epoch predates, then union.  Epoch count = number of schema
-    changes — a handful, so the plan stays a few parquet scans.
-    ``with_path`` threads the decoded ``_metadata.file_path`` (the
-    MERGE routing handle).  ``apply_deletes`` folds the snapshot's
-    v2 row-level delete files in AFTER the epoch aliasing — equality
-    deletes resolve by field id against the current schema, so they
-    apply correctly even to pre-rename files (the delete-compaction
-    path for evolved tables).  ``keep_pos`` keeps the
-    ``_ice_path``/``_ice_pos`` handles on the result (the
-    row-position discovery handle for merge-on-read DELETE)."""
-    from functools import reduce
-
-    from pyspark.sql import functions as F
-
-    base = os.path.abspath(table)
-    wants_deletes = bool(apply_deletes and _row_deletes_live(snap))
-    cur_fields = (meta.get("schema") or {}).get("fields", [])
-    log = sorted(
-        meta.get("schema-log") or [], key=lambda e: int(e["seq"])
-    )
-    # snapshot-scoped schemas: reading the CURRENT snapshot uses the
-    # current schema (evolution is visible immediately); TIME TRAVEL
-    # (an older snapshot, or a branch/tag head) projects the epoch
-    # in force at that snapshot's sequence number — the spec's
-    # per-snapshot schema-id semantics
-    sid = snap.get("snapshot_id")
-    cur_id = snap.get("current_snapshot_id")
-    snap_seq = snap.get("sequence_number")
-    if (log and sid is not None and cur_id is not None
-            and int(sid) != int(cur_id) and snap_seq is not None):
-        for e in log:
-            if int(e["seq"]) <= int(snap_seq):
-                cur_fields = e["fields"]
-    hidden = [
-        e["name"] for e in snap.get("partition_spec") or []
-        if e.get("transform") not in (None, "identity")
-    ]
-    groups: dict[int, list[str]] = {}
-    for p in snap["files"]:
-        seq = int(snap["data_seqs"].get(p, 0))
-        ei = 0
-        for i, e in enumerate(log):
-            if int(e["seq"]) <= seq:
-                ei = i
-        groups.setdefault(ei, []).append(p)
-    pieces = []
-    for ei, files in sorted(groups.items()):
-        efields = log[ei]["fields"] if log else cur_fields
-        name_by_id = {int(f["id"]): f["name"] for f in efields}
-        reader = spark.read.option("basePath", base)
-        if not snap.get("partition_spec"):
-            try:  # epoch schema is exact for this file group: skip
-                # inference (see _scan_snapshot)
-                reader = reader.schema(
-                    _spark_schema_from_iceberg({"fields": efields})
-                )
-            except ValueError:
-                pass
-        df = reader.parquet(*files)
-        sel = []
-        for f in cur_fields:
-            fid, name = int(f["id"]), f["name"]
-            spark_t = _ICE_TO_SPARK.get(f["type"], f["type"])
-            old = name_by_id.get(fid)
-            if old is not None and old in df.columns:
-                sel.append(F.col(old).cast(spark_t).alias(name))
-            else:
-                sel.append(F.lit(None).cast(spark_t).alias(name))
-        if with_path:
-            sel.append(decoded_file_path(F).alias("_ice_file"))
-        if wants_deletes or keep_pos:
-            sel.append(decoded_file_path(F).alias("_ice_path"))
-            sel.append(
-                F.col("_metadata.row_index").alias("_ice_pos")
-            )
-        pieces.append(df.select(*sel))
-    if not pieces:
-        from pyspark.sql import types as T
-
-        out = spark.createDataFrame([], T.StructType([
-            T.StructField(
-                f["name"],
-                T._parse_datatype_string(
-                    _ICE_TO_SPARK.get(f["type"], f["type"])
-                ),
-            )
-            for f in cur_fields
-        ]))
-        return out
-    out = reduce(DataFrame.unionByName, pieces)
-    if wants_deletes:
-        seq_df = spark.createDataFrame(
-            [(p, int(s)) for p, s in snap["data_seqs"].items()],
-            "_ice_path string, _ice_seq long",
-        )
-        out = out.join(F.broadcast(seq_df), "_ice_path", "left")
-        out = _apply_row_deletes(spark, base, out, snap)
-        out = out.drop(
-            "_ice_seq",
-            *([] if keep_pos else ["_ice_path", "_ice_pos"]),
-        )
-    return out.drop(*hidden) if hidden else out
-
-
 def iceberg_changelog(
     spark: SparkSession,
     table: str,
@@ -2587,9 +2458,9 @@ def iceberg_changelog(
         return s
 
     def _scan(snap: dict, files: list[str]) -> DataFrame:
-        return _scan_snapshot(
-            spark, table, _restricted(snap, files)
-        ).select(*cols)
+        return _epoch_scan(
+            spark, table, _restricted(snap, files), apply_deletes=True
+        )
 
     def _delete_state(snap: dict):
         return (
