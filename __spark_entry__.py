@@ -4170,8 +4170,9 @@ def q_decompress(spark: SparkSession, sf_dir: str) -> DataFrame:
     (multimodal.decompress_media): every doc's text is compressed
     with a rotating codec (gzip / bzip2 / xz / zlib / zstd /
     passthrough / LZ4 frame / Snappy framing by doc_id%8 — every
-    stdlib magic plus the repo's pure-python zstd, lz4 and snappy
-    codecs and the no-magic fallthrough), then sniffed and
+    stdlib magic, the repo's pure-python zstd codec, pyarrow's LZ4
+    frames, the repo's Snappy framing over pyarrow's raw blocks and
+    the no-magic fallthrough), then sniffed and
     decompressed back.  The text round-trips exactly and the codec
     label replays the rotation under the oracle."""
     from vtk_reserves_spark.operators.multimodal import (

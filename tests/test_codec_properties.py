@@ -643,27 +643,33 @@ def test_email_roundtrip_arbitrary_text(subject, body, enc, multipart):
 
 
 @settings(max_examples=40, deadline=None)
-@given(data=st.binary(max_size=20000))
-def test_lz4_frame_roundtrip_property(data):
-    from vtk_reserves_spark.sources.lz4 import (
-        compress_frame, decompress_frame,
-    )
+@given(data=st.binary(max_size=20000), copies=st.integers(1, 10))
+def test_lz4_frame_roundtrip_property(data, copies):
+    """pyarrow's frames (linked 64 KB blocks) decode back, whole and
+    concatenated."""
+    import pyarrow as pa
 
-    assert decompress_frame(compress_frame(data)) == data
-    assert decompress_frame(
-        compress_frame(data, block_checksums=True, block_size=1021)
-    ) == data
+    from vtk_reserves_spark.sources.lz4 import decompress_frame
+
+    frame = pa.Codec("lz4").compress(data * copies, asbytes=True)
+    assert decompress_frame(frame) == data * copies
+    assert decompress_frame(frame + frame) == data * copies * 2
 
 
 @settings(max_examples=40, deadline=None)
-@given(data=st.binary(max_size=20000))
-def test_snappy_roundtrip_property(data):
+@given(data=st.binary(max_size=20000), tail=st.binary(max_size=200))
+def test_snappy_roundtrip_property(data, tail):
+    import pyarrow as pa
+
     from vtk_reserves_spark.sources.snappy import (
-        compress, compress_framed, decompress, decompress_framed,
+        compress_framed, decompress, decompress_framed,
     )
 
-    assert decompress(compress(data)) == data
-    assert decompress_framed(compress_framed(data, chunk_size=997)) == data
+    raw = pa.Codec("snappy").compress(data, asbytes=True)
+    assert decompress(raw) == data
+    # over 64 KiB: more than one framing chunk
+    big = data * (1 + (1 << 16) // (len(data) + 1)) + tail
+    assert decompress_framed(compress_framed(big)) == big
 
 
 @settings(max_examples=30, deadline=None)
@@ -673,55 +679,18 @@ def test_snappy_roundtrip_property(data):
     period=st.integers(1, 20),
 )
 def test_lz4_snappy_periodic_overlap_property(seed, n, period):
-    """RLE-like inputs exercise the overlapping-copy fast path (match
-    offset < match length) in both decoders."""
+    """RLE-like inputs make matches that overlap their own output
+    (offset < length) in both codecs."""
     import numpy as np
+    import pyarrow as pa
 
-    from vtk_reserves_spark.sources.lz4 import (
-        compress_block, decompress_block,
-    )
-    from vtk_reserves_spark.sources.snappy import compress, decompress
+    from vtk_reserves_spark.sources.lz4 import decompress_frame
+    from vtk_reserves_spark.sources.snappy import decompress
 
     base = np.random.RandomState(seed).randint(0, 256, period, np.uint8)
     data = bytes(np.tile(base, n // period + 1)[:n])
-    assert decompress_block(compress_block(data)) == data
-    assert decompress(compress(data)) == data
-
-
-@settings(max_examples=40, deadline=None)
-@given(
-    data=st.binary(max_size=20000),
-    linked=st.booleans(),
-    block_size=st.sampled_from([512, 1021, 1 << 16]),
-)
-def test_lz4_native_pure_parity_property(data, linked, block_size):
-    """The pure-python decoder is the differential oracle for the
-    pyarrow native fast path: both must produce identical bytes on
-    property-generated frames, independent AND linked blocks."""
-    from vtk_reserves_spark.sources.lz4 import (
-        compress_frame, decompress_frame,
-    )
-
-    frame = compress_frame(data, block_size=block_size, linked=linked)
-    pure = decompress_frame(frame, native=False)
-    assert pure == data
-    assert decompress_frame(frame, native=True) == pure
-
-
-@settings(max_examples=40, deadline=None)
-@given(data=st.binary(max_size=20000))
-def test_snappy_native_pure_parity_property(data):
-    """Native (pyarrow) and pure snappy decoders agree on raw blocks
-    and on the framing format (whose inner chunks dispatch native)."""
-    from vtk_reserves_spark.sources.snappy import (
-        compress, compress_framed, decompress, decompress_framed,
-    )
-
-    comp = compress(data)
-    pure = decompress(comp, native=False)
-    assert pure == data
-    assert decompress(comp, native=True) == pure
-    assert decompress_framed(compress_framed(data, chunk_size=997)) == data
+    assert decompress_frame(pa.Codec("lz4").compress(data, asbytes=True)) == data
+    assert decompress(pa.Codec("snappy").compress(data, asbytes=True)) == data
 
 
 # -- H.264/HEVC SPS: every reachable geometry round-trips --------------------

@@ -254,6 +254,30 @@ def test_save_report_xlsx_and_loader(tmp_path, spark):
     assert set(back.columns) == {"a", "b"}
 
 
+def test_workbook_round_trip_without_pandas_excel(tmp_path, spark, monkeypatch):
+    """Reports are written and read back by the built-in workbook
+    codecs only: pandas' Excel engines (openpyxl, xlrd) are never
+    asked for."""
+    import pandas as pd
+
+    from vtk_reserves_spark.sources.writers import save_report
+
+    def forbidden(*a, **k):
+        raise AssertionError("pandas Excel engine called")
+
+    monkeypatch.setattr(pd.DataFrame, "to_excel", forbidden)
+    monkeypatch.setattr(pd, "read_excel", forbidden)
+    report = pd.DataFrame(
+        {"region": ["a", "b", "c"], "grade": [1.5, 2.25, 3.0]}
+    )
+    for ext in (".xlsx", ".xls"):
+        p = str(tmp_path / f"rep{ext}")
+        save_report(spark.createDataFrame(report), p)
+        back = load_dataframe(spark, p).toPandas()
+        assert list(back.columns) == ["region", "grade"]
+        assert back.values.tolist() == report.values.tolist()
+
+
 def test_las_reader(tmp_path, spark):
     from vtk_reserves_spark.sources.las import read_las
 

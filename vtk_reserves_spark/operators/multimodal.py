@@ -1966,9 +1966,8 @@ def attach_compressed_payload(
         import lzma as _lzma
         import zlib as _zlib
 
-        from vtk_reserves_spark.sources.lz4 import (
-            compress_frame as _lz4_frame,
-        )
+        import pyarrow as _pa
+
         from vtk_reserves_spark.sources.snappy import compress_framed
         from vtk_reserves_spark.sources.zstd import compress_frame
 
@@ -1988,7 +1987,7 @@ def attach_compressed_payload(
             elif k == 4:
                 out.append(compress_frame(raw))
             elif k == 6:
-                out.append(_lz4_frame(raw, block_checksums=did % 2 == 0))
+                out.append(_pa.Codec("lz4").compress(raw, asbytes=True))
             elif k == 7:
                 out.append(compress_framed(raw))
             else:

@@ -533,18 +533,17 @@ def _epoch_scan(
         efields = log[ei]["fields"] if log else cur_fields
         name_by_id = {int(f["id"]): f["name"] for f in efields}
         reader = spark.read.option("basePath", base)
-        if not snap.get("partition_spec"):
-            # unpartitioned tables scan under the epoch's schema —
-            # exact for this file group, and it skips the driver-side
-            # footer-sampling job every schema-inferring read
-            # launches; partitioned tables keep inference (hive-dir
-            # transform columns are outside the logical schema)
-            try:
-                reader = reader.schema(
-                    _spark_schema_from_iceberg({"fields": efields})
-                )
-            except ValueError:
-                pass  # types outside the subset: infer
+        # scan under the epoch's schema — exact for this file group,
+        # and it skips the driver-side footer-sampling job every
+        # schema-inferring read launches.  Identity partition columns
+        # take the schema's types; transform partition directories are
+        # outside it, still discovered, and dropped by the projection
+        try:
+            reader = reader.schema(
+                _spark_schema_from_iceberg({"fields": efields})
+            )
+        except ValueError:
+            pass  # types outside the subset: infer
         df = reader.parquet(*files)
         sel = []
         for f in cur_fields:
@@ -558,8 +557,8 @@ def _epoch_scan(
             elif spark_t is None:  # outside the subset: as read
                 sel.append(F.col(old).alias(name))
             else:
-                # also types identity partition columns the hive
-                # dirs inferred (``p=1`` reads back int)
+                # the epoch's type (or, on the inference fallback,
+                # what the hive dirs inferred) to the current one
                 sel.append(F.col(old).cast(spark_t).alias(name))
         if keep or wants_deletes:
             sel.append(decoded_file_path(F).alias("_ice_file"))

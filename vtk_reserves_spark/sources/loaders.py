@@ -371,27 +371,21 @@ def _load_vtk(spark: SparkSession, path: str) -> DataFrame:
 
 def _load_excel(spark: SparkSession, path: str, sheet: str | None) -> DataFrame:
     """Driver-side Excel read (report-sized inputs) -> distributed frame
-    (``_gui.py:227-228, 937-952``).  Uses pandas+openpyxl when present,
-    else the built-in pure-zipfile reader."""
-    import pandas as pd
+    (``_gui.py:227-228, 937-952``) through the built-in readers: OOXML
+    (a zip starting 'PK') -> `sources/xlsx.py`, OLE2/CFB magic -> the
+    BIFF8 reader `sources/xls.py`."""
+    with open(path, "rb") as f:
+        magic = f.read(8)
+    if magic[:2] == b"PK":
+        from vtk_reserves_spark.sources.xlsx import read_xlsx_pdf
 
-    try:
-        pdf = pd.read_excel(path, sheet_name=sheet or 0)
-    except ImportError:
-        # built-in fallbacks: OOXML (a zip starting 'PK') -> xlsx codec,
-        # OLE2/CFB magic -> the pure-struct BIFF8 reader (sources/xls.py)
-        with open(path, "rb") as f:
-            magic = f.read(8)
-        if magic[:2] == b"PK":
-            from vtk_reserves_spark.sources.xlsx import read_xlsx_pdf
+        pdf = read_xlsx_pdf(path, sheet)
+    elif magic == b"\xd0\xcf\x11\xe0\xa1\xb1\x1a\xe1":
+        from vtk_reserves_spark.sources.xls import read_xls_pdf
 
-            pdf = read_xlsx_pdf(path, sheet)
-        elif magic == b"\xd0\xcf\x11\xe0\xa1\xb1\x1a\xe1":
-            from vtk_reserves_spark.sources.xls import read_xls_pdf
-
-            pdf = read_xls_pdf(path, sheet)
-        else:
-            raise ValueError(
-                f"{path}: not an OOXML (.xlsx) or OLE2 (.xls) workbook"
-            ) from None
+        pdf = read_xls_pdf(path, sheet)
+    else:
+        raise ValueError(
+            f"{path}: not an OOXML (.xlsx) or OLE2 (.xls) workbook"
+        )
     return spark.createDataFrame(pdf)

@@ -1,325 +1,40 @@
-"""LZ4 frame + block format — pure-stdlib codec.
+"""LZ4 frame decoding through pyarrow's bundled liblz4.
 
 LZ4 is the default transfer codec of the data-lake world (Kafka
-message sets, Hadoop/Spark shuffle files, Arrow IPC buffers, .jsonl
-.lz4 corpus shards), so a 100 TB ingest has to open it without a
-native wheel.  This implements the public specifications exactly:
-
-* the BLOCK format (token-coded sequences of literals + 16-bit
-  offset matches, 255-extension lengths, the end-of-block literal
-  rules) — both directions: a greedy hash-chain compressor and the
-  full decompressor;
-* the FRAME format v1.6.x: magic 0x184D2204, FLG/BD descriptor with
-  header checksum, independent or linked blocks (FLG bit 5; linked
-  blocks thread the prior 64 KB of decoded output as match history),
-  optional block checksums, optional content size + content
-  checksum — checksums are xxHash32, implemented here from the
-  public algorithm;
-* legacy and skippable frames are recognized and rejected with a
-  clear error (nothing modern emits them).
+message sets, Spark shuffle files, Arrow IPC buffers, .jsonl.lz4
+corpus shards).  ``decompress_frame`` reads the frame format v1.6.x.
+What a frame says about itself is checked here, because it is input
+from outside the program: the magic, the version, and the legacy,
+skippable and dictionary-dependent frames, which are rejected.  The
+frame is then decoded by liblz4 (``pa.input_stream(...,
+compression="lz4")``), which verifies the header, block and content
+checksums and the declared content size, for independent and linked
+blocks alike.  Concatenated frames decode as all of their frames, as
+the ``lz4`` CLI does; bytes after the last frame that are not a frame
+raise.  Every failure is a ``ValueError`` whose message starts
+``lz4:``.
 
 Scale posture: payload-grain calls inside Arrow batches
 (`operators/multimodal.decompress_media`); bytes never reach the
-driver.  ``decompress_frame`` dispatches to pyarrow's bundled
-native LZ4-frame codec when available (GB/s vs the pure decoder's
-MB/s) and falls back to the pure-python decoder — which is also the
-differential-test oracle for the native path — on import failure or
-any native-side error, so semantics (e.g. trailing bytes after the
-EndMark are ignored) are exactly the pure decoder's.  Like the
-sibling ``zstd_pure.py``, parity with the C implementation is by
-construction of the spec, and every in-repo producer/consumer pair
-round-trips under the driver oracle.
+driver.
 """
 
 from __future__ import annotations
 
+import re
 import struct
 
-__all__ = [
-    "xxh32", "compress_block", "decompress_block",
-    "compress_frame", "decompress_frame",
-]
+import pyarrow as pa
 
-try:  # bundled native codec (pyarrow ships liblz4); optional
-    import pyarrow as _pa
-except ImportError:  # pragma: no cover - pyarrow is a hard dep elsewhere
-    _pa = None
+__all__ = ["decompress_frame"]
 
 _MAGIC = 0x184D2204
 
-_P1 = 2654435761
-_P2 = 2246822519
-_P3 = 3266489917
-_P4 = 668265263
-_P5 = 374761393
-_M32 = 0xFFFFFFFF
 
-
-def _rotl(x: int, r: int) -> int:
-    return ((x << r) | (x >> (32 - r))) & _M32
-
-
-def xxh32(data: bytes, seed: int = 0) -> int:
-    """xxHash32 (the LZ4 frame checksum algorithm), from the public
-    reference description."""
-    n = len(data)
-    pos = 0
-    if n >= 16:
-        v1 = (seed + _P1 + _P2) & _M32
-        v2 = (seed + _P2) & _M32
-        v3 = seed & _M32
-        v4 = (seed - _P1) & _M32
-        limit = n - 16
-        while pos <= limit:
-            for i, v in enumerate((v1, v2, v3, v4)):
-                (lane,) = struct.unpack_from("<I", data, pos + 4 * i)
-                v = (v + lane * _P2) & _M32
-                v = (_rotl(v, 13) * _P1) & _M32
-                if i == 0:
-                    v1 = v
-                elif i == 1:
-                    v2 = v
-                elif i == 2:
-                    v3 = v
-                else:
-                    v4 = v
-            pos += 16
-        h = (_rotl(v1, 1) + _rotl(v2, 7) + _rotl(v3, 12) + _rotl(v4, 18)) & _M32
-    else:
-        h = (seed + _P5) & _M32
-    h = (h + n) & _M32
-    while pos + 4 <= n:
-        (lane,) = struct.unpack_from("<I", data, pos)
-        h = (h + lane * _P3) & _M32
-        h = (_rotl(h, 17) * _P4) & _M32
-        pos += 4
-    while pos < n:
-        h = (h + data[pos] * _P5) & _M32
-        h = (_rotl(h, 11) * _P1) & _M32
-        pos += 1
-    h ^= h >> 15
-    h = (h * _P2) & _M32
-    h ^= h >> 13
-    h = (h * _P3) & _M32
-    h ^= h >> 16
-    return h
-
-
-# ---------------------------------------------------------------- block
-
-
-def decompress_block(
-    src: bytes, max_size: int = 1 << 27, history: bytes = b""
-) -> bytes:
-    """LZ4 block -> bytes.  Raises ValueError on malformed input
-    (bad offsets, truncation, output beyond ``max_size``).
-
-    ``history`` is prior decoded output that matches may reference
-    — the linked-blocks mode of the frame format (FLG bit 5 clear),
-    where each block may copy from the preceding 64 KB of the
-    stream.  Only the newly decoded bytes are returned.
-    """
-    out = bytearray(history)
-    hist = len(history)
-    pos = 0
-    n = len(src)
-    while pos < n:
-        token = src[pos]
-        pos += 1
-        lit_len = token >> 4
-        if lit_len == 15:
-            while True:
-                if pos >= n:
-                    raise ValueError("lz4: truncated literal length")
-                b = src[pos]
-                pos += 1
-                lit_len += b
-                if b != 255:
-                    break
-        if pos + lit_len > n:
-            raise ValueError("lz4: literals overrun block")
-        out += src[pos : pos + lit_len]
-        pos += lit_len
-        if pos == n:
-            break  # last sequence: literals only
-        if pos + 2 > n:
-            raise ValueError("lz4: truncated match offset")
-        (offset,) = struct.unpack_from("<H", src, pos)
-        pos += 2
-        if offset == 0 or offset > len(out):
-            raise ValueError("lz4: bad match offset")
-        match_len = (token & 0xF) + 4
-        if token & 0xF == 15:
-            while True:
-                if pos >= n:
-                    raise ValueError("lz4: truncated match length")
-                b = src[pos]
-                pos += 1
-                match_len += b
-                if b != 255:
-                    break
-        if len(out) - hist + match_len > max_size:
-            raise ValueError("lz4: output exceeds size limit")
-        start = len(out) - offset
-        if offset >= match_len:
-            out += out[start : start + match_len]
-        else:
-            # overlapping copy: out[i] = out[i - offset] makes the
-            # tail periodic with period ``offset`` — doubling the
-            # seed gives exact byte-at-a-time semantics in O(log)
-            # slice copies instead of a per-byte Python loop
-            chunk = bytes(out[start:])
-            while len(chunk) < match_len:
-                chunk += chunk
-            out += chunk[:match_len]
-    return bytes(out[hist:])
-
-
-def _write_len(out: bytearray, n: int) -> None:
-    while n >= 255:
-        out.append(255)
-        n -= 255
-    out.append(n)
-
-
-def compress_block(src: bytes, history: bytes = b"") -> bytes:
-    """Greedy LZ4 block compressor: 4-byte hash-table matcher,
-    16-bit offsets, spec end rules (last 5 bytes literal, no match
-    starting in the final 12).
-
-    ``history`` is prior stream output a linked-blocks frame may
-    reference: matches can start inside it (offsets still ≤ 64 KB),
-    but only ``src`` is emitted.
-    """
-    hist = len(history)
-    buf = history + src if hist else src
-    n = len(buf)
-    out = bytearray()
-    table: dict[bytes, int] = {}
-    for j in range(max(0, hist - 3)):
-        table[buf[j : j + 4]] = j
-    anchor = hist
-    i = hist
-    limit = n - 12  # last match must start before here
-    while i < limit:
-        key = buf[i : i + 4]
-        cand = table.get(key)
-        table[key] = i
-        if cand is None or i - cand > 0xFFFF or buf[cand : cand + 4] != key:
-            i += 1
-            continue
-        # extend match, leaving the last 5 bytes as literals
-        end_cap = n - 5
-        m = i + 4
-        c = cand + 4
-        while m < end_cap and buf[m] == buf[c]:
-            m += 1
-            c += 1
-        lit = buf[anchor:i]
-        match_len = m - i
-        token_lit = 15 if len(lit) >= 15 else len(lit)
-        token_match = 15 if match_len - 4 >= 15 else match_len - 4
-        out.append((token_lit << 4) | token_match)
-        if token_lit == 15:
-            _write_len(out, len(lit) - 15)
-        out += lit
-        out += struct.pack("<H", i - cand)
-        if token_match == 15:
-            _write_len(out, match_len - 4 - 15)
-        anchor = m
-        i = m
-    # final literals
-    lit = buf[anchor:]
-    token_lit = 15 if len(lit) >= 15 else len(lit)
-    out.append(token_lit << 4)
-    if token_lit == 15:
-        _write_len(out, len(lit) - 15)
-    out += lit
-    return bytes(out)
-
-
-# ---------------------------------------------------------------- frame
-
-
-def compress_frame(
-    data: bytes,
-    block_size: int = 1 << 16,
-    block_checksums: bool = False,
-    content_checksum: bool = True,
-    content_size: bool = True,
-    linked: bool = False,
-) -> bytes:
-    """bytes -> LZ4 frame (incompressible blocks stored uncompressed
-    per the spec's high-bit convention).  ``linked=True`` clears FLG
-    bit 5 and lets each block's matches reach into the previous
-    64 KB of the stream — the lz4 CLI's default mode for multi-block
-    files."""
-    flg = 1 << 6  # version 01
-    if not linked:
-        flg |= 1 << 5  # block-independent
-    if block_checksums:
-        flg |= 1 << 4
-    if content_size:
-        flg |= 1 << 3
-    if content_checksum:
-        flg |= 1 << 2
-    # BD max-block-size code: 4=64KB 5=256KB 6=1MB 7=4MB (spec table)
-    for code, cap in ((4, 1 << 16), (5, 1 << 18), (6, 1 << 20), (7, 1 << 22)):
-        if block_size <= cap:
-            bd = code << 4
-            break
-    else:
-        raise ValueError(
-            f"lz4: block_size {block_size} exceeds the 4 MB frame maximum"
-        )
-    desc = bytearray([flg, bd])
-    if content_size:
-        desc += struct.pack("<Q", len(data))
-    out = bytearray(struct.pack("<I", _MAGIC))
-    out += desc
-    out.append((xxh32(bytes(desc)) >> 8) & 0xFF)
-    for i in range(0, len(data), block_size) or [0]:
-        raw = data[i : i + block_size]
-        if not raw:
-            break
-        hist = data[max(0, i - 0xFFFF) : i] if linked else b""
-        comp = compress_block(raw, history=hist)
-        if len(comp) < len(raw):
-            out += struct.pack("<I", len(comp))
-            body = comp
-        else:
-            out += struct.pack("<I", len(raw) | 0x80000000)
-            body = raw
-        out += body
-        if block_checksums:
-            out += struct.pack("<I", xxh32(body))
-    out += struct.pack("<I", 0)  # EndMark
-    if content_checksum:
-        out += struct.pack("<I", xxh32(data))
-    return bytes(out)
-
-
-def _native_decompress_frame(data: bytes) -> bytes:
-    """Decode a whole frame with pyarrow's bundled liblz4 (GB/s; the
-    C library verifies header/block/content checksums itself)."""
-    stream = _pa.input_stream(
-        _pa.BufferReader(data), compression="lz4", buffer_size=1 << 20
-    )
-    return stream.read()
-
-
-def decompress_frame(data: bytes, native: bool | None = None) -> bytes:
-    """LZ4 frame -> bytes, verifying the header checksum and any
-    block/content checksums.  Raises ValueError on corruption or on
-    legacy/skippable frames.
-
-    ``native=None`` (default) uses pyarrow's bundled liblz4 when
-    importable and falls back to the pure-python decoder on any
-    native-side error, so observable semantics are always the pure
-    decoder's (the fallback re-raises its own ValueError on truly
-    corrupt input, and quirks like ignoring trailing bytes after the
-    EndMark are preserved).  ``native=False`` forces the pure path
-    (the differential-test oracle)."""
+def decompress_frame(data: bytes) -> bytes:
+    """LZ4 frame(s) -> bytes.  Raises ValueError on corruption, on
+    trailing bytes that are not a frame, and on legacy, skippable or
+    dictionary-dependent frames."""
     if len(data) < 7:
         raise ValueError("lz4: truncated frame")
     (magic,) = struct.unpack_from("<I", data, 0)
@@ -334,68 +49,14 @@ def decompress_frame(data: bytes, native: bool | None = None) -> bytes:
         raise ValueError("lz4: unsupported frame version")
     if flg & 1:
         raise ValueError("lz4: dictionary-dependent frame not supported")
-    if native is None:
-        native = _pa is not None
-    if native and _pa is not None:
-        try:
-            return _native_decompress_frame(data)
-        except Exception:
-            pass  # pure decoder decides: succeeds (e.g. trailing
-            # bytes past the EndMark) or raises its own ValueError
-    block_independent = bool(flg & (1 << 5))
-    block_checksums = bool(flg & (1 << 4))
-    has_size = bool(flg & (1 << 3))
-    content_checksum = bool(flg & (1 << 2))
-    has_dict = bool(flg & 1)
-    pos = 6
-    desc_end = 6 + (8 if has_size else 0) + (4 if has_dict else 0)
-    declared = None
-    if has_size:
-        if pos + 8 > len(data):
-            raise ValueError("lz4: truncated content size")
-        (declared,) = struct.unpack_from("<Q", data, pos)
-        pos += 8
-    if has_dict:
-        pos += 4
-    if desc_end >= len(data):
-        raise ValueError("lz4: truncated frame descriptor")
-    hc = data[desc_end]
-    if (xxh32(data[4:desc_end]) >> 8) & 0xFF != hc:
-        raise ValueError("lz4: frame header checksum mismatch")
-    pos = desc_end + 1
-    out = bytearray()
-    while True:
-        if pos + 4 > len(data):
-            raise ValueError("lz4: missing EndMark")
-        (bsize,) = struct.unpack_from("<I", data, pos)
-        pos += 4
-        if bsize == 0:
-            break
-        uncompressed = bool(bsize & 0x80000000)
-        bsize &= 0x7FFFFFFF
-        if pos + bsize > len(data):
-            raise ValueError("lz4: block overruns frame")
-        body = data[pos : pos + bsize]
-        pos += bsize
-        if block_checksums:
-            if pos + 4 > len(data):
-                raise ValueError("lz4: missing block checksum")
-            (bc,) = struct.unpack_from("<I", data, pos)
-            pos += 4
-            if xxh32(body) != bc:
-                raise ValueError("lz4: block checksum mismatch")
-        if uncompressed:
-            out += body
-        elif block_independent:
-            out += decompress_block(body)
-        else:  # linked: matches may reach 64 KB into prior output
-            out += decompress_block(body, history=bytes(out[-0xFFFF:]))
-    if content_checksum:
-        if pos + 4 > len(data):
-            raise ValueError("lz4: missing content checksum")
-        (cc,) = struct.unpack_from("<I", data, pos)
-        if xxh32(bytes(out)) != cc:
-            raise ValueError("lz4: content checksum mismatch")
-    if declared is not None and declared != len(out):
-        raise ValueError("lz4: content size mismatch")
-    return bytes(out)
+    try:
+        return pa.input_stream(
+            pa.BufferReader(data), compression="lz4", buffer_size=1 << 20
+        ).read()
+    except OSError as e:
+        # liblz4's "ERROR_blockChecksum_invalid" -> "block checksum invalid"
+        reason = str(e).rsplit("ERROR_", 1)[-1]
+        reason = re.sub(r"(?<=[a-z])(?=[A-Z])", " ", reason)
+        raise ValueError(
+            "lz4: " + reason.replace("_", " ").lower()
+        ) from None

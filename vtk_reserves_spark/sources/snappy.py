@@ -1,49 +1,39 @@
-"""Snappy raw + framing format — pure-stdlib codec.
+"""Snappy framing format + CRC-32C; raw blocks through pyarrow.
 
 Snappy is the other half of the data-lake transfer-codec pair with
 LZ4: Parquet pages, ORC stripes, Kafka batches and Hadoop
-SequenceFiles default to it.  This implements the two public
-specifications:
+SequenceFiles default to it.  The raw block format (varint
+uncompressed-length preamble, then tag-coded literals and copies) is
+encoded and decoded by pyarrow's bundled libsnappy; this module holds
+what pyarrow does not:
 
-* the RAW format: varint uncompressed-length preamble, then
-  tag-coded elements — literals (with 1-4 extra length bytes),
-  1-byte-offset copies (len 4-11, 11-bit offset), 2-byte and
-  4-byte little-endian offset copies — plus a greedy hash-table
-  compressor emitting literals and 2-byte copies;
-* the FRAMING format (.sz / Kafka "snappy-java" interchange):
-  stream identifier chunk ``sNaPpY``, compressed (0x00) and
-  uncompressed (0x01) data chunks carrying masked CRC-32C
+* the FRAMING format (.sz / Kafka "snappy-java" interchange): stream
+  identifier chunk ``sNaPpY``, compressed (0x00) and uncompressed
+  (0x01) data chunks of at most 64 KiB carrying masked CRC-32C
   checksums of the uncompressed data, padding (0xFE) and reserved
-  skippable chunks — CRC-32C (Castagnoli) implemented here from
-  the public polynomial.
+  skippable chunks;
+* CRC-32C (Castagnoli), from the public polynomial — also the
+  checksum of TFRecord and of Zarr v3's ``crc32c`` codec;
+* the raw block's declared length, checked against the most a block
+  of its size can hold before libsnappy allocates it.
 
 Scale posture: payload-grain calls inside Arrow batches
 (`operators/multimodal.decompress_media`); bytes never reach the
-driver.  ``decompress``/``decompress_framed`` dispatch the raw-block
-inner decode to pyarrow's bundled native snappy when available (the
-uncompressed length needed by the C API is the block's own varint
-preamble) and fall back to the pure-python decoder — also the
-differential-test oracle — on import failure or any native-side
-error.  CRC-32C runs slice-by-16 (16 tables, one 16-byte stride per
-Python-level iteration) and is the remaining pure-python cost in
-the framed path; see SCALE.md.
+driver.  CRC-32C runs slice-by-16 (16 tables, one 16-byte stride per
+Python-level iteration) and is the remaining pure-python cost in the
+framed path; see SCALE.md.
 """
 
 from __future__ import annotations
 
 import struct
 
-__all__ = [
-    "crc32c", "compress", "decompress",
-    "compress_framed", "decompress_framed",
-]
+import pyarrow as pa
 
-try:  # bundled native codec (pyarrow ships snappy); optional
-    import pyarrow as _pa
-except ImportError:  # pragma: no cover - pyarrow is a hard dep elsewhere
-    _pa = None
+__all__ = ["crc32c", "decompress", "compress_framed", "decompress_framed"]
 
 _STREAM_ID = b"\xff\x06\x00\x00sNaPpY"
+_CHUNK = 1 << 16  # the framing format's maximum uncompressed chunk
 
 # CRC-32C (Castagnoli), reflected polynomial 0x82F63B78 —
 # slice-by-16: table k maps a byte XORed into the CRC k positions
@@ -114,166 +104,46 @@ def _read_varint(data: bytes, pos: int) -> tuple[int, int]:
             raise ValueError("snappy: varint too long")
 
 
-def decompress(src: bytes, native: bool | None = None) -> bytes:
+def decompress(src: bytes) -> bytes:
     """Raw Snappy block -> bytes.  Raises ValueError on malformed
-    input or length mismatch.
-
-    ``native=None`` (default) uses pyarrow's bundled snappy when
-    importable (the C API's required uncompressed size is the
-    block's own varint preamble) and falls back to the pure decoder
-    on any native-side error so the error surface stays ours.
-    ``native=False`` forces the pure path (the differential oracle).
-    """
-    expected, pos = _read_varint(src, 0)
-    if native is None:
-        native = _pa is not None
-    if native and _pa is not None and expected <= 1 << 31:
-        try:
-            out = _pa.Codec("snappy").decompress(
-                bytes(src), decompressed_size=expected, asbytes=True
-            )
-            if len(out) == expected:
-                return out
-        except Exception:
-            pass  # pure decoder re-raises its own ValueError
-    out = bytearray()
-    n = len(src)
-    while pos < n:
-        tag = src[pos]
-        pos += 1
-        kind = tag & 3
-        if kind == 0:  # literal
-            ln = tag >> 2
-            if ln >= 60:
-                extra = ln - 59
-                if pos + extra > n:
-                    raise ValueError("snappy: truncated literal length")
-                ln = int.from_bytes(src[pos : pos + extra], "little")
-                pos += extra
-            ln += 1
-            if pos + ln > n:
-                raise ValueError("snappy: literal overruns input")
-            out += src[pos : pos + ln]
-            pos += ln
-            continue
-        if kind == 1:  # copy, 1-byte offset
-            ln = ((tag >> 2) & 7) + 4
-            if pos >= n:
-                raise ValueError("snappy: truncated copy")
-            offset = ((tag >> 5) << 8) | src[pos]
-            pos += 1
-        elif kind == 2:  # copy, 2-byte offset
-            ln = (tag >> 2) + 1
-            if pos + 2 > n:
-                raise ValueError("snappy: truncated copy")
-            (offset,) = struct.unpack_from("<H", src, pos)
-            pos += 2
-        else:  # copy, 4-byte offset
-            ln = (tag >> 2) + 1
-            if pos + 4 > n:
-                raise ValueError("snappy: truncated copy")
-            (offset,) = struct.unpack_from("<I", src, pos)
-            pos += 4
-        if offset == 0 or offset > len(out):
-            raise ValueError("snappy: bad copy offset")
-        start = len(out) - offset
-        if offset >= ln:
-            out += out[start : start + ln]
-        else:
-            # periodic overlap copy (see lz4.decompress_block)
-            chunk = bytes(out[start:])
-            while len(chunk) < ln:
-                chunk += chunk
-            out += chunk[:ln]
-    if len(out) != expected:
+    input or a declared length the block cannot hold."""
+    expected, _ = _read_varint(src, 0)
+    # the densest element is a 3-byte copy emitting 64 bytes, so a
+    # larger declared size is corrupt: refuse it before libsnappy
+    # allocates it
+    limit = 64 * len(src) // 3 + 64
+    if expected > limit:
         raise ValueError(
-            f"snappy: declared {expected} bytes, produced {len(out)}"
+            f"snappy: declared {expected} bytes, more than a "
+            f"{len(src)}-byte block can hold ({limit})"
         )
-    return bytes(out)
-
-
-def _emit_literal(out: bytearray, lit: bytes) -> None:
-    n = len(lit) - 1
-    if n < 60:
-        out.append(n << 2)
-    else:
-        extra = (n.bit_length() + 7) // 8
-        out.append((59 + extra) << 2)
-        out += n.to_bytes(extra, "little")
-    out += lit
-
-
-def compress(src: bytes) -> bytes:
-    """Greedy raw-Snappy compressor: 4-byte hash matcher emitting
-    2-byte-offset copies (the format every decoder handles)."""
-    out = bytearray()
-    n = len(src)
-    v = n
-    while True:
-        b = v & 0x7F
-        v >>= 7
-        if v:
-            out.append(b | 0x80)
-        else:
-            out.append(b)
-            break
-    table: dict[bytes, int] = {}
-    anchor = 0
-    i = 0
-    while i + 4 <= n:
-        key = src[i : i + 4]
-        cand = table.get(key)
-        table[key] = i
-        if cand is None or i - cand > 0xFFFF or src[cand : cand + 4] != key:
-            i += 1
-            continue
-        if i > anchor:
-            _emit_literal(out, src[anchor:i])
-        m = i + 4
-        c = cand + 4
-        while m < n and src[m] == src[c]:
-            m += 1
-            c += 1
-        length = m - i
-        offset = i - cand
-        while length > 0:
-            chunk = min(length, 64)
-            if chunk < 4:
-                # tail shorter than the 4-byte copy minimum: emit as
-                # literal from the source position
-                break
-            out.append(((chunk - 1) << 2) | 2)
-            out += struct.pack("<H", offset)
-            length -= chunk
-        anchor = m - length  # any un-emitted tail becomes literals
-        i = anchor
-    if anchor < n:
-        _emit_literal(out, src[anchor:])
-    return bytes(out)
+    try:
+        return pa.Codec("snappy").decompress(
+            src, decompressed_size=expected, asbytes=True
+        )
+    except OSError as e:
+        raise ValueError(
+            f"snappy: block does not decode to its declared "
+            f"{expected} bytes ({e})"
+        ) from None
 
 
 # ------------------------------------------------------------- framing
 
 
-def compress_framed(data: bytes, chunk_size: int = 65536) -> bytes:
+def compress_framed(data: bytes) -> bytes:
     """bytes -> Snappy framing-format stream (stream identifier +
-    compressed chunks with masked CRC-32C; incompressible chunks are
-    stored uncompressed per the spec)."""
+    64 KiB compressed chunks with masked CRC-32C; incompressible
+    chunks are stored uncompressed per the spec)."""
+    codec = pa.Codec("snappy")
     out = bytearray(_STREAM_ID)
-    for i in range(0, len(data), chunk_size) or [0]:
-        raw = data[i : i + chunk_size]
-        if not raw and data:
-            break
-        crc = _mask(crc32c(raw))
-        comp = compress(raw)
-        if len(comp) < len(raw):
-            body = struct.pack("<I", crc) + comp
-            out += bytes([0x00]) + len(body).to_bytes(3, "little") + body
-        else:
-            body = struct.pack("<I", crc) + raw
-            out += bytes([0x01]) + len(body).to_bytes(3, "little") + body
-        if not data:
-            break
+    for i in range(0, len(data), _CHUNK):
+        raw = data[i : i + _CHUNK]
+        crc = struct.pack("<I", _mask(crc32c(raw)))
+        comp = codec.compress(raw, asbytes=True)
+        ctype, body = (0x00, comp) if len(comp) < len(raw) else (0x01, raw)
+        out += bytes([ctype]) + (len(body) + 4).to_bytes(3, "little")
+        out += crc + body
     return bytes(out)
 
 

@@ -79,13 +79,9 @@ def save_report(df: DataFrame, path: str | None) -> None:
         write_xls({"report": pdf}, path)
         return
     if ext == ".xlsx":
-        try:
-            pdf.to_excel(path, index=False)
-        except ImportError:
-            # openpyxl not in the container: use the built-in writer
-            from vtk_reserves_spark.sources.xlsx import write_xlsx
+        from vtk_reserves_spark.sources.xlsx import write_xlsx
 
-            write_xlsx({"report": pdf}, path)
+        write_xlsx({"report": pdf}, path)
     elif ext == ".csv":
         try:
             pdf.to_csv(path, index=False, encoding="utf-8")

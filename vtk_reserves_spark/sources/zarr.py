@@ -14,10 +14,11 @@ c-blosc1 chunk container it defaults to:
 * compressors: ``null``, ``zlib``, ``gzip``, ``bz2``, ``lzma`` and
   ``blosc`` — the c-blosc1 frame (16-byte header, per-block int32
   starts, stored-vs-compressed blocks, byte-shuffle) with inner
-  codecs lz4 (raw LZ4 blocks — `sources/lz4.py` block format), zlib,
-  zstd and snappy.  blosclz and bit-shuffle are rejected with a clear
-  error.  Native (pyarrow) lz4/zstd fast paths with the pure-python
-  codecs as fallback, mirroring `sources/lz4.py`.
+  codecs lz4 (raw LZ4 blocks), zlib, zstd and snappy (raw Snappy
+  blocks).  lz4, snappy and zstd are encoded by pyarrow's bundled
+  libraries, and lz4 and snappy are decoded by them; a corrupt inner
+  block raises ``ValueError``.  blosclz and bit-shuffle are rejected
+  with a clear error.
 
 **Zarr v3** (the current spec, zarr-specs ZEP0001) is supported on
 the same machinery: ``zarr.json`` array/group documents, the regular
@@ -64,6 +65,7 @@ import struct
 from itertools import product
 
 import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 
 __all__ = [
@@ -71,11 +73,6 @@ __all__ = [
     "read_zarray_meta", "read_zarr_array", "write_zarr_array",
     "read_zarr_df", "write_zarr_df",
 ]
-
-try:
-    import pyarrow as _pa
-except ImportError:  # pragma: no cover
-    _pa = None
 
 # ---------------------------------------------------------------- blosc
 
@@ -105,40 +102,28 @@ def _unshuffle(block: bytes, typesize: int) -> bytes:
 
 def _inner_compress(raw: bytes, cname: str, clevel: int) -> bytes:
     if cname == "lz4":
-        if _pa is not None:
-            return _pa.Codec("lz4_raw").compress(raw, asbytes=True)
-        from vtk_reserves_spark.sources.lz4 import compress_block
-
-        return compress_block(raw)
+        return pa.Codec("lz4_raw").compress(raw, asbytes=True)
     if cname == "zlib":
         import zlib
 
         return zlib.compress(raw, clevel)
     if cname == "zstd":
-        if _pa is None:
-            raise ValueError("blosc: zstd inner codec needs pyarrow")
-        return _pa.Codec("zstd", compression_level=clevel).compress(
+        return pa.Codec("zstd", compression_level=clevel).compress(
             raw, asbytes=True
         )
     if cname == "snappy":
-        from vtk_reserves_spark.sources.snappy import compress
-
-        return compress(raw)
+        return pa.Codec("snappy").compress(raw, asbytes=True)
     raise ValueError(f"blosc: unsupported inner codec {cname!r}")
 
 
 def _inner_decompress(body: bytes, cname: str, neblock: int) -> bytes:
     if cname == "lz4":
-        if _pa is not None:
-            try:
-                return _pa.Codec("lz4_raw").decompress(
-                    body, decompressed_size=neblock, asbytes=True
-                )
-            except Exception:
-                pass
-        from vtk_reserves_spark.sources.lz4 import decompress_block
-
-        return decompress_block(body)
+        try:
+            return pa.Codec("lz4_raw").decompress(
+                body, decompressed_size=neblock, asbytes=True
+            )
+        except OSError as e:
+            raise ValueError(f"blosc: corrupt lz4 block ({e})") from None
     if cname == "zlib":
         import zlib
 
@@ -289,9 +274,7 @@ def _apply_compressor(raw: bytes, comp: dict | None, typesize: int) -> bytes:
 
         return lzma.compress(raw)
     if cid == "zstd":  # standalone zstd (zarr v3 codec)
-        if _pa is None:
-            raise ValueError("zarr: zstd codec needs pyarrow")
-        return _pa.Codec(
+        return pa.Codec(
             "zstd", compression_level=int(comp.get("level", 3))
         ).compress(raw, asbytes=True)
     raise ValueError(f"zarr: unsupported compressor {cid!r}")
