@@ -79,23 +79,31 @@ def _vs_round_compare(timings: dict, total: float, sf) -> dict | None:
     }
 
 
-def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
-
+def session(app: str, **conf: str):
+    """The bench SparkSession on local[$SPARK_GRAFT_CPUS] (default 32):
+    AQE on, UTC session time zone, no UI.  ``conf`` adds settings on top
+    (``tools/profile_bench.py`` passes its event-log options)."""
     from pyspark.sql import SparkSession
 
-    spark = (
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    return (
         SparkSession.builder.master(f"local[{cpus}]")
-        .appName("vtk_reserves_spark-bench")
+        .appName(app)
         .config("spark.sql.shuffle.partitions", cpus)
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.driver.memory", "16g")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
+        .config(map=conf)
         .getOrCreate()
     )
+
+
+def main() -> None:
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
+
+    spark = session("vtk_reserves_spark-bench")
     spark.sparkContext.setLogLevel("WARN")
 
     sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))

@@ -1,9 +1,14 @@
 """Simulate the spark-graft driver: entry() smoke + full queries()/
 oracle_sql() contract at sf0.01 (per .claude/skills/verify/SKILL.md).
 Writes per-query results to /tmp/drive_driver_results.json.
+
+Usage: python tests/drive_driver.py [query ...]
+With names, runs only those queries; an unknown name exits non-zero
+before Spark starts.  Exits non-zero when any query FAILs.
 """
 import hashlib
 import json
+import os
 import sys
 import time
 
@@ -36,9 +41,17 @@ def value_hash(df: pd.DataFrame) -> str:
 
 
 def main() -> None:
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     import __spark_entry__ as entry
     from pyspark.sql import SparkSession
+
+    qs = entry.queries()
+    oracles = entry.oracle_sql()
+    if len(sys.argv) > 1:  # optional name filter: exact names only
+        keep = set(sys.argv[1:])
+        if keep - set(qs):
+            sys.exit(f"unknown query names: {' '.join(sorted(keep - set(qs)))}")
+        qs = {n: f for n, f in qs.items() if n in keep}
 
     spark = (
         SparkSession.builder.master("local[8]")
@@ -61,11 +74,6 @@ def main() -> None:
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')"
         )
 
-    qs = entry.queries()
-    oracles = entry.oracle_sql()
-    if len(sys.argv) > 1:  # optional name filter: exact names only
-        keep = set(sys.argv[1:])
-        qs = {n: f for n, f in qs.items() if n in keep}
     results = {}
     n_match = n_rows_only = n_fail = 0
     for name, fn in qs.items():
@@ -131,6 +139,7 @@ def main() -> None:
         flush=True,
     )
     spark.stop()
+    sys.exit(1 if n_fail else 0)
 
 
 if __name__ == "__main__":

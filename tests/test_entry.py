@@ -11,6 +11,13 @@ from tests.conftest import assert_frames_match
 
 QUERIES = entrymod.queries()
 ORACLES = entrymod.oracle_sql()
+#: queries with no SQL oracle by design (iterative fits and solver
+#: outputs); the driver checks rows only
+ROWS_ONLY = {
+    "pca_whiten", "quality_classifier", "krige", "indicator_krige",
+    "simple_krige", "cokrige", "krige_block", "bpe_merges",
+    "unigram_vocab", "pq_ann",
+}
 
 
 def test_every_query_has_an_oracle_or_is_flagged():
@@ -67,3 +74,28 @@ def test_recording_window_layout():
     # every window entry must be oracle-backed
     oracles = set(entry.oracle_sql())
     assert window <= oracles, f"rows-only in window: {window - oracles}"
+
+
+def test_rows_only_queries_are_the_declared_set():
+    assert set(QUERIES) - set(ORACLES) == ROWS_ONLY
+
+
+def test_oracles_are_declared_on_their_fixtures():
+    """oracle_sql() is read off the fixtures (``q_<name>.oracle``), and
+    every ``q_*`` defined in a module under driver_queries/ is a
+    queries() entry — a family module the façade misses fails here."""
+    import importlib
+    import pkgutil
+
+    import driver_queries
+
+    for name, sql in ORACLES.items():
+        assert QUERIES[name].oracle is sql, name
+    defined = {}
+    for info in pkgutil.iter_modules(driver_queries.__path__):
+        mod = importlib.import_module(f"driver_queries.{info.name}")
+        defined.update({
+            name[2:]: fn for name, fn in vars(mod).items()
+            if name.startswith("q_") and fn.__module__ == mod.__name__
+        })
+    assert defined == QUERIES

@@ -995,13 +995,7 @@ def test_sniff_csv_short_file_trailing_latin1(tmp_path):
 def test_bucket_sql_null_vector_parity(spark, duck):
     """ADVICE: the DuckDB oracle's LSH bucket must NULL-propagate like
     functions/vectors.lsh_bucket does for NULL/ragged vectors."""
-    import importlib.util
-
-    spec = importlib.util.spec_from_file_location(
-        "spark_entry_for_test", "/root/repo/__spark_entry__.py"
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
+    from driver_queries import text as mod
     planes = [[1.0, -1.0], [0.5, 0.5]]
     expr = mod._bucket_sql("v", planes)
     rows = duck.execute(

@@ -154,6 +154,24 @@ def test_corrupt_blosc_lz4_chunk_raises_value_error():
         blosc_decode(bytes(chunk))
 
 
+def test_short_blosc_lz4_block_raises():
+    """A blosc-lz4 block whose body decodes to 100 bytes under a
+    200-byte block is refused (pyarrow alone would pad it to 200 bytes
+    of uninitialized memory)."""
+    from vtk_reserves_spark.sources.zarr import blosc_decode
+
+    body = pa.Codec("lz4_raw").compress(b"ab" * 50, asbytes=True)
+    assert len(body) != 200  # not the "stored uncompressed" form
+    chunk = (
+        bytes([2, 0, 1 << 5, 1])  # version 2, lz4 inner codec, typesize 1
+        + struct.pack("<iii", 200, 200, 24 + len(body))
+        + struct.pack("<ii", 20, len(body))
+        + body
+    )
+    with pytest.raises(ValueError, match="blosc: lz4 block holds 100 != 200"):
+        blosc_decode(chunk)
+
+
 def test_snappy_padding_and_repeated_id_skipped():
     data = b"payload " * 10000  # 80 KB: two chunks
     blob = compress_framed(data)

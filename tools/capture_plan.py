@@ -16,20 +16,10 @@ def main() -> None:
     outdir, suffix, names = sys.argv[1], sys.argv[2], sys.argv[3:]
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     sys.path.insert(0, repo)
-    from pyspark.sql import SparkSession
+    from bench import session
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("capture-plan")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.driver.memory", "16g")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    spark = session("capture-plan")
     spark.sparkContext.setLogLevel("ERROR")
     import __spark_entry__ as entrymod
 

@@ -23,9 +23,9 @@ import time
 
 
 def main() -> None:
+    here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     ap = argparse.ArgumentParser()
-    ap.add_argument("--repo", default=os.path.dirname(
-        os.path.dirname(os.path.abspath(__file__))))
+    ap.add_argument("--repo", default=here)
     ap.add_argument("--runs", type=int, default=3)
     ap.add_argument("--sf-dir", default=os.environ.get(
         "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
@@ -34,20 +34,11 @@ def main() -> None:
     ap.add_argument("queries", nargs="+")
     args = ap.parse_args()
 
-    sys.path.insert(0, args.repo)
-    from pyspark.sql import SparkSession
+    sys.path.insert(0, here)
+    from bench import session  # this checkout's session, whatever --repo is
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("perf-isolate")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.driver.memory", "16g")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    sys.path.insert(0, args.repo)
+    spark = session("perf-isolate")
     spark.sparkContext.setLogLevel("ERROR")
 
     import __spark_entry__ as entrymod

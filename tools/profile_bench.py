@@ -22,7 +22,6 @@ def main() -> None:
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     sys.path.insert(0, repo)
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     evdir = "/tmp/spark-events-profile"
     os.makedirs(evdir, exist_ok=True)
     import shutil
@@ -31,19 +30,11 @@ def main() -> None:
         p = os.path.join(evdir, f)
         shutil.rmtree(p) if os.path.isdir(p) else os.unlink(p)
 
-    from pyspark.sql import SparkSession
+    from bench import session
 
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("profile-bench")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.driver.memory", "16g")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.eventLog.enabled", "true")
-        .config("spark.eventLog.dir", evdir)
-        .getOrCreate()
+    spark = session(
+        "profile-bench",
+        **{"spark.eventLog.enabled": "true", "spark.eventLog.dir": evdir},
     )
     spark.sparkContext.setLogLevel("ERROR")
 

@@ -24,21 +24,12 @@ def main() -> None:
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     sys.path.insert(0, repo)
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
-    from pyspark.sql import SparkSession
     from pyspark.sql.streaming import StreamingQueryListener
 
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("profile-streams")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.driver.memory", "16g")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    from bench import session
+
+    spark = session("profile-streams")
     spark.sparkContext.setLogLevel("ERROR")
 
     events: list[dict] = []

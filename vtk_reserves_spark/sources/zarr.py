@@ -116,8 +116,45 @@ def _inner_compress(raw: bytes, cname: str, clevel: int) -> bytes:
     raise ValueError(f"blosc: unsupported inner codec {cname!r}")
 
 
+def _lz4_run(body: bytes, i: int, run: int) -> tuple[int, int]:
+    """Extend a 15 length nibble with the 255-continued bytes at ``i``."""
+    if run == 15:
+        while True:
+            if i >= len(body):
+                raise ValueError("blosc: truncated lz4 block")
+            run += body[i]
+            i += 1
+            if body[i - 1] != 255:
+                break
+    return i, run
+
+
+def _lz4_block_size(body: bytes) -> int:
+    """Decoded size of a raw LZ4 block: the sum of its sequences'
+    literal and match lengths, read from the headers in one token walk
+    (nothing is decoded).  pyarrow's lz4_raw returns
+    ``decompressed_size`` bytes whatever the block decodes to, so this
+    is what catches a short block."""
+    i = total = 0
+    while i < len(body):
+        token = body[i]
+        i, run = _lz4_run(body, i + 1, token >> 4)
+        i += run
+        total += run
+        if i >= len(body):  # the last sequence holds literals only
+            break
+        i, run = _lz4_run(body, i + 2, token & 15)  # after the offset
+        total += run + 4
+    if i != len(body):
+        raise ValueError("blosc: truncated lz4 block")
+    return total
+
+
 def _inner_decompress(body: bytes, cname: str, neblock: int) -> bytes:
     if cname == "lz4":
+        size = _lz4_block_size(body)
+        if size != neblock:
+            raise ValueError(f"blosc: lz4 block holds {size} != {neblock} bytes")
         try:
             return pa.Codec("lz4_raw").decompress(
                 body, decompressed_size=neblock, asbytes=True
