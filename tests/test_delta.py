@@ -1609,3 +1609,57 @@ def test_update_delta(spark, tmp_path):
     # no-match update is a version no-op
     v = update_delta(spark, t, "id = 999", {"v": "0.0"})
     assert v == read_delta(spark, t).count() * 0 + v  # returns int
+
+
+def test_cdf_derived_deletes_read_deletion_vectors(spark, tmp_path):
+    """Without CDF enabled, a DELETE's change rows are derived from
+    its file actions: the file re-added with a wider deletion vector
+    and removed with its old one.  Each version reports only the row
+    it deleted, never the whole file as inserts plus deletes."""
+    from vtk_reserves_spark.sources.delta import (
+        delete_delta, read_delta_cdf, write_delta,
+    )
+
+    t = str(tmp_path / "dv_cdf")
+    write_delta(
+        spark.createDataFrame([(i, i * 0.5) for i in range(6)],
+                              "id long, v double").coalesce(1),
+        t,
+    )
+    assert len(delta_snapshot(t)["files"]) == 1
+    v1 = delete_delta(spark, t, "id = 2")
+    v2 = delete_delta(spark, t, "id = 3")
+    for v, want in ((v1, [(2, "delete")]), (v2, [(3, "delete")])):
+        got = read_delta_cdf(spark, t, starting_version=v, ending_version=v)
+        assert sorted(
+            (r["id"], r["_change_type"]) for r in got.collect()
+        ) == want
+
+
+def test_cdf_skips_optimize(spark, tmp_path):
+    """OPTIMIZE rewrites rows without changing them: its commit marks
+    adds and removes ``dataChange: false`` and the change feed reports
+    nothing for that version."""
+    from pyspark.sql import functions as F
+
+    from vtk_reserves_spark.sources.delta import (
+        optimize_delta, read_delta_cdf, write_delta,
+    )
+
+    t = str(tmp_path / "opt_cdf")
+    for k in range(3):
+        write_delta(
+            spark.createDataFrame([(2 * k, 0.0), (2 * k + 1, 1.0)],
+                                  "id long, v double").coalesce(1),
+            t,
+        )
+    v = optimize_delta(spark, t, min_file_size=1 << 20)
+    assert v == 3 and len(delta_snapshot(t)["files"]) == 1
+    with open(os.path.join(t, "_delta_log", f"{v:020d}.json")) as fh:
+        actions = [json.loads(line) for line in fh if line.strip()]
+    flags = [a[k]["dataChange"] for a in actions for k in ("add", "remove")
+             if k in a]
+    assert len(flags) == 4 and not any(flags)
+    cdf = read_delta_cdf(spark, t, starting_version=0, ending_version=v)
+    assert cdf.filter(F.col("_commit_version") == v).count() == 0
+    assert sorted(r["id"] for r in cdf.collect()) == list(range(6))

@@ -747,6 +747,39 @@ def test_experimental_variogram_tiny_case(spark):
     assert out[1].h_mid == pytest.approx(7.5)
 
 
+def test_directional_variogram_sectors_sum_to_omnidirectional(spark):
+    """Both variograms read the same pair stream: per lag bin, the
+    sector ``n_pairs`` add up to the omnidirectional ``n_pairs``, and
+    the ``n_pairs``-weighted mean of the sector gammas is its gamma."""
+    import numpy as np
+
+    from vtk_reserves_spark.operators.geostats import (
+        directional_variogram,
+        experimental_variogram,
+    )
+
+    rng = np.random.default_rng(7)
+    xyz = np.round(rng.uniform(0.0, 60.0, (240, 3)), 1)
+    xyz[:20, :2] = xyz[20:40, :2]  # vertical pairs land in sector 0
+    vals = rng.normal(5.0, 2.0, 240)
+    rows = [
+        (float(x), float(y), float(z), None if i % 17 == 0 else float(v))
+        for i, ((x, y, z), v) in enumerate(zip(xyz, vals))
+    ]
+    df = spark.createDataFrame(rows, "x double, y double, z double, v double")
+    omni = {r.lag_bin: r for r in experimental_variogram(df, "v", 25.0, 5).collect()}
+    sect = directional_variogram(df, "v", 25.0, 5, n_sectors=4).collect()
+    assert len({r.sector for r in sect}) == 4
+    assert set(omni) == {r.lag_bin for r in sect} == set(range(5))
+    for lag, o in omni.items():
+        rs = [r for r in sect if r.lag_bin == lag]
+        n = sum(r.n_pairs for r in rs)
+        assert n == o.n_pairs
+        mean = sum(r.n_pairs * r.gamma for r in rs) / n
+        assert mean == pytest.approx(o.gamma, rel=1e-12)
+        assert all(r.h_mid == o.h_mid for r in rs)
+
+
 def test_locate_composites_vertical_and_deviated(spark):
     """Vertical hole: composites at collar xy, z = collar_z - mid.
     Deviated hole: a composite below the last station extends along

@@ -1,22 +1,32 @@
-"""Grade estimation: inverse-distance-weighted (IDW) interpolation.
+"""Grade estimation from drillhole samples: the step that PRODUCES the
+per-block grades the reserves report reads.
 
-The reference reports grades a block model already carries; the step
-that PRODUCES those grades — interpolating composited drillhole samples
-onto blocks — is the natural upstream capability (IDW is the classic
-baseline; Shepard 1968).  Spark-native shape:
+- Estimators: inverse-distance weighting (IDW, Shepard 1968), ordinary
+  point and block kriging, indicator and simple kriging, and ordinary
+  co-kriging.
+- Variography: the experimental and the azimuth-sectored variogram and
+  a grid-search model fit.
+- Sample preparation and QA: declustering weights, top-cut report,
+  normal-score transform and back-transform, anisotropy transform and
+  swath plots.
 
-- samples are exploded to their spatial tile plus the 26 neighbors
-  (tile size ≥ search radius, so every block's candidates live in its
-  own tile) — a bounded 27× fan-out of the SMALL side;
-- blocks join on their single tile id (equi-join, hash-partitioned,
-  never an all-pairs cross join);
-- the exact radius filter and ``1/d^p`` weighting run as expressions,
-  and one groupBy per block reduces to the estimate.
+Every neighborhood operator stands on one tile device, computed once
+per coarse spatial cell and reused for everything inside it: samples
+explode to their tile (width = search radius) plus the 26 neighbors
+(:func:`_neighbor_tiles`, a bounded 27x fan-out of the SMALL side), and
+blocks, or the other sample of a pair, equi-join a single tile id —
+never an all-pairs cross join.
+
+- IDW weights and reduces with expressions, one groupBy per block.
+- The krigers gather candidates with :func:`_tile_candidates` and solve
+  each block's system in ``applyInPandas`` (:func:`_estimate`); blocks
+  with equally many samples batch into one LAPACK call
+  (:func:`_solve`).
+- Both variograms read one pair stream (:func:`_sample_pairs`) and
+  differ only in their binning.
 
 Cost: O(blocks × samples-per-neighborhood); sample skew (dense drilling
 in one zone) surfaces as tile skew, handled by AQE skew-join splitting.
-A kriging upgrade slots into the same tile-join skeleton (weights from
-a per-neighborhood solve via applyInPandas instead of expressions).
 """
 
 from __future__ import annotations
@@ -25,6 +35,22 @@ import math
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+
+def _neighbor_tiles(df: DataFrame, x: str, y: str, z: str, tile: float) -> DataFrame:
+    """``df`` with each row repeated for its own tile and the 26
+    neighbors: ``tx/ty/tz`` index the cubes of width ``tile`` around the
+    row's point, read from the columns named ``x``, ``y``, ``z``."""
+    off = F.sequence(F.lit(-1), F.lit(1))
+    return (
+        df.withColumn("_ox", F.explode(off))
+        .withColumn("_oy", F.explode(off))
+        .withColumn("_oz", F.explode(off))
+        .withColumn("tx", F.col("_ox") + F.floor(F.col(x) / tile).cast("long"))
+        .withColumn("ty", F.col("_oy") + F.floor(F.col(y) / tile).cast("long"))
+        .withColumn("tz", F.col("_oz") + F.floor(F.col(z) / tile).cast("long"))
+        .drop("_ox", "_oy", "_oz")
+    )
 
 
 def _tile_candidates(
@@ -37,19 +63,14 @@ def _tile_candidates(
     payload: dict,
     keep_filter=None,
 ) -> DataFrame:
-    """The shared tile-join skeleton of every estimator here (IDW and
-    the kriging family): samples explode to their spatial tile plus the
-    26 neighbors (tile size = search radius, so every block's candidates
-    live in its own tile — a bounded 27x fan-out of the SMALL side),
-    blocks equi-join their single tile id, and the exact radius filter
-    runs as an expression.
-
-    ``payload`` maps output alias -> sample column name; ``keep_filter``
-    (a Column over the aliased payload) prunes sample rows before the
-    explode (e.g. value non-null).  Returns the candidate rows with
-    ``tx/ty/tz``, ``block_id``, block centroid ``_bx/_by/_bz``, sample
-    coords ``_sx/_sy/_sz``, the payload columns, and the distance
-    ``_d`` (already filtered to ``<= radius``)."""
+    """Every estimator's candidate gather: samples explode to the tiles
+    of width ``radius`` around them (:func:`_neighbor_tiles`), blocks
+    equi-join their single tile id, and the exact radius filter runs as
+    an expression.  ``payload`` maps output alias -> sample column name
+    or Column; ``keep_filter`` (over the aliases) prunes samples before
+    the explode.  Returns ``tx/ty/tz``, ``block_id``, the block centroid
+    ``_bx/_by/_bz``, sample coords ``_sx/_sy/_sz``, the payload and the
+    distance ``_d <= radius``."""
     bx, by, bz = (F.col(c) for c in xyz)
     tile = float(radius)
     b = blocks.select(
@@ -61,7 +82,7 @@ def _tile_candidates(
         F.floor(by / tile).cast("long").alias("ty"),
         F.floor(bz / tile).cast("long").alias("tz"),
     )
-    sx, sy, sz = (F.col(c) for c in sample_xyz)
+    sx, sy, sz = (F.col(c) for c in (sample_xyz or xyz))
     s = samples.select(
         sx.alias("_sx"),
         sy.alias("_sy"),
@@ -73,17 +94,7 @@ def _tile_candidates(
     )
     if keep_filter is not None:
         s = s.where(keep_filter)
-    off = F.sequence(F.lit(-1), F.lit(1))
-    s = (
-        s.withColumn("_ox", F.explode(off))
-        .withColumn("_oy", F.explode(off))
-        .withColumn("_oz", F.explode(off))
-        .withColumn("tx", F.col("_ox") + F.floor(F.col("_sx") / tile).cast("long"))
-        .withColumn("ty", F.col("_oy") + F.floor(F.col("_sy") / tile).cast("long"))
-        .withColumn("tz", F.col("_oz") + F.floor(F.col("_sz") / tile).cast("long"))
-        .drop("_ox", "_oy", "_oz")
-    )
-    joined = b.join(s, ["tx", "ty", "tz"])
+    joined = b.join(_neighbor_tiles(s, "_sx", "_sy", "_sz", tile), ["tx", "ty", "tz"])
     d = F.sqrt(
         (F.col("_bx") - F.col("_sx")) ** 2
         + (F.col("_by") - F.col("_sy")) ** 2
@@ -106,6 +117,10 @@ def _solve_groups(cand: DataFrame, group_tiles: int):
     group's rows remain O(blocks_in_supertile * max_samples).  A
     block's candidates all carry its single tile id, so any
     tile -> supertile function keeps each block's neighborhood whole."""
+    # grouping is by SUPERTILE, not (tile, salt): salting was measured 6x
+    # SLOWER here — it fragments the per-neighborhood-size batched LAPACK
+    # solves into tiny classes and multiplies Arrow/pandas per-group
+    # overhead, which dominates at this group size
     if group_tiles <= 1:
         return cand.groupBy("tx", "ty", "tz")
     g = int(group_tiles)
@@ -114,6 +129,87 @@ def _solve_groups(cand: DataFrame, group_tiles: int):
         F.floor(F.col("ty") / g).alias("gty"),
         F.floor(F.col("tz") / g).alias("gtz"),
     )
+
+
+def _estimate(
+    blocks: DataFrame,
+    cand: DataFrame,
+    block_id: str,
+    fields: dict,
+    solve_tile,
+    supertile: int,
+) -> DataFrame:
+    """The kriging scaffold: ``solve_tile`` (pandas -> pandas, any mix of
+    blocks per call) runs over the candidate rows grouped by supertile,
+    and its per-block rows left-join back onto every block, so blocks
+    without candidates carry NULLs for the caller's final select.
+    ``fields`` maps each output column after ``block_id`` to its type."""
+    from pyspark.sql import types as T
+
+    schema = T.StructType(
+        [next(f for f in blocks.schema.fields if f.name == block_id)]
+        + [T.StructField(name, t) for name, t in fields.items()]
+    )
+    est = _solve_groups(cand, supertile).applyInPandas(solve_tile, schema)
+    return blocks.select(block_id).join(est, block_id, "left")
+
+
+def _by_size_class(pdf, block_id: str, value_col: str, max_samples: int, solve_class):
+    """Point kriging's per-call driver: each block keeps its
+    ``max_samples`` nearest candidates (one sort + head per call instead
+    of an nsmallest per block), and blocks with the same neighborhood
+    size ``n`` form one class, its rows contiguous and each block's rows
+    in distance order, so ``solve_class(n, b, rows)`` reshapes them into
+    ``(b, n, ...)`` tensors and solves all ``b`` systems in ONE batched
+    LAPACK call instead of a Python loop per block (measured ~2x
+    end-to-end on the 12k-block bench queries).  ``solve_class`` returns
+    the ``(estimate, kvar)`` arrays, or None for NULLs.  Returns
+    ``(block_id, value_col, kvar, n_samples)``."""
+    import numpy as np
+    import pandas as pd
+
+    pdf = pdf.sort_values("_d", kind="stable")
+    pdf = pdf.groupby(block_id, sort=False).head(max_samples)
+    # the stable sort keeps each block's rows in distance order
+    pdf = pdf.sort_values(block_id, kind="stable")
+    counts = pdf.groupby(block_id, sort=False).size().to_numpy()
+    pdf["_n"] = np.repeat(counts, counts)
+    ids_all, ests_all, kvars_all, ns_all = [], [], [], []
+    for n, sub in pdf.groupby("_n", sort=False):
+        n = int(n)
+        bids = sub[block_id].to_numpy()[::n]
+        b = len(bids)
+        ids_all.extend(bids.tolist())
+        ns_all.extend([n] * b)
+        res = solve_class(n, b, sub)
+        if res is None:
+            ests_all.extend([None] * b)
+            kvars_all.extend([None] * b)
+        else:
+            ests_all.extend(res[0].tolist())
+            kvars_all.extend(res[1].tolist())
+    return pd.DataFrame(
+        {block_id: ids_all, value_col: ests_all, "kvar": kvars_all, "n_samples": ns_all}
+    )
+
+
+def _solve(A, rhs):
+    """Solve the systems ``A[i] @ w[i] = rhs[i]`` in one batched LAPACK
+    call.  The batched solve aborts if ANY system is singular (duplicate
+    sample locations); then every system is solved again on its own,
+    with a least-squares fallback for the rare offenders."""
+    import numpy as np
+
+    try:
+        return np.linalg.solve(A, rhs[:, :, None])[:, :, 0]
+    except np.linalg.LinAlgError:
+        w = np.empty(rhs.shape)
+        for i in range(len(rhs)):
+            try:
+                w[i] = np.linalg.solve(A[i], rhs[i])
+            except np.linalg.LinAlgError:
+                w[i] = np.linalg.lstsq(A[i], rhs[i], rcond=None)[0]
+        return w
 
 
 def idw_interpolate(
@@ -136,7 +232,6 @@ def idw_interpolate(
     the block centroid would make ``1/d^p`` blow up; its distance is
     clamped to ``eps`` (the conventional guard, equivalent to nearest-
     sample assignment there)."""
-    sample_xyz = sample_xyz or xyz
     cand = _tile_candidates(
         blocks, samples, radius, block_id, xyz, sample_xyz,
         payload={"_v": value_col},
@@ -198,15 +293,11 @@ def ordinary_krige(
     block_size: tuple | None = None,
     solve_supertile: int = 2,
 ) -> DataFrame:
-    """Ordinary kriging: per-block neighborhood solve on the IDW tile
-    skeleton.
-
-    Same candidate gathering as :func:`idw_interpolate` (samples explode
-    to 27 neighbor tiles, blocks equi-join one tile, exact radius
-    filter); then each block's nearest ``max_samples`` candidates feed
-    the ordinary-kriging system (variogram matrix + Lagrange row) solved
-    per block in ``applyInPandas`` — Python at BATCH level over
-    neighborhood-sized matrices, never over raw rows.  Returns
+    """Ordinary kriging: each block's nearest ``max_samples`` candidates
+    (gathered as :func:`idw_interpolate` gathers them) feed the
+    ordinary-kriging system (variogram matrix + Lagrange row), solved in
+    ``applyInPandas`` at BATCH level over neighborhood-sized matrices,
+    never over raw rows.  Returns
     ``(block_id, <value_col>, kvar, n_samples)`` with the kriging
     variance; blocks with fewer than ``min_samples`` in radius get NULL.
 
@@ -250,10 +341,6 @@ def ordinary_krige(
         # block, so compute once on the driver and close over it
         pp = np.linalg.norm(offsets[:, None, :] - offsets[None, :, :], axis=2)
         gbar_bb = float(gamma(pp).mean())
-    sample_xyz = sample_xyz or xyz
-    # keep the block's tile as the applyInPandas group key: one pandas
-    # call covers every block in the tile (per-GROUP overhead measured
-    # ~10x the per-block numpy solve when grouped by block id)
     centroid_cols = ["_bx", "_by", "_bz"] if offsets is not None else []
     cand = _tile_candidates(
         blocks, samples, radius, block_id, xyz, sample_xyz,
@@ -264,114 +351,51 @@ def ordinary_krige(
         *centroid_cols,
     )
 
-    out_schema = T.StructType(
-        [
-            next(f for f in blocks.schema.fields if f.name == block_id),
-            T.StructField(value_col, T.DoubleType()),
-            T.StructField("kvar", T.DoubleType()),
-            T.StructField("n_samples", T.IntegerType()),
-        ]
-    )
+    def solve_class(n, b, sub):
+        if n < min_samples:
+            return None
+        P = sub[["_sx", "_sy", "_sz"]].to_numpy(float).reshape(b, n, 3)
+        v = sub["_v"].to_numpy(float).reshape(b, n)
+        if offsets is None:
+            gb = gamma(sub["_d"].to_numpy(float).reshape(b, n))
+            extra = 0.0
+        else:
+            b0 = sub[["_bx", "_by", "_bz"]].to_numpy(float).reshape(b, n, 3)[:, 0, :]
+            pts = b0[:, None, :] + offsets[None, :, :]  # (b, m, 3)
+            db = np.linalg.norm(P[:, :, None, :] - pts[:, None, :, :], axis=3)
+            gb = gamma(db).mean(axis=2)  # (b, n) sample-to-block average
+            extra = -gbar_bb
+        hij = np.linalg.norm(P[:, :, None, :] - P[:, None, :, :], axis=3)
+        A = np.empty((b, n + 1, n + 1))
+        A[:, :n, :n] = gamma(hij)
+        A[:, n, :] = A[:, :, n] = 1.0
+        A[:, n, n] = 0.0
+        w = _solve(A, np.concatenate([gb, np.ones((b, 1))], axis=1))
+        kvar = (w[:, :n] * gb).sum(axis=1) + w[:, n] + extra
+        return (w[:, :n] * v).sum(axis=1), np.maximum(kvar, 0.0)
 
     def solve_tile(pdf: pd.DataFrame) -> pd.DataFrame:
-        # one sort + head per tile instead of an nsmallest per block
-        pdf = pdf.sort_values("_d", kind="stable")
-        pdf = pdf.groupby(block_id, sort=False).head(max_samples)
-        # order rows (block, distance); the stable sort keeps each
-        # block's rows in distance order while making them contiguous,
-        # so same-neighborhood-size blocks reshape into (b, n, ...)
-        # tensors and the n+1 systems solve in ONE batched LAPACK call
-        # per size class instead of a Python loop per block (measured
-        # ~2x end-to-end on the 12k-block bench queries; the solve
-        # stage itself shrinks much more)
-        pdf = pdf.sort_values(block_id, kind="stable")
-        sizes = pdf.groupby(block_id, sort=False).size()
-        counts = sizes.to_numpy()
-        pdf["_n"] = np.repeat(counts, counts)
-        ids_all, ests_all, kvars_all, ns_all = [], [], [], []
-        for n, sub in pdf.groupby("_n", sort=False):
-            n = int(n)
-            bids = sub[block_id].to_numpy()[::n]
-            if n < min_samples:
-                ids_all.extend(bids.tolist())
-                ns_all.extend([n] * len(bids))
-                ests_all.extend([None] * len(bids))
-                kvars_all.extend([None] * len(bids))
-                continue
-            b = len(bids)
-            P = sub[["_sx", "_sy", "_sz"]].to_numpy(float).reshape(b, n, 3)
-            v = sub["_v"].to_numpy(float).reshape(b, n)
-            if offsets is None:
-                gb = gamma(sub["_d"].to_numpy(float).reshape(b, n))
-                extra = 0.0
-            else:
-                b0 = sub[["_bx", "_by", "_bz"]].to_numpy(float).reshape(b, n, 3)[:, 0, :]
-                pts = b0[:, None, :] + offsets[None, :, :]  # (b, m, 3)
-                db = np.linalg.norm(P[:, :, None, :] - pts[:, None, :, :], axis=3)
-                gb = gamma(db).mean(axis=2)  # (b, n) sample-to-block average
-                extra = -gbar_bb
-            hij = np.linalg.norm(P[:, :, None, :] - P[:, None, :, :], axis=3)
-            A = np.empty((b, n + 1, n + 1))
-            A[:, :n, :n] = gamma(hij)
-            A[:, n, :] = A[:, :, n] = 1.0
-            A[:, n, n] = 0.0
-            rhs = np.concatenate([gb, np.ones((b, 1))], axis=1)
-            try:
-                w = np.linalg.solve(A, rhs[:, :, None])[:, :, 0]
-            except np.linalg.LinAlgError:
-                # batched solve aborts if ANY system is singular
-                # (duplicate sample locations); redo one-by-one with a
-                # least-squares fallback for the rare offenders
-                w = np.empty((b, n + 1))
-                for i in range(b):
-                    try:
-                        w[i] = np.linalg.solve(A[i], rhs[i])
-                    except np.linalg.LinAlgError:
-                        w[i] = np.linalg.lstsq(A[i], rhs[i], rcond=None)[0]
-            ids_all.extend(bids.tolist())
-            ns_all.extend([n] * b)
-            ests_all.extend((w[:, :n] * v).sum(axis=1).tolist())
-            kvars_all.extend(
-                np.maximum((w[:, :n] * gb).sum(axis=1) + w[:, n] + extra, 0.0).tolist()
-            )
-        return pd.DataFrame(
-            {block_id: ids_all, value_col: ests_all, "kvar": kvars_all,
-             "n_samples": ns_all}
-        )
+        return _by_size_class(pdf, block_id, value_col, max_samples, solve_class)
 
-    # grouping is by SUPERTILE, not (tile, salt): salting was measured 6x
-    # SLOWER here — it fragments the per-neighborhood-size batched LAPACK
-    # solves into tiny classes and multiplies Arrow/pandas per-group
-    # overhead, which dominates at this group size (see _solve_groups)
-    est = _solve_groups(cand, solve_supertile).applyInPandas(solve_tile, out_schema)
-    out = blocks.select(block_id).join(est, block_id, "left")
-    return out.select(
-        block_id,
-        value_col,
-        "kvar",
-        F.coalesce("n_samples", F.lit(0)).alias("n_samples"),
+    out = _estimate(
+        blocks, cand, block_id,
+        {value_col: T.DoubleType(), "kvar": T.DoubleType(), "n_samples": T.IntegerType()},
+        solve_tile, solve_supertile,
     )
+    n_samples = F.coalesce("n_samples", F.lit(0)).alias("n_samples")
+    return out.select(block_id, value_col, "kvar", n_samples)
 
 
-def experimental_variogram(
-    samples: DataFrame,
-    value_col: str,
-    max_lag: float,
-    n_lags: int = 10,
-    xyz=("x", "y", "z"),
-) -> DataFrame:
-    """Experimental (empirical) variogram: the data-driven curve a
-    kriging model is fitted against.  For every sample pair within
-    ``max_lag``, ``gamma(h) = mean((v_i - v_j)^2) / 2`` over lag bins of
-    width ``max_lag / n_lags``.
+def _sample_pairs(samples: DataFrame, value_col: str, max_lag: float, xyz) -> DataFrame:
+    """The variograms' pair stream: every unordered pair of samples with a
+    non-null value at distance ``0 < _d <= max_lag``, once.  One sample's
+    ``_x/_y/_z/_v`` sit beside the other's ``_x_b/_y_b/_z_b/_v_b``.
 
-    Same tile device as the estimators: samples explode to 27 neighbor
-    tiles of width ``max_lag``, pairs form inside a tile equi-join with
-    the exact distance filter (each unordered pair counted once via an
-    id tiebreak), so the pair count is O(n × neighbors), never O(n²).
-    Returns ``(lag_bin, h_mid, n_pairs, gamma)`` sorted by lag."""
+    Samples explode to 27 neighbor tiles of width ``max_lag`` and pair
+    inside a tile equi-join with the exact distance filter, each pair
+    counted once via an id tiebreak, so the pair count is
+    O(n × neighbors), never O(n²)."""
     tile = float(max_lag)
-    width = max_lag / n_lags
     sx, sy, sz = (F.col(c) for c in xyz)
     base = samples.select(
         F.monotonically_increasing_id().alias("_id"),
@@ -391,39 +415,54 @@ def experimental_variogram(
         F.floor(F.col("_y") / tile).cast("long").alias("ty"),
         F.floor(F.col("_z") / tile).cast("long").alias("tz"),
     )
-    off = F.sequence(F.lit(-1), F.lit(1))
     bcols = [F.col(c).alias(f"{c}_b") for c in ("_id", "_x", "_y", "_z", "_v")]
-    b = (
-        base.select(*bcols)
-        .withColumn("_ox", F.explode(off))
-        .withColumn("_oy", F.explode(off))
-        .withColumn("_oz", F.explode(off))
-        .withColumn("tx", F.col("_ox") + F.floor(F.col("_x_b") / tile).cast("long"))
-        .withColumn("ty", F.col("_oy") + F.floor(F.col("_y_b") / tile).cast("long"))
-        .withColumn("tz", F.col("_oz") + F.floor(F.col("_z_b") / tile).cast("long"))
-        .drop("_ox", "_oy", "_oz")
-    )
+    b = _neighbor_tiles(base.select(*bcols), "_x_b", "_y_b", "_z_b", tile)
     j = a.join(b, ["tx", "ty", "tz"]).where(F.col("_id") < F.col("_id_b"))
     d = F.sqrt(
         (F.col("_x") - F.col("_x_b")) ** 2
         + (F.col("_y") - F.col("_y_b")) ** 2
         + (F.col("_z") - F.col("_z_b")) ** 2
     )
-    pairs = j.withColumn("_d", d).where((F.col("_d") > 0) & (F.col("_d") <= max_lag))
+    return j.withColumn("_d", d).where((F.col("_d") > 0) & (F.col("_d") <= max_lag))
+
+
+def _lag_curve(pairs: DataFrame, max_lag: float, n_lags: int, *keys: str) -> DataFrame:
+    """Bin a pair stream into ``n_lags`` lags of width ``max_lag / n_lags``
+    (the last bin closed at ``max_lag``) and reduce each ``(*keys,
+    lag_bin)`` group to ``(h_mid, n_pairs, gamma)``, with ``gamma = mean((v
+    - v_b)^2) / 2``, sorted by the keys and the lag."""
+    width = max_lag / n_lags
     binned = pairs.withColumn(
         "lag_bin",
         F.least(F.floor(F.col("_d") / width), F.lit(n_lags - 1)).cast("int"),
     )
     return (
-        binned.groupBy("lag_bin")
+        binned.groupBy(*keys, "lag_bin")
         .agg(
             F.count(F.lit(1)).alias("n_pairs"),
             (F.avg((F.col("_v") - F.col("_v_b")) ** 2) / 2.0).alias("gamma"),
         )
         .withColumn("h_mid", (F.col("lag_bin") + 0.5) * width)
-        .select("lag_bin", "h_mid", "n_pairs", "gamma")
-        .orderBy("lag_bin")
+        .select(*keys, "lag_bin", "h_mid", "n_pairs", "gamma")
+        .orderBy(*keys, "lag_bin")
     )
+
+
+def experimental_variogram(
+    samples: DataFrame,
+    value_col: str,
+    max_lag: float,
+    n_lags: int = 10,
+    xyz=("x", "y", "z"),
+) -> DataFrame:
+    """Experimental (empirical) variogram: the data-driven curve a
+    kriging model is fitted against.  For every sample pair within
+    ``max_lag``, ``gamma(h) = mean((v_i - v_j)^2) / 2`` over lag bins of
+    width ``max_lag / n_lags``.
+
+    The pairs are :func:`_sample_pairs` (O(n × neighbors), never O(n²)).
+    Returns ``(lag_bin, h_mid, n_pairs, gamma)`` sorted by lag."""
+    return _lag_curve(_sample_pairs(samples, value_col, max_lag, xyz), max_lag, n_lags)
 
 
 def swath_plot(
@@ -501,10 +540,7 @@ def ordinary_cokrige(
     cross-variogram it decouples and reproduces ordinary kriging on the
     primary alone (pinned by test).
 
-    Scale shape is exactly :func:`ordinary_krige`'s tile join: ONE
-    equi-join on tile ids after a bounded 27x explode of the sample
-    side, per-tile ``applyInPandas`` for the solves (numpy at batch
-    level), AQE skew-split for dense-drilling tiles.  Heterotopic data
+    Scale shape is exactly :func:`ordinary_krige`'s.  Heterotopic data
     is supported — a row may carry either value or both; each block
     takes its ``max_samples`` nearest of each kind.
 
@@ -524,7 +560,6 @@ def ordinary_cokrige(
     g11 = _variogram_fn(*variograms["primary"])
     g22 = _variogram_fn(*variograms["secondary"])
     g12 = _variogram_fn(*variograms["cross"])
-    sample_xyz = sample_xyz or xyz
     cand = _tile_candidates(
         blocks, samples, radius, block_id, xyz, sample_xyz,
         payload={
@@ -534,16 +569,6 @@ def ordinary_cokrige(
         keep_filter=F.col("_v1").isNotNull() | F.col("_v2").isNotNull(),
     ).select(
         "tx", "ty", "tz", block_id, "_sx", "_sy", "_sz", "_v1", "_v2", "_d"
-    )
-
-    out_schema = T.StructType(
-        [
-            next(f for f in blocks.schema.fields if f.name == block_id),
-            T.StructField(primary_col, T.DoubleType()),
-            T.StructField("ckvar", T.DoubleType()),
-            T.StructField("n_primary", T.IntegerType()),
-            T.StructField("n_secondary", T.IntegerType()),
-        ]
     )
 
     def solve_tile(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -607,15 +632,7 @@ def ordinary_cokrige(
                 # pinning the unused Lagrange multiplier to zero
                 A[:, m - 1, m - 1] = 1.0
             A[:, :c1, c1 + c2] = A[:, c1 + c2, :c1] = 1.0
-            try:
-                w = np.linalg.solve(A, rhs[:, :, None])[:, :, 0]
-            except np.linalg.LinAlgError:
-                w = np.empty((b, m))
-                for i in range(b):
-                    try:
-                        w[i] = np.linalg.solve(A[i], rhs[i])
-                    except np.linalg.LinAlgError:
-                        w[i] = np.linalg.lstsq(A[i], rhs[i], rcond=None)[0]
+            w = _solve(A, rhs)
             est = (w[:, :c1] * v1).sum(axis=1)
             kv = (w[:, :c1] * rhs[:, :c1]).sum(axis=1) + w[:, c1 + c2]
             if c2:
@@ -630,12 +647,12 @@ def ordinary_cokrige(
             }
         )
 
-    # grouping is by SUPERTILE, not (tile, salt): salting was measured 6x
-    # SLOWER here — it fragments the per-neighborhood-size batched LAPACK
-    # solves into tiny classes and multiplies Arrow/pandas per-group
-    # overhead, which dominates at this group size (see _solve_groups)
-    est = _solve_groups(cand, solve_supertile).applyInPandas(solve_tile, out_schema)
-    out = blocks.select(block_id).join(est, block_id, "left")
+    out = _estimate(
+        blocks, cand, block_id,
+        {primary_col: T.DoubleType(), "ckvar": T.DoubleType(),
+         "n_primary": T.IntegerType(), "n_secondary": T.IntegerType()},
+        solve_tile, solve_supertile,
+    )
     return out.select(
         block_id,
         primary_col,
@@ -1001,60 +1018,30 @@ def simple_krige(
     gamma = _variogram_fn(model, float(vrange), float(sill), float(nugget))
     sill = float(sill)
     mean = float(mean)
-    sample_xyz = sample_xyz or xyz
     cand = _tile_candidates(
         blocks, samples, radius, block_id, xyz, sample_xyz,
         payload={"_v": value_col},
         keep_filter=F.col("_v").isNotNull(),
     ).select("tx", "ty", "tz", block_id, "_sx", "_sy", "_sz", "_v", "_d")
 
-    out_schema = T.StructType(
-        [
-            next(f for f in blocks.schema.fields if f.name == block_id),
-            T.StructField(value_col, T.DoubleType()),
-            T.StructField("kvar", T.DoubleType()),
-            T.StructField("n_samples", T.IntegerType()),
-        ]
-    )
+    def solve_class(n, b, sub):
+        P = sub[["_sx", "_sy", "_sz"]].to_numpy(float).reshape(b, n, 3)
+        v = sub["_v"].to_numpy(float).reshape(b, n)
+        cb = sill - gamma(sub["_d"].to_numpy(float).reshape(b, n))
+        hij = np.linalg.norm(P[:, :, None, :] - P[:, None, :, :], axis=3)
+        A = sill - gamma(hij)  # covariance matrix, (b, n, n)
+        w = _solve(A, cb)
+        est = mean + (w * (v - mean)).sum(axis=1)
+        return est, np.maximum(sill - (w * cb).sum(axis=1), 0.0)
 
     def solve_tile(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("_d", kind="stable")
-        pdf = pdf.groupby(block_id, sort=False).head(max_samples)
-        pdf = pdf.sort_values(block_id, kind="stable")
-        counts = pdf.groupby(block_id, sort=False).size().to_numpy()
-        pdf["_n"] = np.repeat(counts, counts)
-        ids_all, ests_all, kvars_all, ns_all = [], [], [], []
-        for n, sub in pdf.groupby("_n", sort=False):
-            n = int(n)
-            bids = sub[block_id].to_numpy()[::n]
-            b = len(bids)
-            P = sub[["_sx", "_sy", "_sz"]].to_numpy(float).reshape(b, n, 3)
-            v = sub["_v"].to_numpy(float).reshape(b, n)
-            cb = sill - gamma(sub["_d"].to_numpy(float).reshape(b, n))
-            hij = np.linalg.norm(P[:, :, None, :] - P[:, None, :, :], axis=3)
-            A = sill - gamma(hij)  # covariance matrix, (b, n, n)
-            try:
-                w = np.linalg.solve(A, cb[:, :, None])[:, :, 0]
-            except np.linalg.LinAlgError:
-                w = np.empty((b, n))
-                for i in range(b):
-                    try:
-                        w[i] = np.linalg.solve(A[i], cb[i])
-                    except np.linalg.LinAlgError:
-                        w[i] = np.linalg.lstsq(A[i], cb[i], rcond=None)[0]
-            ids_all.extend(bids.tolist())
-            ns_all.extend([n] * b)
-            ests_all.extend((mean + (w * (v - mean)).sum(axis=1)).tolist())
-            kvars_all.extend(
-                np.maximum(sill - (w * cb).sum(axis=1), 0.0).tolist()
-            )
-        return pd.DataFrame(
-            {block_id: ids_all, value_col: ests_all, "kvar": kvars_all,
-             "n_samples": ns_all}
-        )
+        return _by_size_class(pdf, block_id, value_col, max_samples, solve_class)
 
-    est = _solve_groups(cand, solve_supertile).applyInPandas(solve_tile, out_schema)
-    out = blocks.select(block_id).join(est, block_id, "left")
+    out = _estimate(
+        blocks, cand, block_id,
+        {value_col: T.DoubleType(), "kvar": T.DoubleType(), "n_samples": T.IntegerType()},
+        solve_tile, solve_supertile,
+    )
     return out.select(
         block_id,
         # empty neighborhood: simple kriging's defining fallback — the
@@ -1253,64 +1240,14 @@ def directional_variogram(
     one more grouping key; pair count stays O(n × neighbors).
     Returns ``(sector, lag_bin, h_mid, n_pairs, gamma)``.
     """
-    tile = float(max_lag)
-    width = max_lag / n_lags
-    sx, sy, sz = (F.col(c) for c in xyz)
-    base = samples.select(
-        F.monotonically_increasing_id().alias("_id"),
-        sx.alias("_x"),
-        sy.alias("_y"),
-        sz.alias("_z"),
-        F.col(value_col).cast("double").alias("_v"),
-    ).where(F.col("_v").isNotNull())
-    # same id-stability device as experimental_variogram: pin the ids
-    # before BOTH join branches read them
-    base = base.localCheckpoint(eager=True)
-    a = base.select(
-        "_id", "_x", "_y", "_z", "_v",
-        F.floor(F.col("_x") / tile).cast("long").alias("tx"),
-        F.floor(F.col("_y") / tile).cast("long").alias("ty"),
-        F.floor(F.col("_z") / tile).cast("long").alias("tz"),
-    )
-    off = F.sequence(F.lit(-1), F.lit(1))
-    bcols = [F.col(c).alias(f"{c}_b") for c in ("_id", "_x", "_y", "_z", "_v")]
-    b = (
-        base.select(*bcols)
-        .withColumn("_ox", F.explode(off))
-        .withColumn("_oy", F.explode(off))
-        .withColumn("_oz", F.explode(off))
-        .withColumn("tx", F.col("_ox") + F.floor(F.col("_x_b") / tile).cast("long"))
-        .withColumn("ty", F.col("_oy") + F.floor(F.col("_y_b") / tile).cast("long"))
-        .withColumn("tz", F.col("_oz") + F.floor(F.col("_z_b") / tile).cast("long"))
-        .drop("_ox", "_oy", "_oz")
-    )
-    j = a.join(b, ["tx", "ty", "tz"]).where(F.col("_id") < F.col("_id_b"))
-    d = F.sqrt(
-        (F.col("_x") - F.col("_x_b")) ** 2
-        + (F.col("_y") - F.col("_y_b")) ** 2
-        + (F.col("_z") - F.col("_z_b")) ** 2
-    )
-    pairs = j.withColumn("_d", d).where((F.col("_d") > 0) & (F.col("_d") <= max_lag))
+    pairs = _sample_pairs(samples, value_col, max_lag, xyz)
     phi = F.atan2(F.col("_y_b") - F.col("_y"), F.col("_x_b") - F.col("_x"))
     phi = F.when(phi < 0, phi + math.pi).otherwise(phi)
     phi = F.when(phi >= math.pi, phi - math.pi).otherwise(phi)
     sector = F.least(
         F.floor(phi / F.lit(math.pi / n_sectors)), F.lit(n_sectors - 1)
     ).cast("int")
-    binned = pairs.withColumn("sector", sector).withColumn(
-        "lag_bin",
-        F.least(F.floor(F.col("_d") / width), F.lit(n_lags - 1)).cast("int"),
-    )
-    return (
-        binned.groupBy("sector", "lag_bin")
-        .agg(
-            F.count(F.lit(1)).alias("n_pairs"),
-            (F.avg((F.col("_v") - F.col("_v_b")) ** 2) / 2.0).alias("gamma"),
-        )
-        .withColumn("h_mid", (F.col("lag_bin") + 0.5) * width)
-        .select("sector", "lag_bin", "h_mid", "n_pairs", "gamma")
-        .orderBy("sector", "lag_bin")
-    )
+    return _lag_curve(pairs.withColumn("sector", sector), max_lag, n_lags, "sector")
 
 
 def anisotropy_transform(

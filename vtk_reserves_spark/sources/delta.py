@@ -79,6 +79,15 @@ _SUPPORTED_READER_FEATURES = {
 }
 
 
+def _commit_actions(table: str, version: int):
+    """The parsed action lines of one JSON commit, in log order."""
+    with open(_commit_path(table, version)) as fh:
+        for line in fh:
+            line = line.strip()
+            if line:
+                yield json.loads(line)
+
+
 def _check_protocol(proto: dict) -> None:
     if not proto:
         return
@@ -265,25 +274,18 @@ def delta_snapshot(table: str, version: int | None = None) -> dict:
     last = start - 1
     for v in versions:
         last = v
-        with open(_commit_path(table, v)) as fh:
-            for line in fh:
-                line = line.strip()
-                if not line:
-                    continue
-                action = json.loads(line)
-                if "protocol" in action:
-                    proto = action["protocol"]
-                    _check_protocol(proto)
-                elif "metaData" in action:
-                    meta = action["metaData"]
-                elif "add" in action:
-                    adds[action["add"]["path"]] = action["add"]
-                elif "remove" in action:
-                    adds.pop(action["remove"]["path"], None)
-                elif "txn" in action:
-                    txns[action["txn"]["appId"]] = int(
-                        action["txn"]["version"]
-                    )
+        for action in _commit_actions(table, v):
+            if "protocol" in action:
+                proto = action["protocol"]
+                _check_protocol(proto)
+            elif "metaData" in action:
+                meta = action["metaData"]
+            elif "add" in action:
+                adds[action["add"]["path"]] = action["add"]
+            elif "remove" in action:
+                adds.pop(action["remove"]["path"], None)
+            elif "txn" in action:
+                txns[action["txn"]["appId"]] = int(action["txn"]["version"])
     if meta is None:
         raise ValueError(f"delta: no metaData action found in {table}")
     files = [
@@ -548,9 +550,11 @@ def read_delta_cdf(
       ``delta.enableChangeDataFeed`` writes explicit ``_change_data/``
       parquets carrying ``_change_type``), read as ONE distributed
       parquet scan;
-    - otherwise DERIVED from the file actions: rows of
-      ``dataChange=true`` adds are inserts, rows of removed files are
-      deletes (why plain appends need no CDC files).
+    - otherwise DERIVED from the ``dataChange=true`` file actions,
+      each read through :func:`_scan` with its deletion vector: rows
+      live in an added file but not in the removed one at the same
+      (file, row position) are inserts, the reverse are deletes (why
+      plain appends and DELETEs without CDF need no CDC files).
 
     This is how incremental 100 TB pipelines avoid full rescans: the
     scan cost tracks the CHANGED data in the range, never the table
@@ -621,52 +625,37 @@ def read_delta_cdf(
     pieces: list[DataFrame] = []
     for v in versions:
         cdc_actions: list[tuple[str, dict]] = []
-        add_paths: list[str] = []
-        rem_paths: list[str] = []
+        # snapshot-shaped file entries of the commit's data-changing
+        # adds and removes, deletion vectors included
+        sides: dict[str, list[tuple]] = {"add": [], "remove": []}
         ts_ms = None
-        with open(_commit_path(table, v)) as fh:
-            for line in fh:
-                line = line.strip()
-                if not line:
-                    continue
-                action = json.loads(line)
-                if "metaData" in action:
-                    # the range is read under ONE schema (the head
-                    # version's); a schema change inside it would
-                    # silently mis-shape earlier commits' changes
-                    sch = action["metaData"].get("schemaString")
-                    if sch and json.loads(sch) != json.loads(
-                        head_schema
-                    ):
-                        raise ValueError(
-                            f"delta: CDF range [{versions[0]}, "
-                            f"{versions[-1]}] spans a schema change "
-                            f"at version {v}; split the read at that "
-                            "version"
-                        )
-                if "cdc" in action:
-                    cdc_actions.append((
-                        os.path.join(
-                            base, unquote(action["cdc"]["path"])
-                        ),
-                        action["cdc"].get("partitionValues") or {},
+        for action in _commit_actions(table, v):
+            if "metaData" in action:
+                # the range is read under ONE schema (the head
+                # version's); a schema change inside it would
+                # silently mis-shape earlier commits' changes
+                sch = action["metaData"].get("schemaString")
+                if sch and json.loads(sch) != json.loads(head_schema):
+                    raise ValueError(
+                        f"delta: CDF range [{versions[0]}, "
+                        f"{versions[-1]}] spans a schema change "
+                        f"at version {v}; split the read at that "
+                        "version"
+                    )
+            if "cdc" in action:
+                cdc_actions.append((
+                    os.path.join(base, unquote(action["cdc"]["path"])),
+                    action["cdc"].get("partitionValues") or {},
+                ))
+            for kind, entries in sides.items():
+                f = action.get(kind)
+                if f is not None and f.get("dataChange", True):
+                    entries.append((
+                        f["path"], f.get("partitionValues") or {},
+                        int(f.get("size", 0)), f.get("deletionVector"),
                     ))
-                elif "add" in action and action["add"].get(
-                    "dataChange", True
-                ):
-                    add_paths.append(
-                        os.path.join(base, unquote(action["add"]["path"]))
-                    )
-                elif "remove" in action and action["remove"].get(
-                    "dataChange", True
-                ):
-                    rem_paths.append(
-                        os.path.join(
-                            base, unquote(action["remove"]["path"])
-                        )
-                    )
-                elif "commitInfo" in action:
-                    ts_ms = action["commitInfo"].get("timestamp")
+            if "commitInfo" in action:
+                ts_ms = action["commitInfo"].get("timestamp")
         sub: list[DataFrame] = []
         if cdc_actions:
             # delta-spark writes _change_data/ files for PARTITIONED
@@ -712,33 +701,25 @@ def read_delta_cdf(
                     )
                 sub.append(cdf.select(*cols, "_change_type"))
         else:
-            # removed (and, across overwrites, added) files may
-            # predate columns the head schema carries — null-fill
-            # them, the same widening delta-spark applies
-            def _filled(df):
-                df = _to_logical(df)
-                return df.select(*[
-                    F.col(c) if c in df.columns
-                    else F.lit(None).cast(
-                        field_types.get(c, "string")
-                    ).alias(c)
-                    for c in cols
-                ])
-
-            if add_paths:
-                sub.append(
-                    _filled(
-                        spark.read.option("basePath", base)
-                        .schema(_phys_struct).parquet(*add_paths)
-                    ).withColumn("_change_type", F.lit("insert"))
-                )
-            if rem_paths:
-                sub.append(
-                    _filled(
-                        spark.read.option("basePath", base)
-                        .schema(_phys_struct).parquet(*rem_paths)
-                    ).withColumn("_change_type", F.lit("delete"))
-                )
+            # each side through the reader's own scan under the head
+            # schema (files predating a column null-fill it), with its
+            # deletion vectors applied: a DELETE re-adds a file with a
+            # wider vector and removes it with its old one, so only the
+            # rows live on one side and not the other changed
+            keys = ["_delta_file", "_delta_pos"]
+            live = {
+                kind: _scan(spark, table, {"files": entries, "metadata": meta},
+                            with_pos=True)
+                for kind, entries in sides.items() if entries
+            }
+            for kind, change, other in (("add", "insert", "remove"),
+                                        ("remove", "delete", "add")):
+                if kind not in live:
+                    continue
+                rows = live[kind]
+                if other in live:
+                    rows = rows.join(live[other].select(*keys), keys, "left_anti")
+                sub.append(rows.select(*cols).withColumn("_change_type", F.lit(change)))
         if not sub:
             continue
         piece = reduce(DataFrame.unionByName, sub).withColumns({
@@ -1325,7 +1306,7 @@ def delete_delta(
         os.path.join(base, unquote(p)): (p, pv, size, dv)
         for p, pv, size, dv in snap["files"]
     }
-    removes: list[str] = []
+    removes: list[tuple[str, dict | None]] = []
     adds: list[dict] = []
     for abs_path, new_pos in per_file.items():
         rel, pv, size, old_dv = by_abs[abs_path]
@@ -1335,7 +1316,7 @@ def delete_delta(
                 int(x) for x in _load_dv_positions(base, old_dv)
             }
         desc = write_deletion_vector(table, sorted(positions))
-        removes.append(rel)
+        removes.append((rel, old_dv))
         adds.append({
             "path": rel, "partitionValues": pv, "size": size,
             "deletionVector": desc,
@@ -1354,12 +1335,14 @@ def delete_delta(
         }}))
     # removes FIRST: log replay is line-ordered and the touched
     # files RE-ADD themselves (same path, new DV descriptor) — the
-    # add must win the per-path reconciliation
-    for p in removes:
-        lines.append(json.dumps({
-            "remove": {"path": p, "deletionTimestamp": 0,
-                       "dataChange": True}
-        }))
+    # add must win the per-path reconciliation.  Each remove carries
+    # the entry's old DV (PROTOCOL.md "Remove File"), so the change
+    # feed can tell the rows this delete took from earlier ones.
+    for p, old_dv in removes:
+        lines.append(json.dumps({"remove": {
+            "path": p, "deletionTimestamp": 0, "dataChange": True,
+            **({"deletionVector": old_dv} if old_dv else {}),
+        }}))
     for a in adds:
         lines.append(json.dumps({"add": {
             "path": a["path"],
@@ -1494,12 +1477,13 @@ def optimize_delta(
     files, grouped per partition (partition values recover from the
     hive directories on the scan, so the rewrite lands back in the
     right directories).  With ``zorder_by`` ALL files rewrite sorted
-    by the Morton key (`sources/writers.zorder_key`) so parquet
+    by the Morton key (`sources/writers.zorder_layout`) so parquet
     row-group min/max stats get tight on every interleaved column —
-    the multi-dimensional data-skipping device.  The commit marks
-    ``dataChange: false`` semantics by content (rows identical); the
-    plan is the same copy-on-write shape as :func:`merge_delta` —
-    only qualifying files are read or rewritten."""
+    the multi-dimensional data-skipping device.  The commit writes its
+    adds and removes with ``dataChange: false`` (rows identical, so
+    the change feed skips it); the plan is the same copy-on-write
+    shape as :func:`merge_delta` — only qualifying files are read or
+    rewritten."""
     snap = delta_snapshot(table)
     from urllib.parse import unquote
 
@@ -1520,16 +1504,10 @@ def optimize_delta(
         F.col("_delta_file").isin(list(victim_abs))
     ).drop("_delta_file")
     if zorder_by:
-        from vtk_reserves_spark.sources.writers import zorder_key
+        from vtk_reserves_spark.sources.writers import zorder_layout
 
-        key, _stats = zorder_key(rows, zorder_by)
-        rows = (
-            rows.withColumn("_zkey", key)
-            .repartitionByRange(
-                max(1, rows.rdd.getNumPartitions()), "_zkey"
-            )
-            .sortWithinPartitions("_zkey")
-            .drop("_zkey")
+        rows = zorder_layout(
+            rows, zorder_by, max(1, rows.rdd.getNumPartitions())
         )
     else:
         # bin-pack: one output file per partition directory per
@@ -1593,14 +1571,9 @@ def vacuum_delta(table: str, dry_run: bool = False) -> list[str]:
     # CDC files referenced by any retained commit stay (the CDF read
     # resolves them per commit, outside the snapshot file list)
     for v in versions:
-        with open(_commit_path(table, v)) as fh:
-            for line in fh:
-                line = line.strip()
-                if not line:
-                    continue
-                action = json.loads(line)
-                if "cdc" in action:
-                    referenced.add(unquote(action["cdc"]["path"]))
+        for action in _commit_actions(table, v):
+            if "cdc" in action:
+                referenced.add(unquote(action["cdc"]["path"]))
     doomed: list[str] = []
     for root, dirs, files in os.walk(table):
         dirs[:] = [
@@ -1710,21 +1683,14 @@ def delta_history(table: str) -> list[dict]:
     for v in _list_commit_versions(log_dir):
         row = {"version": v, "operation": None, "timestamp": None,
                "operationMetrics": None, "txn": None}
-        with open(_commit_path(table, v)) as fh:
-            for line in fh:
-                line = line.strip()
-                if not line:
-                    continue
-                action = json.loads(line)
-                if "commitInfo" in action:
-                    ci = action["commitInfo"]
-                    row["operation"] = ci.get("operation")
-                    row["timestamp"] = ci.get("timestamp")
-                    row["operationMetrics"] = ci.get(
-                        "operationMetrics"
-                    )
-                elif "txn" in action:
-                    row["txn"] = action["txn"]
+        for action in _commit_actions(table, v):
+            if "commitInfo" in action:
+                ci = action["commitInfo"]
+                row["operation"] = ci.get("operation")
+                row["timestamp"] = ci.get("timestamp")
+                row["operationMetrics"] = ci.get("operationMetrics")
+            elif "txn" in action:
+                row["txn"] = action["txn"]
         out.append(row)
     return sorted(out, key=lambda r: -r["version"])
 
@@ -1779,8 +1745,12 @@ def write_delta_commit(
     protocol+metaData (``reader_features=["deletionVectors"]`` emits
     the v3 protocol DV tables declare).  ``cdc`` actions describe
     Change-Data-Feed files under ``_change_data/`` (PROTOCOL.md
-    "Add CDC File" — always ``dataChange: false``)."""
+    "Add CDC File" — always ``dataChange: false``).  An ``OPTIMIZE``
+    commit writes its adds and removes with ``dataChange: false``: it
+    rearranges rows without changing them, so the change feed skips
+    it."""
     os.makedirs(os.path.join(table, _LOG_DIR), exist_ok=True)
+    data_change = operation != "OPTIMIZE"
     lines = []
     if schema_json is not None:
         proto = {"minReaderVersion": 1, "minWriterVersion": 2}
@@ -1807,7 +1777,7 @@ def write_delta_commit(
             "partitionValues": a.get("partitionValues", {}),
             "size": int(a.get("size", 0)),
             "modificationTime": 0,
-            "dataChange": True,
+            "dataChange": data_change,
         }
         if a.get("deletionVector"):
             add["deletionVector"] = a["deletionVector"]
@@ -1815,7 +1785,7 @@ def write_delta_commit(
     for p in removes or []:
         lines.append(json.dumps({
             "remove": {"path": p, "deletionTimestamp": 0,
-                       "dataChange": True}
+                       "dataChange": data_change}
         }))
     for c in cdc or []:
         lines.append(json.dumps({

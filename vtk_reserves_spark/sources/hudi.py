@@ -1450,7 +1450,7 @@ def cluster_hudi(
     ``replacecommit`` Hudi's clustering service writes (hudi docs
     "Clustering"): every live file group rewrites into fresh groups
     sorted by the Morton key of ``zorder_by``
-    (`sources/writers.zorder_key` — the same device as
+    (`sources/writers.zorder_layout` — the same device as
     ``optimize_delta(zorder_by=...)``), so parquet row-group min/max
     footers get tight on ALL the interleaved columns and selective
     filters on any of them skip most files.  Old snapshots stay
@@ -1466,7 +1466,7 @@ def cluster_hudi(
     writer's required ordering is already satisfied (no second
     sort), staged write promoted by rename; the driver writes one
     replacecommit JSON."""
-    from vtk_reserves_spark.sources.writers import zorder_key
+    from vtk_reserves_spark.sources.writers import zorder_layout
 
     snap = hudi_snapshot(table)
     if any(sl["logs"] for sl in snap["slices"].values()):
@@ -1479,14 +1479,8 @@ def cluster_hudi(
         f for f in _table_props(table)
         .get("hoodie.table.partition.fields", "").split(",") if f
     ]
-    key, _stats = zorder_key(rows, zorder_by)
     n = int(n_files or max(1, len(snap["files"]) // 4))
-    rows = (
-        rows.withColumn("_zkey", key)
-        .repartitionByRange(n, "_zkey")
-        .sortWithinPartitions(*part_cols, "_zkey")
-        .drop("_zkey")
-    )
+    rows = zorder_layout(rows, zorder_by, n, lead=part_cols)
     replaced: dict[str, list[str]] = {}
     for part, fid in snap["groups"].values():
         replaced.setdefault(part, []).append(fid)

@@ -212,6 +212,21 @@ def zorder_key(df: DataFrame, cols, bits: int = 10):
     return key, stats
 
 
+def zorder_layout(df: DataFrame, cols, n: int, lead=(), bits: int = 10) -> DataFrame:
+    """``df`` laid out by the Z-order key of ``cols`` (:func:`zorder_key`):
+    range-partitioned on the key into ``n`` partitions (each output file
+    a contiguous z-range) and sorted within each by the ``lead`` columns,
+    then the key.  Raises :func:`zorder_key`'s ``ValueError`` when a
+    column has no non-NULL values."""
+    key, _ = zorder_key(df, cols, bits)
+    return (
+        df.withColumn("_zkey", key)
+        .repartitionByRange(int(n), "_zkey")
+        .sortWithinPartitions(*lead, "_zkey")
+        .drop("_zkey")
+    )
+
+
 def save_zordered(
     df: DataFrame,
     path: str,
@@ -231,18 +246,11 @@ def save_zordered(
     with no non-NULL cluster values (e.g. empty after a filter) writes
     as-is: there is nothing to cluster, and failing the whole job for
     an empty partition would be worse than an unclustered empty file."""
+    n = n_files or df.sparkSession.conf.get("spark.sql.shuffle.partitions")
     try:
-        key, _ = zorder_key(df, cols, bits)
+        out = zorder_layout(df, cols, n, bits=bits)
     except ValueError as e:
         if "no non-NULL values" not in str(e):
             raise
-        df.write.mode(mode).parquet(path)
-        return
-    out = df.withColumn("_zkey", key)
-    n = n_files or out.sparkSession.conf.get("spark.sql.shuffle.partitions")
-    out = (
-        out.repartitionByRange(int(n), "_zkey")
-        .sortWithinPartitions("_zkey")
-        .drop("_zkey")
-    )
+        out = df
     out.write.mode(mode).parquet(path)
